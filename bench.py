@@ -774,7 +774,10 @@ def main() -> None:
     scaling_probe = None
     probe_dir = os.environ.get("SPARK_GRAFT_SCALING_SF")
     if probe_dir and os.path.isdir(probe_dir):
-        probe_n = int(os.environ.get("SPARK_GRAFT_SCALING_TOP", "10"))
+        try:
+            probe_n = int(os.environ.get("SPARK_GRAFT_SCALING_TOP", "10"))
+        except ValueError:  # advisory; a typo must not abort a finished bench
+            probe_n = 10
         top = [
             n for n, _ in sorted(per_query.items(), key=lambda kv: -kv[1])
         ][:probe_n]

@@ -31,6 +31,7 @@ from calendar import timegm
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
+from urllib.parse import urlencode
 
 from ..functions.encoding import b64url_encode_py
 
@@ -193,10 +194,12 @@ class FhirBulkConnector:
     ) -> str:
         """GET Group/{id}/$export with respond-async; returns the
         status URL. ``since`` is the incremental high-water mark
-        (``_since=YYYY-MM-DDThh:mm:ss``, O4)."""
+        (``_since=YYYY-MM-DDThh:mm:ss+zz:zz``, O4), percent-encoded so a
+        form-decoding server does not read the offset's ``+`` as a
+        space."""
         url = f"{server_url}/Group/{group_id}/$export"
         if since:
-            url += f"?_since={since}"
+            url += "?" + urlencode({"_since": since}, safe=":")
         r = self.transport(
             "GET",
             url,

@@ -9,13 +9,15 @@ The reference's ``POST /himss24demo/bulkimport/latest`` flow
    schema) → (source, resource) transform → write NDJSON to the
    export area. Files are independent loads (the reference loops
    sequentially, ``:644``; here each file is its own narrow job —
-   SURVEY §4.3.4);
+   SURVEY §4.3.4). A file with no registered transform is copied
+   byte for byte: identity needs no parse, and a re-serialization
+   would drop every field outside the curated schema;
 3. driver-side sink-commit: build the FHIR ``Parameters`` manifest →
    $import → poll → archive landed files → advance the cursor.
 
-The transform stage is shuffle-free except the two broadcast joins
-(RxNav enrichment map, removed-ids anti-join), so step 2 pipelines in
-one stage per file regardless of file size.
+The transforms join nothing (the RxNav lookup is a MAP literal), so
+step 2 runs in one stage per file, plus one shuffle for the EOB
+duplicate-id window.
 """
 
 from __future__ import annotations
@@ -58,33 +60,32 @@ def transform_landed_file(
 ) -> str:
     """Step 2 for one landed file: read → transform → write NDJSON.
 
-    Returns the output directory. Unknown (source, resource) pairs
-    pass through untouched (the reference ignores them too).
+    Returns the output path. A (source, resource) pair without a
+    transform passes through untouched (the reference ignores it too):
+    the landed file is copied byte for byte, with no Spark job.
 
     T16 count audit (``__init__.py:532`` "{kept}/{total} will be
     loaded") rides the write as ``observe`` metrics — single pass, no
     extra jobs, unlike the reference's len() bookkeeping.
     """
-    resource = resource_type_from_name(path)
-    schema = RESOURCE_SCHEMAS.get(resource)
-    obs_in = Observation(f"in:{os.path.basename(path)}")
-    df = read_ndjson(spark, path, schema).observe(obs_in, F.count(F.lit(1)).alias("n"))
-    fn = get_transform(server_url, resource)
-    if fn is not None:
-        df = fn(df, rxnav)
-    obs_out = Observation(f"out:{os.path.basename(path)}")
-    df = df.observe(obs_out, F.count(F.lit(1)).alias("n"))
+    name = os.path.basename(path)
     # one NDJSON FILE per export file: $import urls must point at a
     # single application/fhir+ndjson blob, not a part-file directory
-    out = os.path.join(
-        out_dir, os.path.splitext(os.path.basename(path))[0] + ".ndjson"
-    )
-    write_ndjson(df, out, single_file=True)
+    out = os.path.join(out_dir, os.path.splitext(name)[0] + ".ndjson")
+    resource = resource_type_from_name(path)
+    fn = get_transform(server_url, resource)
+    if fn is None:
+        os.makedirs(out_dir, exist_ok=True)
+        shutil.copyfile(path, out)
+        logger.info("%s: passed through unchanged", name)
+        return out
+    obs_in = Observation(f"in:{name}")
+    df = read_ndjson(spark, path, RESOURCE_SCHEMAS.get(resource))
+    df = fn(df.observe(obs_in, F.count(F.lit(1)).alias("n")), rxnav)
+    obs_out = Observation(f"out:{name}")
+    write_ndjson(df.observe(obs_out, F.count(F.lit(1)).alias("n")), out, single_file=True)
     logger.info(
-        "%s: %s/%s resources will be loaded",
-        os.path.basename(path),
-        obs_out.get["n"],
-        obs_in.get["n"],
+        "%s: %s/%s resources will be loaded", name, obs_out.get["n"], obs_in.get["n"]
     )
     return out
 

@@ -48,7 +48,7 @@ def start_streaming_import(
     manifest POST goes (idempotent on batch_id).
 
     ``state_partitions`` right-sizes the per-micro-batch shuffle (the
-    EOB transform's conflicted-ids groupBy) the same way the stateful
+    EOB transform's duplicate-id window) the same way the stateful
     runner sizes state stores — a micro-batch is one landing file, so
     the session's batch-scale shuffle default is far oversized here;
     ``None`` inherits the session default.

@@ -4,7 +4,7 @@ Deterministic (seeded by record index, no RNG state) EOB documents in
 the exact shape the BCDA pipeline touches — the reference's heaviest
 branch (``FetchBulkData/__init__.py:458-533``): every gate, the
 supportingInfo positional writes, multi-coding NDC enrichment, and
-the anti-join removal all exercise.
+the duplicate-id removal all exercise.
 """
 
 from __future__ import annotations

@@ -3,17 +3,27 @@
 Each transform re-expresses one branch of the reference's
 ``process_demo_data`` (``FetchBulkData/__init__.py:357-536``) as a
 narrow DataFrame pipeline over higher-order functions — no Python
-UDFs anywhere (SURVEY §4.3.3). The two relational escapes:
+UDFs anywhere (SURVEY §4.3.3). A routine import is a small delta, so
+what a transform costs per call matters as much as per record:
 
+- Expression trees are built once per Py4J gateway
+  (``_per_gateway``) and reused for every file. They are unresolved
+  Columns made of constants; no DataFrame, plan or result is kept.
+- Nested struct writes rebuild one struct at a time
+  (``withField("quantity", q.withField("value", …))``). A chain of
+  dotted ``withField("quantity.value", …)`` calls re-embeds the whole
+  previous struct expression at every step, and the plan grows with
+  each link of the chain.
 - RxNav enrichment (T13, ``__init__.py:504-522,538-543``): the
   reference does one synchronous HTTP GET *per record occurrence*;
-  here the distinct-NDC lookup table is folded to a single broadcast
-  MAP column and applied inside the array rewrite — zero Python in
-  the hot path, one tiny cross-join of a 1-row build side.
-- Removed-ids anti-join (T17, ``__init__.py:533``): the reference
-  scans a Python *list* per record (O(N·R)); here a broadcast
-  ``left_anti`` join on id — which also preserves the duplicate-id
-  quirk (any row sharing an id with a removed row is dropped).
+  here the distinct-NDC lookup table is collected once per transform
+  call and inlined as a MAP literal, applied inside the array
+  rewrite — no join, no Python in the hot path.
+- Removed ids (T17, ``__init__.py:533``): the reference scans a
+  Python *list* per record (O(N·R)) and drops every record whose id
+  is on it; here ``min(keep) OVER (PARTITION BY id)`` keeps a row
+  only if every row sharing its id passes the gates — the same
+  duplicate-id rule in one shuffle and one source scan.
 
 Fidelity notes (quirks preserved):
 - claim_type is the *last* matching type.coding entry
@@ -25,27 +35,33 @@ Fidelity notes (quirks preserved):
   order (append-during-iteration lands at the tail).
 - Integer literals the reference writes (10, 30, 90, 0, 2) surface
   as JSON numbers; schema types follow FIXTURES.md §B.
+- A struct the record lacks (``dispenseRequest``, ``quantity``,
+  ``validityPeriod``) stays absent: a field write into a null struct
+  yields null, where the reference would raise ``KeyError``.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType, StringType, StructField, StructType
 
 from . import constants as C
 from .schemas import (
     CONDITION_SCHEMA,
-    EXPLANATION_OF_BENEFIT_SCHEMA,
     MEDICATION_REQUEST_SCHEMA,
     PATIENT_SCHEMA,
 )
 
 
 def _lit_json(value, dtype) -> Column:
-    """A typed literal from a Python JSON value (schema-checked)."""
+    """A typed literal from a Python JSON value (schema-checked);
+    constant-folded by the optimizer."""
     return F.from_json(F.lit(json.dumps(value)), dtype)
 
 
@@ -53,133 +69,172 @@ def _field_type(schema, name: str):
     return schema[name].dataType
 
 
+def _per_gateway(build):
+    """Memoize ``build(*args)`` per Py4J gateway.
+
+    Building a Column costs one Py4J round trip per node — about 1,900
+    for the EOB rewrite, most of a small request's plan-build time.
+    The trees are unresolved and made only of constants and column
+    names, so one copy serves every DataFrame on that JVM. A new
+    gateway (a relaunched JVM) rebuilds them.
+    """
+    built: dict[tuple, tuple] = {}
+
+    @functools.wraps(build)
+    def get(*args):
+        gw = SparkContext._gateway
+        hit = built.get(args)
+        if hit is None or hit[0] is not gw:
+            hit = built[args] = (gw, build(*args))
+        return hit[1]
+
+    return get
+
+
 # ------------------------------------------------------------ Patient
 
-def _patient_identifier_overwrite(df: DataFrame, demo_id: str, drop_meta: bool) -> DataFrame:
+@_per_gateway
+def _patient_exprs(demo_id: str, drop_meta: bool) -> dict[str, Column]:
     """T3: point-update the demo patient's identifier (epic
     ``__init__.py:404-411``; cerner also deletes meta ``:441-449``)."""
     ident_t = _field_type(PATIENT_SCHEMA, "identifier")
     is_demo = F.col("id") == demo_id
-    out = df.withColumn(
-        "identifier",
-        F.when(is_demo, _lit_json([C.DEMO_PATIENT_IDENTIFIER], ident_t)).otherwise(
-            F.col("identifier")
-        ),
-    )
+    exprs = {
+        "identifier": F.when(
+            is_demo, _lit_json([C.DEMO_PATIENT_IDENTIFIER], ident_t)
+        ).otherwise(F.col("identifier"))
+    }
     if drop_meta:
         meta_t = _field_type(PATIENT_SCHEMA, "meta")
-        out = out.withColumn(
-            "meta", F.when(is_demo, F.lit(None).cast(meta_t)).otherwise(F.col("meta"))
-        )
-    return out
+        exprs["meta"] = F.when(is_demo, F.lit(None).cast(meta_t)).otherwise(F.col("meta"))
+    return exprs
 
 
 def epic_patient(df: DataFrame, rxnav: DataFrame | None = None) -> DataFrame:
-    return _patient_identifier_overwrite(df, C.EPIC_DEMO_PATIENT_ID, drop_meta=False)
+    return df.withColumns(_patient_exprs(C.EPIC_DEMO_PATIENT_ID, False))
 
 
 def cerner_patient(df: DataFrame, rxnav: DataFrame | None = None) -> DataFrame:
-    return _patient_identifier_overwrite(df, C.CERNER_DEMO_PATIENT_ID, drop_meta=True)
+    return df.withColumns(_patient_exprs(C.CERNER_DEMO_PATIENT_ID, True))
 
 
 # ---------------------------------------------------------- Condition
 
+@_per_gateway
+def _condition_exprs() -> dict[str, Column]:
+    code_t = _field_type(CONDITION_SCHEMA, "code")
+    return {
+        "code": _lit_json(C.DEMO_CONDITION_CODE, code_t),
+        "recordedDate": F.lit(C.DEMO_CONDITION_RECORDED_DATE),
+    }
+
+
 def epic_condition(df: DataFrame, rxnav: DataFrame | None = None) -> DataFrame:
     """T4: overwrite ``code`` + ``recordedDate`` on every row
     (``__init__.py:412-419``)."""
-    code_t = _field_type(CONDITION_SCHEMA, "code")
-    return df.withColumn("code", _lit_json(C.DEMO_CONDITION_CODE, code_t)).withColumn(
-        "recordedDate", F.lit(C.DEMO_CONDITION_RECORDED_DATE)
-    )
+    return df.withColumns(_condition_exprs())
 
 
 # -------------------------------------------------- MedicationRequest
 
+def _demo_validity_period(dispense: Column) -> Column:
+    return dispense.validityPeriod.withField(
+        "start", F.lit(C.VALIDITY_PERIOD_START)
+    ).withField("end", F.lit(C.VALIDITY_PERIOD_END))
+
+
+@_per_gateway
+def _epic_medreq_exprs() -> dict[str, Column]:
+    mcc_t = _field_type(MEDICATION_REQUEST_SCHEMA, "medicationCodeableConcept")
+    dr = F.col("dispenseRequest")
+    quantity = (
+        dr.quantity.withField("value", F.lit(10.0))
+        .withField("unit", F.lit("ml"))
+        .withField("system", F.lit("http://unitsofmeasure.org"))
+        .withField("code", F.lit("ml"))
+    )
+    return {
+        "medicationCodeableConcept": _lit_json(C.DEMO_MEDICATION_CODEABLECONCEPT, mcc_t),
+        "authoredOn": F.lit(C.EPIC_MEDREQ_AUTHORED_ON),
+        "dispenseRequest": dr.withField("validityPeriod", _demo_validity_period(dr))
+        .withField("numberOfRepeatsAllowed", F.lit(2).cast("long"))
+        .withField("quantity", quantity),
+    }
+
+
 def epic_medication_request(df: DataFrame, rxnav: DataFrame | None = None) -> DataFrame:
     """T5 (field removal) + T4 (overwrite) + T6 (nested struct writes)
     (``__init__.py:420-437``)."""
-    mcc_t = _field_type(MEDICATION_REQUEST_SCHEMA, "medicationCodeableConcept")
-    out = df
-    if "medicationReference" in out.columns:
-        out = out.drop("medicationReference")  # tolerant del (:425-428)
-    return (
-        out.withColumn(
-            "medicationCodeableConcept",
-            _lit_json(C.DEMO_MEDICATION_CODEABLECONCEPT, mcc_t),
-        )
-        .withColumn("authoredOn", F.lit(C.EPIC_MEDREQ_AUTHORED_ON))
-        .withColumn(
-            "dispenseRequest",
-            F.col("dispenseRequest")
-            .withField("validityPeriod.start", F.lit(C.VALIDITY_PERIOD_START))
-            .withField("validityPeriod.end", F.lit(C.VALIDITY_PERIOD_END))
-            .withField("numberOfRepeatsAllowed", F.lit(2).cast("long"))
-            .withField("quantity.value", F.lit(10.0))
-            .withField("quantity.unit", F.lit("ml"))
-            .withField("quantity.system", F.lit("http://unitsofmeasure.org"))
-            .withField("quantity.code", F.lit("ml")),
-        )
-    )
+    if "medicationReference" in df.columns:
+        df = df.drop("medicationReference")  # tolerant del (:425-428)
+    return df.withColumns(_epic_medreq_exprs())
+
+
+@_per_gateway
+def _cerner_medreq_exprs() -> dict[str, Column]:
+    dr = F.col("dispenseRequest")
+    return {
+        "authoredOn": F.lit(C.CERNER_MEDREQ_AUTHORED_ON),
+        "dispenseRequest": dr.withField("validityPeriod", _demo_validity_period(dr)),
+    }
 
 
 def cerner_medication_request(df: DataFrame, rxnav: DataFrame | None = None) -> DataFrame:
     """T6 subset for cerner (``__init__.py:450-456``)."""
-    return df.withColumn("authoredOn", F.lit(C.CERNER_MEDREQ_AUTHORED_ON)).withColumn(
-        "dispenseRequest",
-        F.col("dispenseRequest")
-        .withField("validityPeriod.start", F.lit(C.VALIDITY_PERIOD_START))
-        .withField("validityPeriod.end", F.lit(C.VALIDITY_PERIOD_END)),
-    )
+    return df.withColumns(_cerner_medreq_exprs())
 
 
 # ----------------------------------------------- ExplanationOfBenefit
 
-def _rx_map_column(df: DataFrame, rxnav: DataFrame) -> DataFrame:
-    """Fold the (ndc, name, rxnorm) lookup into one broadcast MAP
-    column (T13's distinct-prefetch + broadcast-join rewrite,
-    SURVEY §4.3.1)."""
-    rx_map = rxnav.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("ndc"), F.struct("name", "rxnorm")))
-        ).alias("_rx_map")
-    )
-    return df.crossJoin(F.broadcast(rx_map))
+_RX_MAP_TYPE = MapType(
+    StringType(),
+    StructType([StructField("name", StringType()), StructField("rxnorm", StringType())]),
+)
 
 
-def bcda_explanation_of_benefit(df: DataFrame, rxnav: DataFrame) -> DataFrame:
-    """T7–T17 (``__init__.py:458-533``): filters (patient, claim-type,
-    serviced-date, enrichment-dependent), positional supportingInfo
-    writes, special-id NDC rewrite, RxNorm display-fill + append,
-    per-item quantity writes, meta delete, anti-join removal.
+def _rx_map_literal(rxnav: DataFrame) -> Column:
+    """The (ndc, name, rxnorm) lookup as one MAP literal (T13's
+    distinct-prefetch rewrite, SURVEY §4.3.1).
+
+    Assumes the lookup is reference data with one row per distinct NDC
+    — at most a few thousand rows — so it is collected once per call
+    and inlined into the plan, which spares the per-file
+    aggregate stage and broadcast a join would cost.
     """
+    lookup = {r["ndc"]: {"name": r["name"], "rxnorm": r["rxnorm"]} for r in rxnav.collect()}
+    return _lit_json(lookup, _RX_MAP_TYPE)
+
+
+def _with_coding(item: Column, coding: Column) -> Column:
+    return item.withField(
+        "productOrService", item.productOrService.withField("coding", coding)
+    )
+
+
+@_per_gateway
+def _eob_exprs() -> tuple[Column, Column, dict[str, Column]]:
+    """(special-id rewrite of ``item``, survivor flag, survivor
+    mutations) for T7–T17; the lookup is read from column ``_rx_map``."""
     is_special = F.col("id") == C.BCDA_SPECIAL_EOB_ID
+    is_ndc = lambda c: c.system == C.NDC_SYSTEM  # noqa: E731
+    rx_of = lambda c: F.element_at(F.col("_rx_map"), c.code)  # noqa: E731
+    rxnorm_of = lambda c: F.coalesce(rx_of(c)["rxnorm"], F.lit(""))  # noqa: E731
+    name_of = lambda c: F.coalesce(rx_of(c)["name"], F.lit(""))  # noqa: E731
 
     # Special-id NDC code/display rewrite happens BEFORE lookup
     # (the lookup key is the rewritten code, ``__init__.py:498-505``).
     def rewrite_coding(c):
         return F.when(
-            (c.system == C.NDC_SYSTEM) & is_special,
+            is_ndc(c) & is_special,
             c.withField("code", F.lit(C.SPECIAL_NDC_CODE)).withField(
                 "display", F.lit(C.SPECIAL_NDC_DISPLAY)
             ),
         ).otherwise(c)
 
-    df = df.withColumn(
+    special_item = F.transform(
         "item",
-        F.transform(
-            "item",
-            lambda it: it.withField(
-                "productOrService.coding",
-                F.transform(it.productOrService.coding, rewrite_coding),
-            ),
-        ),
+        lambda it: _with_coding(it, F.transform(it.productOrService.coding, rewrite_coding)),
     )
-
-    df = _rx_map_column(df, rxnav)
-    rx_of = lambda c: F.element_at(F.col("_rx_map"), c.code)  # noqa: E731
-    rxnorm_of = lambda c: F.coalesce(rx_of(c)["rxnorm"], F.lit(""))  # noqa: E731
-    name_of = lambda c: F.coalesce(rx_of(c)["name"], F.lit(""))  # noqa: E731
-    is_ndc = lambda c: c.system == C.NDC_SYSTEM  # noqa: E731
 
     # Gates — a row failing any gate lands on the removed-ids list
     # (``__init__.py:459-515``). Survivor predicate = conjunction.
@@ -198,12 +253,10 @@ def bcda_explanation_of_benefit(df: DataFrame, rxnav: DataFrame) -> DataFrame:
     )
     fail_rxnorm = ndc_exists(lambda c: is_ndc(c) & (rxnorm_of(c) == ""))
     fail_name = ndc_exists(lambda c: is_ndc(c) & c.display.isNull() & (name_of(c) == ""))
-
     keep = (
         # coalesce: a null reference must land on the removed list
         # (reference: None != demo_ref -> removed), not vanish into
-        # three-valued logic where ~NULL filters the row out of BOTH
-        # the removed set and nothing else
+        # three-valued logic
         F.coalesce(
             F.col("patient.reference") == C.BCDA_DEMO_PATIENT_REF, F.lit(False)
         )
@@ -212,61 +265,25 @@ def bcda_explanation_of_benefit(df: DataFrame, rxnav: DataFrame) -> DataFrame:
         & ~fail_rxnorm
         & ~fail_name
     )
-
-    # T17 anti-join (reference ``__init__.py``: removed-id exclusion).
-    # A plain filter(keep) is NOT equivalent: the reference removes
-    # every record sharing an id with ANY failing record (duplicate-id
-    # fidelity). The anti-join side must NOT be hinted broadcast —
-    # under the demo gates the removed set is nearly the whole corpus
-    # (only one patient's pharmacy claims survive), so a forced
-    # broadcast scales with the input and OOMs the driver at 100x.
-    # Instead, reduce the join side to the only ids where filter(keep)
-    # and the id-exclusion disagree: ids carrying BOTH a passing and a
-    # failing row. The conflicted set is bounded by the duplicate-id
-    # population, which AQE broadcasts unhinted for the final
-    # anti-join.
-    #
-    # Formulation history (100k-record bench, noop sink): r5 chose a
-    # kept-ids ⋉ failed-ids semi join (1.68 s) over an (id, keep)
-    # groupBy (1.94 s) and the unsafe forced broadcast (1.32 s). r7
-    # re-measured once it was clear SOURCE PARSES dominate this
-    # pipeline: each semi-join side re-parsed the JSON source (the
-    # keep predicate touches item/type/patient — most of the
-    # document), so r5's winner paid THREE parses per run. The
-    # groupBy over one skinny (id, keep) projection pays two — one
-    # for the flags, one for the survivor branch, which must re-read
-    # the full documents anyway because duplicate ids mean rows have
-    # no unique join key — and now wins: 1.68 s vs 1.97 s (the same
-    # ordering flip the partial-agg argument missed; an eager
-    # localCheckpoint of the flags was also tried and LOST, 2.48 s,
-    # because it serializes the two scans the one-job plan overlaps).
-    # At cluster scale the same math holds: one (id,bool) shuffle
-    # replaces two id-only shuffles plus a full extra source scan.
-    flags = df.select("id", keep.alias("_keep"))
-    conflicted_ids = (
-        flags.groupBy("id")
-        .agg(F.min("_keep").alias("_all"), F.max("_keep").alias("_any"))
-        .filter(F.col("_any") & ~F.col("_all"))
-        .select("id")
-    )
-    survivors = df.filter(keep).join(conflicted_ids, "id", "left_anti")
+    # T17: the reference drops every record whose id is on the removed
+    # list, so one failing row removes all rows sharing its id — a
+    # plain filter(keep) would keep the passing duplicates. min(keep)
+    # over the id partition is that rule in one pass: one shuffle of
+    # the documents and one source scan, where a flags aggregate joined
+    # back to the rows parses the source twice. Null ids partition
+    # together, as they share the reference's list entry ``None``.
+    keep_all = F.min(keep).over(Window.partitionBy("id"))
 
     # Mutations (survivors always pass every gate, so unconditional).
     # T11: positional supportingInfo writes (``__init__.py:489-493``).
-    survivors = survivors.withColumn(
+    def set_value(x, v):
+        return x.withField("valueQuantity", x.valueQuantity.withField("value", v))
+
+    supporting_info = F.transform(
         "supportingInfo",
-        F.transform(
-            "supportingInfo",
-            lambda x, i: F.when(i == 0, x.withField("valueQuantity.value", F.lit(0.0)))
-            .when(
-                i == 1,
-                x.withField(
-                    "valueQuantity.value",
-                    F.when(is_special, F.lit(30.0)).otherwise(F.lit(90.0)),
-                ),
-            )
-            .otherwise(x),
-        ),
+        lambda x, i: F.when(i == 0, set_value(x, F.lit(0.0)))
+        .when(i == 1, set_value(x, F.when(is_special, F.lit(30.0)).otherwise(F.lit(90.0))))
+        .otherwise(x),
     )
 
     # T12/T13/T15: display fill, RxNorm append, quantity writes.
@@ -289,30 +306,41 @@ def bcda_explanation_of_benefit(df: DataFrame, rxnav: DataFrame) -> DataFrame:
             name_of(c).alias("display"),
         )
 
-    survivors = survivors.withColumn(
-        "item",
-        F.transform(
-            "item",
-            lambda it: it.withField(
-                "productOrService.coding",
-                F.concat(
-                    F.transform(it.productOrService.coding, fill_display),
-                    F.transform(
-                        F.filter(it.productOrService.coding, is_ndc), rxnorm_entry
-                    ),
-                ),
-            )
-            .withField(
-                "quantity.value", F.when(is_special, F.lit(10.0)).otherwise(F.lit(90.0))
-            )
-            .withField(
-                "quantity.unit", F.when(is_special, F.lit("ml")).otherwise(F.lit("tabs"))
+    def enrich_item(it):
+        coding = it.productOrService.coding
+        quantity = it.quantity.withField(
+            "value", F.when(is_special, F.lit(10.0)).otherwise(F.lit(90.0))
+        ).withField("unit", F.when(is_special, F.lit("ml")).otherwise(F.lit("tabs")))
+        return _with_coding(
+            it,
+            F.concat(
+                F.transform(coding, fill_display),
+                F.transform(F.filter(coding, is_ndc), rxnorm_entry),
             ),
-        ),
-    )
+        ).withField("quantity", quantity)
 
-    # T5: meta delete on kept rows (``__init__.py:487``).
-    return survivors.drop("meta", "_rx_map")
+    mutations = {
+        "supportingInfo": supporting_info,
+        "item": F.transform("item", enrich_item),
+    }
+    return special_item, keep_all, mutations
+
+
+def bcda_explanation_of_benefit(df: DataFrame, rxnav: DataFrame) -> DataFrame:
+    """T7–T17 (``__init__.py:458-533``): filters (patient, claim-type,
+    serviced-date, enrichment-dependent), positional supportingInfo
+    writes, special-id NDC rewrite, RxNorm display-fill + append,
+    per-item quantity writes, meta delete, duplicate-id removal.
+    """
+    special_item, keep_all, mutations = _eob_exprs()
+    return (
+        df.withColumns({"item": special_item, "_rx_map": _rx_map_literal(rxnav)})
+        .withColumn("_keep", keep_all)
+        .filter(F.col("_keep"))
+        .withColumns(mutations)
+        # T5: meta delete on kept rows (``__init__.py:487``).
+        .drop("meta", "_rx_map", "_keep")
+    )
 
 
 # ------------------------------------------------------------ registry

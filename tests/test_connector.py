@@ -106,6 +106,25 @@ def test_full_export_import_flow(tmp_path):
     assert not os.path.exists(paths[0]) and os.path.exists(archived[0])
 
 
+def test_kickoff_since_url_encoded():
+    """The ``_since`` cursor's UTC offset goes out as ``%2B``: a
+    form-decoding server must read back the exact cursor, not a space
+    where the ``+`` was."""
+    from urllib.parse import parse_qs, urlsplit
+
+    urls = []
+
+    def transport(method, url, headers=None, data=None, params=None):
+        urls.append(url)
+        return HttpResponse(202, headers={"Content-Location": "https://fhir/status/1"})
+
+    conn = FhirBulkConnector(transport=transport, sleep=lambda s: None)
+    cursor = "2024-01-01T00:00:00+00:00"
+    conn.kickoff_export("https://fhir", "grp-1", "tok", since=cursor)
+    assert "%2B00:00" in urls[0]
+    assert parse_qs(urlsplit(urls[0]).query) == {"_since": [cursor]}
+
+
 def test_jwt_assertion_shape():
     import datetime as dt
 

@@ -10,11 +10,14 @@ import os
 import pytest
 
 from capgemini_himss24_fhirbulkdata_demo_spark.sources import read_ndjson, write_ndjson
+from capgemini_himss24_fhirbulkdata_demo_spark.transforms import constants as C
 from capgemini_himss24_fhirbulkdata_demo_spark.transforms import get_transform
 from capgemini_himss24_fhirbulkdata_demo_spark.transforms.schemas import (
     RESOURCE_SCHEMAS,
     RXNAV_LOOKUP_SCHEMA,
 )
+
+from perfbench.checks import canonical
 
 from . import fhir_oracle
 
@@ -194,28 +197,30 @@ def _rxnav_df(spark):
     return spark.createDataFrame(rows, RXNAV_LOOKUP_SCHEMA)
 
 
-@pytest.mark.parametrize("case", sorted(CASES))
-def test_golden_vs_oracle(case, spark, tmp_path):
-    server_url, resource, resources = CASES[case]
-
-    # land fixture as NDJSON exactly like a bulk-export file
+def _run_transform(spark, tmp_path, server_url, resource, resources):
+    """Land ``resources`` as one bulk-export NDJSON file, then read →
+    transform → write it the way the pipeline does; returns the rows."""
     in_path = os.path.join(tmp_path, f"{resource}-client-0001.json")
     with open(in_path, "w") as f:
         f.write("\n".join(json.dumps(r) for r in resources))
 
     df = read_ndjson(spark, in_path, RESOURCE_SCHEMAS[resource])
     fn = get_transform(server_url, resource)
-    assert fn is not None, f"no transform for {case}"
-    out_df = fn(df, _rxnav_df(spark))
-
+    assert fn is not None, f"no transform for {server_url} {resource}"
     out_dir = os.path.join(tmp_path, "out")
-    write_ndjson(out_df, out_dir)
+    write_ndjson(fn(df, _rxnav_df(spark)), out_dir)
     got = []
     for name in sorted(os.listdir(out_dir)):
         if name.startswith("part-"):
             with open(os.path.join(out_dir, name)) as f:
                 got.extend(json.loads(line) for line in f if line.strip())
+    return got
 
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_golden_vs_oracle(case, spark, tmp_path):
+    server_url, resource, resources = CASES[case]
+    got = _run_transform(spark, tmp_path, server_url, resource, resources)
     expected = fhir_oracle.process(server_url, resource, resources, RXNAV)
 
     got_c, exp_c = _canon(got), _canon(expected)
@@ -227,6 +232,68 @@ def test_golden_vs_oracle(case, spark, tmp_path):
             f"{case}: resource {rid} differs\n got={json.dumps(got_c[rid], sort_keys=True)}\n"
             f" exp={json.dumps(exp_c[rid], sort_keys=True)}"
         )
+
+
+def test_eob_duplicate_ids_vs_oracle(spark, tmp_path):
+    """T17's duplicate-id rule: a record is removed when ANY record
+    sharing its id fails a gate. An id carried by a passing and a
+    failing row loses both, an id carried by two passing rows keeps
+    both, and null ids count as one shared id."""
+    # a fresh list per row: the oracle edits records in place
+    drug_c = lambda: [{"system": _NDC, "code": "33333", "display": "Drug C"}]  # noqa: E731
+    rows = [
+        _eob("dup-mixed"),
+        _eob("dup-mixed", claim="dental"),
+        _eob("dup-pass"),
+        _eob("dup-pass", codings=drug_c()),
+        {**_eob("null-pass"), "id": None},
+        {**_eob("null-fail", patient="Patient/nope"), "id": None},
+        _eob("single-pass", codings=drug_c()),
+    ]
+    url = "https://bcda.cms.example/api"
+    got = canonical(_run_transform(spark, tmp_path, url, "ExplanationOfBenefit", rows))
+    expected = canonical(fhir_oracle.process(url, "ExplanationOfBenefit", rows, RXNAV))
+    assert sorted(expected) == ["dup-pass", "single-pass"]
+    assert len(expected["dup-pass"]) == 2
+    assert got == expected
+
+
+MEDREQS_MISSING_STRUCTS = [
+    {"resourceType": "MedicationRequest", "id": "mr-no-dispense", "status": "active"},
+    {
+        "resourceType": "MedicationRequest",
+        "id": "mr-no-validity",
+        "dispenseRequest": {"quantity": {"value": 1.0, "unit": "cap"}},
+    },
+    {
+        "resourceType": "MedicationRequest",
+        "id": "mr-no-quantity",
+        "dispenseRequest": {"validityPeriod": {"start": "2002-01-01"}},
+    },
+]
+
+
+@pytest.mark.parametrize("source", ["epic", "cerner"])
+def test_medication_request_missing_structs_stay_absent(source, spark, tmp_path):
+    """A struct the record lacks is not conjured by a nested field
+    write: dispenseRequest, validityPeriod and quantity stay absent
+    (the reference would raise KeyError on these records)."""
+    url = {"epic": CASES["epic-MedicationRequest"][0], "cerner": CASES["cerner-MedicationRequest"][0]}
+    got = {
+        r["id"]: r
+        for r in _run_transform(
+            spark, tmp_path, url[source], "MedicationRequest", MEDREQS_MISSING_STRUCTS
+        )
+    }
+    assert sorted(got) == ["mr-no-dispense", "mr-no-quantity", "mr-no-validity"]
+    assert "dispenseRequest" not in got["mr-no-dispense"]
+    assert "validityPeriod" not in got["mr-no-validity"]["dispenseRequest"]
+    assert "quantity" in got["mr-no-validity"]["dispenseRequest"]
+    assert "quantity" not in got["mr-no-quantity"]["dispenseRequest"]
+    assert got["mr-no-quantity"]["dispenseRequest"]["validityPeriod"] == {
+        "start": C.VALIDITY_PERIOD_START,
+        "end": C.VALIDITY_PERIOD_END,
+    }
 
 
 def test_identity_for_unmapped_source(spark, tmp_path):

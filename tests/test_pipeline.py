@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+from urllib.parse import parse_qs, urlsplit
 
 from capgemini_himss24_fhirbulkdata_demo_spark.connectors import (
     FhirBulkConnector,
@@ -105,7 +106,8 @@ def test_two_incremental_runs(spark, tmp_path):
         spark, conn, "https://fhir.epic.example", "g1", "tok",
         "https://cg", "itok", str(tmp_path / "run2"), rxnav=rx, state=state,
     )
-    assert f"_since={res1.since_advanced_to}" in server.kickoff_urls[1]
+    since = parse_qs(urlsplit(server.kickoff_urls[1]).query)["_since"]
+    assert since == [res1.since_advanced_to]
 
 
 def test_high_water_mark_atomic(tmp_path):
@@ -172,6 +174,53 @@ def test_transformed_outputs_are_single_ndjson_files(spark, tmp_path):
     uris = [p["part"][1]["valueUri"]
             for p in server.import_bodies[-1]["parameter"] if p["name"] == "input"]
     assert all(u.endswith(".ndjson") for u in uris)
+
+
+def test_pass_through_is_byte_identical(spark, tmp_path):
+    """A file with no registered transform reaches the export area byte
+    for byte: bcda Patient keeps fields outside the curated schema
+    (address, telecom) and their key order, and Coverage, which has no
+    curated schema at all, is neither inferred nor rewritten."""
+    patients = (
+        '{"resourceType": "Patient", "id": "-10000000000027", "gender": "female",'
+        ' "address": [{"city": "Boston", "postalCode": "02118"}],'
+        ' "telecom": [{"system": "phone", "value": "555-0100"}]}\n'
+        '{"id": "p2", "resourceType": "Patient", "birthDate": "1950-01-01"}\n'
+    ).encode()
+    coverage = (
+        '{"resourceType":"Coverage","id":"c1","status":"active",'
+        '"payor":[{"reference":"Organization/cms"}],"period":{"start":"2019-01-01"}}\n'
+    ).encode()
+    files = {"https://s/f/p": patients, "https://s/f/c": coverage}
+
+    def transport(method, url, headers=None, data=None, params=None):
+        if "$export" in url:
+            return HttpResponse(202, headers={"Content-Location": "https://s/st"})
+        if url == "https://s/st":
+            return HttpResponse(200, content=json.dumps({"output": [
+                {"type": "Patient", "url": "https://s/f/p"},
+                {"type": "Coverage", "url": "https://s/f/c"},
+            ]}).encode())
+        if url in files:
+            return HttpResponse(200, content=files[url])
+        if url.endswith("/$import"):
+            return HttpResponse(202, headers={"Content-Location": "https://cg/st"})
+        if url == "https://cg/st":
+            return HttpResponse(200, content=b"{}")
+        raise AssertionError(url)
+
+    conn = FhirBulkConnector(transport=transport, sleep=lambda s: None)
+    rx = spark.createDataFrame([("1", "n", "r")], RXNAV_LOOKUP_SCHEMA)
+    res = run_bulk_import(
+        spark, conn, "https://bcda.cms.example/api", "g1", "tok",
+        "https://cg", "itok", str(tmp_path / "run"), rxnav=rx,
+    )
+    assert len(res.archived) == 2
+    for landed, archived in zip(res.landed, res.archived):
+        with open(res.transformed[landed], "rb") as out, open(archived, "rb") as src:
+            assert out.read() == src.read(), landed
+    with open(res.archived[0], "rb") as f:
+        assert f.read() == patients
 
 
 def test_compact_landing_dir(spark, tmp_path):

@@ -91,7 +91,7 @@ def fhir_perturb() -> None:
 
     # duplicate-id corpus: id 'dup-1' carries a passing AND a failing
     # row (must be fully removed), 'dup-2' two passing rows (both
-    # kept) — the exact shapes the conflicted-ids formulation joins on
+    # kept) — the exact shapes the duplicate-id window partitions on
     eobs_dup = list(CASES["bcda-ExplanationOfBenefit"][2]) + [
         _eob("dup-1", codings=[{"system": _NDC, "code": "11111", "display": "A"}]),
         _eob("dup-1", patient="Patient/nope"),
