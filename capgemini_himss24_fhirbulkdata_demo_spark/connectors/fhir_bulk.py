@@ -256,6 +256,11 @@ class FhirBulkConnector:
             data_url,
             headers={"Authorization": f"Bearer {token}", "Accept": NDJSON_CONTENT_TYPE},
         )
+        # an error body (e.g. a 404 OperationOutcome) is not export data
+        if not r.ok:
+            raise RuntimeError(
+                f"export file fetch failed: {r.status_code} {r.content[:200]!r}"
+            )
         return r.content
 
     def _download_to(self, data_url: str, token: str, dest_path: str) -> None:
@@ -264,8 +269,9 @@ class FhirBulkConnector:
         driver memory); injected transports fall back to the in-memory
         interface (tests, small fixtures)."""
         if self.transport is not _requests_transport:
+            data = self.fetch_export_file(data_url, token)
             with open(dest_path, "wb") as f:
-                f.write(self.fetch_export_file(data_url, token))
+                f.write(data)
             return
         import requests
 

@@ -5,15 +5,21 @@ The reference's ``POST /himss24demo/bulkimport/latest`` flow
 
 1. driver-side connector: auth → $export kickoff (with the persisted
    ``_since`` cursor) → poll → land NDJSON files;
-2. **per-resource-type Spark jobs**: read landed NDJSON (curated
-   schema) → (source, resource) transform → write NDJSON to the
-   export area. Files are independent loads (the reference loops
-   sequentially, ``:644``; here each file is its own narrow job —
-   SURVEY §4.3.4). A file with no registered transform is copied
-   byte for byte: identity needs no parse, and a re-serialization
-   would drop every field outside the curated schema;
+2. **one Spark job per landed file** (``transform_landed_files``):
+   read landed NDJSON (curated schema) → (source, resource) transform
+   → write one NDJSON blob to the export area. Files are independent
+   loads (the reference loops sequentially, ``:644``; here the files
+   run concurrently — SURVEY §4.3.4). A file with no registered
+   transform is copied byte for byte: identity needs no parse, and a
+   re-serialization would drop every field outside the curated schema;
 3. driver-side sink-commit: build the FHIR ``Parameters`` manifest →
    $import → poll → archive landed files → advance the cursor.
+
+``transform_landed_files`` is the only FHIR transform driver: the
+incremental form (``streaming/fhir_import.py``) calls it on each
+micro-batch's files. The unit of correctness is therefore the landed
+file on both paths — the EOB duplicate-id rule sees one file at a time,
+as the reference's manifest loop does.
 
 The transforms join nothing (the RxNav lookup is a MAP literal), so
 step 2 runs in one stage per file, plus one shuffle for the EOB
@@ -27,6 +33,7 @@ import logging
 import os
 import re
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
@@ -40,6 +47,9 @@ from .connectors.state import HighWaterMark
 from .sources.ndjson import read_ndjson, resource_type_from_name, write_ndjson
 from .transforms import get_transform
 from .transforms.schemas import RESOURCE_SCHEMAS
+
+# Concurrent per-file jobs: bounds scheduler pressure, not correctness.
+MAX_PARALLEL_FILES = 8
 
 
 @dataclass
@@ -90,6 +100,30 @@ def transform_landed_file(
     return out
 
 
+def transform_landed_files(
+    spark: SparkSession,
+    paths: list[str],
+    server_url: str,
+    out_dir: str,
+    rxnav: DataFrame | None = None,
+) -> list[str]:
+    """Step 2 for many landed files; returns the output paths in
+    ``paths`` order.
+
+    Files transform as CONCURRENT Spark jobs (driver-side thread pool —
+    the standard multi-job submission pattern): each file's job is
+    narrow and its single-blob NDJSON write is one task
+    (``write_ndjson(single_file=True)``), so a sequential loop would
+    execute the whole stage nearly single-threaded.
+    """
+    with ThreadPoolExecutor(max_workers=MAX_PARALLEL_FILES) as pool:
+        futures = [
+            pool.submit(transform_landed_file, spark, p, server_url, out_dir, rxnav)
+            for p in paths
+        ]
+        return [f.result() for f in futures]
+
+
 def run_bulk_import(
     spark: SparkSession,
     connector: FhirBulkConnector,
@@ -103,19 +137,9 @@ def run_bulk_import(
     state: HighWaterMark | None = None,
     client_id: str = "client",
     blob_base_url: str = "file://",
-    max_parallel_files: int = 8,
 ) -> PipelineResult:
-    """The full export → transform → import → archive flow.
-
-    Landed files transform as CONCURRENT Spark jobs (driver-side
-    thread pool — the standard multi-job submission pattern): each
-    file's job is narrow and its single-blob NDJSON write is one task
-    (``write_ndjson(single_file=True)``), so a sequential loop would
-    execute the whole stage nearly single-threaded. The reference
-    loops sequentially (``__init__.py:644``); SURVEY §4.3.4 calls for
-    independent parallel loads. ``max_parallel_files`` bounds
-    concurrent jobs (scheduler pressure), not correctness.
-    """
+    """The full export → transform → import → archive flow; landed
+    files transform through ``transform_landed_files``."""
     res = PipelineResult()
     since = state.get(server_url, group_id) if state else None
     # Fallback cursor only — a FHIR _since must carry a timezone
@@ -131,18 +155,8 @@ def run_bulk_import(
     res.landed = connector.land_export(manifest, token, landing, client_id=client_id)
 
     out_dir = os.path.join(work_dir, "export")
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=max(1, max_parallel_files)) as pool:
-        futures = {
-            path: pool.submit(
-                transform_landed_file, spark, path, server_url, out_dir, rxnav
-            )
-            for path in res.landed
-        }
-        # dict insertion order == landed order: deterministic result map
-        for path, fut in futures.items():
-            res.transformed[path] = fut.result()
+    outs = transform_landed_files(spark, res.landed, server_url, out_dir, rxnav)
+    res.transformed = dict(zip(res.landed, outs))
 
     entries = [
         (p, f"{blob_base_url}{res.transformed[p]}") for p in res.landed
@@ -156,46 +170,6 @@ def run_bulk_import(
         state.advance(server_url, group_id, next_cursor)
         res.since_advanced_to = next_cursor
     return res
-
-
-def compact_landing_dir(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict[str, int]:
-    """Compact a small-files NDJSON landing zone, per resource type.
-
-    Bulk exports land one file per manifest entry — at 100 TB that is
-    easily 10^5 files of KB–MB size, and every downstream scan pays a
-    task per file plus namenode/listing pressure. Compaction merges
-    each resource type's files at the TEXT-LINE level (`spark.read.
-    text` → ``coalesce`` → text sink): lines are moved byte-for-byte,
-    never parsed, so no field can be pruned and no malformed line can
-    be rewritten — schema-aware parsing happens downstream where
-    errors are surfaced, not silently baked into the landing zone.
-    ``coalesce`` is a narrow split merge (``repartition`` would
-    shuffle the full payload for nothing).
-
-    Returns {resource_type: n_output_files} (the ACTUAL written file
-    count — coalesce cannot increase partition count, so one huge
-    non-splittable input still yields one output file).
-    """
-    by_type: dict[str, list[str]] = {}
-    for name in sorted(os.listdir(src_dir)):
-        p = os.path.join(src_dir, name)
-        if not os.path.isfile(p):
-            continue
-        by_type.setdefault(resource_type_from_name(name), []).append(p)
-    out: dict[str, int] = {}
-    for rt, files in by_type.items():
-        total = sum(os.path.getsize(p) for p in files)
-        n_out = max(1, -(-total // target_file_bytes))
-        df = spark.read.text(files).coalesce(n_out)
-        n_actual = df.rdd.getNumPartitions()
-        df.write.mode("overwrite").text(os.path.join(out_dir, rt))
-        out[rt] = n_actual
-    return out
 
 
 def restamp_seed_name(name: str, timestamp: int) -> str:

@@ -20,17 +20,14 @@ curated (transforms/schemas.py) so reads never pay inference.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
 def read_ndjson(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-    with_input_file: bool = False,
+    spark: SparkSession, path: str, schema: StructType | None = None
 ) -> DataFrame:
     """Read NDJSON file(s)/directory into a DataFrame.
 
@@ -41,16 +38,12 @@ def read_ndjson(
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    df = reader.json(path)
-    if with_input_file:
-        df = df.withColumn("_input_file", F.input_file_name())
-    return df
+    return reader.json(path)
 
 
-def write_ndjson(
-    df: DataFrame, path: str, mode: str = "overwrite", single_file: bool = False
-) -> str:
-    """Write a DataFrame as NDJSON (one JSON object per line).
+def write_ndjson(df: DataFrame, path: str, single_file: bool = False) -> str:
+    """Write a DataFrame as NDJSON (one JSON object per line),
+    replacing whatever is at ``path``.
 
     The JSON writer omits null fields (``ignoreNullFields`` default),
     matching the reference's output of plain ``json.dumps`` on dicts
@@ -69,26 +62,13 @@ def write_ndjson(
     # serialize-to-one-string-column projection; ~7% faster on the
     # 100k-record write leg and one less node in the plan.
     if not single_file:
-        df.write.mode(mode).json(path)
-        return path
-    import shutil
-
-    # honor mode semantics on the destination FILE (the temp dir write
-    # below is always overwrite — it's scratch space)
-    exists = os.path.exists(path)
-    if exists and mode in ("error", "errorifexists"):
-        raise FileExistsError(path)
-    if exists and mode == "ignore":
+        df.write.mode("overwrite").json(path)
         return path
     tmp = path + ".__tmp__"
     df.coalesce(1).write.mode("overwrite").json(tmp)
     part = next(n for n in sorted(os.listdir(tmp)) if n.startswith("part-"))
     os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-    if exists and mode == "append":
-        with open(path, "ab") as dst, open(os.path.join(tmp, part), "rb") as src:
-            dst.write(src.read())
-    else:
-        os.replace(os.path.join(tmp, part), path)
+    os.replace(os.path.join(tmp, part), path)
     shutil.rmtree(tmp)
     return path
 

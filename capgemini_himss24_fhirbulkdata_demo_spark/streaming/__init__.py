@@ -4,15 +4,19 @@ The reference's incremental story is a hand-rolled micro-batch loop:
 the ``_since`` cursor on kickoff (``FetchBulkData/__init__.py:609-613``)
 plus sleep-based polling (``:282-326``). Here that becomes:
 
-- a file-source ``readStream`` over an NDJSON/parquet landing
-  directory (new export files appear → new micro-batch),
+- a file-source ``readStream`` over a parquet landing directory
+  (new files appear → new micro-batch),
 - event-time tumbling/sliding/session windows with watermarks,
 - stateful streaming dedup (``dropDuplicates`` under watermark),
-- a ``foreachBatch`` sink for the ``$import``-style side effect
-  (exactly-once via the checkpointed batch id = manifest id).
+- the incremental FHIR import (``fhir_import.start_streaming_import``):
+  a stream of newly landed file paths, each micro-batch transformed by
+  ``pipeline.transform_landed_files`` — the batch path's own driver, so
+  the unit of correctness is the landed file on both — and committed
+  through a ``$import`` callback (exactly-once via the checkpointed
+  batch id = manifest id).
 """
 
-from .sources import read_ndjson_stream, read_parquet_stream  # noqa: F401
+from .sources import read_parquet_stream  # noqa: F401
 from .windows import (  # noqa: F401
     enrich_with_static,
     interval_join,
@@ -25,5 +29,4 @@ from .runner import (  # noqa: F401
     DEFAULT_STATE_PARTITIONS,
     start_stateful_query,
 )
-from .sinks import run_foreach_batch_import  # noqa: F401
 from .sketches import StreamingCountMin, run_streaming_cms  # noqa: F401

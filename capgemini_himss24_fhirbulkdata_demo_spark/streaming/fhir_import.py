@@ -2,29 +2,36 @@
 (SURVEY §3.1 step 4 + §4.3.5).
 
 The connector (or any export process) keeps landing NDJSON files into
-``landing_dir``; this stream picks each file up as a micro-batch,
-applies the (source, resource) transform, writes a single $import-ready
-NDJSON blob per batch, and hands (paths, batch_id) to a commit callback
+``landing_dir``; this stream picks the new files up as a micro-batch
+and hands their paths to ``pipeline.transform_landed_files`` — the same
+driver the batch path runs, so a file comes out byte-identical either
+way, and the unit of correctness (the EOB duplicate-id rule included)
+is the landed file on both paths. The outputs go to a commit callback
 that POSTs the ``Parameters`` manifest. Exactly-once comes from the
 checkpoint: a replayed batch re-offers the same batch_id, so the commit
-callback dedupes on it (manifest id = batch id).
+callback dedupes on it (manifest id = batch id), and the transform
+rewrites the same output files.
 
-One stream per resource type (schemas differ); the landing-file
-convention ``{Type}-*.json`` routes files to their stream via glob.
+The stream source is ``binaryFile`` with only ``path`` selected, so the
+file contents are never read by the stream itself: it is a list of new
+files, with no shuffle and no state. One stream per resource type; the
+landing-file convention ``{Type}-*.json`` routes files to their stream
+via glob.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from urllib.parse import urlsplit
+from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.ndjson import write_ndjson
-from ..transforms import get_transform
-from ..transforms.schemas import RESOURCE_SCHEMAS
-from .runner import DEFAULT_STATE_PARTITIONS, start_stateful_query
-from .sources import read_ndjson_stream
+from .. import pipeline
+
+# the binaryFile source's fixed schema (streaming sources never infer)
+BINARY_FILE_SCHEMA = "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"
 
 
 def start_streaming_import(
@@ -38,40 +45,29 @@ def start_streaming_import(
     rxnav: DataFrame | None = None,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    state_partitions: int | None = DEFAULT_STATE_PARTITIONS,
 ):
     """Start the incremental transform→land→commit stream for one
     resource type. Returns the StreamingQuery.
 
     ``commit(ndjson_paths, batch_id)`` receives the written single-file
-    NDJSON blobs for the batch — the slot where the FHIR ``$import``
-    manifest POST goes (idempotent on batch_id).
-
-    ``state_partitions`` right-sizes the per-micro-batch shuffle (the
-    EOB transform's duplicate-id window) the same way the stateful
-    runner sizes state stores — a micro-batch is one landing file, so
-    the session's batch-scale shuffle default is far oversized here;
-    ``None`` inherits the session default.
+    NDJSON blobs for the batch, one per landed file — the slot where
+    the FHIR ``$import`` manifest POST goes (idempotent on batch_id).
     """
-    schema = RESOURCE_SCHEMAS.get(resource_type)
-    if schema is None:
-        raise ValueError(f"no curated schema for resource type {resource_type!r}")
+    reader = spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     pattern = os.path.join(landing_dir, f"{resource_type}-*.json")
-    stream = read_ndjson_stream(
-        spark, pattern, schema, max_files_per_trigger=max_files_per_trigger
-    )
-    fn = get_transform(server_url, resource_type)
+    stream = reader.load(pattern).select("path")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_df if fn is None else fn(batch_df, rxnav)
-        path = os.path.join(out_dir, f"{resource_type}-batch-{batch_id}.ndjson")
-        write_ndjson(out, path, single_file=True)
-        commit([path], batch_id)
+        paths = sorted(url2pathname(urlsplit(r.path).path) for r in batch_df.collect())
+        commit(
+            pipeline.transform_landed_files(spark, paths, server_url, out_dir, rxnav),
+            batch_id,
+        )
 
-    return start_stateful_query(
-        stream,
-        checkpoint_dir,
-        foreach_batch=process_batch,
-        trigger_available_now=available_now,
-        state_partitions=state_partitions,
-    )
+    writer = stream.writeStream.option("checkpointLocation", checkpoint_dir)
+    writer = writer.foreachBatch(process_batch)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

@@ -1,6 +1,7 @@
 """Golden fidelity tests (SURVEY §5.2.1): the Spark FHIR transform
 pipeline vs the pure-Python oracle, per-id canonical-JSON equality,
-through the real NDJSON read → transform → NDJSON write path."""
+through the product drivers — ``pipeline.transform_landed_file`` (batch)
+and ``start_streaming_import`` (stream) — on the same landed file."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import os
 
 import pytest
 
+from capgemini_himss24_fhirbulkdata_demo_spark import pipeline
 from capgemini_himss24_fhirbulkdata_demo_spark.sources import read_ndjson, write_ndjson
 from capgemini_himss24_fhirbulkdata_demo_spark.transforms import constants as C
 from capgemini_himss24_fhirbulkdata_demo_spark.transforms import get_transform
@@ -20,6 +22,7 @@ from capgemini_himss24_fhirbulkdata_demo_spark.transforms.schemas import (
 from perfbench.checks import canonical
 
 from . import fhir_oracle
+from .conftest import run_streaming_import
 
 # ---------------------------------------------------------- fixtures
 
@@ -197,30 +200,39 @@ def _rxnav_df(spark):
     return spark.createDataFrame(rows, RXNAV_LOOKUP_SCHEMA)
 
 
-def _run_transform(spark, tmp_path, server_url, resource, resources):
-    """Land ``resources`` as one bulk-export NDJSON file, then read →
-    transform → write it the way the pipeline does; returns the rows."""
-    in_path = os.path.join(tmp_path, f"{resource}-client-0001.json")
+def _run_transform(spark, tmp_path, server_url, resource, resources, driver="batch"):
+    """Land ``resources`` as one bulk-export NDJSON file, run it through
+    the product driver; returns the rows of its output file."""
+    assert get_transform(server_url, resource) is not None, (
+        f"no transform for {server_url} {resource}"
+    )
+    landing = os.path.join(tmp_path, "landing")
+    os.makedirs(landing)
+    in_path = os.path.join(landing, f"{resource}-client-0001.json")
     with open(in_path, "w") as f:
         f.write("\n".join(json.dumps(r) for r in resources))
 
-    df = read_ndjson(spark, in_path, RESOURCE_SCHEMAS[resource])
-    fn = get_transform(server_url, resource)
-    assert fn is not None, f"no transform for {server_url} {resource}"
-    out_dir = os.path.join(tmp_path, "out")
-    write_ndjson(fn(df, _rxnav_df(spark)), out_dir)
-    got = []
-    for name in sorted(os.listdir(out_dir)):
-        if name.startswith("part-"):
-            with open(os.path.join(out_dir, name)) as f:
-                got.extend(json.loads(line) for line in f if line.strip())
-    return got
+    rx = _rxnav_df(spark)
+    if driver == "batch":
+        outs = [pipeline.transform_landed_file(
+            spark, in_path, server_url, os.path.join(tmp_path, "out"), rx
+        )]
+    else:
+        outs = run_streaming_import(spark, landing, resource, server_url, str(tmp_path), rx)
+    assert len(outs) == 1
+    with open(outs[0]) as f:
+        return [json.loads(line) for line in f if line.strip()]
 
 
-@pytest.mark.parametrize("case", sorted(CASES))
-def test_golden_vs_oracle(case, spark, tmp_path):
+@pytest.mark.parametrize(
+    "case,driver",
+    # the batch leg keeps the bare case id
+    [pytest.param(c, d, id=c if d == "batch" else f"{c}-{d}")
+     for c in sorted(CASES) for d in ("batch", "stream")],
+)
+def test_golden_vs_oracle(case, driver, spark, tmp_path):
     server_url, resource, resources = CASES[case]
-    got = _run_transform(spark, tmp_path, server_url, resource, resources)
+    got = _run_transform(spark, tmp_path, server_url, resource, resources, driver)
     expected = fhir_oracle.process(server_url, resource, resources, RXNAV)
 
     got_c, exp_c = _canon(got), _canon(expected)
@@ -234,11 +246,12 @@ def test_golden_vs_oracle(case, spark, tmp_path):
         )
 
 
-def test_eob_duplicate_ids_vs_oracle(spark, tmp_path):
+def test_eob_duplicate_ids_vs_oracle(spark, tmp_path, driver="batch"):
     """T17's duplicate-id rule: a record is removed when ANY record
     sharing its id fails a gate. An id carried by a passing and a
     failing row loses both, an id carried by two passing rows keeps
-    both, and null ids count as one shared id."""
+    both, and null ids count as one shared id. The rule's unit is the
+    landed file on both drivers."""
     # a fresh list per row: the oracle edits records in place
     drug_c = lambda: [{"system": _NDC, "code": "33333", "display": "Drug C"}]  # noqa: E731
     rows = [
@@ -251,11 +264,15 @@ def test_eob_duplicate_ids_vs_oracle(spark, tmp_path):
         _eob("single-pass", codings=drug_c()),
     ]
     url = "https://bcda.cms.example/api"
-    got = canonical(_run_transform(spark, tmp_path, url, "ExplanationOfBenefit", rows))
+    got = canonical(_run_transform(spark, tmp_path, url, "ExplanationOfBenefit", rows, driver))
     expected = canonical(fhir_oracle.process(url, "ExplanationOfBenefit", rows, RXNAV))
     assert sorted(expected) == ["dup-pass", "single-pass"]
     assert len(expected["dup-pass"]) == 2
     assert got == expected
+
+
+def test_eob_duplicate_ids_vs_oracle_stream(spark, tmp_path):
+    test_eob_duplicate_ids_vs_oracle(spark, tmp_path, driver="stream")
 
 
 MEDREQS_MISSING_STRUCTS = [

@@ -8,6 +8,8 @@ import json
 import os
 from urllib.parse import parse_qs, urlsplit
 
+import pytest
+
 from capgemini_himss24_fhirbulkdata_demo_spark.connectors import (
     FhirBulkConnector,
     HttpResponse,
@@ -17,6 +19,8 @@ from capgemini_himss24_fhirbulkdata_demo_spark.pipeline import run_bulk_import
 from capgemini_himss24_fhirbulkdata_demo_spark.transforms.schemas import (
     RXNAV_LOOKUP_SCHEMA,
 )
+
+from .conftest import run_streaming_import
 
 PATIENTS = [
     {"resourceType": "Patient", "id": "egqBHVfQlt4Bw3XGXoxVxHg3",
@@ -119,6 +123,60 @@ def test_high_water_mark_atomic(tmp_path):
     assert hwm.get("srv2", "g") == "2024-02-02T00:00:00"
 
 
+def test_high_water_mark_concurrent_advances_keep_both_keys(tmp_path, monkeypatch):
+    """Two requests advancing different (server, group) keys at once:
+    a slow read inside one advance must not let the other's write be
+    lost."""
+    import threading
+    import time
+
+    load = HighWaterMark._load
+
+    def slow_load(self):
+        state = load(self)
+        time.sleep(0.2)
+        return state
+
+    monkeypatch.setattr(HighWaterMark, "_load", slow_load)
+    path = str(tmp_path / "s.json")
+    threads = [
+        threading.Thread(target=HighWaterMark(path).advance, args=(srv, "g", since))
+        for srv, since in (("srv1", "2024-01-01T00:00:00"), ("srv2", "2024-02-02T00:00:00"))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(10)
+        assert not t.is_alive()
+    monkeypatch.undo()
+    hwm = HighWaterMark(path)
+    assert hwm.get("srv1", "g") == "2024-01-01T00:00:00"
+    assert hwm.get("srv2", "g") == "2024-02-02T00:00:00"
+
+
+def test_failed_file_fetch_fails_the_request(spark, tmp_path):
+    """An export file that answers 404 is not export data: the request
+    raises, posts no $import and leaves the cursor where it was."""
+
+    class MissingFileServer(FakeServer):
+        def __call__(self, method, url, headers=None, data=None, params=None):
+            if url == "https://s/f/c":
+                return HttpResponse(404, content=b'{"resourceType":"OperationOutcome"}')
+            return super().__call__(method, url, headers, data, params)
+
+    server = MissingFileServer()
+    conn = FhirBulkConnector(transport=server, sleep=lambda s: None)
+    state = HighWaterMark(str(tmp_path / "state.json"))
+    state.advance("https://fhir.epic.example", "g1", "2024-01-01T00:00:00+00:00")
+    with pytest.raises(RuntimeError, match="404"):
+        run_bulk_import(
+            spark, conn, "https://fhir.epic.example", "g1", "tok",
+            "https://cg", "itok", str(tmp_path / "run"), state=state,
+        )
+    assert server.import_bodies == []
+    assert state.get("https://fhir.epic.example", "g1") == "2024-01-01T00:00:00+00:00"
+
+
 def test_reset_and_seed(tmp_path):
     from capgemini_himss24_fhirbulkdata_demo_spark.pipeline import (
         restamp_seed_name,
@@ -176,7 +234,7 @@ def test_transformed_outputs_are_single_ndjson_files(spark, tmp_path):
     assert all(u.endswith(".ndjson") for u in uris)
 
 
-def test_pass_through_is_byte_identical(spark, tmp_path):
+def test_pass_through_is_byte_identical(spark, tmp_path, driver="batch"):
     """A file with no registered transform reaches the export area byte
     for byte: bcda Patient keeps fields outside the curated schema
     (address, telecom) and their key order, and Coverage, which has no
@@ -209,58 +267,34 @@ def test_pass_through_is_byte_identical(spark, tmp_path):
             return HttpResponse(200, content=b"{}")
         raise AssertionError(url)
 
-    conn = FhirBulkConnector(transport=transport, sleep=lambda s: None)
+    url = "https://bcda.cms.example/api"
     rx = spark.createDataFrame([("1", "n", "r")], RXNAV_LOOKUP_SCHEMA)
-    res = run_bulk_import(
-        spark, conn, "https://bcda.cms.example/api", "g1", "tok",
-        "https://cg", "itok", str(tmp_path / "run"), rxnav=rx,
-    )
-    assert len(res.archived) == 2
-    for landed, archived in zip(res.landed, res.archived):
-        with open(res.transformed[landed], "rb") as out, open(archived, "rb") as src:
-            assert out.read() == src.read(), landed
-    with open(res.archived[0], "rb") as f:
+    if driver == "batch":
+        conn = FhirBulkConnector(transport=transport, sleep=lambda s: None)
+        res = run_bulk_import(
+            spark, conn, url, "g1", "tok", "https://cg", "itok",
+            str(tmp_path / "run"), rxnav=rx,
+        )
+        pairs = [(res.transformed[p], a) for p, a in zip(res.landed, res.archived)]
+    else:
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        pairs = []
+        for rtype, data in (("Patient", patients), ("Coverage", coverage)):
+            src = landing / f"{rtype}-client-1.json"
+            src.write_bytes(data)
+            outs = run_streaming_import(spark, str(landing), rtype, url, str(tmp_path), rx)
+            pairs += [(o, str(src)) for o in outs]
+    assert len(pairs) == 2
+    for out_path, src_path in pairs:
+        with open(out_path, "rb") as out, open(src_path, "rb") as src:
+            assert out.read() == src.read(), src_path
+    with open(pairs[0][1], "rb") as f:
         assert f.read() == patients
 
 
-def test_compact_landing_dir(spark, tmp_path):
-    """Many small NDJSON export files -> compacted files per resource
-    type, lines preserved BYTE-EXACTLY (fields outside any curated
-    schema and even malformed lines must survive — compaction never
-    parses)."""
-    import json as _json
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.pipeline import compact_landing_dir
-
-    src = tmp_path / "landing"
-    src.mkdir()
-    lines = []
-    for i in range(6):
-        recs = [
-            {
-                "resourceType": "Patient",
-                "id": f"p{i}-{j}",
-                "gender": "other",
-                # field no curated schema knows about
-                "address": [{"city": "Boston"}],
-            }
-            for j in range(3)
-        ]
-        txt = [_json.dumps(r) for r in recs]
-        lines += txt
-        (src / f"Patient-{i}.ndjson").write_text("\n".join(txt) + "\n")
-    # unknown resource type and a malformed (truncated) line: both
-    # must pass through unmodified
-    (src / "Mystery-1.ndjson").write_text('{"resourceType": "Mystery", "x": 1\n')
-    out = tmp_path / "compacted"
-    result = compact_landing_dir(spark, str(src), str(out), target_file_bytes=10**9)
-    assert result == {"Mystery": 1, "Patient": 1}
-    files = [f for f in (out / "Patient").iterdir() if f.name.startswith("part-")]
-    assert len(files) == 1
-    back = sorted(r.value for r in spark.read.text(str(out / "Patient")).collect())
-    assert back == sorted(lines)  # byte-exact, address field intact
-    myst = [r.value for r in spark.read.text(str(out / "Mystery")).collect()]
-    assert myst == ['{"resourceType": "Mystery", "x": 1']
+def test_pass_through_is_byte_identical_stream(spark, tmp_path):
+    test_pass_through_is_byte_identical(spark, tmp_path, driver="stream")
 
 
 def test_eob_bench_landing_dir_matches_single_file(tmp_path):

@@ -23,8 +23,8 @@ from pyspark.sql.types import (
 from capgemini_himss24_fhirbulkdata_demo_spark.catalog import load_table
 from capgemini_himss24_fhirbulkdata_demo_spark.streaming import (
     read_parquet_stream,
-    run_foreach_batch_import,
     session_agg,
+    start_stateful_query,
     streaming_dedup,
     tumbling_agg,
 )
@@ -215,14 +215,14 @@ def test_foreach_batch_import_sink(spark, tmp_path):
         committed.append((batch_id, batch_df.count()))
 
     stream = read_parquet_stream(spark, landing, EVENTS_SCHEMA)
-    q = run_foreach_batch_import(stream, ck, commit)
+    q = start_stateful_query(stream, ck, foreach_batch=commit)
     q.awaitTermination(120)
     assert committed == [(0, 1)]
 
     # restart with no new data: nothing re-committed
     committed.clear()
     stream2 = read_parquet_stream(spark, landing, EVENTS_SCHEMA)
-    q2 = run_foreach_batch_import(stream2, ck, commit)
+    q2 = start_stateful_query(stream2, ck, foreach_batch=commit)
     q2.awaitTermination(120)
     assert committed == []
 

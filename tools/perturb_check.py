@@ -163,19 +163,20 @@ def fhir_perturb() -> None:
             flagged.append(case)
         print(f"[perturb-fhir] {status} {case}", file=sys.stderr)
 
-    # ---- streaming-import leg (O6 incremental form, r7 verdict #7) ----
+    # ---- streaming-import leg (O6 incremental form) ----
     # Replay each golden corpus through start_streaming_import at two
     # micro-batch sizes (1 landing file per batch vs all files in one
     # batch) and assert the union of per-batch outputs equals the
-    # batch pipeline's oracle output. The corpus is landed as TWO
-    # id-coherent files (all rows of a resource id stay in one file):
-    # the conflicted-ids removal is per-batch state, so its unit of
-    # correctness is the batch — exactly the reference's own
-    # incremental contract, whose processing unit is the export FILE
-    # from the manifest loop (__init__.py:643-665), trivially
-    # id-coherent. With id-coherent files, per-file == global
-    # semantics, so both micro-batch sizes must reproduce the batch
-    # oracle bit-for-bit.
+    # oracle output. The stream hands each micro-batch's file paths to
+    # pipeline.transform_landed_files, the batch path's own driver, so
+    # on both legs the unit of correctness is the landed FILE (the
+    # conflicted-ids removal sees one file at a time) — the reference's
+    # own unit, the export file from the manifest loop
+    # (__init__.py:643-665) — and the micro-batch size cannot change
+    # the output. The corpus is landed as TWO id-coherent files (all
+    # rows of a resource id stay in one file): with id-coherent files,
+    # per-file == whole-corpus semantics, so both micro-batch sizes
+    # must reproduce the oracle bit-for-bit.
     import shutil
 
     from capgemini_himss24_fhirbulkdata_demo_spark.streaming.fhir_import import (
