@@ -11,7 +11,7 @@ Layout
 ------
 - ``session``    : SparkSession factory (UTC, Arrow, AQE).
 - ``catalog``    : fixture-table loading + temp-view registration.
-- ``sources``    : NDJSON / Parquet / CSV readers & writers
+- ``sources``    : NDJSON reader & writer
                    (reference NDJSON semantics: 1 resource = 1 line).
 - ``queries``    : the declared relational query surface (SURVEY §2B),
                    each query a ``(spark, sf_dir) -> DataFrame`` callable

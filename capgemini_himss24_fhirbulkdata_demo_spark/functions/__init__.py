@@ -4,6 +4,5 @@ from .encoding import (  # noqa: F401
     b64url_decode_py,
     b64url_encode_py,
     b64url_sql,
-    sha384_hex_sql,
 )
 from .hof import bound  # noqa: F401

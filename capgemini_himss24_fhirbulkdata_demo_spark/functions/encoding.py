@@ -29,11 +29,6 @@ def b64url_sql(col: Column) -> Column:
     )
 
 
-def sha384_hex_sql(col: Column) -> Column:
-    """SHA-384 hex digest (``sha2(col, 384)``) — reference ``:95``."""
-    return F.sha2(col, 384)
-
-
 def b64url_encode_py(data: bytes) -> str:
     return base64.urlsafe_b64encode(data).rstrip(b"=").decode("ascii")
 

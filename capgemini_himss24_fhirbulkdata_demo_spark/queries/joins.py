@@ -14,10 +14,11 @@ shuffles left are fact↔fact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators import asof_join
 from .registry import register
 from .relational import _SQL_DISC_PRICE, _dec, _disc_price
 
@@ -266,10 +267,8 @@ def q24_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q25_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (latest event at-or-before a point, per key).
 
-    Spark has no native ASOF JOIN; the engine's documented pattern
-    (SURVEY §7.d) is equi-join on the entity key + window `row_number=1`
-    over the candidate set, descending by the as-of ordinal. The
-    oracle uses an equivalent correlated MAX subquery.
+    Runs :func:`operators.asof_join`; the oracle uses an equivalent
+    correlated MAX subquery.
 
     Scale note: candidates are bounded per key by the equi join before
     the window sort, so the shuffle is on user_id — skew-prone keys are
@@ -282,15 +281,14 @@ def q25_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_custkey")
     )
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_id")
-    joined = orders.join(
-        ev,
-        (ev.user_id == orders.o_custkey) & (ev.event_id <= orders.o_orderkey),
-        "left",
-    )
-    w = Window.partitionBy("o_orderkey").orderBy(F.desc_nulls_last("event_id"))
     return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        asof_join(
+            orders,
+            ev,
+            on=[("o_custkey", "user_id")],
+            ordinal=("o_orderkey", "event_id"),
+            how="left",
+        )
         .select("o_orderkey", "o_custkey", F.col("event_id").alias("asof_event_id"))
         .orderBy("o_orderkey")
     )

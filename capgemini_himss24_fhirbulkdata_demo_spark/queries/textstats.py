@@ -1689,8 +1689,8 @@ _X62_SQL = """
 def x62_trimmed_mean_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Outlier-robust per-source length profile via a GROUPED_AGG
     ``pandas_udf`` — the UDAF member of the UDF surface (scalar /
-    grouped-map / cogrouped / mapInPandas / mapInArrow / UDTF are
-    covered by x50–x53, x14; this is the aggregating form): each
+    grouped-map / cogrouped / mapInPandas / mapInArrow are covered by
+    x50–x53, x14; this is the aggregating form): each
     source's decile-trimmed mean of n_chars, kernel-side sort + trim,
     engine-side grouping. The trim bound (n//10 off each end) is
     integer arithmetic, so the DuckDB twin reproduces the exact kept

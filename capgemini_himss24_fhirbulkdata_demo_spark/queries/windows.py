@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators import top_k_per_group
 from .registry import register
 
 
@@ -61,23 +62,21 @@ def q30_rank_in_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q31_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group top-k: the engine's canonical pattern (row_number ≤ k).
+    """Per-group top-k through :func:`operators.top_k_per_group`.
 
     Catalyst plans a WindowGroupLimit (rank-limit pushdown) before the
     full sort at this shape — verified via .explain in tests.
     """
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
-    return (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= 3)
-        .orderBy("o_custkey", "rn")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderkey", "o_totalprice"
     )
+    return top_k_per_group(
+        orders,
+        ["o_custkey"],
+        [F.desc("o_totalprice"), "o_orderkey"],
+        k=3,
+        rank_col="rn",
+    ).orderBy("o_custkey", "rn")
 
 
 @register(

@@ -16,7 +16,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
 

@@ -1,4 +1,6 @@
-"""Sources & sinks: NDJSON (reference-native format), Parquet, CSV."""
+"""NDJSON source and sink: the reference-native format, one resource
+per line. Other formats are read and written with ``spark.read`` and
+``df.write`` directly."""
 
 from .ndjson import (  # noqa: F401
     read_ndjson,

@@ -6,7 +6,7 @@ plus sleep-based polling (``:282-326``). Here that becomes:
 
 - a file-source ``readStream`` over a parquet landing directory
   (new files appear → new micro-batch),
-- event-time tumbling/sliding/session windows with watermarks,
+- event-time tumbling and session windows with watermarks,
 - stateful streaming dedup (``dropDuplicates`` under watermark),
 - the incremental FHIR import (``fhir_import.start_streaming_import``):
   a stream of newly landed file paths, each micro-batch transformed by
@@ -21,7 +21,6 @@ from .windows import (  # noqa: F401
     enrich_with_static,
     interval_join,
     session_agg,
-    sliding_agg,
     streaming_dedup,
     tumbling_agg,
 )

@@ -1,50 +1,28 @@
 """Engine-owned streaming query startup: state-partition sizing.
 
-Root cause this module exists to fix (r7 bench, What's-wrong #2):
-the number of state-store partitions for a stateful streaming query
-is pinned from ``spark.sql.shuffle.partitions`` at the query's FIRST
-checkpoint and never changes for the life of that checkpoint. Every
-micro-batch then pays a fixed state-commit cost PER PARTITION (open
-store, write delta, fsync, commit marker) regardless of how many
-keys live there. A windowed aggregation holding ~7k windows of state
-drained 3x slower at 32 state partitions than at 8 on the same box
-(15.7k -> 46k ev/s across r2->r7 benches), because per-partition
-commit overhead dominated once partitions held < ~1k keys each.
+A stateful query pins its state-store partition count from
+``spark.sql.shuffle.partitions`` at its first checkpoint, and every
+micro-batch pays a commit per state partition however few keys it
+holds. The session default is sized for batch shuffles, so
+``start_stateful_query`` starts the query with
+``DEFAULT_STATE_PARTITIONS`` instead: a ``tumbling_agg`` holding ~7k
+windows drained 3x faster at 8 state partitions than at 32.
 
-The session-level shuffle default is sized for BATCH shuffles (cores
-x a spill factor); stateful-streaming state wants to be sized to
-STATE VOLUME. Those are different numbers, so the engine owns the
-streaming one: ``start_stateful_query`` snapshots a right-sized
-``spark.sql.shuffle.partitions`` into the query at start time and
-restores the session conf immediately after. This is safe because
-Spark clones the session state synchronously inside ``start()``
-(``StreamExecution`` constructs its ``sparkSessionForStream`` via
-``cloneSession()`` before the async micro-batch thread runs), so the
-started query keeps the sized conf while the caller's session is
-untouched for everything else.
+Spark 4.1 offers no per-query way to set it, hence the session-conf
+flip below:
 
-Sizing rule (``DEFAULT_STATE_PARTITIONS = 8``): enough parallelism
-to keep a multi-core box busy on the stateful stage, small enough
-that per-partition commit cost stays amortized over >= ~1k keys for
-the window/session/dedup state sizes this engine's operators carry.
-At cluster scale with genuinely large state (hundreds of millions of
-keys), pass an explicit ``state_partitions`` sized to state volume
-(~target keys-per-partition in the 100k-1M range) — the default is a
-local/medium-state right-size, not a universal constant.
+- ``writeStream.option("spark.sql.shuffle.partitions", ...)`` is
+  ignored; the query keeps the session's partition count.
+- A ``spark.newSession()`` child with the conf set sizes the state
+  without touching the caller, but a memory sink's view then lives in
+  the child, and ``spark.table(name)`` on the caller's session raises
+  ``AnalysisException``.
 
-Caveats (documented contract):
-- A RESTART from an existing checkpoint keeps the originally pinned
-  partition count; ``state_partitions`` only applies to a fresh
-  checkpoint.
-- The set/start/restore window is serialized by a module-level lock,
-  so two threads calling ``start_stateful_query`` concurrently cannot
-  interleave their set/restore pairs. A BATCH job running in another
-  thread of the same session during the window could still observe
-  the temporary value — that residual race is inherent to session-
-  scoped conf (r8 advice); the guard below therefore also verifies at
-  restore time that the conf still holds the value we set and warns
-  loudly if some other writer clobbered it mid-window instead of
-  silently restoring over their change.
+``start()`` clones the session state synchronously, so the conf is set,
+the query started and the previous value restored under a module lock.
+A batch job running in another thread of the same session during that
+window can still see the temporary value. A restart from an existing
+checkpoint keeps its original partition count.
 """
 
 from __future__ import annotations
@@ -71,19 +49,17 @@ def start_stateful_query(
     *,
     foreach_batch: Callable[[DataFrame, int], None] | None = None,
     sink_format: str | None = None,
-    sink_path: str | None = None,
     output_mode: str | None = None,
-    trigger_available_now: bool = True,
     state_partitions: int | None = DEFAULT_STATE_PARTITIONS,
-    options: dict[str, str] | None = None,
     query_name: str | None = None,
 ):
     """Start a streaming query with engine-sized state partitions.
 
     ``stream_df`` is the transformed streaming DataFrame (e.g. the
     output of ``tumbling_agg``/``session_agg``/``streaming_dedup``).
-    Exactly one sink: ``foreach_batch`` callback, or
-    ``sink_format`` (+ ``sink_path`` for file sinks).
+    Exactly one sink: ``foreach_batch`` callback, or ``sink_format``.
+    The query runs with ``availableNow``: it drains what is there, then
+    stops.
 
     ``state_partitions`` (default ``DEFAULT_STATE_PARTITIONS``) is
     snapshotted into the query's cloned session at start; pass
@@ -98,16 +74,11 @@ def start_stateful_query(
         writer = writer.foreachBatch(foreach_batch)
     elif sink_format is not None:
         writer = writer.format(sink_format)
-        if sink_path is not None:
-            writer = writer.option("path", sink_path)
     else:
         raise ValueError("provide foreach_batch or sink_format")
-    for k, v in (options or {}).items():
-        writer = writer.option(k, v)
     if query_name is not None:
         writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
+    writer = writer.trigger(availableNow=True)
 
     if state_partitions is None:
         return writer.start()

@@ -173,98 +173,3 @@ def funnel_firsts(events, steps=_FUNNEL_STEPS, idle_timeout_ms: int = 0):
         )
     )
 
-
-# ---- Spark 4 transformWithState twin of rapid_fire_flags ----
-
-# transformWithStateInPandas is the successor API to
-# applyInPandasWithState: named state variables (value/list/map),
-# timers, TTL, and initial-state hand-off, backed by the RocksDB
-# state store. The engine ships the same rapid-fire operator on both
-# APIs with an equivalence test, so either runtime surface works.
-
-try:  # Spark >= 4.0
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _HAS_TWS = True
-except ImportError:  # pragma: no cover - older Spark
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
-
-TWS_STATE_STORE_CONF = {
-    # transformWithState requires the RocksDB provider (bundled jar)
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    ),
-}
-
-
-class RapidFireProcessor(StatefulProcessor):
-    """Per-user lifetime sequence numbers + rapid-fire gap flags as a
-    ``StatefulProcessor`` — identical semantics to
-    ``rapid_fire_flags`` (equivalence-tested)."""
-
-    def __init__(self, min_gap_s: float = 60.0):
-        self._min_gap_s = min_gap_s
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._state = handle.getValueState("counter", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        n, last_us = self._state.get() if self._state.exists() else (0, None)
-        batch = pd.concat(list(rows))
-        batch = batch[batch["ts"].notna()].sort_values(["ts", "event_id"])
-        out = []
-        for ts, eid in zip(batch["ts"], batch["event_id"]):
-            ts_us = int(ts.value // 1000)
-            n += 1
-            gap = (ts_us - last_us) / 1e6 if last_us is not None else None
-            out.append(
-                (
-                    key[0],
-                    int(eid),
-                    n,
-                    gap,
-                    gap is not None and gap < self._min_gap_s,
-                )
-            )
-            last_us = ts_us
-        self._state.update((n, last_us))
-        yield pd.DataFrame(
-            out, columns=["user_id", "event_id", "seq_no", "gap_s", "rapid_fire"]
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def rapid_fire_flags_tws(events, min_gap_s: float = 60.0):
-    """``rapid_fire_flags`` on the transformWithStateInPandas API.
-
-    The session must run the RocksDB state store provider
-    (``TWS_STATE_STORE_CONF``); state is a named ValueState with the
-    same 2-field schema the GroupState form uses.
-    """
-    if not _HAS_TWS:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires Spark >= 4.0"
-        )
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        # fail at construction with a clear gate instead of an opaque
-        # mid-query "driver worker crashed" — the TWS state-server
-        # protocol imports protobuf in its python driver worker
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package "
-            "(state-server protocol); use rapid_fire_flags "
-            "(applyInPandasWithState) where protobuf is unavailable"
-        ) from e
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RapidFireProcessor(min_gap_s),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
-    )

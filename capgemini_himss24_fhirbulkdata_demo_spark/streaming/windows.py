@@ -37,28 +37,6 @@ def tumbling_agg(
     )
 
 
-def sliding_agg(
-    events: DataFrame,
-    window_size: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window_size, slide).alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
 def session_agg(
     events: DataFrame,
     gap: str = "5 minutes",

@@ -480,85 +480,6 @@ def test_stateful_funnel_firsts_across_batches(spark, tmp_path):
     assert first_batch_7[1] == 2 and first_batch_7[4] is None
 
 
-def test_transform_with_state_twin_matches_group_state(spark, tmp_path):
-    """Spark-4 transformWithStateInPandas (RocksDB provider, named
-    ValueState) produces exactly the applyInPandasWithState op's
-    output across multi-batch replays — same state, same flags.
-
-    Skips when protobuf is absent: the TWS state-server protocol
-    imports google.protobuf in its driver worker (not baked into this
-    container — the Delta/Avro gate story; runs wherever it exists).
-    """
-    pytest.importorskip("google.protobuf")
-    import datetime as dt
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.stateful import (
-        TWS_STATE_STORE_CONF,
-        rapid_fire_flags,
-        rapid_fire_flags_tws,
-    )
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    t0 = dt.datetime(2024, 6, 1, 0, 0, 0)
-    batches = [
-        [
-            (1, t0, 7, "click", 1.0, "{}"),
-            (2, t0 + dt.timedelta(seconds=10), 7, "click", 1.0, "{}"),
-            (3, t0, 9, "view", 1.0, "{}"),
-        ],
-        [
-            (4, t0 + dt.timedelta(seconds=300), 7, "click", 1.0, "{}"),
-            (5, t0 + dt.timedelta(seconds=301), 9, "view", 1.0, "{}"),
-        ],
-    ]
-
-    def drain(op, ck, extra_conf=None):
-        prev = {}
-        for k, v in (extra_conf or {}).items():
-            prev[k] = spark.conf.get(k, None)
-            spark.conf.set(k, v)
-        collected: list[tuple] = []
-        try:
-            for i, rows in enumerate(batches):
-                spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
-                    "append"
-                ).parquet(landing + op.__name__)
-                stream = read_parquet_stream(
-                    spark, landing + op.__name__, EVENTS_SCHEMA
-                ).select("user_id", "event_id", "ts")
-
-                def commit(batch_df, batch_id):
-                    collected.extend(tuple(r) for r in batch_df.collect())
-
-                q = (
-                    op(stream, min_gap_s=60.0)
-                    .writeStream.foreachBatch(commit)
-                    .outputMode("append")
-                    .option("checkpointLocation", ck)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(120)
-        finally:
-            for k, v in prev.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-        return sorted(collected)
-
-    base = drain(rapid_fire_flags, str(tmp_path / "ck_base"))
-    tws = drain(
-        rapid_fire_flags_tws, str(tmp_path / "ck_tws"), TWS_STATE_STORE_CONF
-    )
-    assert base == tws
-    assert len(base) == 5
-    flags = {(r[0], r[1]): r[4] for r in base}
-    assert flags[(7, 2)] is True  # 10s gap < 60s
-    assert flags[(7, 4)] is False  # 290s gap
-
-
 def test_interval_left_join_stream_equals_batch_modulo_tail(
     spark, landed_events, tmp_path
 ):
