@@ -31,6 +31,7 @@ from calendar import timegm
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
+from email.utils import parsedate_to_datetime
 from urllib.parse import urlencode
 
 from ..functions.encoding import b64url_encode_py
@@ -54,6 +55,27 @@ class HttpResponse:
 
 
 Transport = Callable[..., HttpResponse]
+
+# Statuses after which a Bulk Data server expects the client to retry
+# the same request, waiting as its ``Retry-After`` header says.
+RETRYABLE_STATUSES = (429, 503)
+
+
+def _retry_after_s(value: str | None) -> float | None:
+    """Seconds to wait from a ``Retry-After`` header (RFC 9110 §10.2.3:
+    delta-seconds or an HTTP-date); None when absent or unreadable."""
+    if value is None:
+        return None
+    value = value.strip()
+    if value.isdigit():
+        return float(value)
+    try:
+        when = parsedate_to_datetime(value)
+    except (TypeError, ValueError):
+        return None
+    if when.tzinfo is None:
+        when = when.replace(tzinfo=timezone.utc)
+    return max(0.0, (when - datetime.now(tz=timezone.utc)).total_seconds())
 
 
 def _requests_transport(method: str, url: str, headers=None, data=None, params=None):
@@ -224,6 +246,11 @@ class FhirBulkConnector:
         """Poll with linear-growth backoff (sleep 2·n, n→cap) until 200
         (reference ``:282-326``); raises on error statuses.
 
+        A 429 or 503 is a request to come back later, not a failure: the
+        poll sleeps for its ``Retry-After`` (delta-seconds or HTTP-date),
+        or the usual 2·n without one, and tries again. Every retry
+        counts against ``max_poll_attempts``.
+
         Servers report export progress via the ``X-Progress`` header on
         202 responses (reference surfaces it at ``__init__.py:298``);
         each observed value is handed to ``on_progress`` and kept on
@@ -246,6 +273,10 @@ class FhirBulkConnector:
                     if on_progress is not None:
                         on_progress(progress)
                 self.sleep(2 * n)
+                continue
+            if r.status_code in RETRYABLE_STATUSES:
+                wait = _retry_after_s(r.headers.get("Retry-After"))
+                self.sleep(2 * n if wait is None else wait)
                 continue
             raise RuntimeError(f"poll failed: {r.status_code} {r.content[:200]!r}")
         raise TimeoutError("polling taking too long")

@@ -191,6 +191,13 @@ def release_cached_deps(df: DataFrame) -> None:
         dep.unpersist()
 
 
+def _release_local_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks behind ``df = x.localCheckpoint()``. Only once
+    nothing will read ``df`` again: a local checkpoint has no lineage
+    to recompute lost blocks from."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def near_dup_pairs(
     docs: DataFrame,
     id_col: str,
@@ -300,7 +307,9 @@ def connected_components(
     detected by the strictly-decreasing label sum — one tiny
     aggregate action per round, not a row-wise diff; the LAZY
     checkpoints mean that action also materializes the round's
-    checkpoint in the same job (guide §1.5). This is the
+    checkpoint in the same job (guide §1.5), after which the previous
+    round's checkpoint is released; the edge checkpoints are released
+    on return, so only the result's blocks stay. This is the
     cluster-representative step real dedup needs after pair
     generation (drop all but MIN(doc) per component).
 
@@ -328,6 +337,7 @@ def connected_components(
             )
         ).alias("e")
     ).select("e.src", "e.dst").distinct().localCheckpoint(eager=False)
+    checkpoints = [edges]
     # r11 (guide §2.2/§2.5): the iteration's width derives from the
     # MEASURED edge count, not the session constant. The count is the
     # action that materializes the lazy checkpoint (one job, r12 —
@@ -340,6 +350,7 @@ def connected_components(
     ))
     if parts < edges.rdd.getNumPartitions():
         edges = edges.coalesce(parts).localCheckpoint(eager=False)
+        checkpoints.append(edges)
     broadcast_labels = n_edges <= _CC_BROADCAST_EDGES
     # LAZY localCheckpoint (r11, guide §1.5/§2.2): the round's
     # convergence-sum action materializes the checkpoint AND computes
@@ -370,7 +381,7 @@ def connected_components(
         msgs = edges.join(lab, edges.dst == lab.v).select(
             F.col("src").alias("v"), "label"
         )
-        labels = (
+        prev_labels, labels = labels, (
             msgs.unionAll(labels)
             .repartition(parts, "v")
             .groupBy("v")
@@ -378,11 +389,16 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         cur_sum = labels.agg(F.sum("label")).first()[0]
+        # the sum materialised the new round; nothing reads the old one
+        _release_local_checkpoint(prev_labels)
         if cur_sum == prev_sum:
             converged = True
             break
         prev_sum = cur_sum
+    for cp in checkpoints:
+        _release_local_checkpoint(cp)
     if not converged:
+        _release_local_checkpoint(labels)
         raise RuntimeError(
             f"connected_components did not converge in max_iter={max_iter} "
             "rounds (graph diameter exceeds it); raise max_iter"

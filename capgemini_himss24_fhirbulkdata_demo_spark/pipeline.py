@@ -21,9 +21,12 @@ micro-batch's files. The unit of correctness is therefore the landed
 file on both paths — the EOB duplicate-id rule sees one file at a time,
 as the reference's manifest loop does.
 
-The transforms join nothing (the RxNav lookup is a MAP literal), so
-step 2 runs in one stage per file, plus one shuffle for the EOB
-duplicate-id window.
+The transforms join nothing (the RxNav lookup is a MAP literal, read
+once per lookup DataFrame), and each landed file is read as one
+partition, which already satisfies the EOB duplicate-id window. Step 2
+therefore runs as one Spark job of one stage per file, EOB files
+included. A malformed NDJSON line fails its file, and so the request,
+before ``$import`` and before the cursor moves.
 """
 
 from __future__ import annotations
@@ -46,6 +49,7 @@ from .connectors.fhir_bulk import FhirBulkConnector, build_import_manifest
 from .connectors.state import HighWaterMark
 from .sources.ndjson import read_ndjson, resource_type_from_name, write_ndjson
 from .transforms import get_transform
+from .transforms.fhir import bcda_explanation_of_benefit
 from .transforms.schemas import RESOURCE_SCHEMAS
 
 # Concurrent per-file jobs: bounds scheduler pressure, not correctness.
@@ -74,6 +78,11 @@ def transform_landed_file(
     transform passes through untouched (the reference ignores it too):
     the landed file is copied byte for byte, with no Spark job.
 
+    The file is read as one partition: the sink writes one blob from
+    one task anyway, and a single-partition input satisfies the EOB
+    duplicate-id window, so the plan has no shuffle and runs as one
+    job of one stage.
+
     T16 count audit (``__init__.py:532`` "{kept}/{total} will be
     loaded") rides the write as ``observe`` metrics — single pass, no
     extra jobs, unlike the reference's len() bookkeeping.
@@ -90,7 +99,7 @@ def transform_landed_file(
         logger.info("%s: passed through unchanged", name)
         return out
     obs_in = Observation(f"in:{name}")
-    df = read_ndjson(spark, path, RESOURCE_SCHEMAS.get(resource))
+    df = read_ndjson(spark, path, RESOURCE_SCHEMAS.get(resource)).coalesce(1)
     df = fn(df.observe(obs_in, F.count(F.lit(1)).alias("n")), rxnav)
     obs_out = Observation(f"out:{name}")
     write_ndjson(df.observe(obs_out, F.count(F.lit(1)).alias("n")), out, single_file=True)
@@ -115,7 +124,17 @@ def transform_landed_files(
     narrow and its single-blob NDJSON write is one task
     (``write_ndjson(single_file=True)``), so a sequential loop would
     execute the whole stage nearly single-threaded.
+
+    Raises ``ValueError`` before any job runs when a bcda
+    ExplanationOfBenefit file has no lookup (``rxnav=None``).
     """
+    if rxnav is None and any(
+        get_transform(server_url, resource_type_from_name(p)) is bcda_explanation_of_benefit
+        for p in paths
+    ):
+        raise ValueError(
+            "bcda ExplanationOfBenefit files need the RxNav lookup: pass rxnav="
+        )
     with ThreadPoolExecutor(max_workers=MAX_PARALLEL_FILES) as pool:
         futures = [
             pool.submit(transform_landed_file, spark, p, server_url, out_dir, rxnav)
@@ -139,7 +158,14 @@ def run_bulk_import(
     blob_base_url: str = "file://",
 ) -> PipelineResult:
     """The full export → transform → import → archive flow; landed
-    files transform through ``transform_landed_files``."""
+    files transform through ``transform_landed_files``.
+
+    ``rxnav`` (``RXNAV_LOOKUP_SCHEMA``: ndc, name, rxnorm) is reference
+    data, needed when the export holds bcda ExplanationOfBenefit files.
+    It is read the first time a transform uses it, and that snapshot
+    serves every later request given the same DataFrame object. To
+    refresh the lookup, pass a new DataFrame.
+    """
     res = PipelineResult()
     since = state.get(server_url, group_id) if state else None
     # Fallback cursor only — a FHIR _since must carry a timezone

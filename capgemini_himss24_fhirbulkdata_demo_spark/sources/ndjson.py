@@ -34,8 +34,13 @@ def read_ndjson(
     With a curated ``schema``, missing fields are null (the
     reference's tolerant ``try/except KeyError`` behavior); without,
     Spark infers by sampling (dev only — SURVEY §1.2).
+
+    A malformed line (truncated, not JSON) fails the read, as the
+    reference's ``json.loads`` raises on it: the default PERMISSIVE
+    mode would turn it into an all-null row that a transform then
+    writes out as if it were a resource.
     """
-    reader = spark.read
+    reader = spark.read.option("mode", "FAILFAST")
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
@@ -53,7 +58,8 @@ def write_ndjson(df: DataFrame, path: str, single_file: bool = False) -> str:
     ``path`` (coalesce(1) + part-file promotion) — the shape a FHIR
     ``$import`` url must point at (one blob per manifest entry,
     ``__init__.py:351-355``). Parallelism then comes from processing
-    many export files concurrently, not from splitting one.
+    many export files concurrently, not from splitting one. A failed
+    write leaves nothing at ``path`` and removes its temp directory.
     Returns the written path.
     """
     # Native JSON writer, not to_json(struct(*))+text: the rows hit the
@@ -65,11 +71,13 @@ def write_ndjson(df: DataFrame, path: str, single_file: bool = False) -> str:
         df.write.mode("overwrite").json(path)
         return path
     tmp = path + ".__tmp__"
-    df.coalesce(1).write.mode("overwrite").json(tmp)
-    part = next(n for n in sorted(os.listdir(tmp)) if n.startswith("part-"))
-    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-    os.replace(os.path.join(tmp, part), path)
-    shutil.rmtree(tmp)
+    try:
+        df.coalesce(1).write.mode("overwrite").json(tmp)
+        part = next(n for n in sorted(os.listdir(tmp)) if n.startswith("part-"))
+        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+        os.replace(os.path.join(tmp, part), path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return path
 
 

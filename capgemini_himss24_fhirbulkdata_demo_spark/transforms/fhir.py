@@ -16,14 +16,18 @@ what a transform costs per call matters as much as per record:
   each link of the chain.
 - RxNav enrichment (T13, ``__init__.py:504-522,538-543``): the
   reference does one synchronous HTTP GET *per record occurrence*;
-  here the distinct-NDC lookup table is collected once per transform
-  call and inlined as a MAP literal, applied inside the array
-  rewrite — no join, no Python in the hot path.
+  here the distinct-NDC lookup table is reference data, collected
+  once per lookup DataFrame (the first time a transform uses it) and
+  inlined as a MAP literal, applied inside the array rewrite — no
+  join, no Python in the hot path, and no Spark job per file.
 - Removed ids (T17, ``__init__.py:533``): the reference scans a
   Python *list* per record (O(N·R)) and drops every record whose id
   is on it; here ``min(keep) OVER (PARTITION BY id)`` keeps a row
   only if every row sharing its id passes the gates — the same
-  duplicate-id rule in one shuffle and one source scan.
+  duplicate-id rule in one source scan. Over a multi-partition input
+  the window costs one shuffle by id; the pipeline reads each landed
+  file as one partition, which already satisfies the window, so
+  there it costs none.
 
 Fidelity notes (quirks preserved):
 - claim_type is the *last* matching type.coding entry
@@ -44,6 +48,9 @@ from __future__ import annotations
 
 import functools
 import json
+import logging
+import threading
+import weakref
 from collections.abc import Callable
 
 from pyspark import SparkContext
@@ -57,6 +64,8 @@ from .schemas import (
     MEDICATION_REQUEST_SCHEMA,
     PATIENT_SCHEMA,
 )
+
+logger = logging.getLogger(__name__)
 
 
 def _lit_json(value, dtype) -> Column:
@@ -192,16 +201,33 @@ _RX_MAP_TYPE = MapType(
 )
 
 
+# Lookup DataFrame -> its {ndc: {name, rxnorm}} snapshot. Weak keys:
+# a lookup the caller drops takes its snapshot with it.
+_rx_snapshots: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_rx_snapshots_lock = threading.Lock()
+
+
 def _rx_map_literal(rxnav: DataFrame) -> Column:
     """The (ndc, name, rxnorm) lookup as one MAP literal (T13's
     distinct-prefetch rewrite, SURVEY §4.3.1).
 
     Assumes the lookup is reference data with one row per distinct NDC
-    — at most a few thousand rows — so it is collected once per call
-    and inlined into the plan, which spares the per-file
-    aggregate stage and broadcast a join would cost.
+    — at most a few thousand rows — inlined into the plan, which
+    spares the per-file aggregate stage and broadcast a join would
+    cost. It is collected the first time a transform sees this
+    DataFrame object and reused after that, so a request's EOB files
+    share one read; a caller refreshes it by passing a new DataFrame.
+    The lock makes concurrent files of one request wait for the first
+    read instead of each collecting.
     """
-    lookup = {r["ndc"]: {"name": r["name"], "rxnorm": r["rxnorm"]} for r in rxnav.collect()}
+    with _rx_snapshots_lock:
+        lookup = _rx_snapshots.get(rxnav)
+        if lookup is None:
+            lookup = _rx_snapshots[rxnav] = {
+                r["ndc"]: {"name": r["name"], "rxnorm": r["rxnorm"]}
+                for r in rxnav.collect()
+            }
+            logger.info("RxNav lookup snapshot taken: %d NDCs", len(lookup))
     return _lit_json(lookup, _RX_MAP_TYPE)
 
 
@@ -268,10 +294,11 @@ def _eob_exprs() -> tuple[Column, Column, dict[str, Column]]:
     # T17: the reference drops every record whose id is on the removed
     # list, so one failing row removes all rows sharing its id — a
     # plain filter(keep) would keep the passing duplicates. min(keep)
-    # over the id partition is that rule in one pass: one shuffle of
-    # the documents and one source scan, where a flags aggregate joined
-    # back to the rows parses the source twice. Null ids partition
-    # together, as they share the reference's list entry ``None``.
+    # over the id partition is that rule in one pass: at most one
+    # shuffle of the documents and one source scan, where a flags
+    # aggregate joined back to the rows parses the source twice. Null
+    # ids partition together, as they share the reference's list
+    # entry ``None``.
     keep_all = F.min(keep).over(Window.partitionBy("id"))
 
     # Mutations (survivors always pass every gate, so unconditional).

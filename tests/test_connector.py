@@ -169,6 +169,54 @@ def test_poll_error_raises():
         conn.poll_status("https://x/status", "tok")
 
 
+def _scripted(responses):
+    """A transport that answers each call with the next scripted
+    response and records the calls."""
+    calls = []
+
+    def transport(method, url, headers=None, data=None, params=None):
+        calls.append(url)
+        return responses[len(calls) - 1]
+
+    transport.calls = calls
+    return transport
+
+
+def test_poll_honours_retry_after():
+    """429/503 mean "come back later": the poll sleeps for Retry-After,
+    then resumes the usual 2·n backoff, and returns the manifest."""
+    manifest = b'{"output": []}'
+    transport = _scripted([
+        HttpResponse(503, headers={"Retry-After": "7"}),
+        HttpResponse(202),
+        HttpResponse(200, content=manifest),
+    ])
+    slept = []
+    conn = FhirBulkConnector(transport=transport, sleep=slept.append)
+    assert conn.poll_status("https://x/status", "tok") == manifest
+    assert slept == [7, 4]
+
+
+def test_poll_retry_after_forms_and_budget():
+    """An HTTP-date in the past waits 0 s; a 429 without the header
+    waits 2·n; retries count against max_poll_attempts."""
+    transport = _scripted([
+        HttpResponse(429, headers={"Retry-After": "Wed, 21 Oct 2015 07:28:00 GMT"}),
+        HttpResponse(429),
+        HttpResponse(200, content=b"{}"),
+    ])
+    slept = []
+    conn = FhirBulkConnector(transport=transport, sleep=slept.append)
+    assert conn.poll_status("https://x/status", "tok") == b"{}"
+    assert slept == [0.0, 4]
+
+    transport = _scripted([HttpResponse(503, headers={"Retry-After": "1"})] * 3)
+    conn = FhirBulkConnector(transport=transport, sleep=lambda s: None, max_poll_attempts=3)
+    with pytest.raises(TimeoutError):
+        conn.poll_status("https://x/status", "tok")
+    assert len(transport.calls) == 3
+
+
 # ---- O10: managed-identity token provider (reference :244-251) ----
 
 

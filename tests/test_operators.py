@@ -371,6 +371,24 @@ def test_ivf_sampled_training(spark):
     assert {r.query_id for r in out1} == {0, 1, 2}
 
 
+def test_connected_components_releases_round_checkpoints(spark):
+    """Each label round's localCheckpoint is released once the next
+    round has materialised: over a path graph that needs many rounds,
+    the session keeps at most one more persisted RDD (the result's)."""
+    from capgemini_himss24_fhirbulkdata_demo_spark.operators.dedup import (
+        connected_components,
+    )
+
+    jsc = spark.sparkContext._jsc.sc()
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 12)], "id_a BIGINT, id_b BIGINT"
+    )
+    baseline = jsc.getPersistentRDDs().size()
+    out = connected_components(pairs, "id_a", "id_b")
+    assert jsc.getPersistentRDDs().size() - baseline <= 1
+    assert {r.v: r.component for r in out.collect()} == {v: 1 for v in range(1, 13)}
+
+
 def test_connected_components_unconverged_raises(spark):
     import pytest
 

@@ -4,6 +4,7 @@ fake server; the second run carries the advanced ``_since`` cursor."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 from urllib.parse import parse_qs, urlsplit
@@ -326,3 +327,137 @@ def test_eob_bench_landing_dir_matches_single_file(tmp_path):
     assert len(multi_lines) == n
     # spot-check the content is real EOB JSON
     assert json.loads(multi_lines[0])["resourceType"] == "ExplanationOfBenefit"
+
+
+EOB_LINE = json.dumps({
+    "resourceType": "ExplanationOfBenefit",
+    "id": "e1",
+    "patient": {"reference": "Patient/-10000000000027"},
+    "type": {"coding": []},
+    "supportingInfo": [],
+    "item": [],
+})
+BCDA_URL = "https://bcda.cms.example/api"
+
+
+@contextlib.contextmanager
+def _job_group(spark, group):
+    """Tag the jobs this thread starts with ``group``; yields a callable
+    that returns how many jobs the group has run so far."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _landed_eob(tmp_path, name="ExplanationOfBenefit-client-1.json"):
+    p = tmp_path / name
+    p.write_text(EOB_LINE + "\n")
+    return str(p)
+
+
+def test_eob_file_is_one_job_per_lookup_read(spark, tmp_path):
+    """A bcda EOB file runs as one Spark job once its lookup has been
+    read: the lookup is collected the first time a transform sees that
+    DataFrame object, and a new DataFrame is read again."""
+    from capgemini_himss24_fhirbulkdata_demo_spark.pipeline import transform_landed_file
+
+    path = _landed_eob(tmp_path)
+    out_dir = str(tmp_path / "out")
+    rx = spark.createDataFrame([("1", "n", "r")], RXNAV_LOOKUP_SCHEMA)
+    with _job_group(spark, "eob-first") as jobs:
+        transform_landed_file(spark, path, BCDA_URL, out_dir, rx)
+        assert jobs() == 2  # the lookup's collect, then the file's write
+    with _job_group(spark, "eob-again") as jobs:
+        transform_landed_file(spark, path, BCDA_URL, out_dir, rx)
+        assert jobs() == 1
+    rx2 = spark.createDataFrame([("1", "n", "r")], RXNAV_LOOKUP_SCHEMA)
+    with _job_group(spark, "eob-new-lookup") as jobs:
+        transform_landed_file(spark, path, BCDA_URL, out_dir, rx2)
+        assert jobs() == 2
+
+
+def test_eob_file_plan_has_no_shuffle(spark, tmp_path, monkeypatch):
+    """One landed file is one partition, which satisfies the EOB
+    duplicate-id window: the written plan parses the file once and has
+    no Exchange."""
+    import re
+
+    from capgemini_himss24_fhirbulkdata_demo_spark import pipeline
+    from capgemini_himss24_fhirbulkdata_demo_spark.plans import explain_str
+
+    written = []
+    real_write = pipeline.write_ndjson
+
+    def capture(df, path, single_file=False):
+        written.append(df)
+        return real_write(df, path, single_file=single_file)
+
+    monkeypatch.setattr(pipeline, "write_ndjson", capture)
+    rx = spark.createDataFrame([("1", "n", "r")], RXNAV_LOOKUP_SCHEMA)
+    pipeline.transform_landed_file(
+        spark, _landed_eob(tmp_path), BCDA_URL, str(tmp_path / "out"), rx
+    )
+    text = explain_str(written[0], "simple")
+    assert "Exchange" not in text, text
+    assert len(re.findall(r"Scan json", text)) == 1, text
+
+
+def test_eob_without_lookup_fails_before_any_job(spark, tmp_path):
+    """A bcda export with EOB files and no rxnav= fails with a clear
+    ValueError before any Spark job, and the cursor stays put."""
+
+    class EobServer(FakeServer):
+        def __call__(self, method, url, headers=None, data=None, params=None):
+            if url == "https://s/st":
+                return HttpResponse(200, content=json.dumps({"output": [
+                    {"type": "ExplanationOfBenefit", "url": "https://s/f/e"},
+                ]}).encode())
+            if url == "https://s/f/e":
+                return HttpResponse(200, content=EOB_LINE.encode())
+            return super().__call__(method, url, headers, data, params)
+
+    server = EobServer()
+    conn = FhirBulkConnector(transport=server, sleep=lambda s: None)
+    state = HighWaterMark(str(tmp_path / "state.json"))
+    with _job_group(spark, "eob-no-lookup") as jobs:
+        with pytest.raises(ValueError, match=r"bcda ExplanationOfBenefit.*rxnav="):
+            run_bulk_import(
+                spark, conn, BCDA_URL, "g1", "tok",
+                "https://cg", "itok", str(tmp_path / "run"), state=state,
+            )
+        assert jobs() == 0
+    assert server.import_bodies == []
+    assert state.get(BCDA_URL, "g1") is None
+
+
+def test_malformed_line_fails_the_request(spark, tmp_path):
+    """A truncated NDJSON line is not a resource: the file fails, so the
+    request raises, posts no $import, leaves the cursor where it was and
+    writes no blob (nor temp directory) for that file."""
+    good = json.dumps(CONDITIONS[0])
+
+    class TruncatedServer(FakeServer):
+        def __call__(self, method, url, headers=None, data=None, params=None):
+            if url == "https://s/f/c":
+                return HttpResponse(200, content=(good + "\n" + good[:25] + "\n").encode())
+            return super().__call__(method, url, headers, data, params)
+
+    server = TruncatedServer()
+    conn = FhirBulkConnector(transport=server, sleep=lambda s: None)
+    state = HighWaterMark(str(tmp_path / "state.json"))
+    state.advance("https://fhir.epic.example", "g1", "2024-01-01T00:00:00+00:00")
+    work = tmp_path / "run"
+    with pytest.raises(Exception, match="MALFORMED|Malformed"):
+        run_bulk_import(
+            spark, conn, "https://fhir.epic.example", "g1", "tok",
+            "https://cg", "itok", str(work), state=state,
+        )
+    assert server.import_bodies == []
+    assert state.get("https://fhir.epic.example", "g1") == "2024-01-01T00:00:00+00:00"
+    export = work / "export"
+    left = os.listdir(export) if export.exists() else []
+    assert not [n for n in left if n.startswith("Condition")], left
