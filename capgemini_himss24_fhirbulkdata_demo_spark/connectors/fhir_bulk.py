@@ -78,6 +78,13 @@ def _retry_after_s(value: str | None) -> float | None:
     return max(0.0, (when - datetime.now(tz=timezone.utc)).total_seconds())
 
 
+def _retry_wait(r, n: int) -> float:
+    """Seconds to wait after send ``n`` drew a 429/503 ``r``: its
+    ``Retry-After``, or 2·n without one."""
+    wait = _retry_after_s(r.headers.get("Retry-After"))
+    return 2 * n if wait is None else wait
+
+
 def _requests_transport(method: str, url: str, headers=None, data=None, params=None):
     import requests
 
@@ -150,6 +157,20 @@ class FhirBulkConnector:
         self.sleep = sleep
         self.max_poll_attempts = max_poll_attempts
 
+    def _send(self, send: Callable[[], HttpResponse]) -> HttpResponse:
+        """Call ``send`` again while it answers 429 or 503, waiting as
+        ``_retry_wait`` says, for at most ``max_poll_attempts`` sends.
+        Returns the first other response, or the last one when the
+        budget is spent; the caller decides what an error means."""
+        r, n = send(), 1
+        while r.status_code in RETRYABLE_STATUSES and n < self.max_poll_attempts:
+            close = getattr(r, "close", None)  # a streamed response holds its connection
+            if close is not None:
+                close()
+            self.sleep(_retry_wait(r, n))
+            r, n = send(), n + 1
+        return r
+
     # ---- auth (O7/O9) ----
 
     def discover_token_url(self, smart_config_url: str) -> str:
@@ -218,19 +239,16 @@ class FhirBulkConnector:
         status URL. ``since`` is the incremental high-water mark
         (``_since=YYYY-MM-DDThh:mm:ss+zz:zz``, O4), percent-encoded so a
         form-decoding server does not read the offset's ``+`` as a
-        space."""
+        space. A 429 or 503 is retried as ``_send`` says."""
         url = f"{server_url}/Group/{group_id}/$export"
         if since:
             url += "?" + urlencode({"_since": since}, safe=":")
-        r = self.transport(
-            "GET",
-            url,
-            headers={
-                "Accept": "application/fhir+json",
-                "Prefer": "respond-async",
-                "Authorization": f"Bearer {token}",
-            },
-        )
+        headers = {
+            "Accept": "application/fhir+json",
+            "Prefer": "respond-async",
+            "Authorization": f"Bearer {token}",
+        }
+        r = self._send(lambda: self.transport("GET", url, headers=headers))
         if not (r.ok and "Content-Location" in r.headers):
             raise RuntimeError(
                 f"export kickoff failed: {r.status_code} {r.content[:200]!r}"
@@ -275,18 +293,16 @@ class FhirBulkConnector:
                 self.sleep(2 * n)
                 continue
             if r.status_code in RETRYABLE_STATUSES:
-                wait = _retry_after_s(r.headers.get("Retry-After"))
-                self.sleep(2 * n if wait is None else wait)
+                self.sleep(_retry_wait(r, n))
                 continue
             raise RuntimeError(f"poll failed: {r.status_code} {r.content[:200]!r}")
         raise TimeoutError("polling taking too long")
 
     def fetch_export_file(self, data_url: str, token: str) -> bytes:
-        r = self.transport(
-            "GET",
-            data_url,
-            headers={"Authorization": f"Bearer {token}", "Accept": NDJSON_CONTENT_TYPE},
-        )
+        """GET one export file; a 429 or 503 is retried as ``_send``
+        says, and any other error status raises."""
+        headers = {"Authorization": f"Bearer {token}", "Accept": NDJSON_CONTENT_TYPE}
+        r = self._send(lambda: self.transport("GET", data_url, headers=headers))
         # an error body (e.g. a 404 OperationOutcome) is not export data
         if not r.ok:
             raise RuntimeError(
@@ -298,7 +314,8 @@ class FhirBulkConnector:
         """Chunk-stream a file to disk when running on the default
         requests transport (multi-GB export files must not buffer in
         driver memory); injected transports fall back to the in-memory
-        interface (tests, small fixtures)."""
+        interface (tests, small fixtures). Both retry a 429 or 503 as
+        ``_send`` says."""
         if self.transport is not _requests_transport:
             data = self.fetch_export_file(data_url, token)
             with open(dest_path, "wb") as f:
@@ -306,11 +323,8 @@ class FhirBulkConnector:
             return
         import requests
 
-        with requests.get(
-            data_url,
-            headers={"Authorization": f"Bearer {token}", "Accept": NDJSON_CONTENT_TYPE},
-            stream=True,
-        ) as r:
+        headers = {"Authorization": f"Bearer {token}", "Accept": NDJSON_CONTENT_TYPE}
+        with self._send(lambda: requests.get(data_url, headers=headers, stream=True)) as r:
             r.raise_for_status()
             with open(dest_path, "wb") as f:
                 for chunk in r.iter_content(chunk_size=1 << 20):
@@ -325,29 +339,37 @@ class FhirBulkConnector:
 
         Files are independent — at scale this loop parallelizes
         trivially (thread pool / one Spark task per file); kept simple
-        here because the downloads are driver-side network I/O.
+        here because the downloads are driver-side network I/O. A
+        failed download removes the files this call landed, the
+        partial one included, and re-raises.
         """
         os.makedirs(landing_dir, exist_ok=True)
         out = []
-        for entry in manifest.get("output", []):
-            name = f"{entry['type']}-{client_id}-{uuid.uuid4()}.json"
-            path = os.path.join(landing_dir, name)
-            self._download_to(entry["url"], token, path)
-            out.append(path)
+        try:
+            for entry in manifest.get("output", []):
+                name = f"{entry['type']}-{client_id}-{uuid.uuid4()}.json"
+                out.append(os.path.join(landing_dir, name))
+                self._download_to(entry["url"], token, out[-1])
+        except BaseException:
+            for path in out:
+                if os.path.exists(path):
+                    os.remove(path)
+            raise
         return out
 
     # ---- import / delete (K2/K3) ----
 
     def bulk_import(self, fhir_server: str, token: str, import_body: dict) -> str:
-        r = self.transport(
-            "POST",
-            f"{fhir_server}/$import",
-            headers={
-                "Authorization": f"Bearer {token}",
-                "Prefer": "respond-async",
-                "Content-Type": "application/fhir+json",
-            },
-            data=json.dumps(import_body).encode(),
+        """POST the import manifest to ``$import``; returns the status
+        URL. A 429 or 503 is retried as ``_send`` says."""
+        headers = {
+            "Authorization": f"Bearer {token}",
+            "Prefer": "respond-async",
+            "Content-Type": "application/fhir+json",
+        }
+        body = json.dumps(import_body).encode()
+        r = self._send(
+            lambda: self.transport("POST", f"{fhir_server}/$import", headers=headers, data=body)
         )
         if not r.ok:
             raise RuntimeError(f"failed to kick off import: {r.status_code}")

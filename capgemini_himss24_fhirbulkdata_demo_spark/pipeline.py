@@ -65,6 +65,12 @@ class PipelineResult:
     since_advanced_to: str | None = None
 
 
+def _output_path(path: str, out_dir: str) -> str:
+    # one NDJSON FILE per export file: $import urls must point at a
+    # single application/fhir+ndjson blob, not a part-file directory
+    return os.path.join(out_dir, os.path.splitext(os.path.basename(path))[0] + ".ndjson")
+
+
 def transform_landed_file(
     spark: SparkSession,
     path: str,
@@ -88,9 +94,7 @@ def transform_landed_file(
     extra jobs, unlike the reference's len() bookkeeping.
     """
     name = os.path.basename(path)
-    # one NDJSON FILE per export file: $import urls must point at a
-    # single application/fhir+ndjson blob, not a part-file directory
-    out = os.path.join(out_dir, os.path.splitext(name)[0] + ".ndjson")
+    out = _output_path(path, out_dir)
     resource = resource_type_from_name(path)
     fn = get_transform(server_url, resource)
     if fn is None:
@@ -165,6 +169,11 @@ def run_bulk_import(
     It is read the first time a transform uses it, and that snapshot
     serves every later request given the same DataFrame object. To
     refresh the lookup, pass a new DataFrame.
+
+    A request that fails before the ``$import`` kickoff removes the
+    files it landed and the outputs it wrote, then re-raises. Once the
+    kickoff is sent they stay, because the import server may be
+    reading them.
     """
     res = PipelineResult()
     since = state.get(server_url, group_id) if state else None
@@ -178,16 +187,21 @@ def run_bulk_import(
     next_cursor = manifest.get("transactionTime") or run_started
 
     landing = os.path.join(work_dir, "landing")
-    res.landed = connector.land_export(manifest, token, landing, client_id=client_id)
-
     out_dir = os.path.join(work_dir, "export")
-    outs = transform_landed_files(spark, res.landed, server_url, out_dir, rxnav)
-    res.transformed = dict(zip(res.landed, outs))
-
-    entries = [
-        (p, f"{blob_base_url}{res.transformed[p]}") for p in res.landed
-    ]
-    import_body = build_import_manifest(entries)
+    res.landed = connector.land_export(manifest, token, landing, client_id=client_id)
+    try:
+        outs = transform_landed_files(spark, res.landed, server_url, out_dir, rxnav)
+        res.transformed = dict(zip(res.landed, outs))
+        entries = [
+            (p, f"{blob_base_url}{res.transformed[p]}") for p in res.landed
+        ]
+        import_body = build_import_manifest(entries)
+    except BaseException:
+        for p in res.landed:
+            for f in (p, _output_path(p, out_dir)):
+                if os.path.exists(f):
+                    os.remove(f)
+        raise
     res.import_status_url = connector.bulk_import(import_server, import_token, import_body)
     connector.poll_status(res.import_status_url, import_token)
 

@@ -24,8 +24,5 @@ from .windows import (  # noqa: F401
     streaming_dedup,
     tumbling_agg,
 )
-from .runner import (  # noqa: F401
-    DEFAULT_STATE_PARTITIONS,
-    start_stateful_query,
-)
+from .runner import start_stateful_query  # noqa: F401
 from .sketches import StreamingCountMin, run_streaming_cms  # noqa: F401

@@ -2,11 +2,28 @@
 
 A stateful query pins its state-store partition count from
 ``spark.sql.shuffle.partitions`` at its first checkpoint, and every
-micro-batch pays a commit per state partition however few keys it
-holds. The session default is sized for batch shuffles, so
-``start_stateful_query`` starts the query with
-``DEFAULT_STATE_PARTITIONS`` instead: a ``tumbling_agg`` holding ~7k
-windows drained 3x faster at 8 state partitions than at 32.
+micro-batch runs one task per state partition, each committing its
+store however few keys it holds. The session default is sized for
+batch shuffles, so ``start_stateful_query`` starts the query with one
+task wave instead, read when the query starts: as many state
+partitions as tasks can run at once. That is
+``spark.sparkContext.defaultParallelism``, the task slots, and in
+local mode no more than the driver JVM's available processors, since
+there the slots are threads on this host's cores: ``local[32]`` on 4
+cores runs 32 tasks as eight waves.
+
+Measured on a warm JVM (4 vCPU, ``local[4]``), a ``tumbling_agg``
+drain of 10,000 events landed as 8 files, two per micro-batch, took
+2.3 s at 8 state partitions, which ran as two task waves per batch,
+1.9 s at 4, 1.6 s at 2 and 1.5 s at 1 (medians of 5). Fewer partitions
+than a wave were faster still on this small state, but leave cores
+idle when the state is large; one wave is the most that adds no wave.
+The RocksDB state store, with or without changelog checkpointing, was
+slower than the default HDFS-backed store at 1, 4 and 8 partitions.
+At ``local[32]`` on the same host, a drain of 100,000 events took
+5.6 s at 32 state partitions, 2.6 s at 8 and 2.0 s at the default 4.
+The count is still pinned at the first checkpoint: a query restarted
+on a host with more cores keeps the count it started with.
 
 Spark 4.1 offers no per-query way to set it, hence the session-conf
 flip below:
@@ -21,8 +38,7 @@ flip below:
 ``start()`` clones the session state synchronously, so the conf is set,
 the query started and the previous value restored under a module lock.
 A batch job running in another thread of the same session during that
-window can still see the temporary value. A restart from an existing
-checkpoint keeps its original partition count.
+window can still see the temporary value.
 """
 
 from __future__ import annotations
@@ -33,14 +49,25 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-DEFAULT_STATE_PARTITIONS = 8
-
 _SHUFFLE_CONF = "spark.sql.shuffle.partitions"
 
 # Serializes the set/start/restore window across threads (r8 advice:
 # a concurrent start from another thread could pick up the temporary
 # sizing value or have its own restore clobbered).
 _START_LOCK = threading.Lock()
+
+# ``state_partitions``'s default: one task wave, read at start.
+_ONE_WAVE = object()
+
+
+def _one_wave(spark) -> int:
+    """How many tasks run at once: the task slots, capped in local mode
+    by the processors the driver JVM, and so its task threads, has."""
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    if sc.master.startswith("local"):
+        slots = min(slots, sc._jvm.java.lang.Runtime.getRuntime().availableProcessors())
+    return slots
 
 
 def start_stateful_query(
@@ -50,7 +77,7 @@ def start_stateful_query(
     foreach_batch: Callable[[DataFrame, int], None] | None = None,
     sink_format: str | None = None,
     output_mode: str | None = None,
-    state_partitions: int | None = DEFAULT_STATE_PARTITIONS,
+    state_partitions: int | None | object = _ONE_WAVE,
     query_name: str | None = None,
 ):
     """Start a streaming query with engine-sized state partitions.
@@ -61,9 +88,10 @@ def start_stateful_query(
     The query runs with ``availableNow``: it drains what is there, then
     stops.
 
-    ``state_partitions`` (default ``DEFAULT_STATE_PARTITIONS``) is
-    snapshotted into the query's cloned session at start; pass
-    ``None`` to inherit the session's shuffle default unchanged.
+    ``state_partitions`` (default: one task wave, see the module
+    docstring) is snapshotted into the query's cloned session at
+    start; pass ``None`` to inherit the session's shuffle default
+    unchanged.
     Returns the started StreamingQuery.
     """
     spark = stream_df.sparkSession
@@ -82,6 +110,8 @@ def start_stateful_query(
 
     if state_partitions is None:
         return writer.start()
+    if state_partitions is _ONE_WAVE:
+        state_partitions = _one_wave(spark)
     sized = str(int(state_partitions))
     with _START_LOCK:
         prev = spark.conf.get(_SHUFFLE_CONF)

@@ -217,6 +217,82 @@ def test_poll_retry_after_forms_and_budget():
     assert len(transport.calls) == 3
 
 
+# Each call that sends one request and must retry 429/503 like the poll.
+_RETRYING_CALLS = {
+    "kickoff_export": lambda c: c.kickoff_export("https://x", "g1", "tok"),
+    "bulk_import": lambda c: c.bulk_import("https://cg", "itok", {"resourceType": "Parameters"}),
+    "fetch_export_file": lambda c: c.fetch_export_file("https://x/f", "tok"),
+}
+
+
+@pytest.mark.parametrize("call", sorted(_RETRYING_CALLS))
+def test_requests_honour_retry_after(call):
+    """A 429 with Retry-After: 3 then a success sleeps [3] and returns."""
+    transport = _scripted([
+        HttpResponse(429, headers={"Retry-After": "3"}),
+        HttpResponse(200, headers={"Content-Location": "https://x/st"}, content=b"{}"),
+    ])
+    slept = []
+    conn = FhirBulkConnector(transport=transport, sleep=slept.append)
+    assert _RETRYING_CALLS[call](conn) in ("https://x/st", b"{}")
+    assert slept == [3] and len(transport.calls) == 2
+
+
+@pytest.mark.parametrize("call", sorted(_RETRYING_CALLS))
+def test_requests_raise_on_other_errors_and_spent_budget(call):
+    """A 400 raises at once; a 503 that never clears raises after
+    max_poll_attempts sends."""
+    transport = _scripted([HttpResponse(400, content=b"bad")])
+    slept = []
+    conn = FhirBulkConnector(transport=transport, sleep=slept.append)
+    with pytest.raises(RuntimeError, match="400"):
+        _RETRYING_CALLS[call](conn)
+    assert slept == [] and len(transport.calls) == 1
+
+    transport = _scripted([HttpResponse(503)] * 3)
+    conn = FhirBulkConnector(transport=transport, sleep=slept.append, max_poll_attempts=3)
+    with pytest.raises(RuntimeError, match="503"):
+        _RETRYING_CALLS[call](conn)
+    assert slept == [2, 4] and len(transport.calls) == 3
+
+
+def test_streamed_download_honours_retry_after(tmp_path):
+    """The default transport streams a file to disk; a 503 with
+    Retry-After before it is retried like the injected transport's."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    answers = [(503, {"Retry-After": "5"}, b""), (200, {}, b"line\n")]
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_GET(self):
+            status, headers, body = answers.pop(0)
+            self.send_response(status)
+            for k, v in {**headers, "Content-Length": str(len(body))}.items():
+                self.send_header(k, v)
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *args):
+            pass
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    thread = threading.Thread(target=server.serve_forever, daemon=True)
+    thread.start()
+    try:
+        slept = []
+        conn = FhirBulkConnector(sleep=slept.append)
+        dest = tmp_path / "f.ndjson"
+        conn._download_to(f"http://127.0.0.1:{server.server_port}/f", "tok", str(dest))
+    finally:
+        server.shutdown()
+        server.server_close()
+        thread.join(10)
+    assert not thread.is_alive()
+    assert slept == [5] and answers == []
+    assert dest.read_bytes() == b"line\n"
+
+
 # ---- O10: managed-identity token provider (reference :244-251) ----
 
 

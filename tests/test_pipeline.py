@@ -461,3 +461,50 @@ def test_malformed_line_fails_the_request(spark, tmp_path):
     export = work / "export"
     left = os.listdir(export) if export.exists() else []
     assert not [n for n in left if n.startswith("Condition")], left
+
+
+def test_failed_request_leaves_no_files(spark, tmp_path):
+    """A request that fails before $import removes what it landed and
+    what it transformed: a malformed line in the Condition file leaves
+    landing/ and export/ empty (the Patient file had transformed),
+    posts no $import and leaves the cursor unchanged."""
+    good = json.dumps(CONDITIONS[0])
+
+    class TruncatedServer(FakeServer):
+        def __call__(self, method, url, headers=None, data=None, params=None):
+            if url == "https://s/f/c":
+                return HttpResponse(200, content=(good + "\n" + good[:25] + "\n").encode())
+            return super().__call__(method, url, headers, data, params)
+
+    server = TruncatedServer()
+    conn = FhirBulkConnector(transport=server, sleep=lambda s: None)
+    state = HighWaterMark(str(tmp_path / "state.json"))
+    state.advance("https://fhir.epic.example", "g1", "2024-01-01T00:00:00+00:00")
+    work = tmp_path / "run"
+    with pytest.raises(Exception, match="MALFORMED|Malformed"):
+        run_bulk_import(
+            spark, conn, "https://fhir.epic.example", "g1", "tok",
+            "https://cg", "itok", str(work), state=state,
+        )
+    assert os.listdir(work / "landing") == []
+    assert os.listdir(work / "export") == []
+    assert server.import_bodies == []
+    assert state.get("https://fhir.epic.example", "g1") == "2024-01-01T00:00:00+00:00"
+
+
+def test_failed_download_leaves_no_landed_files(tmp_path):
+    """A fetch that fails mid-export removes the files landed before
+    it, and the request fails before any transform."""
+
+    class FailingFetch(FakeServer):
+        def __call__(self, method, url, headers=None, data=None, params=None):
+            if url == "https://s/f/c":
+                return HttpResponse(404, content=b"gone")
+            return super().__call__(method, url, headers, data, params)
+
+    conn = FhirBulkConnector(transport=FailingFetch(), sleep=lambda s: None)
+    manifest = json.loads(conn.poll_status("https://s/st", "tok"))
+    landing = tmp_path / "landing"
+    with pytest.raises(RuntimeError, match="404"):
+        conn.land_export(manifest, "tok", str(landing))
+    assert os.listdir(landing) == []

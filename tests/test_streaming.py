@@ -897,6 +897,73 @@ def test_runner_sizes_state_partitions(spark, landed_events, tmp_path):
     assert got == exp and len(got) > 0
 
 
+def test_runner_default_state_is_one_task_wave(spark, landed_events, tmp_path):
+    """By default start_stateful_query pins one task wave of state
+    partitions (sc.defaultParallelism, in local mode no more than the
+    JVM's processors), whatever the session's shuffle count, and emits
+    the same rows as state_partitions=None, which inherits that
+    count."""
+    from capgemini_himss24_fhirbulkdata_demo_spark.streaming import (
+        start_stateful_query,
+    )
+
+    def drain(ck, **kw):
+        rows = []
+
+        def commit(batch_df, batch_id):
+            rows.extend(tuple(r) for r in batch_df.collect())
+
+        q = start_stateful_query(
+            tumbling_agg(read_parquet_stream(spark, landed_events, EVENTS_SCHEMA)),
+            ck,
+            foreach_batch=commit,
+            output_mode="update",
+            **kw,
+        )
+        q.awaitTermination(120)
+        return set(rows)
+
+    def state_dirs(ck):
+        return sorted(
+            int(d) for d in os.listdir(os.path.join(ck, "state", "0")) if d.isdigit()
+        )
+
+    ck_wave, ck_inherit = str(tmp_path / "ck_wave"), str(tmp_path / "ck_inherit")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        got = drain(ck_wave)
+        exp = drain(ck_inherit, state_partitions=None)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    sc = spark.sparkContext
+    cores = sc._jvm.java.lang.Runtime.getRuntime().availableProcessors()
+    assert state_dirs(ck_wave) == list(range(min(sc.defaultParallelism, cores)))
+    assert state_dirs(ck_inherit) == list(range(7))
+    assert got == exp and len(got) > 0
+
+
+def test_runner_one_wave_caps_local_slots_at_cores():
+    """local[32] on a 4-processor JVM runs 32 task threads on 4 cores,
+    so one wave is 4 tasks; on a cluster it is every task slot."""
+    from types import SimpleNamespace
+
+    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.runner import _one_wave
+
+    runtime = SimpleNamespace(availableProcessors=lambda: 4)
+    jvm = SimpleNamespace(
+        java=SimpleNamespace(lang=SimpleNamespace(Runtime=SimpleNamespace(getRuntime=lambda: runtime)))
+    )
+
+    def wave(master, slots):
+        sc = SimpleNamespace(master=master, defaultParallelism=slots, _jvm=jvm)
+        return _one_wave(SimpleNamespace(sparkContext=sc))
+
+    assert wave("local[32]", 32) == 4
+    assert wave("local[2]", 2) == 2
+    assert wave("spark://head:7077", 32) == 32
+
+
 def test_runner_restart_keeps_pinned_state_partitions(spark, tmp_path):
     """Documented runner caveat: a restart from an existing checkpoint
     keeps the ORIGINALLY pinned state partition count — a different

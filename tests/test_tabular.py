@@ -111,3 +111,79 @@ def test_write_ndjson_single_file_modes(spark, tmp_path):
     assert read_ids() == [1]
     write_ndjson(df2, path, single_file=True)
     assert read_ids() == [2]
+
+
+def _jobs_run(spark, group, fn):
+    """Run ``fn`` with its Spark jobs tagged ``group``; returns
+    (number of jobs it ran, its result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_load_table_infers_schema_once_per_file_version(spark, tmp_path):
+    """The first load of a table infers its schema with a Spark job; a
+    second load of the unchanged file runs none. Rewriting the file
+    with an extra column is a new version: the next load infers again
+    and returns the new schema. A directory table is keyed on every
+    file under it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from capgemini_himss24_fhirbulkdata_demo_spark.catalog import schema_snapshot_stats
+
+    d = str(tmp_path)
+    path = os.path.join(d, "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    before = schema_snapshot_stats(spark)
+
+    first, _ = _jobs_run(spark, "load-t-1", lambda: load_table(spark, d, "t").columns)
+    second, cols = _jobs_run(spark, "load-t-2", lambda: load_table(spark, d, "t").columns)
+    assert first >= 1 and second == 0 and cols == ["a"]
+
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    t = load_table(spark, d, "t")
+    assert t.columns == ["a", "b"]
+    assert sorted(map(tuple, t.collect())) == [(1, "x"), (2, "y")]
+    after = schema_snapshot_stats(spark)
+    assert after["hits"] - before["hits"] == 1
+    assert after["misses"] - before["misses"] == 2
+
+    spark.range(3).write.parquet(os.path.join(d, "u.parquet"))
+    load_table(spark, d, "u")
+    again, _ = _jobs_run(spark, "load-u-2", lambda: load_table(spark, d, "u").columns)
+    assert again == 0 and load_table(spark, d, "u").count() == 3
+    spark.range(3, 5).write.mode("append").parquet(os.path.join(d, "u.parquet"))
+    misses = schema_snapshot_stats(spark)["misses"]
+    assert load_table(spark, d, "u").count() == 5
+    assert schema_snapshot_stats(spark)["misses"] == misses + 1
+
+
+def test_load_table_returns_a_fresh_relation_each_call(spark):
+    """Two loads of one table are two relations with their own
+    attribute ids, so a self-join resolves, and equals the same join
+    over two plain ``spark.read.parquet`` loads."""
+    from capgemini_himss24_fhirbulkdata_demo_spark.catalog import table_path
+
+    def pairs(a, b):
+        j = a.join(b, a.n_regionkey == b.n_regionkey).select(a.n_name, b.n_name)
+        return sorted(map(tuple, j.collect()))
+
+    load_table(spark, SF_DIR, "nation")  # the snapshot exists from here on
+    got = pairs(load_table(spark, SF_DIR, "nation"), load_table(spark, SF_DIR, "nation"))
+    path = table_path(SF_DIR, "nation")
+    exp = pairs(spark.read.parquet(path), spark.read.parquet(path))
+    assert got == exp and len(got) > 25
+
+
+def test_load_table_missing_path_raises_analysis_exception(spark, tmp_path):
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException):
+        load_table(spark, str(tmp_path), "absent")

@@ -10,6 +10,7 @@ docstring promises, on a 2x copy of sf0.001.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -214,3 +215,43 @@ def test_bench_compare_point_fallback():
         bench_compare.verdict(band, {"median": 22800, "min": 0, "max": 1}, True)
         == "noise (medians inside bands)"
     )
+
+
+def _run_line(op_p50_ms, setup_s, failed=0):
+    return json.dumps({
+        "correct": failed == 0, "attempted": 18, "failed": failed,
+        "metrics": {"op_p50_ms": {"value": op_p50_ms, "unit": "ms"},
+                    "items_per_s": {"value": 1000 / op_p50_ms, "unit": "1/s"},
+                    "setup_s": {"value": setup_s, "unit": "s"}},
+    })
+
+
+def test_perf_ab_summary_on_canned_runs():
+    """The A/B summary reads each run's last JSON line, counts pair
+    wins in the direction each metric improves, and flags a median
+    gap wider than the parent's interquartile range."""
+    import perf_ab
+
+    spec = [
+        {"name": "op_p50_ms", "unit": "ms", "better": "lower"},
+        {"name": "items_per_s", "unit": "1/s", "better": "higher"},
+        {"name": "setup_s", "unit": "s", "better": "lower"},
+    ]
+    parent = [perf_ab.last_json(f"warming up\n{_run_line(v, s)}\n\n")
+              for v, s in [(800, 12.0), (760, 11.5), (790, 11.8), (820, 12.1), (780, 11.9)]]
+    change = [perf_ab.last_json(_run_line(v, s))
+              for v, s in [(650, 12.2), (640, 11.4), (800, 11.9), (660, 12.0), (655, 11.9)]]
+    rows = {r["name"]: r for r in perf_ab.summarize(spec, parent, change)}
+
+    op = rows["op_p50_ms"]
+    assert op["parent"] == (780, 790, 800) and op["change"] == (650, 655, 660)
+    assert (op["wins"], op["pairs"], op["beyond_iqr"]) == (4, 5, True)
+    assert rows["items_per_s"]["wins"] == 4  # higher is better: same pairs win
+    setup = rows["setup_s"]
+    assert (setup["wins"], setup["beyond_iqr"]) == (2, False)  # one tie counts for neither
+    text = perf_ab.format_rows(list(rows.values()))
+    assert "op_p50_ms" in text and "4/5" in text and "-17.1%" in text
+    assert perf_ab.failures(change + [json.loads(_run_line(700, 12, failed=2))]) == (
+        "2/108 operations failed, 1 runs incorrect"
+    )
+    assert perf_ab.parse_seeds("31-33,40") == [31, 32, 33, 40]
