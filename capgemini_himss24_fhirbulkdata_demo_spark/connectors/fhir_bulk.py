@@ -174,7 +174,11 @@ class FhirBulkConnector:
     # ---- auth (O7/O9) ----
 
     def discover_token_url(self, smart_config_url: str) -> str:
-        r = self.transport("GET", smart_config_url)
+        """The token endpoint from the server's SMART configuration. A
+        429 or 503 is retried as ``_send`` says."""
+        r = self._send(lambda: self.transport("GET", smart_config_url))
+        if not r.ok:
+            raise RuntimeError(f"SMART configuration lookup failed: {r.status_code}")
         try:
             return r.json()["token_endpoint"]
         except Exception as e:
@@ -188,10 +192,12 @@ class FhirBulkConnector:
         signed_jwt: str | None = None,
         scope: str = "",
     ) -> tuple[str, datetime]:
+        """Exchange a signed JWT or a client secret for an access token
+        and its expiry. A 429 or 503 is retried as ``_send`` says."""
         if signed_jwt is not None and client_secret is not None:
             raise ValueError("use either signed_jwt or client_secret, not both")
         if signed_jwt is not None:
-            r = self.transport(
+            r = self._send(lambda: self.transport(
                 "POST",
                 token_url,
                 data={
@@ -200,7 +206,7 @@ class FhirBulkConnector:
                     "client_assertion": signed_jwt,
                     "scope": scope,
                 },
-            )
+            ))
         elif client_secret is not None:
             if client_id is None:
                 raise ValueError("client_secret requires client_id")
@@ -211,12 +217,12 @@ class FhirBulkConnector:
             import base64 as _b64
 
             basic = _b64.b64encode(f"{client_id}:{client_secret}".encode()).decode()
-            r = self.transport(
+            r = self._send(lambda: self.transport(
                 "POST",
                 token_url,
                 headers={"Authorization": f"Basic {basic}", "accept": "application/json"},
                 data={"grant_type": "client_credentials"},
-            )
+            ))
         else:
             raise ValueError("need one of signed_jwt or client_secret")
         if not r.ok:
@@ -376,7 +382,9 @@ class FhirBulkConnector:
         return r.headers["Content-Location"]
 
     def bulk_delete(self, fhir_server: str, token: str) -> str:
-        r = self.transport(
+        """Kick off ``$bulk-delete``; returns the status URL. A 429 or
+        503 is retried as ``_send`` says."""
+        r = self._send(lambda: self.transport(
             "DELETE",
             f"{fhir_server}/$bulk-delete",
             headers={
@@ -385,7 +393,7 @@ class FhirBulkConnector:
                 "Content-Type": "application/fhir+json",
             },
             params={"_hardDelete": "True"},
-        )
+        ))
         if not r.ok:
             raise RuntimeError(f"failed to kick off delete: {r.status_code}")
         return r.headers["Content-Location"]

@@ -8,6 +8,23 @@ count sized for the local test harness but overridable for clusters.
 At 100 TB the same code runs with ``shuffle_partitions`` set to
 O(2–4× total executor cores) (or left to AQE's coalescing with a high
 initial value); nothing else changes.
+
+Streaming checkpoints commit through Spark's
+``FileSystemBasedCheckpointFileManager``: each file is written to a
+temp name and moved into place with one ``FileSystem.rename``. Spark's
+default, the ``FileContext``-based manager, stats the source and the
+destination of every rename; on the local file system without Hadoop's
+native library each of those stats runs ``FileUtil.readLink``, which
+starts a ``readlink`` process. Measured on a ``tumbling_agg`` drain
+(4 vCPU, ``local[4]``), that was 280 of the 364 process starts per
+drain, and without them the state stores' commit time per
+micro-batch, summed over its 4 state tasks, fell from 295 to 17 ms. This manager is the one Spark
+itself picks for a scheme that has no ``FileContext``. Nothing is
+switched off: Spark's checkpoint checksums, Hadoop's ``.crc`` sidecars
+and the offset and commit logs' no-overwrite check (a check, then the
+rename, as ``AbstractFileSystem.renameInternal`` also does locally)
+all stay. On HDFS and ABFS ``FileSystem.rename`` is atomic as well;
+that is the stores' contract and was not measured here.
 """
 
 from __future__ import annotations
@@ -18,6 +35,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -58,6 +78,8 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Keep driver results modest; queries() results are small aggregates.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # One rename(2) per checkpoint commit, no readlink processes (module docstring).
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
         .config("spark.ui.enabled", "false")
     )
     if not SparkSession.getActiveSession():

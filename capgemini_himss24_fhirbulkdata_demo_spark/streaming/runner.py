@@ -12,18 +12,25 @@ local mode no more than the driver JVM's available processors, since
 there the slots are threads on this host's cores: ``local[32]`` on 4
 cores runs 32 tasks as eight waves.
 
-Measured on a warm JVM (4 vCPU, ``local[4]``), a ``tumbling_agg``
-drain of 10,000 events landed as 8 files, two per micro-batch, took
-2.3 s at 8 state partitions, which ran as two task waves per batch,
-1.9 s at 4, 1.6 s at 2 and 1.5 s at 1 (medians of 5). Fewer partitions
-than a wave were faster still on this small state, but leave cores
-idle when the state is large; one wave is the most that adds no wave.
-The RocksDB state store, with or without changelog checkpointing, was
-slower than the default HDFS-backed store at 1, 4 and 8 partitions.
-At ``local[32]`` on the same host, a drain of 100,000 events took
-5.6 s at 32 state partitions, 2.6 s at 8 and 2.0 s at the default 4.
-The count is still pinned at the first checkpoint: a query restarted
-on a host with more cores keeps the count it started with.
+Measured on a warm JVM (4 vCPU, ``local[4]``, checkpoints through the
+session's file-system checkpoint manager), a ``tumbling_agg`` drain of
+10,000 events landed as 8 files, two per micro-batch, took 1.30 s at 8
+state partitions, which ran as two task waves per batch, 1.13 s at 4,
+1.03 s at 2 and 0.97 s at 1 (medians of 5, interleaved). Fewer
+partitions than a wave were faster still on this small state, but
+leave cores idle when the state is large; one wave is the most that
+adds no wave. The RocksDB state store was slower than the default
+HDFS-backed store at 1, 4 and 8 partitions: 1.13, 1.19 and 1.60 s
+without changelog checkpointing, 1.04, 1.16 and 1.36 s with it; at 2
+partitions the three were within 0.1 s of each other. At ``local[32]``
+on the same host, a drain of 100,000 events took 3.1 s at 32 state
+partitions, 1.5 s at 8 and 1.2 s at the default 4 (medians of 3).
+Each state-partition commit costs less than under Spark's default
+FileContext checkpoint manager (2.4, 1.9, 1.5 and 1.5 s for the
+``local[4]`` drain, 7.3, 2.8 and 2.5 s at ``local[32]``), so a wave
+adds less than it did, but it still adds. The count is still pinned
+at the first checkpoint: a query restarted on a host with more cores
+keeps the count it started with.
 
 Spark 4.1 offers no per-query way to set it, hence the session-conf
 flip below:

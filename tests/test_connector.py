@@ -217,24 +217,40 @@ def test_poll_retry_after_forms_and_budget():
     assert len(transport.calls) == 3
 
 
-# Each call that sends one request and must retry 429/503 like the poll.
+_STATUS_URL = HttpResponse(200, headers={"Content-Location": "https://x/st"}, content=b"{}")
+_TOKEN = HttpResponse(200, content=b'{"access_token": "tok-1", "expires_in": 300}')
+
+# Each call that sends one request and must retry 429/503 like the poll:
+# name -> (call, its success response, what the call returns from it).
 _RETRYING_CALLS = {
-    "kickoff_export": lambda c: c.kickoff_export("https://x", "g1", "tok"),
-    "bulk_import": lambda c: c.bulk_import("https://cg", "itok", {"resourceType": "Parameters"}),
-    "fetch_export_file": lambda c: c.fetch_export_file("https://x/f", "tok"),
+    "kickoff_export": (lambda c: c.kickoff_export("https://x", "g1", "tok"), _STATUS_URL, "https://x/st"),
+    "bulk_import": (
+        lambda c: c.bulk_import("https://cg", "itok", {"resourceType": "Parameters"}), _STATUS_URL, "https://x/st"
+    ),
+    "bulk_delete": (lambda c: c.bulk_delete("https://cg", "itok"), _STATUS_URL, "https://x/st"),
+    "fetch_export_file": (lambda c: c.fetch_export_file("https://x/f", "tok"), _STATUS_URL, b"{}"),
+    "discover_token_url": (
+        lambda c: c.discover_token_url("https://fhir/.well-known/smart-configuration"),
+        HttpResponse(200, content=b'{"token_endpoint": "https://idp/token"}'),
+        "https://idp/token",
+    ),
+    "get_access_token_client_secret": (
+        lambda c: c.get_access_token("https://idp/token", "client-1", client_secret="s3cret")[0], _TOKEN, "tok-1"
+    ),
+    "get_access_token_signed_jwt": (
+        lambda c: c.get_access_token("https://idp/token", signed_jwt="jwt")[0], _TOKEN, "tok-1"
+    ),
 }
 
 
 @pytest.mark.parametrize("call", sorted(_RETRYING_CALLS))
 def test_requests_honour_retry_after(call):
     """A 429 with Retry-After: 3 then a success sleeps [3] and returns."""
-    transport = _scripted([
-        HttpResponse(429, headers={"Retry-After": "3"}),
-        HttpResponse(200, headers={"Content-Location": "https://x/st"}, content=b"{}"),
-    ])
+    send, success, expected = _RETRYING_CALLS[call]
+    transport = _scripted([HttpResponse(429, headers={"Retry-After": "3"}), success])
     slept = []
     conn = FhirBulkConnector(transport=transport, sleep=slept.append)
-    assert _RETRYING_CALLS[call](conn) in ("https://x/st", b"{}")
+    assert send(conn) == expected
     assert slept == [3] and len(transport.calls) == 2
 
 
@@ -242,17 +258,18 @@ def test_requests_honour_retry_after(call):
 def test_requests_raise_on_other_errors_and_spent_budget(call):
     """A 400 raises at once; a 503 that never clears raises after
     max_poll_attempts sends."""
+    send = _RETRYING_CALLS[call][0]
     transport = _scripted([HttpResponse(400, content=b"bad")])
     slept = []
     conn = FhirBulkConnector(transport=transport, sleep=slept.append)
     with pytest.raises(RuntimeError, match="400"):
-        _RETRYING_CALLS[call](conn)
+        send(conn)
     assert slept == [] and len(transport.calls) == 1
 
     transport = _scripted([HttpResponse(503)] * 3)
     conn = FhirBulkConnector(transport=transport, sleep=slept.append, max_poll_attempts=3)
     with pytest.raises(RuntimeError, match="503"):
-        _RETRYING_CALLS[call](conn)
+        send(conn)
     assert slept == [2, 4] and len(transport.calls) == 3
 
 

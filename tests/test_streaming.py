@@ -1019,3 +1019,106 @@ def test_runner_restart_keeps_pinned_state_partitions(spark, tmp_path):
     )
     assert state_dirs == ["0", "1", "2"]
     assert len(rows) > 0  # the restarted query processed the new file
+
+
+_FS_MANAGER = "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+_FC_MANAGER = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager(spark, path) -> str:
+    """The class Spark picks to write a checkpoint at ``path`` under the
+    session's current conf."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(path)), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    return manager.getClass().getName()
+
+
+def test_session_checkpoints_through_file_system_manager(spark, tmp_path):
+    """get_spark makes every checkpoint commit with one FileSystem.rename:
+    Spark's default FileContext manager starts a readlink process per
+    stat on a local file system without Hadoop's native library. The
+    conf is internal to Spark; if an upgrade drops or renames it, this
+    fails instead of the drain slowing down unseen."""
+    assert _checkpoint_manager(spark, tmp_path) == _FS_MANAGER
+
+
+def test_stateful_drain_keeps_checkpoint_checksums(spark, landed_events, tmp_path):
+    """The file-system manager keeps every check on: Spark's checksum
+    file beside each state delta, and Hadoop's .crc sidecar beside each
+    offset and commit log entry."""
+    ck = tmp_path / "ck"
+    q = start_stateful_query(
+        tumbling_agg(read_parquet_stream(spark, landed_events, EVENTS_SCHEMA, 2)),
+        str(ck),
+        foreach_batch=lambda batch_df, batch_id: batch_df.collect(),
+        output_mode="append",
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    deltas = sorted(ck.glob("state/0/*/*.delta"))
+    assert deltas
+    for delta in deltas:
+        assert delta.with_name(delta.name + ".crc").is_file(), delta
+    for log in ("offsets", "commits"):
+        entries = [p for p in (ck / log).iterdir() if p.name.isdigit()]
+        assert len(entries) >= 2
+        for entry in entries:
+            assert (ck / log / f".{entry.name}.crc").is_file(), entry
+
+
+def test_checkpoint_from_file_context_manager_resumes(spark, tmp_path):
+    """A checkpoint begun under Spark's default FileContext manager
+    resumes under the session's file-system manager: the windows
+    emitted before and after the switch are, together, exactly the
+    batch twin's closed windows, none twice."""
+    import datetime as dt
+
+    landing = tmp_path / "landing"
+    ck = str(tmp_path / "ck")
+    t0 = dt.datetime(2024, 3, 1)
+    events = [
+        (i, t0 + dt.timedelta(hours=h, minutes=7 * i % 60), i % 3, et, float(i % 5), None)
+        for i, (h, et) in enumerate((h, et) for h in range(11) for et in ("view", "click"))
+    ]
+    first, second = [e for e in events if e[1].hour <= 5], [e for e in events if e[1].hour > 5]
+    assert second[0][1].hour == 6  # hours 4 and 5 are still open when the manager changes
+
+    def land(rows):
+        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode("append").parquet(str(landing))
+
+    emitted: list[tuple] = []
+
+    def drain():
+        q = start_stateful_query(
+            tumbling_agg(read_parquet_stream(spark, str(landing), EVENTS_SCHEMA)),
+            ck,
+            foreach_batch=lambda batch_df, batch_id: emitted.extend(tuple(r) for r in batch_df.collect()),
+            output_mode="append",
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    land(first)
+    prev = spark.conf.get(_MANAGER_CONF)
+    spark.conf.set(_MANAGER_CONF, _FC_MANAGER)
+    try:
+        assert _checkpoint_manager(spark, ck) == _FC_MANAGER
+        drain()
+    finally:
+        spark.conf.set(_MANAGER_CONF, prev)
+    assert {r[0] for r in emitted} == {"2024-03-01 00:00:00", "2024-03-01 01:00:00", "2024-03-01 02:00:00"}
+    land(second)
+    drain()
+
+    watermark = max(e[1] for e in events) - dt.timedelta(hours=2)
+    twin: dict[tuple[str, str], list] = {}
+    for _, ts, _, et, value, _ in events:
+        start = ts.replace(minute=0, second=0)
+        if start + dt.timedelta(hours=1) <= watermark:
+            acc = twin.setdefault((start.strftime("%Y-%m-%d %H:%M:%S"), et), [0, 0.0])
+            acc[0] += 1
+            acc[1] += value
+    assert sorted(emitted) == sorted((w, et, n, v) for (w, et), (n, v) in twin.items())

@@ -255,3 +255,52 @@ def test_perf_ab_summary_on_canned_runs():
         "2/108 operations failed, 1 runs incorrect"
     )
     assert perf_ab.parse_seeds("31-33,40") == [31, 32, 33, 40]
+
+
+def _process_start(stamp, command, *methods):
+    """One event as ``jfr print --json`` prints it: class names with
+    slashes, the top of the stack first."""
+    frames = [{"method": {"type": {"name": m.rpartition(".")[0].replace(".", "/")}, "name": m.rpartition(".")[2]},
+               "lineNumber": 1, "type": "Interpreted"} for m in methods]
+    return {"type": "jdk.ProcessStart", "values": {
+        "startTime": stamp, "pid": 1, "directory": "/", "command": command,
+        "stackTrace": {"truncated": False, "frames": frames},
+    }}
+
+
+def test_jfr_forks_tally_on_canned_recording():
+    """The fork tally reads ``jfr print --json`` output, puts each
+    process start into the operation whose span holds it (else
+    ``(setup)``), and counts it by program name and by the first
+    org.apache.spark frame from the top of the stack."""
+    import jfr_forks
+
+    rename = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager.renameTempFile"
+    recording = {"recording": {"events": [
+        _process_start("2026-01-01T00:00:00.5Z", "/usr/bin/chmod 644 /x",
+                       "java.lang.ProcessBuilder.start", "org.apache.hadoop.fs.FileUtil.chmod"),
+        _process_start("2026-01-01T00:00:01.250000001+00:00", "readlink -f /ck/x",
+                       "java.lang.ProcessBuilder.start", "org.apache.hadoop.fs.FileUtil.readLink",
+                       rename, "org.apache.spark.sql.execution.streaming.HDFSMetadataLog.add"),
+        _process_start("2026-01-01T00:00:01.75Z", "readlink -f /ck/y",
+                       "java.lang.ProcessBuilder.start", rename),
+        _process_start("2026-01-01T00:00:03Z", "chmod 755 /ck",
+                       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider.commit"),
+        {"type": "jdk.GarbageCollection", "values": {"startTime": "2026-01-01T00:00:01Z"}},
+    ]}}
+    events = jfr_forks.load_events(recording)
+    assert [e["command"] for e in events] == ["chmod", "readlink", "readlink", "chmod"]
+    assert events[0]["frame"] == jfr_forks.NO_SPARK_FRAME and events[1]["frame"] == rename
+    assert events[1]["time"] - events[0]["time"] == pytest.approx(0.75)
+
+    t = events[0]["time"] - 0.5  # 00:00:00
+    spans = [("drain", t + 1, t + 2), ("q01", t + 2, t + 2.5), ("drain", t + 2.5, t + 4)]
+    rows = jfr_forks.tally(events, spans)
+    assert rows["drain"]["ops"] == 2 and rows["drain"]["starts"] == 3
+    assert rows["drain"]["by_command"] == {"readlink": 2, "chmod": 1}
+    assert rows["drain"]["by_frame"][rename] == 2
+    assert rows["q01"] == {"ops": 1, "starts": 0, "by_command": {}, "by_frame": {}}
+    assert rows[jfr_forks.SETUP]["ops"] == 0 and rows[jfr_forks.SETUP]["starts"] == 1
+    text = jfr_forks.format_tally(rows)
+    assert text.splitlines()[0] == "drain: 3 starts over 2 operations, 1.5 per operation"
+    assert "outside any operation" in text
