@@ -294,10 +294,11 @@ class StreamingBench:
     events/sec over the drain wall-clock.
 
     Per-rep drains = the ENGINE-DEFAULT path (``start_stateful_query``
-    with its own ``DEFAULT_STATE_PARTITIONS`` sizing and no bench-side
-    conf tuning — what a user of the streaming/ helpers gets out of
-    the box; r7 verdict What's-wrong #2: the tuned confs used to live
-    only in this harness) AND, since v7.1, the raw session-default
+    sizing state to one task wave — the session's task slots, capped
+    in local mode at the JVM's processors — with no bench-side conf
+    tuning: what a user of the streaming/ helpers gets out of the box;
+    r7 verdict What's-wrong #2: the tuned confs used to live only in
+    this harness) AND, since v7.1, the raw session-default
     drain (the old "default basis": writeStream under the session's
     32 shuffle partitions — the naive-user path). The raw drain was a
     one-shot companion through v7, which left the r2–r9 historical
@@ -603,8 +604,8 @@ METHODOLOGY = {
             "(64-file NDJSON landing dir); point value = min; "
             "single-run basis = first timed rep",
     "streaming": "per rep: engine-default drain via "
-                 "start_stateful_query (DEFAULT_STATE_PARTITIONS=8, "
-                 "no harness tuning) THEN the raw session-default "
+                 "start_stateful_query (state partitions = one "
+                 "task wave, no harness tuning) THEN the raw session-default "
                  "drain (32 parts — per-rep since v7.1, giving the "
                  "r2-r9 _default_basis series its own dispersion "
                  "band; point value = min over reps, r9 verdict ask "

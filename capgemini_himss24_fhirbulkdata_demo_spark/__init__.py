@@ -24,7 +24,7 @@ Layout
                    composables on higher-order functions.
 - ``functions``  : scalar helpers (b64url, fingerprints, tokenizers).
 - ``streaming``  : Structured Streaming layer (windows, watermark,
-                   stateful dedup, incremental FHIR import).
+                   streaming dedup, stateful-query runner).
 - ``connectors`` : driver-side FHIR bulk $export/$import connector
                    (auth, kickoff, poll, manifest) — mockable.
 - ``multimodal`` : binary-column plumbing for image/audio payloads

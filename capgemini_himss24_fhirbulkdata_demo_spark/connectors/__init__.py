@@ -2,7 +2,7 @@
 
 The FHIR Bulk Data connector orchestrates: SMART auth → $export
 kickoff → backoff polling → NDJSON fetch → landing dir (where the
-Spark batch/streaming layers take over) → $import manifest commit →
+Spark batch transform takes over) → $import manifest commit →
 archive. All network and clock effects are injected (transport /
 sleep / signer / now) so the whole flow is testable offline.
 """

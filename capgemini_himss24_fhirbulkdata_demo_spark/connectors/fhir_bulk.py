@@ -14,7 +14,7 @@ data) -> HttpResponse``, ``sleep``, ``now``, ``make_jti``. The default
 transport uses ``requests`` when available.
 
 Architectural fix vs the reference: the download loop lands files
-into a directory consumed by Spark (batch or readStream) instead of
+into a directory consumed by the Spark batch transform instead of
 holding whole files in memory; manifest entries are processed
 independently (parallel loads) instead of a sequential for-loop
 (``:644``; SURVEY §4.3.4).
@@ -59,6 +59,8 @@ Transport = Callable[..., HttpResponse]
 # Statuses after which a Bulk Data server expects the client to retry
 # the same request, waiting as its ``Retry-After`` header says.
 RETRYABLE_STATUSES = (429, 503)
+# Sends per request (retries included) before a 429/503 is returned.
+MAX_SENDS = 100
 
 
 def _retry_after_s(value: str | None) -> float | None:
@@ -83,6 +85,25 @@ def _retry_wait(r, n: int) -> float:
     ``Retry-After``, or 2·n without one."""
     wait = _retry_after_s(r.headers.get("Retry-After"))
     return 2 * n if wait is None else wait
+
+
+def send_with_retry(
+    send: Callable[[], HttpResponse],
+    sleep: Callable[[float], None],
+    max_sends: int = MAX_SENDS,
+) -> HttpResponse:
+    """Call ``send`` again while it answers 429 or 503, sleeping as
+    ``_retry_wait`` says, for at most ``max_sends`` sends. Returns the
+    first other response, or the last one when the budget is spent;
+    the caller decides what an error means."""
+    r, n = send(), 1
+    while r.status_code in RETRYABLE_STATUSES and n < max_sends:
+        close = getattr(r, "close", None)  # a streamed response holds its connection
+        if close is not None:
+            close()
+        sleep(_retry_wait(r, n))
+        r, n = send(), n + 1
+    return r
 
 
 def _requests_transport(method: str, url: str, headers=None, data=None, params=None):
@@ -151,25 +172,16 @@ class FhirBulkConnector:
         self,
         transport: Transport | None = None,
         sleep: Callable[[float], None] = _time.sleep,
-        max_poll_attempts: int = 100,
+        max_poll_attempts: int = MAX_SENDS,
     ):
         self.transport = transport or _requests_transport
         self.sleep = sleep
         self.max_poll_attempts = max_poll_attempts
 
     def _send(self, send: Callable[[], HttpResponse]) -> HttpResponse:
-        """Call ``send`` again while it answers 429 or 503, waiting as
-        ``_retry_wait`` says, for at most ``max_poll_attempts`` sends.
-        Returns the first other response, or the last one when the
-        budget is spent; the caller decides what an error means."""
-        r, n = send(), 1
-        while r.status_code in RETRYABLE_STATUSES and n < self.max_poll_attempts:
-            close = getattr(r, "close", None)  # a streamed response holds its connection
-            if close is not None:
-                close()
-            self.sleep(_retry_wait(r, n))
-            r, n = send(), n + 1
-        return r
+        """``send_with_retry`` with this connector's ``sleep`` and
+        ``max_poll_attempts`` budget."""
+        return send_with_retry(send, self.sleep, self.max_poll_attempts)
 
     # ---- auth (O7/O9) ----
 

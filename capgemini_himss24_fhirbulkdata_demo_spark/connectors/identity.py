@@ -16,20 +16,24 @@ metadata service (IMDS) — a stable, publicly documented protocol:
 ``IDENTITY_ENDPOINT``/``IDENTITY_HEADER`` env vars with the same
 query shape and an ``X-IDENTITY-HEADER`` secret header.)
 
-The transport is injected exactly like ``FhirBulkConnector``'s, so the
-flow is fully testable without Azure; tokens are cached until close to
-expiry (the reference re-fetches every call — at one request per
-pipeline run that's fine, but a per-partition caller must not).
+The transport and ``sleep`` are injected exactly like
+``FhirBulkConnector``'s, so the flow is fully testable without Azure;
+a 429 or 503 (the identity endpoints' throttling answers) is retried
+under the connector's ``Retry-After`` rule (``send_with_retry``).
+Tokens are cached until close to expiry (the reference re-fetches
+every call — at one request per pipeline run that's fine, but a
+per-partition caller must not).
 """
 
 from __future__ import annotations
 
 import os
+import time as _time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 
-from .fhir_bulk import HttpResponse, Transport, _requests_transport
+from .fhir_bulk import HttpResponse, Transport, _requests_transport, send_with_retry
 
 IMDS_ENDPOINT = "http://169.254.169.254/metadata/identity/oauth2/token"
 IMDS_API_VERSION = "2018-02-01"
@@ -54,6 +58,7 @@ class ManagedIdentityCredential:
     transport: Transport | None = None
     client_id: str | None = None
     now: Callable[[], datetime] = _utcnow
+    sleep: Callable[[float], None] = _time.sleep
     env: dict[str, str] | None = None  # None = os.environ (injectable)
     refresh_margin: timedelta = timedelta(minutes=5)
     _cache: dict[str, tuple[str, datetime]] = field(default_factory=dict)
@@ -85,7 +90,9 @@ class ManagedIdentityCredential:
             url = IMDS_ENDPOINT
             params["api-version"] = IMDS_API_VERSION
             headers = {"Metadata": "true"}
-        r: HttpResponse = transport("GET", url, headers=headers, params=params)
+        r: HttpResponse = send_with_retry(
+            lambda: transport("GET", url, headers=headers, params=params), self.sleep
+        )
         if not r.ok:
             raise RuntimeError(
                 f"managed identity token request failed: {r.status_code} "

@@ -2,9 +2,7 @@
 
 Opaque ``binary`` payloads + typed metadata structs, processed with
 Arrow-batched ``mapInPandas`` pipelines (decode / feature-extract /
-resize / frame-sample), plus WebDataset-style tar shard I/O
-(``webdataset.py``) — the loader hand-off format for multimodal
-training corpora. Decoding is pure stdlib for BMP / PNM / PNG / GIF /
+resize / frame-sample). Decoding is pure stdlib for BMP / PNM / PNG / GIF /
 JPEG (baseline, progressive, 12-bit, lossless, arithmetic,
 hierarchical) / WAV and the deterministic ``FAKE`` container; the few
 remaining exotic forms gate on PIL with NotImplementedError — the
@@ -18,9 +16,4 @@ from .binary import (  # noqa: F401
     extract_patch_features,
     sample_frames,
     synthesize_media,
-)
-from .webdataset import (  # noqa: F401
-    read_webdataset,
-    read_webdataset_stream,
-    write_webdataset_shards,
 )

@@ -8,7 +8,6 @@ wrappers over these.
 """
 
 from .asof import asof_join  # noqa: F401
-from .bpe import encode_bpe, train_bpe, word_counts  # noqa: F401
 from .dedup import (  # noqa: F401
     connected_components,
     dedup_first_wins,

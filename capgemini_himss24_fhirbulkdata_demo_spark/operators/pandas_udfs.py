@@ -69,8 +69,8 @@ def zscore_per_group(
     pandas frame, numpy-vectorized, returned with an added column).
 
     Completes the UDF surface (SURVEY §2B UDF row): scalar pandas_udf,
-    grouped-agg pandas_udf, mapInPandas, applyInPandasWithState, and
-    this grouped-map applyInPandas.
+    grouped-agg pandas_udf, mapInPandas, and this grouped-map
+    applyInPandas.
 
     Scale: one shuffle on ``group_col``; each group must fit in one
     executor's memory (the applyInPandas contract) — for unbounded

@@ -15,11 +15,10 @@ The reference's ``POST /himss24demo/bulkimport/latest`` flow
 3. driver-side sink-commit: build the FHIR ``Parameters`` manifest →
    $import → poll → archive landed files → advance the cursor.
 
-``transform_landed_files`` is the only FHIR transform driver: the
-incremental form (``streaming/fhir_import.py``) calls it on each
-micro-batch's files. The unit of correctness is therefore the landed
-file on both paths — the EOB duplicate-id rule sees one file at a time,
-as the reference's manifest loop does.
+``transform_landed_files`` is the only FHIR transform driver, and its
+unit of correctness is the landed file: the EOB duplicate-id rule sees
+one file at a time, as the reference's manifest loop does. Incremental
+runs are repeated requests with the persisted ``_since`` cursor.
 
 The transforms join nothing (the RxNav lookup is a MAP literal, read
 once per lookup DataFrame), and each landed file is read as one

@@ -987,8 +987,7 @@ _X97_SQL = f"""
 
 def cms_bucket_col(d: int, token_col: str = "t"):
     """Row-``d``'s bucket for a token column — the salted portable
-    md5 bridge (mirrored by :func:`cms_bucket_py` for driver-side
-    probes)."""
+    md5 bridge (mirrored by ``_cms_sql_bucket`` on the oracle side)."""
     return (
         F.conv(
             F.substring(
@@ -1002,42 +1001,6 @@ def cms_bucket_col(d: int, token_col: str = "t"):
             10,
         ).cast("bigint")
         % _CMS_W
-    )
-
-
-def cms_bucket_py(d: int, token: str) -> int:
-    """Pure-Python mirror of :func:`cms_bucket_col` (same md5 prefix
-    → BIGINT bridge) for estimating from a collected sketch."""
-    import hashlib
-
-    h = hashlib.md5(f"{d}:{token}".encode()).hexdigest()
-    return int(h[:15], 16) % _CMS_W
-
-
-def cms_sketch(tok: DataFrame, token_col: str = "t") -> DataFrame:
-    """Build the D×W Count-Min sketch from a token-occurrence frame:
-    (d, bucket, cnt) rows, ≤ D·W of them. Two-level agg — token
-    frequencies first (map-side combine soaks the Zipf head), then
-    the D-row explode runs over the DISTINCT-token table only.
-    Sketches are mergeable by counter-wise SUM (linearity), which is
-    what the streaming layer exploits."""
-    tf = tok.groupBy(token_col).agg(F.count("*").alias("__cnt"))
-    hashed = tf.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        cms_bucket_col(d, token_col).alias("bucket"),
-                    )
-                    for d in range(_CMS_D)
-                ]
-            )
-        ).alias("h"),
-        "__cnt",
-    ).select("h.d", "h.bucket", "__cnt")
-    return hashed.groupBy("d", "bucket").agg(
-        F.sum("__cnt").cast("bigint").alias("cnt")
     )
 
 
@@ -1216,8 +1179,7 @@ def x98_hashed_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bloom_bit(j: int, f_col):
     """Bit position of hash row ``j`` for a fingerprint column — the
     md5→BIGINT bridge mod the filter width, shared by the x103 batch
-    audit, its SQL twin (``_bloom_bit_sql``), and the streaming form
-    (``streaming.sketches.StreamingBloom``)."""
+    audit and its SQL twin (``_bloom_bit_sql``)."""
     return (
         F.conv(
             F.substring(

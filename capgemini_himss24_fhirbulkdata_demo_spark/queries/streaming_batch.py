@@ -287,11 +287,6 @@ def x35_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from one count-non-null aggregate. Step semantics are
     identical: a null previous step nulls the comparison, so the
     conditional min skips exactly the users the old join dropped.
-
-    Streaming form: :func:`..streaming.stateful.funnel_firsts` runs
-    the same shape incrementally via ``applyInPandasWithState`` keyed
-    by user (state = first-seen ts per step; cross-batch carry and
-    ordered-arrival semantics tested in tests/test_streaming.py).
     """
     from pyspark.sql import Window
 
@@ -435,9 +430,7 @@ def x36_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE doubles).
 
     Scale: one shuffle on user_id; per-user state is that user's
-    event list — the same per-key-bounded shape the streaming layer's
-    applyInPandasWithState form keeps incrementally. Streaming twin:
-    the stateful fold carries (acc) per user across micro-batches.
+    event list, bounded per key.
     """
     ev = (
         load_table(spark, sf_dir, "events")

@@ -434,7 +434,7 @@ def x37_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     middles on even frames — DuckDB's interpolation convention). The
     frame is O(1) rows, so the collect is bounded per row; at scale
     this is the standard small-frame pattern (a true streaming median
-    would use the stateful applyInPandasWithState path).
+    would need per-key state across micro-batches).
     """
     ev = load_table(spark, sf_dir, "events").filter(
         (F.col("user_id") <= 50) & (F.col("event_type") == "view")

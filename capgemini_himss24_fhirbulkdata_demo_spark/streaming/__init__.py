@@ -8,12 +8,12 @@ plus sleep-based polling (``:282-326``). Here that becomes:
   (new files appear → new micro-batch),
 - event-time tumbling and session windows with watermarks,
 - stateful streaming dedup (``dropDuplicates`` under watermark),
-- the incremental FHIR import (``fhir_import.start_streaming_import``):
-  a stream of newly landed file paths, each micro-batch transformed by
-  ``pipeline.transform_landed_files`` — the batch path's own driver, so
-  the unit of correctness is the landed file on both — and committed
-  through a ``$import`` callback (exactly-once via the checkpointed
-  batch id = manifest id).
+- a runner that starts a stateful query with its state sized to one
+  task wave (``runner.start_stateful_query``).
+
+The incremental FHIR import is not a stream: it is the batch route
+``POST bulkimport/latest`` with the persisted ``_since`` cursor
+(``api.py``, ``pipeline.run_bulk_import``).
 """
 
 from .sources import read_parquet_stream  # noqa: F401
@@ -25,4 +25,3 @@ from .windows import (  # noqa: F401
     tumbling_agg,
 )
 from .runner import start_stateful_query  # noqa: F401
-from .sketches import StreamingCountMin, run_streaming_cms  # noqa: F401

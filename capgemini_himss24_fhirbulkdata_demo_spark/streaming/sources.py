@@ -5,8 +5,8 @@ each new file as a micro-batch — the Spark-native replacement for the
 reference's poll-then-fetch loop (``FetchBulkData/__init__.py:282-336``).
 The file-source checkpoint (processed-files log) subsumes the ``_since``
 high-water mark (``:609-613``): restarts resume exactly where the last
-run stopped. The FHIR NDJSON landing zone streams file paths instead
-(``fhir_import.py``), so its files go through the batch transform.
+run stopped. FHIR NDJSON files are not streamed: the
+``bulkimport/latest`` route transforms each landed file in batch.
 """
 
 from __future__ import annotations

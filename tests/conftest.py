@@ -24,25 +24,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
-
-
-def run_streaming_import(spark, landing_dir, resource, server_url, work_dir, rxnav=None):
-    """Drain ``start_streaming_import`` once over ``landing_dir`` and
-    return the output paths it committed, in commit order."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.fhir_import import (
-        start_streaming_import,
-    )
-
-    committed: list[str] = []
-    q = start_streaming_import(
-        spark,
-        landing_dir,
-        resource,
-        server_url,
-        os.path.join(work_dir, "out"),
-        os.path.join(work_dir, f"ck-{resource}"),
-        lambda paths, batch_id: committed.extend(paths),
-        rxnav=rxnav,
-    )
-    assert q.awaitTermination(120), "stream did not drain"
-    return committed

@@ -388,6 +388,38 @@ def test_managed_identity_app_service_endpoint_and_errors():
         bad.get_token("https://fhir.example")
 
 
+def test_managed_identity_honours_retry_after():
+    """The identity endpoint's throttling answer (429) is retried under
+    the connector's Retry-After rule; a 400 still raises at once."""
+    from capgemini_himss24_fhirbulkdata_demo_spark.connectors import (
+        ManagedIdentityCredential,
+    )
+
+    log, slept = [], []
+    ok = _imds_transport(log)
+    answers = iter([HttpResponse(429, headers={"Retry-After": "3"})])
+
+    def throttled(method, url, headers=None, data=None, params=None):
+        r = next(answers, None)
+        return r or ok(method, url, headers=headers, data=data, params=params)
+
+    cred = ManagedIdentityCredential(transport=throttled, env={}, sleep=slept.append)
+    assert cred.get_token("https://fhir.example") == "tok-1"
+    assert slept == [3.0]
+
+    sends = []
+
+    def bad_request(method, url, headers=None, data=None, params=None):
+        sends.append(url)
+        return HttpResponse(400, content=b"bad resource")
+
+    slept.clear()
+    bad = ManagedIdentityCredential(transport=bad_request, env={}, sleep=slept.append)
+    with pytest.raises(RuntimeError, match="managed identity token request failed: 400"):
+        bad.get_token("https://fhir.example")
+    assert (len(sends), slept) == (1, [])
+
+
 def test_access_token_expiry_is_timezone_aware():
     import datetime as dt
 

@@ -1,7 +1,7 @@
 """Golden fidelity tests (SURVEY §5.2.1): the Spark FHIR transform
 pipeline vs the pure-Python oracle, per-id canonical-JSON equality,
-through the product drivers — ``pipeline.transform_landed_file`` (batch)
-and ``start_streaming_import`` (stream) — on the same landed file."""
+through the product driver ``pipeline.transform_landed_file`` on one
+landed file."""
 
 from __future__ import annotations
 
@@ -22,7 +22,6 @@ from capgemini_himss24_fhirbulkdata_demo_spark.transforms.schemas import (
 from perfbench.checks import canonical
 
 from . import fhir_oracle
-from .conftest import run_streaming_import
 
 # ---------------------------------------------------------- fixtures
 
@@ -200,7 +199,7 @@ def _rxnav_df(spark):
     return spark.createDataFrame(rows, RXNAV_LOOKUP_SCHEMA)
 
 
-def _run_transform(spark, tmp_path, server_url, resource, resources, driver="batch"):
+def _run_transform(spark, tmp_path, server_url, resource, resources):
     """Land ``resources`` as one bulk-export NDJSON file, run it through
     the product driver; returns the rows of its output file."""
     assert get_transform(server_url, resource) is not None, (
@@ -212,27 +211,17 @@ def _run_transform(spark, tmp_path, server_url, resource, resources, driver="bat
     with open(in_path, "w") as f:
         f.write("\n".join(json.dumps(r) for r in resources))
 
-    rx = _rxnav_df(spark)
-    if driver == "batch":
-        outs = [pipeline.transform_landed_file(
-            spark, in_path, server_url, os.path.join(tmp_path, "out"), rx
-        )]
-    else:
-        outs = run_streaming_import(spark, landing, resource, server_url, str(tmp_path), rx)
-    assert len(outs) == 1
-    with open(outs[0]) as f:
+    out = pipeline.transform_landed_file(
+        spark, in_path, server_url, os.path.join(tmp_path, "out"), _rxnav_df(spark)
+    )
+    with open(out) as f:
         return [json.loads(line) for line in f if line.strip()]
 
 
-@pytest.mark.parametrize(
-    "case,driver",
-    # the batch leg keeps the bare case id
-    [pytest.param(c, d, id=c if d == "batch" else f"{c}-{d}")
-     for c in sorted(CASES) for d in ("batch", "stream")],
-)
-def test_golden_vs_oracle(case, driver, spark, tmp_path):
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_golden_vs_oracle(case, spark, tmp_path):
     server_url, resource, resources = CASES[case]
-    got = _run_transform(spark, tmp_path, server_url, resource, resources, driver)
+    got = _run_transform(spark, tmp_path, server_url, resource, resources)
     expected = fhir_oracle.process(server_url, resource, resources, RXNAV)
 
     got_c, exp_c = _canon(got), _canon(expected)
@@ -246,12 +235,12 @@ def test_golden_vs_oracle(case, driver, spark, tmp_path):
         )
 
 
-def test_eob_duplicate_ids_vs_oracle(spark, tmp_path, driver="batch"):
+def test_eob_duplicate_ids_vs_oracle(spark, tmp_path):
     """T17's duplicate-id rule: a record is removed when ANY record
     sharing its id fails a gate. An id carried by a passing and a
     failing row loses both, an id carried by two passing rows keeps
     both, and null ids count as one shared id. The rule's unit is the
-    landed file on both drivers."""
+    landed file."""
     # a fresh list per row: the oracle edits records in place
     drug_c = lambda: [{"system": _NDC, "code": "33333", "display": "Drug C"}]  # noqa: E731
     rows = [
@@ -264,15 +253,11 @@ def test_eob_duplicate_ids_vs_oracle(spark, tmp_path, driver="batch"):
         _eob("single-pass", codings=drug_c()),
     ]
     url = "https://bcda.cms.example/api"
-    got = canonical(_run_transform(spark, tmp_path, url, "ExplanationOfBenefit", rows, driver))
+    got = canonical(_run_transform(spark, tmp_path, url, "ExplanationOfBenefit", rows))
     expected = canonical(fhir_oracle.process(url, "ExplanationOfBenefit", rows, RXNAV))
     assert sorted(expected) == ["dup-pass", "single-pass"]
     assert len(expected["dup-pass"]) == 2
     assert got == expected
-
-
-def test_eob_duplicate_ids_vs_oracle_stream(spark, tmp_path):
-    test_eob_duplicate_ids_vs_oracle(spark, tmp_path, driver="stream")
 
 
 MEDREQS_MISSING_STRUCTS = [

@@ -19,7 +19,6 @@ PKG = "capgemini_himss24_fhirbulkdata_demo_spark"
 ENTRY_POINTS = [
     f"{PKG}.api",
     f"{PKG}.pipeline",
-    f"{PKG}.streaming.fhir_import",
     f"{PKG}.queries",  # the query registry: its __init__ loads every query module
     "__spark_entry__",
     "bench",
@@ -31,10 +30,6 @@ ENTRY_POINTS = [
 ]
 
 ALLOWED = {
-    f"{PKG}.streaming.stateful": "custom stateful stream operators; streaming is in scope",
-    f"{PKG}.streaming.sketches": "streaming count-min and histogram sketches; streaming is in scope",
-    f"{PKG}.operators.bpe": "BPE tokenizer training; text analysis is in scope",
-    f"{PKG}.multimodal.webdataset": "WebDataset shard IO; multimodal is in scope",
     f"{PKG}.plans.inspect": "plan inspection for tests and tools",
 }
 

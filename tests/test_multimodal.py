@@ -365,105 +365,14 @@ def test_resize_frames_exact_box_means(spark):
     assert r2["pixels"] == [sum(left) / 6, sum(right) / 4]
 
 
-def test_webdataset_roundtrip_and_determinism(spark, tmp_path):
-    """WebDataset tar shards round-trip exactly: every sample's
-    payload bytes, caption texts, and JSON sidecar come back; shards
-    are key-contiguous (range partitioning) and BYTE-DETERMINISTIC
-    (fixed tar member metadata) — writing the same corpus twice gives
-    identical shard files; the manifest counts match."""
-    import hashlib
-    import json
-    import os
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.multimodal.webdataset import (
-        read_webdataset,
-        write_webdataset_shards,
-    )
-
-    rows = []
-    for i in range(40):
-        payload = bytearray(encode_fake(i, "image", 16, 16, 1))
-        rows.append(
-            (f"{i:06d}", payload, f"caption {i}", "fake", i % 5)
-        )
-    df = spark.createDataFrame(
-        rows, "key STRING, payload BINARY, caption STRING, "
-              "source STRING, rank INT"
-    ).repartition(7)
-
-    out1 = str(tmp_path / "wds1")
-    m1 = write_webdataset_shards(
-        df, out1, "key", 4, text_cols=("caption",),
-        meta_cols=("source", "rank"),
-    )
-    assert m1["n_samples"] == 40
-    assert 1 <= m1["n_shards"] <= 4
-    # key ranges are contiguous and non-overlapping across shards
-    ranges = [(s["key_min"], s["key_max"]) for s in m1["shards"]]
-    assert ranges == sorted(ranges)
-    for (lo_a, hi_a), (lo_b, _hi_b) in zip(ranges, ranges[1:]):
-        assert hi_a < lo_b
-
-    back = read_webdataset(spark, out1)
-    got = {r["key"]: r for r in back.collect()}
-    assert len(got) == 40
-    for i in range(40):
-        k = f"{i:06d}"
-        assert bytes(got[k]["payload"]) == bytes(rows[i][1])
-        assert got[k]["texts"]["caption"] == f"caption {i}"
-        meta = json.loads(got[k]["meta"])
-        assert meta == {"source": "fake", "rank": i % 5}
-
-    # byte determinism: a second write of the same corpus is identical
-    out2 = str(tmp_path / "wds2")
-    write_webdataset_shards(
-        df, out2, "key", 4, text_cols=("caption",),
-        meta_cols=("source", "rank"),
-    )
-    for s in m1["shards"]:
-        a = open(os.path.join(out1, s["file"]), "rb").read()
-        b = open(os.path.join(out2, s["file"]), "rb").read()
-        assert hashlib.md5(a).hexdigest() == hashlib.md5(b).hexdigest()
-
-
-def test_webdataset_empty_partitions_skip_files(spark, tmp_path):
-    """More shards than keys: range partitioning leaves empty
-    partitions, which must produce NO tar file and NO manifest entry
-    — the manifest total still matches."""
-    import os
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.multimodal.webdataset import (
-        read_webdataset,
-        write_webdataset_shards,
-    )
-
-    rows = [(f"{i:04d}", bytearray(b"payload-%d" % i)) for i in range(5)]
-    df = spark.createDataFrame(rows, "key STRING, payload BINARY")
-    out = str(tmp_path / "wds_sparse")
-    m = write_webdataset_shards(df, out, "key", 16)
-    assert m["n_samples"] == 5
-    assert m["n_shards"] <= 5
-    tars = [f for f in os.listdir(out) if f.endswith(".tar")]
-    assert len(tars) == m["n_shards"]
-    got = {r["key"]: bytes(r["payload"])
-           for r in read_webdataset(spark, out).collect()}
-    assert got == {k: bytes(p) for k, p in rows}
-
-
-def test_multimodal_pipeline_composition(spark, tmp_path):
+def test_multimodal_pipeline_composition(spark):
     """End-to-end multimodal prep: synthesize media → decode stats →
-    exact-dedup on payload digest → attach captions → export
-    WebDataset shards → read back. Pins that the pieces compose (the
-    realistic pipeline, not just each stage in isolation): dedup
-    removes the planted duplicates, stats ride the meta sidecar, and
-    every surviving payload round-trips byte-exactly."""
-    import json
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.multimodal.webdataset import (
-        read_webdataset,
-        write_webdataset_shards,
-    )
-
+    exact-dedup on payload digest → attach captions. Pins that the
+    pieces compose (the realistic pipeline, not just each stage in
+    isolation): dedup removes the planted duplicates and keeps the
+    lowest id of each payload, every surviving payload is its source
+    payload byte for byte, and each row carries its decode stat and
+    caption."""
     media = synthesize_media(spark, 12)
     # plant duplicates: ids 100.. share payloads with ids 0..3
     dupes = media.filter(F.col("media_id") < 4).withColumn(
@@ -482,81 +391,11 @@ def test_multimodal_pipeline_composition(spark, tmp_path):
         F.format_string("%06d", F.col("media_id")).alias("key"),
         "payload", "caption", "mean_pixel",
     )
-    assert deduped.count() == 12  # the 4 planted duplicates are gone
-
-    out = str(tmp_path / "wds_pipe")
-    m = write_webdataset_shards(
-        deduped, out, "key", 3, text_cols=("caption",),
-        meta_cols=("mean_pixel",),
-    )
-    assert m["n_samples"] == 12
-
-    back = read_webdataset(spark, out)
-    rows = {r["key"]: r for r in back.collect()}
-    assert len(rows) == 12
-    src = {r["key"]: bytes(r["payload"]) for r in deduped.collect()}
+    rows = {r["key"]: r for r in deduped.collect()}
+    assert sorted(rows) == [f"{i:06d}" for i in range(12)]  # the 4 planted duplicates are gone
+    src = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
+    mean_pixel = {r["media_id"]: r["mean_pixel"] for r in decode_images(media).collect()}
     for k, r in rows.items():
-        assert bytes(r["payload"]) == src[k]
-        assert r["texts"]["caption"].startswith("item ")
-        assert "mean_pixel" in json.loads(r["meta"])
-
-
-def test_webdataset_stream_equals_batch(spark, tmp_path):
-    """Streaming ingest of tar shards (binaryFile file source,
-    availableNow drain) yields exactly the batch reader's sample set
-    across multiple micro-batches — a shard is the atomic unit, so no
-    sample ever straddles a micro-batch."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.multimodal.webdataset import (
-        read_webdataset,
-        read_webdataset_stream,
-        write_webdataset_shards,
-    )
-
-    rows = [(f"{i:05d}", bytearray(encode_fake(i, "image", 8, 8, 1)),
-             f"cap {i}") for i in range(24)]
-    df = spark.createDataFrame(
-        rows, "key STRING, payload BINARY, caption STRING")
-    out = str(tmp_path / "wds_stream")
-    m = write_webdataset_shards(df, out, "key", 4, text_cols=("caption",))
-    assert m["n_shards"] >= 2  # multiple micro-batches at 1 file/trigger
-
-    stream = read_webdataset_stream(spark, out)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("wds_sink")
-        .option("checkpointLocation", str(tmp_path / "wds_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    live = {
-        (r["key"], bytes(r["payload"]), r["texts"]["caption"])
-        for r in spark.sql("SELECT * FROM wds_sink").collect()
-    }
-    batch = {
-        (r["key"], bytes(r["payload"]), r["texts"]["caption"])
-        for r in read_webdataset(spark, out).collect()
-    }
-    assert live == batch and len(live) == 24
-
-
-def test_webdataset_rejects_dotted_keys(spark, tmp_path):
-    """Keys containing '.' or '/' must fail AT WRITE TIME: the reader
-    splits member names at the first dot, so '1.5' would silently
-    regroup as sample '1' with ext '5.bin' on read-back."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.multimodal.webdataset import (
-        write_webdataset_shards,
-    )
-
-    import glob as _glob
-
-    for bad_key in ("1.5", "a/b"):
-        df = spark.createDataFrame(
-            [("ok", bytearray(b"y")), (bad_key, bytearray(b"x"))],
-            "key STRING, payload BINARY",
-        )
-        with pytest.raises(ValueError, match="mis-group|contains"):
-            write_webdataset_shards(df, str(tmp_path / "wds_bad"), "key", 2)
-        # engine-side pre-validation fails BEFORE the write stage: no
-        # orphan shard files from sibling tasks, no manifest
-        assert _glob.glob(str(tmp_path / "wds_bad" / "*")) == []
+        assert bytes(r["payload"]) == src[int(k)]
+        assert r["mean_pixel"] == mean_pixel[int(k)]
+        assert r["caption"] == f"item {int(k)}"

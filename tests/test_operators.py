@@ -803,95 +803,6 @@ def test_x104_estimate_within_bucket_width(spark):
         assert abs(r["est_value"] - r["exact_value"]) <= _X104_W, r
 
 
-def test_bpe_train_matches_hand_computation(spark):
-    """BPE merges on a tiny corpus match the hand-run Sennrich
-    algorithm (max pair count, lexicographic ties), and encoding
-    reproduces the training segmentation for in-dictionary words."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.operators.bpe import (
-        _END,
-        encode_bpe,
-        train_bpe,
-    )
-
-    # "low" x5, "lower" x2, "newest" x6, "widest" x3 — the ACL'16
-    # worked example family
-    docs = spark.createDataFrame(
-        [(0, "low " * 5), (1, "lower " * 2), (2, "newest " * 6),
-         (3, "widest " * 3)],
-        "doc_id LONG, text STRING",
-    )
-    merges = train_bpe(docs, "text", n_merges=10)
-    # hand-run: pair counts round 1: ('e','s') 9, ('s','t') 9,
-    # ('t','</w>') 9 ... lexicographic tie-break picks ('e','s')
-    assert merges[0] == ("e", "s")
-    assert merges[1] == ("es", "t")
-    assert merges[2] == ("est", _END)
-    enc = encode_bpe(docs, "text", merges)
-    rows = {r["doc_id"]: r["bpe_tokens"] for r in enc.collect()}
-    newest = rows[2][: len(rows[2]) // 6]
-    assert "".join(newest).replace(_END, "") == "newest"
-    # token count shrinks as merges grow (compression property)
-    few = encode_bpe(docs, "text", merges[:1])
-    n_few = sum(len(r["bpe_tokens"]) for r in few.collect())
-    n_all = sum(len(r["bpe_tokens"]) for r in enc.collect())
-    assert n_all < n_few
-    # determinism: retraining gives the identical merge list
-    assert train_bpe(docs, "text", n_merges=10) == merges
-
-
-def test_bpe_encode_distributed_consistency(spark):
-    """Encoding is partition-layout-independent and concatenation of
-    tokens reconstructs each document's words exactly (losslessness
-    of the subword segmentation)."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.operators.bpe import (
-        _END,
-        encode_bpe,
-        train_bpe,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents").select(
-        "doc_id", "text").limit(200)
-    merges = train_bpe(docs, "text", n_merges=50, top_k=500)
-    assert len(merges) == 50
-    one = encode_bpe(docs.coalesce(1), "text", merges)
-    many = encode_bpe(docs.repartition(8), "text", merges)
-    a = {r["doc_id"]: r["bpe_tokens"] for r in one.collect()}
-    b = {r["doc_id"]: r["bpe_tokens"] for r in many.collect()}
-    assert a == b
-    # lossless: joining tokens and stripping </w> restores the words
-    for r in docs.limit(20).collect():
-        toks = a[r["doc_id"]]
-        rebuilt = "".join(toks).replace(_END, " ").split()
-        assert rebuilt == str(r["text"]).split()
-
-
-def test_bpe_wordpiece_scorer(spark):
-    """The wordpiece scorer maximizes count(ab)/(count(a)·count(b))
-    with exact-rational comparison: on a corpus where a rare pair is
-    perfectly predictive ('q' only ever precedes 'z') it merges that
-    pair before the merely-frequent one, while plain BPE does the
-    opposite; both scorers retrain deterministically."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.operators.bpe import (
-        train_bpe,
-    )
-
-    # 'ab' appears 20x but 'a'/'b' are everywhere (also alone);
-    # 'qz' appears 3x and q/z appear ONLY there
-    docs = spark.createDataFrame(
-        [(0, "ab " * 20), (1, "aa bb " * 10), (2, "qz " * 3)],
-        "doc_id LONG, text STRING",
-    )
-    bpe = train_bpe(docs, "text", n_merges=1, scorer="bpe")
-    wp = train_bpe(docs, "text", n_merges=1, scorer="wordpiece")
-    assert bpe != wp
-    assert wp[0] in (("q", "z"), ("z", "</w>"))  # the predictive pair
-    assert train_bpe(docs, "text", n_merges=1, scorer="wordpiece") == wp
-    import pytest
-
-    with pytest.raises(ValueError):
-        train_bpe(docs, "text", 1, scorer="unigram")
-
-
 def test_simhash64_pairs_match_brute_force(spark):
     """Pigeonhole exactness of the 64-bit banded pair search: on a
     small corpus the banded operator must return EXACTLY the pairs a

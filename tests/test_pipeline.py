@@ -21,8 +21,6 @@ from capgemini_himss24_fhirbulkdata_demo_spark.transforms.schemas import (
     RXNAV_LOOKUP_SCHEMA,
 )
 
-from .conftest import run_streaming_import
-
 PATIENTS = [
     {"resourceType": "Patient", "id": "egqBHVfQlt4Bw3XGXoxVxHg3",
      "identifier": [{"system": "old", "value": "X"}]},
@@ -235,7 +233,7 @@ def test_transformed_outputs_are_single_ndjson_files(spark, tmp_path):
     assert all(u.endswith(".ndjson") for u in uris)
 
 
-def test_pass_through_is_byte_identical(spark, tmp_path, driver="batch"):
+def test_pass_through_is_byte_identical(spark, tmp_path):
     """A file with no registered transform reaches the export area byte
     for byte: bcda Patient keeps fields outside the curated schema
     (address, telecom) and their key order, and Coverage, which has no
@@ -270,32 +268,18 @@ def test_pass_through_is_byte_identical(spark, tmp_path, driver="batch"):
 
     url = "https://bcda.cms.example/api"
     rx = spark.createDataFrame([("1", "n", "r")], RXNAV_LOOKUP_SCHEMA)
-    if driver == "batch":
-        conn = FhirBulkConnector(transport=transport, sleep=lambda s: None)
-        res = run_bulk_import(
-            spark, conn, url, "g1", "tok", "https://cg", "itok",
-            str(tmp_path / "run"), rxnav=rx,
-        )
-        pairs = [(res.transformed[p], a) for p, a in zip(res.landed, res.archived)]
-    else:
-        landing = tmp_path / "landing"
-        landing.mkdir()
-        pairs = []
-        for rtype, data in (("Patient", patients), ("Coverage", coverage)):
-            src = landing / f"{rtype}-client-1.json"
-            src.write_bytes(data)
-            outs = run_streaming_import(spark, str(landing), rtype, url, str(tmp_path), rx)
-            pairs += [(o, str(src)) for o in outs]
+    conn = FhirBulkConnector(transport=transport, sleep=lambda s: None)
+    res = run_bulk_import(
+        spark, conn, url, "g1", "tok", "https://cg", "itok",
+        str(tmp_path / "run"), rxnav=rx,
+    )
+    pairs = [(res.transformed[p], a) for p, a in zip(res.landed, res.archived)]
     assert len(pairs) == 2
     for out_path, src_path in pairs:
         with open(out_path, "rb") as out, open(src_path, "rb") as src:
             assert out.read() == src.read(), src_path
     with open(pairs[0][1], "rb") as f:
         assert f.read() == patients
-
-
-def test_pass_through_is_byte_identical_stream(spark, tmp_path):
-    test_pass_through_is_byte_identical(spark, tmp_path, driver="stream")
 
 
 def test_eob_bench_landing_dir_matches_single_file(tmp_path):

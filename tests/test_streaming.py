@@ -5,9 +5,7 @@ shape."""
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -227,63 +225,6 @@ def test_foreach_batch_import_sink(spark, tmp_path):
     assert committed == []
 
 
-def test_stateful_rapid_fire_flags(spark, tmp_path):
-    """applyInPandasWithState: per-user lifetime sequence numbers and
-    rapid-fire flags carry across micro-batches via GroupState."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.stateful import (
-        rapid_fire_flags,
-    )
-
-    import datetime as dt
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    ck = str(tmp_path / "ck")
-    t0 = dt.datetime(2024, 6, 1, 0, 0, 0)
-
-    collected: list[tuple] = []
-
-    def run_batchfile(rows):
-        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        stream = read_parquet_stream(spark, landing, EVENTS_SCHEMA).select(
-            "user_id", "event_id", "ts"
-        )
-        flags = rapid_fire_flags(stream, min_gap_s=60.0)
-
-        def commit(batch_df, batch_id):
-            collected.extend(tuple(r) for r in batch_df.collect())
-
-        q = (
-            flags.writeStream.foreachBatch(commit)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # batch 1: two events 10s apart (rapid), one other user
-    run_batchfile(
-        [
-            (1, t0, 7, "click", 1.0, "{}"),
-            (2, t0 + dt.timedelta(seconds=10), 7, "click", 1.0, "{}"),
-            (3, t0, 9, "view", 1.0, "{}"),
-        ]
-    )
-    # batch 2: state must survive the restart — seq_no continues, gap
-    # computed against batch 1's last event
-    run_batchfile([(4, t0 + dt.timedelta(seconds=30), 7, "click", 1.0, "{}")])
-
-    by_event = {r[1]: r for r in collected}
-    assert by_event[1][2] == 1 and by_event[1][4] is False  # first: no gap
-    assert by_event[2][2] == 2 and by_event[2][3] == 10.0 and by_event[2][4] is True
-    assert by_event[3][2] == 1  # other user independent
-    assert by_event[4][2] == 3  # lifetime count carried across batches
-    assert by_event[4][3] == 20.0 and by_event[4][4] is True
-
-
 def test_complete_and_update_output_modes(spark, tmp_path):
     """Streaming agg in complete mode re-emits the full result table
     each batch; update mode emits only changed keys (SURVEY §2B
@@ -326,59 +267,6 @@ def test_complete_and_update_output_modes(spark, tmp_path):
     assert ("click", 2) in got3 and ("view", 1) in got3
 
 
-def test_streaming_fhir_import(spark, tmp_path):
-    """Incremental FHIR import: files landing over time flow through
-    the transform into single-file NDJSON blobs + idempotent commits."""
-    import json as _json
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.fhir_import import (
-        start_streaming_import,
-    )
-    from capgemini_himss24_fhirbulkdata_demo_spark.transforms.schemas import (
-        RXNAV_LOOKUP_SCHEMA,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    out_dir = str(tmp_path / "out")
-    os.makedirs(out_dir)
-    ck = str(tmp_path / "ck")
-    rx = spark.createDataFrame([("1", "n", "r")], RXNAV_LOOKUP_SCHEMA)
-    commits: list[tuple[int, list[str]]] = []
-
-    def commit(paths, batch_id):
-        commits.append((batch_id, paths))
-
-    def run():
-        q = start_streaming_import(
-            spark, str(landing), "Patient", "https://fhir.epic.example",
-            out_dir, ck, commit, rxnav=rx,
-        )
-        q.awaitTermination(120)
-
-    (landing / "Patient-c-1.json").write_text(_json.dumps(
-        {"resourceType": "Patient", "id": "egqBHVfQlt4Bw3XGXoxVxHg3",
-         "identifier": [{"system": "old", "value": "X"}]}))
-    run()
-    assert len(commits) == 1
-    path = commits[0][1][0]
-    assert os.path.isfile(path) and path.endswith(".ndjson")
-    rec = _json.loads(open(path).read().strip())
-    assert rec["identifier"][0]["value"] == "1S00E00AA27"  # transform applied
-
-    # second landing: new batch id, only the new file processed
-    (landing / "Patient-c-2.json").write_text(
-        _json.dumps({"resourceType": "Patient", "id": "p2"}))
-    run()
-    assert [c[0] for c in commits] == [0, 1]
-    rec2 = [_json.loads(l) for l in open(commits[1][1][0]) if l.strip()]
-    assert [r["id"] for r in rec2] == ["p2"]
-
-    # replay with no new data: no re-commit
-    run()
-    assert len(commits) == 2
-
-
 def test_interval_join_stream_equals_batch(spark, landed_events, tmp_path):
     """Watermarked stream-stream interval join == x33 batch twin on a
     replayed complete source (modulo the unfinalizable watermark
@@ -406,78 +294,6 @@ def test_interval_join_stream_equals_batch(spark, landed_events, tmp_path):
     # drained availableNow source every batch pair must have appeared
     assert got == exp
     assert len(exp) > 0
-
-
-def test_stateful_funnel_firsts_across_batches(spark, tmp_path):
-    """applyInPandasWithState ordered funnel (streaming form of x35):
-    step k only counts events strictly after step k-1's first time,
-    out-of-order steps don't count, and state carries across
-    micro-batches (user 7 completes the funnel over two batches)."""
-    import datetime as dt
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.stateful import (
-        funnel_firsts,
-    )
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    ck = str(tmp_path / "ck")
-    t0 = dt.datetime(2024, 6, 1, 0, 0, 0)
-
-    def us(sec):
-        return int((t0 + dt.timedelta(seconds=sec)).timestamp() * 1_000_000)
-
-    collected: list[tuple] = []
-
-    def run_batchfile(rows):
-        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        stream = read_parquet_stream(spark, landing, EVENTS_SCHEMA).select(
-            "user_id", "event_id", "event_type", "ts"
-        )
-        fun = funnel_firsts(stream)
-
-        def commit(batch_df, batch_id):
-            collected.extend(tuple(r) for r in batch_df.collect())
-
-        q = (
-            fun.writeStream.foreachBatch(commit)
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # batch 1 — user 7 starts the funnel; user 9's click precedes any
-    # view, so it must NOT open step 2
-    run_batchfile(
-        [
-            (1, t0, 7, "view", 1.0, "{}"),
-            (2, t0 + dt.timedelta(seconds=10), 7, "click", 1.0, "{}"),
-            (3, t0, 9, "click", 1.0, "{}"),
-        ]
-    )
-    # batch 2 — user 7 completes; user 9 views then clicks, but its
-    # purchase@45 precedes the click@50, so step 3 stays open
-    run_batchfile(
-        [
-            (4, t0 + dt.timedelta(seconds=30), 7, "purchase", 1.0, "{}"),
-            (5, t0 + dt.timedelta(seconds=40), 9, "view", 1.0, "{}"),
-            (6, t0 + dt.timedelta(seconds=45), 9, "purchase", 1.0, "{}"),
-            (7, t0 + dt.timedelta(seconds=50), 9, "click", 1.0, "{}"),
-        ]
-    )
-
-    final = {}
-    for row in collected:  # last update per user wins
-        final[row[0]] = row
-    assert final[7] == (7, 3, us(0), us(10), us(30))
-    assert final[9] == (9, 2, us(40), us(50), None)
-    # interim emission after batch 1: user 7 had reached step 2
-    first_batch_7 = [r for r in collected if r[0] == 7][0]
-    assert first_batch_7[1] == 2 and first_batch_7[4] is None
 
 
 def test_interval_left_join_stream_equals_batch_modulo_tail(
@@ -563,297 +379,6 @@ def test_stream_static_enrichment_equals_batch(spark, landed_events, tmp_path):
     # the join moves the key first in the streaming output — reorder
     assert {(e, u, s) for (u, e, s) in got} == exp
     assert len(exp) > 0
-
-
-def test_streaming_hll_live_equals_batch(spark, tmp_path):
-    """HLL mergeability: per-micro-batch sketch partials re-unioned
-    with hll_union_agg give the SAME estimate as one whole-corpus
-    sketch — register-wise max is an idempotent semilattice, so the
-    result is insensitive to how the stream was micro-batched. The
-    partials never cross to the driver (engine-side parquet append),
-    and estimates stay within the HLL error envelope of exact."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.sketches import (
-        finalize_streaming_hll,
-        run_streaming_hll,
-    )
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.sources import (
-        read_parquet_stream,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents").select(
-        "source", F.col("doc_id").cast("long").alias("doc_id")
-    )
-    landing = str(tmp_path / "hll_landing")
-    docs.repartition(4).write.mode("overwrite").parquet(landing)
-
-    schema = StructType(
-        [StructField("source", StringType()), StructField("doc_id", LongType())]
-    )
-    stream = read_parquet_stream(
-        spark, landing, schema, max_files_per_trigger=1
-    )
-    sink = str(tmp_path / "hll_partials")
-    n = run_streaming_hll(
-        stream, ["source"], "doc_id", str(tmp_path / "hll_ckpt"), sink
-    )
-    assert n >= 2, "expected multiple micro-batches"
-
-    live = {
-        r["source"]: r["approx_distinct"]
-        for r in finalize_streaming_hll(spark, sink, ["source"]).collect()
-    }
-    batch = {
-        r["source"]: r["approx_distinct"]
-        for r in docs.groupBy("source")
-        .agg(F.hll_sketch_estimate(F.hll_sketch_agg("doc_id")).alias(
-            "approx_distinct"))
-        .collect()
-    }
-    assert live == batch  # bit-identical estimates, not merely close
-
-    # and the estimate is inside the HLL error envelope of exact
-    exact = {
-        r["source"]: r["n"]
-        for r in docs.groupBy("source")
-        .agg(F.countDistinct("doc_id").alias("n"))
-        .collect()
-    }
-    for s, n_exact in exact.items():
-        assert abs(live[s] - n_exact) <= max(3, 0.05 * n_exact)
-
-
-def test_streaming_bloom_live_equals_batch(spark, tmp_path):
-    """Bloom mergeability: the bit set unioned over micro-batches
-    equals the whole-corpus filter exactly (set union is idempotent —
-    micro-batching is invisible), the filter NEVER misses a member
-    (no false negatives), and the driver-side probe's md5 fold
-    matches the engine-side bit math bit-for-bit."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.queries.features import (
-        _BLOOM_K,
-        bloom_bit,
-    )
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.sketches import (
-        StreamingBloom,
-        run_streaming_bloom,
-    )
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.sources import (
-        read_parquet_stream,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.md5("text").alias("f"),
-    )
-    landing = str(tmp_path / "bloom_landing")
-    docs.repartition(4).write.mode("overwrite").parquet(landing)
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("f", StringType())]
-    )
-    stream = read_parquet_stream(
-        spark, landing, schema, max_files_per_trigger=1
-    )
-    flt = run_streaming_bloom(stream, "f", str(tmp_path / "bloom_ckpt"))
-    assert flt.n_batches >= 2, "expected multiple micro-batches"
-
-    batch = StreamingBloom()
-    batch.merge_rows(
-        docs.select(
-            F.explode(
-                F.array(*[bloom_bit(j, F.col("f")) for j in range(_BLOOM_K)])
-            ).alias("b")
-        )
-        .distinct()
-        .collect()
-    )
-    assert flt.bits == batch.bits
-
-    # no false negatives: every member fingerprint probes positive
-    members = [r["f"] for r in docs.limit(40).collect()]
-    assert all(flt.might_contain(f) for f in members)
-
-    # cross-stream union: two half-filters merge to the full one
-    half_a, half_b = StreamingBloom(), StreamingBloom()
-    for half, pred in ((half_a, "doc_id % 2 = 0"), (half_b, "doc_id % 2 = 1")):
-        half.merge_rows(
-            docs.filter(pred)
-            .select(
-                F.explode(
-                    F.array(*[bloom_bit(j, F.col("f"))
-                              for j in range(_BLOOM_K)])
-                ).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-    half_a.merge_filter(half_b)
-    assert half_a.bits == batch.bits
-
-
-def test_streaming_histogram_live_equals_batch_query(spark, tmp_path):
-    """Histogram mergeability: bucket counts summed over micro-batches
-    equal the whole-corpus histogram exactly (linearity), and the
-    driver-side quantile interpolation reproduces the x104 BATCH
-    QUERY's est_value for every percentile — the streaming and batch
-    forms share one estimator."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.queries.features import (
-        _X104_QS,
-        _X104_W,
-        x104_histogram_quantiles,
-    )
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.sketches import (
-        StreamingHistogram,
-        run_streaming_histogram,
-    )
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.sources import (
-        read_parquet_stream,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents").select(
-        F.col("n_chars").cast("long").alias("n_chars")
-    )
-    landing = str(tmp_path / "hist_landing")
-    docs.repartition(4).write.mode("overwrite").parquet(landing)
-
-    schema = StructType([StructField("n_chars", LongType())])
-    stream = read_parquet_stream(
-        spark, landing, schema, max_files_per_trigger=1
-    )
-    hist = run_streaming_histogram(
-        stream, "n_chars", str(tmp_path / "hist_ckpt")
-    )
-    assert hist.n_batches >= 2, "expected multiple micro-batches"
-
-    batch = StreamingHistogram()
-    batch.merge_rows(
-        docs.select((F.col("n_chars") / _X104_W).cast("bigint").alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    )
-    assert hist.buckets == batch.buckets and hist.n == batch.n
-
-    # the streaming estimator reproduces the batch QUERY's estimates
-    est = {
-        r["q"]: r["est_value"]
-        for r in x104_histogram_quantiles(spark, SF_DIR).collect()
-    }
-    for q in _X104_QS:
-        assert hist.quantile(q) == est[q], (q, hist.quantile(q), est[q])
-
-    # cross-stream union: two half-histograms merge to the full one
-    half_a, half_b = StreamingHistogram(), StreamingHistogram()
-    for half, pred in ((half_a, "n_chars % 2 = 0"), (half_b, "n_chars % 2 = 1")):
-        half.merge_rows(
-            docs.filter(pred)
-            .select((F.col("n_chars") / _X104_W).cast("bigint").alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        )
-    half_a.merge_hist(half_b)
-    assert half_a.buckets == batch.buckets
-
-
-def test_streaming_cms_equals_batch(spark, tmp_path):
-    """Mergeability is EXACT: the Count-Min sketch accumulated over
-    file micro-batches equals the whole-corpus batch sketch
-    counter-for-counter (linearity — splitting the stream adds zero
-    error), and point estimates never underestimate true counts."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.queries.features import (
-        cms_sketch,
-    )
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.sketches import (
-        StreamingCountMin,
-        run_streaming_cms,
-    )
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.sources import (
-        read_parquet_stream,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    landing = str(tmp_path / "docs_landing")
-    docs.repartition(4).write.mode("overwrite").parquet(landing)
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    stream = read_parquet_stream(
-        spark, landing, schema, max_files_per_trigger=1
-    )
-    sk = run_streaming_cms(stream, "text", str(tmp_path / "ckpt"))
-    assert sk.n_batches >= 2, "expected multiple micro-batches"
-
-    batch = StreamingCountMin()
-    tok = docs.select(F.explode(F.split("text", " ")).alias("t"))
-    batch.merge_rows(cms_sketch(tok).collect())
-    assert sk.counters == batch.counters
-
-    # point estimates: never under the true count
-    true = {
-        r["t"]: r["c"]
-        for r in tok.groupBy("t").agg(F.count("*").alias("c")).limit(50).collect()
-    }
-    for t, c in true.items():
-        assert sk.estimate(t) >= c
-
-    # cross-stream union: two half-sketches merge to the full one
-    half_a, half_b = StreamingCountMin(), StreamingCountMin()
-    half_a.merge_rows(
-        cms_sketch(
-            docs.filter("doc_id % 2 = 0").select(
-                F.explode(F.split("text", " ")).alias("t")
-            )
-        ).collect()
-    )
-    half_b.merge_rows(
-        cms_sketch(
-            docs.filter("doc_id % 2 = 1").select(
-                F.explode(F.split("text", " ")).alias("t")
-            )
-        ).collect()
-    )
-    half_a.merge_sketch(half_b)
-    assert half_a.counters == batch.counters
-
-
-def test_streaming_histogram_quantile_bounds():
-    """q=0 clamps to rank 1 (the minimum, percentile_cont's q=0
-    semantics) instead of raising; out-of-range q raises clearly."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.sketches import (
-        StreamingHistogram,
-    )
-
-    h = StreamingHistogram(width=10)
-    h.merge_rows([{"bucket": 2, "cnt": 3}, {"bucket": 5, "cnt": 1}])
-    assert h.quantile(0) == h.quantile(1)  # both rank 1 on n=4
-    assert h.quantile(100) > h.quantile(0)
-    for bad in (-1, 101):
-        with pytest.raises(ValueError, match="0..100"):
-            h.quantile(bad)
 
 
 def test_runner_sizes_state_partitions(spark, landed_events, tmp_path):

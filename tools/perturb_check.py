@@ -36,7 +36,10 @@ tests/test_fhir_golden.py, plus a duplicate-id EOB corpus — the
 conflicted-ids anti-join and positional-array writes are the §2A ops
 most exposed to partitioning) under shuffle-partitions × input-layout
 perturbations and asserts the canonical output is identical across
-all runs and equal to the pure-Python oracle.
+all runs and equal to the pure-Python oracle. It then lands each
+corpus as two id-coherent files and runs them through
+``pipeline.transform_landed_files`` one call per file and in one call;
+both must equal the oracle.
 """
 
 from __future__ import annotations
@@ -117,34 +120,33 @@ def fhir_perturb() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     rx = _rxnav_df(spark)
     tmp = tempfile.mkdtemp(prefix="fhirperturb_")
+
+    def canon_docs(docs):
+        # multiset of key-sorted JSON (duplicate ids make a dict
+        # keyed by id lossy); ints normalize to floats so the JSON
+        # integer 10 equals the struct-schema double 10.0, the
+        # same equivalence the golden test gets from Python dict
+        # equality
+        def norm(v):
+            if isinstance(v, bool):
+                return v
+            if isinstance(v, int):
+                return float(v)
+            if isinstance(v, list):
+                return [norm(x) for x in v]
+            if isinstance(v, dict):
+                return {k: norm(x) for k, x in v.items()}
+            return v
+
+        return sorted(_json.dumps(norm(d), sort_keys=True) for d in docs)
+
     flagged: list[str] = []
     for case, (server_url, resource, resources) in sorted(cases.items()):
         in_path = os.path.join(tmp, f"{resource}-{case}.json")
         with open(in_path, "w") as f:
             f.write("\n".join(_json.dumps(r) for r in resources))
         fn = get_transform(server_url, resource)
-        expected = fhir_oracle.process(server_url, resource, resources, RXNAV)
-
-        def canon_docs(docs):
-            # multiset of key-sorted JSON (duplicate ids make a dict
-            # keyed by id lossy); ints normalize to floats so the JSON
-            # integer 10 equals the struct-schema double 10.0, the
-            # same equivalence the golden test gets from Python dict
-            # equality
-            def norm(v):
-                if isinstance(v, bool):
-                    return v
-                if isinstance(v, int):
-                    return float(v)
-                if isinstance(v, list):
-                    return [norm(x) for x in v]
-                if isinstance(v, dict):
-                    return {k: norm(x) for k, x in v.items()}
-                return v
-
-            return sorted(_json.dumps(norm(d), sort_keys=True) for d in docs)
-
-        exp_c = canon_docs(expected)
+        exp_c = canon_docs(fhir_oracle.process(server_url, resource, resources, RXNAV))
         results = {}
         for parts in (32, 5):
             for in_parts in (1, 7):
@@ -163,45 +165,27 @@ def fhir_perturb() -> None:
             flagged.append(case)
         print(f"[perturb-fhir] {status} {case}", file=sys.stderr)
 
-    # ---- streaming-import leg (O6 incremental form) ----
-    # Replay each golden corpus through start_streaming_import at two
-    # micro-batch sizes (1 landing file per batch vs all files in one
-    # batch) and assert the union of per-batch outputs equals the
-    # oracle output. The stream hands each micro-batch's file paths to
-    # pipeline.transform_landed_files, the batch path's own driver, so
-    # on both legs the unit of correctness is the landed FILE (the
-    # conflicted-ids removal sees one file at a time) — the reference's
-    # own unit, the export file from the manifest loop
-    # (__init__.py:643-665) — and the micro-batch size cannot change
-    # the output. The corpus is landed as TWO id-coherent files (all
-    # rows of a resource id stay in one file): with id-coherent files,
-    # per-file == whole-corpus semantics, so both micro-batch sizes
-    # must reproduce the oracle bit-for-bit.
+    # ---- multi-file leg ----
+    # Replay each golden corpus as TWO landed files through the product
+    # driver, pipeline.transform_landed_files, called once per file and
+    # once with both files, and assert the union of its outputs equals
+    # the oracle output. The driver's unit of correctness is the landed
+    # FILE (the conflicted-ids removal sees one file at a time) — the
+    # reference's own unit, the export file from the manifest loop
+    # (__init__.py:643-665) — so the grouping of files into calls
+    # cannot change the output. The files are id-coherent (all rows of
+    # a resource id stay in one file): then per-file == whole-corpus
+    # semantics, so both groupings must reproduce the oracle
+    # bit-for-bit.
     import shutil
 
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.fhir_import import (
-        start_streaming_import,
+    from capgemini_himss24_fhirbulkdata_demo_spark.pipeline import (
+        transform_landed_files,
     )
 
-    stream_flagged: list[str] = []
+    multifile_flagged: list[str] = []
     for case, (server_url, resource, resources) in sorted(cases.items()):
-        expected = fhir_oracle.process(server_url, resource, resources, RXNAV)
-
-        def canon_docs(docs):
-            def norm(v):
-                if isinstance(v, bool):
-                    return v
-                if isinstance(v, int):
-                    return float(v)
-                if isinstance(v, list):
-                    return [norm(x) for x in v]
-                if isinstance(v, dict):
-                    return {k: norm(x) for k, x in v.items()}
-                return v
-
-            return sorted(_json.dumps(norm(d), sort_keys=True) for d in docs)
-
-        exp_c = canon_docs(expected)
+        exp_c = canon_docs(fhir_oracle.process(server_url, resource, resources, RXNAV))
         # id-coherent split: ids in first-appearance order, first half
         # of ids -> file 0, rest -> file 1 (row order preserved)
         id_order: list[str] = []
@@ -215,45 +199,29 @@ def fhir_perturb() -> None:
             split[0 if r.get("id") in first_ids else 1].append(r)
 
         results = {}
-        for mb_label, max_files in (("file_per_batch", 1), ("one_batch", None)):
-            run_dir = os.path.join(tmp, f"stream-{case}-{mb_label}")
+        for label in ("call_per_file", "one_call"):
+            run_dir = os.path.join(tmp, f"multifile-{case}-{label}")
             landing = os.path.join(run_dir, "landing")
             out_dir = os.path.join(run_dir, "out")
             os.makedirs(landing)
-            os.makedirs(out_dir)
+            paths = []
             for i, part in enumerate(p for p in split if p):
-                with open(
-                    os.path.join(landing, f"{resource}-{i:03d}.json"), "w"
-                ) as f:
+                paths.append(os.path.join(landing, f"{resource}-{i:03d}.json"))
+                with open(paths[-1], "w") as f:
                     f.write("\n".join(_json.dumps(r) for r in part))
-            committed: list[str] = []
-
-            def commit(paths, batch_id):
-                committed.extend(paths)
-
-            q = start_streaming_import(
-                spark,
-                landing,
-                resource,
-                server_url,
-                out_dir,
-                os.path.join(run_dir, "ck"),
-                commit,
-                rxnav=rx,
-                max_files_per_trigger=max_files,
-            )
-            q.awaitTermination(120)
+            groups = [[p] for p in paths] if label == "call_per_file" else [paths]
             docs = []
-            for p in committed:
-                with open(p) as f:
-                    docs.extend(_json.loads(line) for line in f if line.strip())
-            results[mb_label] = canon_docs(docs)
+            for group in groups:
+                for p in transform_landed_files(spark, group, server_url, out_dir, rx):
+                    with open(p) as f:
+                        docs.extend(_json.loads(line) for line in f if line.strip())
+            results[label] = canon_docs(docs)
             shutil.rmtree(run_dir, ignore_errors=True)
         ok = all(v == exp_c for v in results.values())
         status = "ok" if ok else "UNSTABLE"
         if not ok:
-            stream_flagged.append(case)
-        print(f"[perturb-fhir-stream] {status} {case}", file=sys.stderr)
+            multifile_flagged.append(case)
+        print(f"[perturb-fhir-multifile] {status} {case}", file=sys.stderr)
 
     print(
         json.dumps(
@@ -262,10 +230,10 @@ def fhir_perturb() -> None:
                 "perturbations": "shuffle.partitions {32,5} x repartition {1,7}",
                 "n_cases": len(cases),
                 "unstable": flagged,
-                "streaming_perturbations": "micro-batch size "
-                "{1 file/batch, all-in-one} via start_streaming_import "
-                "over a 2-file id-coherent landing split",
-                "streaming_unstable": stream_flagged,
+                "multifile_perturbations": "transform_landed_files "
+                "{one call per file, one call for both} over a 2-file "
+                "id-coherent landing split",
+                "multifile_unstable": multifile_flagged,
             }
         )
     )
