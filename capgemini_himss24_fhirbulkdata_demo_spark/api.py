@@ -34,8 +34,7 @@ REPORT_HTML = """<!DOCTYPE html>
 <html><head><title>Analytics</title></head>
 <body><h1>Engine analytics</h1>
 <p>Analytics are served natively by the Spark SQL surface — see
-__spark_entry__.queries() (84 registered queries) instead of an
-embedded BI iframe.</p></body></html>
+__spark_entry__.queries() instead of an embedded BI iframe.</p></body></html>
 """
 
 

@@ -51,12 +51,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimension tables that should always be broadcast when joined
-# against the scaling fact tables (lineitem/orders/events scale with sf;
-# these don't — SURVEY FIXTURES.md §A row counts).
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 

@@ -1,19 +1,6 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Multimodal media codecs.
 
-Opaque ``binary`` payloads + typed metadata structs, processed with
-Arrow-batched ``mapInPandas`` pipelines (decode / feature-extract /
-resize / frame-sample). Decoding is pure stdlib for BMP / PNM / PNG / GIF /
-JPEG (baseline, progressive, 12-bit, lossless, arithmetic,
-hierarchical) / WAV and the deterministic ``FAKE`` container; the few
-remaining exotic forms gate on PIL with NotImplementedError — the
-Spark-side schema, partitioning, UDF signatures, and batch shapes are
-real and tested either way.
+``binary`` holds the pure-stdlib WAV, GIF, PNG, PNM and lossless-JPEG
+encoders and decoders that the registered queries in
+``queries/multimodal.py`` run inside ``mapInPandas``.
 """
-
-from .binary import (  # noqa: F401
-    MEDIA_SCHEMA,
-    decode_images,
-    extract_patch_features,
-    sample_frames,
-    synthesize_media,
-)

@@ -1,227 +1,31 @@
-"""Binary media columns over mapInPandas (SURVEY brief: multimodal).
+"""Pure-stdlib media codecs for the multimodal queries (SURVEY brief:
+multimodal).
 
-Design for 100 TB of media:
-- payloads live in a ``binary`` column (or at extreme sizes, a path
-  column + ranged reads) with a typed ``meta`` struct alongside —
-  filters/pruning on meta never touch bytes (column pruning keeps the
-  binary column out of scans that don't need it);
-- all per-item work is ``mapInPandas`` (Arrow batches, pandas zero
-  NaN-copies on binary) so Python crosses the boundary per *batch*,
-  not per row; ``spark.sql.execution.arrow.maxRecordsPerBatch`` and
-  ``maxPartitionBytes`` bound executor memory against payload size;
-- decode is deterministic & dependency-gated: the synthetic ``FAKE``
-  container, BMP (BITMAPCOREHEADER + BITMAPINFOHEADER;
-  1/4/8-bit paletted, 24/32-bit, RLE8/RLE4, top-down), binary PNM
-  (P5 pgm / P6 ppm, 8- and 16-bit with exact maxval rescale), and
-  PNG (every legal depth/color-type combination: 1/2/4-bit gray and
-  palette, 8-bit gray / RGB / palette / gray+alpha / RGBA, 16-bit
-  gray / RGB / gray+alpha / RGBA; all five row filters,
-  non-interlaced and Adam7-interlaced, inflate via stdlib zlib),
-  multi-frame
-  GIF87a/89a (LZW, global/local palettes, full-canvas and
-  sub-rectangle frames composited with GCE disposal/transparency,
-  4-pass interlace — the real-format path for frame sampling),
-  baseline sequential AND progressive JPEG (8-bit,
-  Huffman, DRI/RST; progressive spectral-selection + successive-
-  approximation scans with EOB-run semantics; Y-channel
-  reconstruction — chroma entropy is decoded to advance the
-  stream but not IDCT'd, since stats are luma-based; 8- AND 12-bit
-  sample precision with 16-bit Pq=1 quantization tables),
-  arithmetic-coded sequential (SOF9) AND progressive (SOF10) JPEG
-  (T.81 Annex D QM-coder with the F.1.4.4 sequential and
-  progressive DC/AC statistical models, DAC conditioning, DRI/RST
-  with full statistics reset), lossless
-  (SOF3) JPEG (2..16-bit grayscale, predictors 1-7, point transform,
-  DRI/RST), and hierarchical (Annex J DHP/EXP pyramids with
-  sequential-Huffman differential SOF5 frames, spec J.1.1.2
-  upsampling) decode with pure
-  stdlib code — no imaging library needed; anything else
-  (progressive/lossless-differential frames, lossless-arithmetic,
-  multi-component lossless, ...) falls
-  through to PIL when importable and raises NotImplementedError
-  otherwise (PIL is not baked into this container). Color decodes to
-  8-bit luma via integer BT.601 weights
-  ((299 r + 587 g + 114 b) // 1000) so stats are bit-identical
-  across hosts.
-
-FAKE container layout (deterministic from a seed id):
-  b"FAKE" | kind:1 (I/V) | width:u16 | height:u16 | n_frames:u16 |
-  pixel bytes = md5 keystream over (id, frame) — frame f pixel block
-  of width*height bytes.
+The registered queries in ``queries/multimodal.py`` encode document
+bytes into real containers and decode them again inside
+``mapInPandas``: 8-bit mono WAV (x63, x73), multi-frame GIF87a/89a
+(x64, x343; LZW, global/local palettes, sub-rectangle frames
+composited with GCE disposal/transparency, 4-pass interlace), PNG
+(x343; every legal depth/color-type combination, all five row
+filters, non-interlaced and Adam7, inflate via stdlib zlib), binary
+PNM (x343; P5/P6, 8- and 16-bit with exact maxval rescale) and
+lossless SOF3 JPEG (x343; T.81 Annex H, 2..16-bit grayscale,
+predictors 1-7, point transform, DRI/RST). Each encoder is the
+fixture twin of its decoder. No imaging library is needed; a JPEG
+frame type other than SOF3 raises NotImplementedError. Color decodes
+to 8-bit luma via integer BT.601 weights
+((299 r + 587 g + 114 b) // 1000), so stats are bit-identical across
+hosts. Truncated or corrupt payloads raise ValueError.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id BIGINT, kind STRING, payload BINARY, "
-    "meta STRUCT<format: STRING, width: INT, height: INT, n_frames: INT>"
-)
-
-DECODED_SCHEMA = (
-    "media_id BIGINT, width INT, height INT, n_frames INT, "
-    "mean_pixel DOUBLE, histogram ARRAY<DOUBLE>"
-)
-
-FEATURES_SCHEMA = "media_id BIGINT, patch_id INT, feature ARRAY<DOUBLE>"
-
-FRAMES_SCHEMA = "media_id BIGINT, frame_idx INT, frame_mean DOUBLE"
-
-_MAGIC = b"FAKE"
-
-
-def _keystream(seed: bytes, n: int) -> bytes:
-    out = bytearray()
-    counter = 0
-    while len(out) < n:
-        out += hashlib.md5(seed + counter.to_bytes(4, "big")).digest()
-        counter += 1
-    return bytes(out[:n])
-
-
-def encode_fake(media_id: int, kind: str, width: int, height: int, n_frames: int) -> bytes:
-    k = b"I" if kind == "image" else b"V"
-    header = _MAGIC + k + struct.pack(">HHH", width, height, n_frames)
-    pixels = b"".join(
-        _keystream(f"{media_id}:{f}".encode(), width * height) for f in range(n_frames)
-    )
-    return header + pixels
 
 
 def _luma(r: int, g: int, b: int) -> int:
     # integer BT.601 — deterministic across hosts, no float rounding
     return (299 * r + 587 * g + 114 * b) // 1000
-
-
-def encode_bmp24(width: int, height: int, rgb_rows) -> bytes:
-    """Minimal uncompressed 24-bit BMP writer (bottom-up rows, 4-byte
-    row padding) — fixture twin of ``_decode_bmp``."""
-    row_size = (width * 3 + 3) & ~3
-    pixel_data = bytearray()
-    for y in range(height - 1, -1, -1):
-        row = bytearray()
-        for r, g, b in rgb_rows[y]:
-            row += bytes((b, g, r))
-        row += b"\x00" * (row_size - len(row))
-        pixel_data += row
-    pixel_off = 14 + 40
-    header = b"BM" + struct.pack("<IHHI", pixel_off + len(pixel_data), 0, 0, pixel_off)
-    dib = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(pixel_data), 2835, 2835, 0, 0
-    )
-    return bytes(header + dib + pixel_data)
-
-
-def encode_bmp(width: int, height: int, rows, *, bpp: int = 8,
-               palette: list[tuple[int, int, int]] | None = None,
-               core: bool = False, rle: bool = False,
-               top_down: bool = False) -> bytes:
-    """General BMP writer — fixture twin of the widened
-    ``_decode_bmp``. ``rows`` holds palette indexes (bpp 1/4/8) or
-    (r, g, b) tuples (bpp 24/32). ``core=True`` writes the OS/2
-    BITMAPCOREHEADER (12-byte header, 3-byte palette entries,
-    unsigned dims); ``rle=True`` writes BI_RLE8/BI_RLE4 with greedy
-    runs, absolute mode for non-repeating stretches, end-of-line and
-    end-of-bitmap escapes; ``top_down`` writes a negative-height
-    uncompressed raster."""
-    if rle and (core or top_down or bpp not in (4, 8)):
-        raise ValueError("RLE BMP is 4/8-bit, bottom-up, non-core only")
-    if core and top_down:
-        raise ValueError("BITMAPCOREHEADER rasters are bottom-up only")
-    n_pal = (1 << bpp) if bpp <= 8 else 0
-    if bpp <= 8:
-        palette = palette or [(i, i, i) for i in range(n_pal)]
-        if len(palette) != n_pal:
-            raise ValueError(f"palette must have {n_pal} entries")
-
-    if rle:
-        data = bytearray()
-        for y in range(height - 1, -1, -1):  # bottom-up
-            row = list(rows[y])
-            x = 0
-            while x < width:
-                run = 1
-                while x + run < width and row[x + run] == row[x] and run < 255:
-                    run += 1
-                if run >= 2 or width - x == run:
-                    v = row[x] if bpp == 8 else (
-                        (row[x] << 4) | row[x])
-                    data += bytes((run, v))
-                    x += run
-                    continue
-                # absolute stretch until the next 3-repeat (min len 3)
-                end = x
-                while end < width and (
-                    end + 2 >= width
-                    or not (row[end] == row[end + 1] == row[end + 2])
-                ) and end - x < 255:
-                    end += 1
-                n = end - x
-                if n >= 3:
-                    data += bytes((0, n))
-                    if bpp == 8:
-                        chunk = bytes(row[x:end])
-                    else:
-                        chunk = bytearray((n + 1) // 2)
-                        for i in range(n):
-                            chunk[i // 2] |= row[x + i] << (
-                                4 if i % 2 == 0 else 0)
-                        chunk = bytes(chunk)
-                    data += chunk + b"\x00" * (len(chunk) & 1)
-                    x = end
-                else:  # too short for absolute: singleton runs
-                    v = row[x] if bpp == 8 else ((row[x] << 4) | row[x])
-                    data += bytes((1, v))
-                    x += 1
-            data += b"\x00\x00"  # end of line
-        data += b"\x00\x01"  # end of bitmap
-        pixel_data = bytes(data)
-        compression = 1 if bpp == 8 else 2
-    else:
-        compression = 0
-        row_size = ((width * bpp + 7) // 8 + 3) & ~3
-        pixel_data = bytearray()
-        order = range(height) if top_down else range(height - 1, -1, -1)
-        for y in order:
-            row = bytearray(row_size)
-            if bpp == 24:
-                for x, (r, g, b) in enumerate(rows[y]):
-                    row[3 * x : 3 * x + 3] = bytes((b, g, r))
-            elif bpp == 32:
-                for x, (r, g, b) in enumerate(rows[y]):
-                    row[4 * x : 4 * x + 4] = bytes((b, g, r, 0))
-            else:
-                per_byte = 8 // bpp
-                for x, v in enumerate(rows[y]):
-                    if v >= n_pal:
-                        raise ValueError(f"palette index {v} out of range")
-                    row[x // per_byte] |= v << (
-                        8 - bpp - (x % per_byte) * bpp)
-            pixel_data += row
-        pixel_data = bytes(pixel_data)
-
-    if core:
-        dib = struct.pack("<IHHHH", 12, width, height, 1, bpp)
-        pal = b"".join(bytes((b, g, r)) for r, g, b in (palette or []))
-    else:
-        dib = struct.pack(
-            "<IiiHHIIiiII", 40, width,
-            -height if top_down else height, 1, bpp, compression,
-            len(pixel_data), 2835, 2835, n_pal, 0,
-        )
-        pal = b"".join(bytes((b, g, r, 0)) for r, g, b in (palette or []))
-    pixel_off = 14 + len(dib) + len(pal)
-    header = b"BM" + struct.pack(
-        "<IHHI", pixel_off + len(pixel_data), 0, 0, pixel_off)
-    return bytes(header + dib + pal + pixel_data)
 
 
 def encode_wav(samples: bytes, framerate: int = 8000) -> bytes:
@@ -277,172 +81,6 @@ def encode_pnm(width: int, height: int, pixels, rgb: bool = False,
         return header + b"".join(struct.pack(">H", v) for v in flat)
     return header + bytes(flat)
 
-
-def _bmp_rle_decode(data, width, height, bpp):
-    """RLE8/RLE4 (BI_RLE8/BI_RLE4) → per-row palette-index rows,
-    bottom-up source order, top-down output. Escapes per the BMP
-    spec: 00 00 end-of-line, 00 01 end-of-bitmap, 00 02 dx dy delta,
-    00 n>=3 absolute run (word-aligned); runs alternate two nibbles
-    at 4 bpp. Unfilled pixels default to index 0."""
-    rows = [[0] * width for _ in range(height)]
-    x = y = pos = 0
-    while True:
-        if pos + 2 > len(data):
-            raise ValueError("truncated BMP RLE stream")
-        n, v = data[pos], data[pos + 1]
-        pos += 2
-        if n == 0:
-            if v == 0:  # end of line
-                x, y = 0, y + 1
-                continue
-            if v == 1:  # end of bitmap
-                break
-            if v == 2:  # delta
-                if pos + 2 > len(data):
-                    raise ValueError("truncated BMP RLE delta")
-                x += data[pos]
-                y += data[pos + 1]
-                pos += 2
-                continue
-            # absolute mode: v literal indices
-            nbytes = v if bpp == 8 else (v + 1) // 2
-            nbytes += nbytes & 1  # word-aligned
-            if pos + nbytes > len(data):
-                raise ValueError("truncated BMP RLE absolute run")
-            for i in range(v):
-                if y >= height or x >= width:
-                    raise ValueError("BMP RLE run overflows the raster")
-                if bpp == 8:
-                    idx = data[pos + i]
-                else:
-                    b = data[pos + i // 2]
-                    idx = (b >> 4) if i % 2 == 0 else (b & 0x0F)
-                rows[y][x] = idx
-                x += 1
-            pos += nbytes
-            continue
-        # encoded run: n pixels of v (two alternating nibbles at 4 bpp)
-        for i in range(n):
-            if y >= height or x >= width:
-                raise ValueError("BMP RLE run overflows the raster")
-            if bpp == 8:
-                idx = v
-            else:
-                idx = (v >> 4) if i % 2 == 0 else (v & 0x0F)
-            rows[y][x] = idx
-            x += 1
-    return rows[::-1]  # RLE bitmaps are bottom-up
-
-
-def _decode_bmp(payload: bytes):
-    """BMP → (width, height, [luma frame]), pure stdlib. Headers:
-    BITMAPCOREHEADER (OS/2, 12-byte, 3-byte palette entries) and
-    BITMAPINFOHEADER+ (40-byte and the V4/V5 extensions). Pixel
-    formats: 1/4/8-bit paletted (MSB-first packing), 24-bit BGR,
-    32-bit BGRX, and RLE8/RLE4 compression. Top-down rasters
-    (negative height) supported for the uncompressed forms.
-
-    Truncated payloads and out-of-range palette indexes raise
-    ValueError instead of silently decoding short/garbage frames
-    (downstream stats divide by width*height, so a short raster
-    would yield wrong values, not an error)."""
-    if len(payload) < 26:
-        raise ValueError(f"truncated BMP header: {len(payload)} bytes")
-    pixel_off = struct.unpack("<I", payload[10:14])[0]
-    hdr_size = struct.unpack("<I", payload[14:18])[0]
-    core = hdr_size == 12  # OS/2 BITMAPCOREHEADER
-    if core:
-        width, height, _planes, bpp = struct.unpack("<HHHH", payload[18:26])
-        compression = 0
-    else:
-        if hdr_size < 40:
-            # 13..39: valid-but-unsupported OS/2 2.x shortened headers
-            # — the unsupported-format gate, not a corrupt stream
-            raise NotImplementedError(
-                f"BMP header size {hdr_size} (OS/2 2.x) needs PIL")
-        if len(payload) < 34:
-            raise ValueError(f"truncated BMP header: {len(payload)} bytes")
-        width, height = struct.unpack("<ii", payload[18:26])
-        bpp = struct.unpack("<H", payload[28:30])[0]
-        compression = struct.unpack("<I", payload[30:34])[0]
-    if bpp not in (1, 4, 8, 24, 32):
-        raise NotImplementedError(
-            f"BMP bit depth {bpp} (16-bit / bitfields) needs PIL")
-    if compression not in (0, 1, 2) or (
-        compression == 1 and bpp != 8
-    ) or (compression == 2 and bpp != 4):
-        raise NotImplementedError(
-            f"BMP compression {compression} at {bpp} bpp needs PIL")
-    top_down = height < 0
-    height = abs(height)
-    if top_down and compression:
-        raise ValueError("top-down RLE BMP is invalid")
-    palette = None
-    if bpp <= 8:
-        entry = 3 if core else 4
-        n_colors = 0
-        if not core and len(payload) >= 50:
-            n_colors = struct.unpack("<I", payload[46:50])[0]
-        if not n_colors:
-            n_colors = 1 << bpp
-        pal_off = 14 + hdr_size
-        if pal_off + entry * n_colors > len(payload):
-            raise ValueError(
-                f"truncated BMP palette: need "
-                f"{pal_off + entry * n_colors} bytes, have {len(payload)}"
-            )
-        palette = [
-            _luma(payload[pal_off + entry * i + 2],
-                  payload[pal_off + entry * i + 1],
-                  payload[pal_off + entry * i])
-            for i in range(n_colors)
-        ]
-
-    def pal(idx):
-        if idx >= len(palette):
-            raise ValueError(
-                f"BMP palette index {idx} out of range "
-                f"({len(palette)} entries)"
-            )
-        return palette[idx]
-
-    px = bytearray(width * height)
-    if compression:  # RLE8 / RLE4
-        if pixel_off > len(payload):
-            raise ValueError("truncated BMP raster")
-        rows = _bmp_rle_decode(payload[pixel_off:], width, height, bpp)
-        for y in range(height):
-            for x in range(width):
-                px[y * width + x] = pal(rows[y][x])
-        return width, height, [bytes(px)]
-    row_size = ((width * bpp + 7) // 8 + 3) & ~3  # rows pad to 4 bytes
-    if pixel_off + height * row_size > len(payload):
-        raise ValueError(
-            f"truncated BMP raster: need {pixel_off + height * row_size} "
-            f"bytes, have {len(payload)}"
-        )
-    for y in range(height):
-        src_y = y if top_down else height - 1 - y
-        row = payload[pixel_off + src_y * row_size :][:row_size]
-        if bpp == 24:
-            for x in range(width):
-                b, g, r = row[3 * x], row[3 * x + 1], row[3 * x + 2]
-                px[y * width + x] = _luma(r, g, b)
-        elif bpp == 32:
-            for x in range(width):
-                b, g, r = row[4 * x], row[4 * x + 1], row[4 * x + 2]
-                px[y * width + x] = _luma(r, g, b)
-        elif bpp == 8:
-            for x in range(width):
-                px[y * width + x] = pal(row[x])
-        else:  # 1/4-bit: MSB-first packed indices
-            per_byte = 8 // bpp
-            mask = (1 << bpp) - 1
-            for x in range(width):
-                v = (row[x // per_byte]
-                     >> (8 - bpp - (x % per_byte) * bpp)) & mask
-                px[y * width + x] = pal(v)
-    return width, height, [bytes(px)]
 
 
 def _decode_pnm(payload: bytes):
@@ -698,7 +336,7 @@ def _decode_png(payload: bytes):
     0/2/4/6; all five row filters; non-interlaced AND
     Adam7-interlaced) → (width, height, [luma frame]). zlib does the
     inflate; alpha is ignored for luma stats. Truncated or corrupt
-    streams raise ValueError (same contract as BMP/PNM)."""
+    streams raise ValueError (same contract as PNM)."""
     import zlib
 
     if len(payload) < 8 + 25:
@@ -806,49 +444,7 @@ def _decode_png(payload: bytes):
     return width, height, [bytes(px)]
 
 
-# ---- baseline JPEG (pure stdlib) ----
-
-# Annex K.1 luminance quantization table (JPEG spec), natural order.
-_JPEG_QTABLE_K1 = [
-    16, 11, 10, 16, 24, 40, 51, 61,
-    12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56,
-    14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77,
-    24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101,
-    72, 92, 95, 98, 112, 100, 103, 99,
-]
-
-# zig-zag scan order: index i of the scan -> natural position
-_ZIGZAG = [
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-# Annex K.3 typical Huffman tables for luminance (BITS, HUFFVAL)
-_DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_DC_VALS = list(range(12))
-_AC_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-_AC_VALS = [
-    0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
-    0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
-    0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
-    0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A,
-    0x25, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38,
-    0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53,
-    0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66,
-    0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-    0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93,
-    0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-    0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6, 0xB7,
-    0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-    0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
-    0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
-    0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
+# ---- lossless JPEG (pure stdlib) ----
 
 
 def _huff_codes(bits, vals):
@@ -862,67 +458,6 @@ def _huff_codes(bits, vals):
             code += 1
             k += 1
         code <<= 1
-    return out
-
-
-def _dct_tables():
-    """Module-level DCT basis (computed once — previously rebuilt per
-    8x8 block, 64 cos calls each; values and evaluation order are
-    unchanged, so decoded pixels stay bit-identical)."""
-    import math
-
-    c = [math.sqrt(0.5)] + [1.0] * 7
-    cos = [[math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-           for x in range(8)]
-    return c, cos
-
-
-_DCT_C, _DCT_COS = _dct_tables()
-
-
-def _idct2d(coef):
-    """Direct 2-D inverse DCT-III on one 8x8 block (float; exact IEEE
-    ops in fixed order — deterministic across hosts). O(N^4) per
-    block is fine for test/stub-scale media; real deployments hand
-    decode to a native library behind the same interface."""
-    out = [0.0] * 64
-    # separable: rows then columns
-    tmp = [0.0] * 64
-    c = _DCT_C
-    cos = _DCT_COS
-    for y in range(8):
-        for x in range(8):
-            s = 0.0
-            for u in range(8):
-                s += c[u] * coef[y * 8 + u] * cos[x][u]
-            tmp[y * 8 + x] = s / 2.0
-    for x in range(8):
-        for y in range(8):
-            s = 0.0
-            for v in range(8):
-                s += c[v] * tmp[v * 8 + x] * cos[y][v]
-            out[y * 8 + x] = s / 2.0
-    return out
-
-
-def _fdct2d(block):
-    """Forward 2-D DCT-II of one 8x8 spatial block (encoder twin)."""
-    c = _DCT_C
-    cos = _DCT_COS
-    tmp = [0.0] * 64
-    out = [0.0] * 64
-    for y in range(8):
-        for u in range(8):
-            s = 0.0
-            for x in range(8):
-                s += block[y * 8 + x] * cos[x][u]
-            tmp[y * 8 + u] = s * c[u] / 2.0
-    for u in range(8):
-        for v in range(8):
-            s = 0.0
-            for y in range(8):
-                s += tmp[y * 8 + u] * cos[y][v]
-            out[v * 8 + u] = s * c[v] / 2.0
     return out
 
 
@@ -947,460 +482,6 @@ class _BitWriter:
             pad = 8 - self.n
             self.write((1 << pad) - 1, pad)  # 1-pad per spec
 
-
-def encode_jpeg(width: int, height: int, luma_rows, quant: int = 1,
-                restart_interval: int = 0, precision: int = 8) -> bytes:
-    """Minimal baseline GRAYSCALE JPEG writer — fixture twin of
-    ``_decode_jpeg``. ``quant`` scales a flat quantization table
-    (1 = near-lossless: error is DCT rounding only, a few grey
-    levels); Annex-K.3 Huffman tables. ``restart_interval`` emits a
-    DRI segment plus RSTn markers every N MCUs (exercises the
-    decoder's resync + DC-predictor-reset path). ``precision=12``
-    writes an extended-sequential (SOF1) frame: 12-bit samples (rows
-    hold values 0..4095), a 16-bit (Pq=1) quantization table, and
-    wider uniform canonical Huffman tables — DC categories reach 15
-    and AC sizes 14 at 12-bit (T.81 Table F.1), past where Annex K
-    stops."""
-    if precision not in (8, 12):
-        raise ValueError(f"DCT JPEG precision {precision} not in (8, 12)")
-    qtab = [max(1, min(255, quant))] * 64
-    if precision == 8:
-        dc_enc = {v: lc for lc, v in _huff_codes(_DC_BITS, _DC_VALS).items()}
-        ac_enc = {v: lc for lc, v in _huff_codes(_AC_BITS, _AC_VALS).items()}
-        dht_dc = (_DC_BITS, _DC_VALS)
-        dht_ac = (_AC_BITS, _AC_VALS)
-    else:
-        # uniform canonical tables wide enough for 12-bit categories:
-        # DC sizes 0..15 at 5 bits (Kraft 16/32), AC EOB+ZRL+runs 0-15
-        # x sizes 1-14 at 8 bits (Kraft 226/256)
-        dc_bits = [0, 0, 0, 0, 16] + [0] * 11
-        dc_vals = list(range(16))
-        ac_vals = [0x00, 0xF0] + [
-            (r << 4) | s for r in range(16) for s in range(1, 15)
-        ]
-        ac_bits = [0] * 7 + [len(ac_vals)] + [0] * 8
-        dc_enc = {v: lc for lc, v in _huff_codes(dc_bits, dc_vals).items()}
-        ac_enc = {v: lc for lc, v in _huff_codes(ac_bits, ac_vals).items()}
-        dht_dc = (dc_bits, dc_vals)
-        dht_ac = (ac_bits, ac_vals)
-    half = 1 << (precision - 1)
-
-    def marker(tag, body):
-        return bytes((0xFF, tag)) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    if precision == 8:
-        out += marker(
-            0xDB, bytes([0]) + bytes(qtab[_ZIGZAG[i]] for i in range(64))
-        )
-    else:  # Pq=1: 16-bit big-endian entries
-        out += marker(
-            0xDB,
-            bytes([0x10])
-            + b"".join(struct.pack(">H", qtab[_ZIGZAG[i]]) for i in range(64)),
-        )
-    out += marker(
-        0xC0 if precision == 8 else 0xC1,
-        struct.pack(">BHHB", precision, height, width, 1) + bytes((1, 0x11, 0)),
-    )
-    out += marker(0xC4, bytes([0x00]) + bytes(dht_dc[0]) + bytes(dht_dc[1]))
-    out += marker(0xC4, bytes([0x10]) + bytes(dht_ac[0]) + bytes(dht_ac[1]))
-    if restart_interval:
-        out += marker(0xDD, struct.pack(">H", restart_interval))
-    out += marker(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-
-    w = _BitWriter()
-    prev_dc = 0
-    bh = (height + 7) // 8
-    bw = (width + 7) // 8
-    n_mcu = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                w.flush()
-                out += w.buf
-                w = _BitWriter()
-                out += bytes((0xFF, 0xD0 + (n_mcu // restart_interval - 1) % 8))
-                prev_dc = 0
-            n_mcu += 1
-            block = [0.0] * 64
-            for y in range(8):
-                for x in range(8):
-                    sy = min(by * 8 + y, height - 1)
-                    sx = min(bx * 8 + x, width - 1)
-                    block[y * 8 + x] = luma_rows[sy][sx] - float(half)
-            coef = _fdct2d(block)
-            q = [int(round(coef[_ZIGZAG[i]] / qtab[_ZIGZAG[i]])) for i in range(64)]
-            prev_dc = _huff_emit_block(w, q, prev_dc, dc_enc, ac_enc)
-    w.flush()
-    out += w.buf
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def _quantized_block(rows, x0, y0, w, h, qtab, half=128):
-    """One edge-clamped 8x8 tile → quantized zigzag coefficients."""
-    block = [0.0] * 64
-    for y in range(8):
-        for x in range(8):
-            sy = min(y0 + y, h - 1)
-            sx = min(x0 + x, w - 1)
-            block[y * 8 + x] = rows[sy][sx] - float(half)
-    coef = _fdct2d(block)
-    return [int(round(coef[_ZIGZAG[i]] / qtab[_ZIGZAG[i]])) for i in range(64)]
-
-
-def _huff_emit_block(wtr, q, pred, dc_enc, ac_enc):
-    """Emit one quantized zigzag block's Huffman codes (DC size
-    category + one's-complement bits, AC run/size with ZRL and EOB)
-    — the shared entropy tail of every Huffman encoder twin. ``pred``
-    is the DC predictor (returns the updated value); pass ``None``
-    for hierarchical differential frames, where the DC coefficient is
-    coded directly (PRED = 0)."""
-    diff = q[0] if pred is None else q[0] - pred
-    size = 0 if diff == 0 else (
-        diff.bit_length() if diff > 0 else (-diff).bit_length())
-    length, code = dc_enc[size]
-    wtr.write(code, length)
-    if size:
-        wtr.write(diff if diff > 0 else diff + (1 << size) - 1, size)
-    run = 0
-    for i in range(1, 64):
-        v = q[i]
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            length, code = ac_enc[0xF0]  # ZRL
-            wtr.write(code, length)
-            run -= 16
-        size = v.bit_length() if v > 0 else (-v).bit_length()
-        length, code = ac_enc[(run << 4) | size]
-        wtr.write(code, length)
-        wtr.write(v if v > 0 else v + (1 << size) - 1, size)
-        run = 0
-    if run:
-        length, code = ac_enc[0x00]  # EOB
-        wtr.write(code, length)
-    return None if pred is None else q[0]
-
-
-def encode_jpeg_color(width: int, height: int, luma_rows,
-                      quant: int = 1, arith: bool = False,
-                      chroma_seed: int = 0) -> bytes:
-    """Three-component 4:2:0 (Y 2x2, Cb/Cr 1x1) sequential JPEG
-    writer — the fixture that exercises the decoders' MCU interleave
-    geometry (multi-block Y per MCU, per-component DC predictors,
-    shared entropy tables), which grayscale twins never touch. The
-    decoded LUMA must be bit-identical to the grayscale encoding of
-    the same plane at the same quant: the Y blocks carry identical
-    quantized coefficients (only the DC-difference chain reorders
-    into MCU tile order, which the per-component predictor makes
-    lossless) and chroma is entropy-decoded but never reconstructed.
-    Chroma planes are md5 noise from ``chroma_seed`` so their
-    entropy streams are non-trivial. ``arith=True`` emits SOF9 with
-    the QM-coder (all components sharing conditioning table 0)."""
-    qtab = [max(1, min(255, quant))] * 64
-    cw, ch_ = (width + 1) // 2, (height + 1) // 2
-    cb = [[hashlib.md5(f"cb:{chroma_seed}:{y}:{x}".encode()).digest()[0]
-           for x in range(cw)] for y in range(ch_)]
-    cr = [[hashlib.md5(f"cr:{chroma_seed}:{y}:{x}".encode()).digest()[0]
-           for x in range(cw)] for y in range(ch_)]
-
-    def marker(tag, body):
-        return bytes((0xFF, tag)) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += marker(0xDB, bytes([0]) + bytes(qtab[_ZIGZAG[i]] for i in range(64)))
-    out += marker(
-        0xC9 if arith else 0xC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes((1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0)),
-    )
-    if arith:
-        out += marker(0xCC, bytes((0x00, 0x10, 0x10, 5)))  # defaults
-    else:
-        out += marker(0xC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-        out += marker(0xC4, bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_VALS))
-    out += marker(0xDA, bytes((3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0)))
-
-    mcux = (width + 15) // 16
-    mcuy = (height + 15) // 16
-    # (plane, plane_w, plane_h, h_samp, v_samp) in scan order
-    comps = [
-        (luma_rows, width, height, 2, 2),
-        (cb, cw, ch_, 1, 1),
-        (cr, cw, ch_, 1, 1),
-    ]
-    if arith:
-        enc = _QMEncoder()
-        dc_stats = bytearray(64)
-        ac_stats = bytearray(256)
-        fixed = bytearray((_QM_FIXED,))
-        dc_ctx = [0, 0, 0]
-        pred = [0, 0, 0]
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci, (plane, pw, ph, hs, vs) in enumerate(comps):
-                    for by in range(vs):
-                        for bx in range(hs):
-                            q = _quantized_block(
-                                plane, (mx * hs + bx) * 8,
-                                (my * vs + by) * 8, pw, ph, qtab)
-                            diff = q[0] - pred[ci]
-                            pred[ci] = q[0]
-                            st = dc_ctx[ci]
-                            if diff == 0:
-                                enc.encode(dc_stats, st, 0)
-                                dc_ctx[ci] = 0
-                            else:
-                                enc.encode(dc_stats, st, 1)
-                                sign = 1 if diff < 0 else 0
-                                enc.encode(dc_stats, st + 1, sign)
-                                t = (-diff if sign else diff) - 1
-                                m = _arith_encode_mag(
-                                    enc, dc_stats, st + 2 + sign, t, None)
-                                dc_ctx[ci] = _arith_dc_context(m, sign, (0, 1))
-                            ke = 63
-                            while ke > 0 and q[ke] == 0:
-                                ke -= 1
-                            k = 1
-                            while k <= ke:
-                                st = 3 * (k - 1)
-                                enc.encode(ac_stats, st, 0)
-                                while q[k] == 0:
-                                    enc.encode(ac_stats, st + 1, 0)
-                                    st += 3
-                                    k += 1
-                                enc.encode(ac_stats, st + 1, 1)
-                                v = q[k]
-                                sign = 1 if v < 0 else 0
-                                enc.encode(fixed, 0, sign)
-                                _arith_encode_mag(
-                                    enc, ac_stats, st + 2,
-                                    (-v if sign else v) - 1,
-                                    189 if k <= 5 else 217)
-                                k += 1
-                            if k <= 63:
-                                enc.encode(ac_stats, 3 * (k - 1), 1)
-        out += enc.flush()
-        out += b"\xff\xd9"
-        return bytes(out)
-
-    dc_enc = {v: lc for lc, v in _huff_codes(_DC_BITS, _DC_VALS).items()}
-    ac_enc = {v: lc for lc, v in _huff_codes(_AC_BITS, _AC_VALS).items()}
-    w = _BitWriter()
-    pred = [0, 0, 0]
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for ci, (plane, pw, ph, hs, vs) in enumerate(comps):
-                for by in range(vs):
-                    for bx in range(hs):
-                        q = _quantized_block(
-                            plane, (mx * hs + bx) * 8,
-                            (my * vs + by) * 8, pw, ph, qtab)
-                        pred[ci] = _huff_emit_block(
-                            w, q, pred[ci], dc_enc, ac_enc)
-    w.flush()
-    out += w.buf
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_progressive(width: int, height: int, luma_rows,
-                            quant: int = 1) -> bytes:
-    """Progressive (SOF2) GRAYSCALE JPEG writer — fixture twin of the
-    progressive decode path. Emits the classic libjpeg-style scan
-    script: DC first (Al=1), two AC spectral bands first-pass (Al=2),
-    DC refine, then two AC successive-approximation refinement scans
-    (Al=1, Al=0) — exercising all four progressive scan types
-    including EOB-run accumulation and buffered correction bits.
-    Transmits exactly the same quantized coefficients as
-    ``encode_jpeg``, so the decoded raster is bit-identical to the
-    baseline encoding at the same ``quant``."""
-    qtab = [max(1, min(255, quant))] * 64
-    dc_enc = {v: lc for lc, v in _huff_codes(_DC_BITS, _DC_VALS).items()}
-    # the Annex-K baseline AC table has no EOBn (n>=1) symbols — those
-    # exist only in progressive scans. Use a uniform 9-bit canonical
-    # table over all 176 legal run/size symbols (16 with size 0 =
-    # EOB0..EOB14 + ZRL, and runs 0-15 x sizes 1-10); Kraft sum
-    # 176/512 < 1, decoder reads it from the DHT like any other.
-    ac_vals = [r << 4 for r in range(16)] + [
-        (r << 4) | s for r in range(16) for s in range(1, 11)
-    ]
-    ac_bits = [0] * 8 + [len(ac_vals)] + [0] * 7
-    ac_enc = {v: lc for lc, v in _huff_codes(ac_bits, ac_vals).items()}
-
-    # quantized zigzag coefficients per block, row-major
-    blocks = []
-    bh, bw = (height + 7) // 8, (width + 7) // 8
-    for by in range(bh):
-        for bx in range(bw):
-            block = [0.0] * 64
-            for y in range(8):
-                for x in range(8):
-                    sy = min(by * 8 + y, height - 1)
-                    sx = min(bx * 8 + x, width - 1)
-                    block[y * 8 + x] = luma_rows[sy][sx] - 128.0
-            coef = _fdct2d(block)
-            blocks.append(
-                [int(round(coef[_ZIGZAG[i]] / qtab[_ZIGZAG[i]]))
-                 for i in range(64)]
-            )
-
-    def marker(tag, body):
-        return bytes((0xFF, tag)) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += marker(0xDB, bytes([0]) + bytes(qtab[_ZIGZAG[i]] for i in range(64)))
-    out += marker(
-        0xC2, struct.pack(">BHHB", 8, height, width, 1) + bytes((1, 0x11, 0))
-    )
-    out += marker(0xC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += marker(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-
-    def sos(ss, se, ah, al):
-        return marker(0xDA, bytes((1, 1, 0x00, ss, se, (ah << 4) | al)))
-
-    def dc_first(al):
-        w = _BitWriter()
-        prev = 0
-        for q in blocks:
-            v = q[0] >> al  # arithmetic shift per T.81 point transform
-            diff = v - prev
-            prev = v
-            size = 0 if diff == 0 else (
-                diff.bit_length() if diff > 0 else (-diff).bit_length()
-            )
-            length, code = dc_enc[size]
-            w.write(code, length)
-            if size:
-                w.write(diff if diff > 0 else diff + (1 << size) - 1, size)
-        w.flush()
-        return w.buf
-
-    def dc_refine(al):
-        w = _BitWriter()
-        for q in blocks:
-            w.write((q[0] >> al) & 1, 1)
-        w.flush()
-        return w.buf
-
-    def ac_first(ss, se, al):
-        w = _BitWriter()
-        eobrun = 0
-
-        def flush_eobrun():
-            nonlocal eobrun
-            if eobrun:
-                nb = eobrun.bit_length() - 1
-                length, code = ac_enc[nb << 4]
-                w.write(code, length)
-                if nb:
-                    w.write(eobrun - (1 << nb), nb)
-                eobrun = 0
-
-        for q in blocks:
-            vals = []
-            for k in range(ss, se + 1):
-                t = abs(q[k]) >> al
-                vals.append(t if q[k] >= 0 else -t)
-            if not any(vals):
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    flush_eobrun()
-                continue
-            flush_eobrun()
-            run = 0
-            for v in vals:
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    length, code = ac_enc[0xF0]
-                    w.write(code, length)
-                    run -= 16
-                size = v.bit_length() if v > 0 else (-v).bit_length()
-                length, code = ac_enc[(run << 4) | size]
-                w.write(code, length)
-                w.write(v if v > 0 else v + (1 << size) - 1, size)
-                run = 0
-            if run:
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    flush_eobrun()
-        flush_eobrun()
-        w.flush()
-        return w.buf
-
-    def ac_refine(ss, se, al):
-        # ported from the public libjpeg encode_mcu_AC_refine shape:
-        # EOB-run + buffered correction bits spanning blocks
-        w = _BitWriter()
-        eobrun = 0
-        be = []  # correction bits buffered across EOB-run blocks
-
-        def flush_eobrun():
-            nonlocal eobrun, be
-            if eobrun:
-                nb = eobrun.bit_length() - 1
-                length, code = ac_enc[nb << 4]
-                w.write(code, length)
-                if nb:
-                    w.write(eobrun & ((1 << nb) - 1), nb)
-                eobrun = 0
-                for b in be:
-                    w.write(b, 1)
-                be = []
-
-        for q in blocks:
-            absv = [abs(q[k]) >> al for k in range(ss, se + 1)]
-            eob_pos = -1
-            for i, t in enumerate(absv):
-                if t == 1:
-                    eob_pos = i
-            run = 0
-            br = []  # correction bits since last emitted symbol
-            for i, t in enumerate(absv):
-                if t == 0:
-                    run += 1
-                    continue
-                while run > 15 and i <= eob_pos:
-                    flush_eobrun()
-                    length, code = ac_enc[0xF0]
-                    w.write(code, length)
-                    run -= 16
-                    for b in br:
-                        w.write(b, 1)
-                    br = []
-                if t > 1:  # history-nonzero: correction bit only
-                    br.append(t & 1)
-                    continue
-                flush_eobrun()
-                length, code = ac_enc[(run << 4) | 1]
-                w.write(code, length)
-                run = 0
-                w.write(0 if q[ss + i] < 0 else 1, 1)
-                for b in br:
-                    w.write(b, 1)
-                br = []
-            if run > 0 or br:
-                eobrun += 1
-                be.extend(br)
-                if eobrun == 0x7FFF:
-                    flush_eobrun()
-        flush_eobrun()
-        w.flush()
-        return w.buf
-
-    out += sos(0, 0, 0, 1) + dc_first(1)
-    out += sos(1, 5, 0, 2) + ac_first(1, 5, 2)
-    out += sos(6, 63, 0, 2) + ac_first(6, 63, 2)
-    out += sos(0, 0, 1, 0) + dc_refine(0)
-    out += sos(1, 63, 2, 1) + ac_refine(1, 63, 1)
-    out += sos(1, 63, 1, 0) + ac_refine(1, 63, 0)
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 # Lossless-JPEG difference categories run 0..16 (mod-2^16 differences;
@@ -1512,809 +593,6 @@ def encode_jpeg_lossless(width: int, height: int, rows,
     return bytes(out)
 
 
-def encode_jpeg_arith(width: int, height: int, luma_rows,
-                      quant: int = 1, restart_interval: int = 0,
-                      dc_cond: tuple[int, int] = (0, 1),
-                      ac_kx: int = 5) -> bytes:
-    """Arithmetic-coded sequential (SOF9) GRAYSCALE JPEG writer —
-    fixture twin of ``_decode_jpeg_scan_arith``. Transmits exactly
-    the same quantized coefficients as ``encode_jpeg`` at the same
-    ``quant`` (the entropy coder is the only difference, so the
-    decoded raster is bit-identical to the Huffman encoding), through
-    the T.81 Annex D QM-coder with the F.1.4.4 DC/AC statistical
-    models. ``dc_cond``/``ac_kx`` land in a DAC segment and steer the
-    DC conditioning thresholds / AC Kx split. ``restart_interval``
-    flushes the coder, emits RSTn, and resets statistics (F.1.4.4.3).
-    """
-    low, up = dc_cond
-    if not (0 <= low <= up <= 15):
-        raise ValueError(f"invalid DC conditioning L={low} U={up}")
-    if not 1 <= ac_kx <= 63:
-        raise ValueError(f"invalid AC conditioning Kx {ac_kx}")
-    qtab = [max(1, min(255, quant))] * 64
-
-    def marker(tag, body):
-        return bytes((0xFF, tag)) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += marker(0xDB, bytes([0]) + bytes(qtab[_ZIGZAG[i]] for i in range(64)))
-    out += marker(
-        0xC9, struct.pack(">BHHB", 8, height, width, 1) + bytes((1, 0x11, 0))
-    )
-    out += marker(0xCC, bytes((0x00, (up << 4) | low, 0x10, ac_kx)))
-    if restart_interval:
-        out += marker(0xDD, struct.pack(">H", restart_interval))
-    out += marker(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-
-    def fresh():
-        return _QMEncoder(), bytearray(64), bytearray(256), bytearray(
-            (_QM_FIXED,)), 0, 0  # enc, dc_stats, ac_stats, fixed, ctx, pred
-
-    enc, dc_stats, ac_stats, fixed, dc_ctx, prev_dc = fresh()
-    bh = (height + 7) // 8
-    bw = (width + 7) // 8
-    n_mcu = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                out += enc.flush()
-                out += bytes((0xFF, 0xD0 + (n_mcu // restart_interval - 1) % 8))
-                enc, dc_stats, ac_stats, fixed, dc_ctx, prev_dc = fresh()
-            n_mcu += 1
-            block = [0.0] * 64
-            for y in range(8):
-                for x in range(8):
-                    sy = min(by * 8 + y, height - 1)
-                    sx = min(bx * 8 + x, width - 1)
-                    block[y * 8 + x] = luma_rows[sy][sx] - 128.0
-            coef = _fdct2d(block)
-            q = [int(round(coef[_ZIGZAG[i]] / qtab[_ZIGZAG[i]]))
-                 for i in range(64)]
-            # --- DC difference (F.1.4.4.1 decision tree) ---
-            diff = q[0] - prev_dc
-            prev_dc = q[0]
-            st = dc_ctx
-            if diff == 0:
-                enc.encode(dc_stats, st, 0)
-                dc_ctx = 0
-            else:
-                enc.encode(dc_stats, st, 1)
-                sign = 1 if diff < 0 else 0
-                enc.encode(dc_stats, st + 1, sign)
-                st += 2 + sign
-                t = (-diff if sign else diff) - 1
-                m = _arith_encode_mag(enc, dc_stats, st, t, None)
-                dc_ctx = _arith_dc_context(m, sign, (low, up))
-            # --- AC coefficients (F.1.4.4.2) ---
-            ke = 63
-            while ke > 0 and q[ke] == 0:
-                ke -= 1
-            k = 1
-            while k <= ke:
-                st = 3 * (k - 1)
-                enc.encode(ac_stats, st, 0)  # not EOB
-                while q[k] == 0:
-                    enc.encode(ac_stats, st + 1, 0)
-                    st += 3
-                    k += 1
-                enc.encode(ac_stats, st + 1, 1)
-                v = q[k]
-                sign = 1 if v < 0 else 0
-                enc.encode(fixed, 0, sign)
-                st += 2
-                _arith_encode_mag(enc, ac_stats, st, (-v if sign else v) - 1,
-                                  189 if k <= ac_kx else 217)
-                k += 1
-            if k <= 63:
-                st = 3 * (k - 1)
-                enc.encode(ac_stats, st, 1)  # EOB
-    out += enc.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_progressive_arith(width: int, height: int, luma_rows,
-                                  quant: int = 1,
-                                  dc_cond: tuple[int, int] = (0, 1),
-                                  ac_kx: int = 5) -> bytes:
-    """Progressive arithmetic-coded (SOF10) GRAYSCALE JPEG writer —
-    fixture twin of ``_decode_prog_scan_arith``. Emits the same
-    6-scan script as ``encode_jpeg_progressive`` (DC first Al=1, two
-    AC bands first-pass Al=2, DC refine, two AC successive-
-    approximation refinements) with each scan QM-coded under the
-    F.1.4.4 progressive models and per-scan statistics reset.
-    Transmits exactly the quantized coefficients of ``encode_jpeg``,
-    so the decoded raster is bit-identical to the Huffman baseline
-    at the same ``quant``."""
-    low, up = dc_cond
-    if not (0 <= low <= up <= 15):
-        raise ValueError(f"invalid DC conditioning L={low} U={up}")
-    if not 1 <= ac_kx <= 63:
-        raise ValueError(f"invalid AC conditioning Kx {ac_kx}")
-    qtab = [max(1, min(255, quant))] * 64
-
-    blocks = []
-    bh, bw = (height + 7) // 8, (width + 7) // 8
-    for by in range(bh):
-        for bx in range(bw):
-            block = [0.0] * 64
-            for y in range(8):
-                for x in range(8):
-                    sy = min(by * 8 + y, height - 1)
-                    sx = min(bx * 8 + x, width - 1)
-                    block[y * 8 + x] = luma_rows[sy][sx] - 128.0
-            coef = _fdct2d(block)
-            blocks.append(
-                [int(round(coef[_ZIGZAG[i]] / qtab[_ZIGZAG[i]]))
-                 for i in range(64)]
-            )
-
-    def marker(tag, body):
-        return bytes((0xFF, tag)) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += marker(0xDB, bytes([0]) + bytes(qtab[_ZIGZAG[i]] for i in range(64)))
-    out += marker(
-        0xCA, struct.pack(">BHHB", 8, height, width, 1) + bytes((1, 0x11, 0))
-    )
-    out += marker(0xCC, bytes((0x00, (up << 4) | low, 0x10, ac_kx)))
-
-    def sos(ss, se, ah, al):
-        return marker(0xDA, bytes((1, 1, 0x00, ss, se, (ah << 4) | al)))
-
-    def dc_first(al):
-        enc = _QMEncoder()
-        stats = bytearray(64)
-        ctx = 0
-        prev = 0
-        for q in blocks:
-            v = q[0] >> al
-            diff = v - prev
-            prev = v
-            st = ctx
-            if diff == 0:
-                enc.encode(stats, st, 0)
-                ctx = 0
-                continue
-            enc.encode(stats, st, 1)
-            sign = 1 if diff < 0 else 0
-            enc.encode(stats, st + 1, sign)
-            st += 2 + sign
-            t = (-diff if sign else diff) - 1
-            m = _arith_encode_mag(enc, stats, st, t, None)
-            ctx = _arith_dc_context(m, sign, (low, up))
-        return enc.flush()
-
-    def dc_refine(al):
-        enc = _QMEncoder()
-        fixed = bytearray((_QM_FIXED,))
-        for q in blocks:
-            enc.encode(fixed, 0, (q[0] >> al) & 1)
-        return enc.flush()
-
-    def ac_first(ss, se, al):
-        enc = _QMEncoder()
-        stats = bytearray(256)
-        fixed = bytearray((_QM_FIXED,))
-        for q in blocks:
-            ke = se
-            while ke >= ss and (abs(q[ke]) >> al) == 0:
-                ke -= 1
-            k = ss
-            while k <= ke:
-                st = 3 * (k - 1)
-                enc.encode(stats, st, 0)  # not EOB
-                while (abs(q[k]) >> al) == 0:
-                    enc.encode(stats, st + 1, 0)
-                    st += 3
-                    k += 1
-                enc.encode(stats, st + 1, 1)
-                sign = 1 if q[k] < 0 else 0
-                enc.encode(fixed, 0, sign)
-                st += 2
-                t = (abs(q[k]) >> al) - 1
-                _arith_encode_mag(enc, stats, st, t,
-                                  189 if k <= ac_kx else 217)
-                k += 1
-            if k <= se:
-                enc.encode(stats, 3 * (k - 1), 1)  # EOB
-        return enc.flush()
-
-    def ac_refine(ss, se, ah, al):
-        enc = _QMEncoder()
-        stats = bytearray(256)
-        fixed = bytearray((_QM_FIXED,))
-        for q in blocks:
-            ke = se
-            while ke >= ss and (abs(q[ke]) >> al) == 0:
-                ke -= 1
-            kex = ke
-            while kex >= ss and (abs(q[kex]) >> ah) == 0:
-                kex -= 1
-            k = ss
-            while k <= ke:
-                st = 3 * (k - 1)
-                if k > kex:
-                    enc.encode(stats, st, 0)  # not EOB
-                while True:
-                    t = abs(q[k]) >> al
-                    if t:
-                        if t >> 1:  # history-nonzero: correction bit
-                            enc.encode(stats, st + 2, t & 1)
-                        else:  # newly nonzero
-                            enc.encode(stats, st + 1, 1)
-                            enc.encode(fixed, 0, 1 if q[k] < 0 else 0)
-                        break
-                    enc.encode(stats, st + 1, 0)
-                    st += 3
-                    k += 1
-                k += 1
-            if k <= se:
-                enc.encode(stats, 3 * (k - 1), 1)  # EOB
-        return enc.flush()
-
-    out += sos(0, 0, 0, 1) + dc_first(1)
-    out += sos(1, 5, 0, 2) + ac_first(1, 5, 2)
-    out += sos(6, 63, 0, 2) + ac_first(6, 63, 2)
-    out += sos(0, 0, 1, 0) + dc_refine(0)
-    out += sos(1, 63, 2, 1) + ac_refine(1, 63, 2, 1)
-    out += sos(1, 63, 1, 0) + ac_refine(1, 63, 1, 0)
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_hier(width: int, height: int, luma_rows,
-                     quant: int = 1, levels: int = 2) -> bytes:
-    """Hierarchical (T.81 Annex J) GRAYSCALE JPEG writer — fixture
-    twin of the DHP/EXP/SOF5 decode path. Emits a ``levels``-deep
-    pyramid: DHP at full resolution, a baseline (SOF0) frame at the
-    coarsest level, then per level an EXP marker (doubling both
-    axes, spec J.1.1.2 filter) followed by a differential sequential
-    (SOF5) frame coding the residual against the decoder's own
-    upsampled reconstruction — residual blocks take no level shift
-    and no DC prediction. The encoder mirrors the decoder's
-    dequantize→IDCT→clamp per frame so residuals are exact against
-    what the decoder will actually hold; at quant=1 the final output
-    therefore lands within DCT rounding of the original, like
-    baseline. Downsampling (2x2 mean) is the encoder's choice, per
-    spec. Uses the wide uniform Huffman tables (residual DC
-    categories reach 13 bits at 8-bit precision)."""
-    if levels < 1:
-        raise ValueError("levels must be >= 1")
-    qtab = [max(1, min(255, quant))] * 64
-    dc_bits = [0, 0, 0, 0, 16] + [0] * 11
-    dc_vals = list(range(16))
-    ac_vals = [0x00, 0xF0] + [
-        (r << 4) | s for r in range(16) for s in range(1, 15)
-    ]
-    ac_bits = [0] * 7 + [len(ac_vals)] + [0] * 8
-    dc_enc = {v: lc for lc, v in _huff_codes(dc_bits, dc_vals).items()}
-    ac_enc = {v: lc for lc, v in _huff_codes(ac_bits, ac_vals).items()}
-
-    # pyramid planes, coarsest last; 2x2-mean downsample, edge-clamped
-    pyr = [[list(r) for r in luma_rows]]
-    dims = [(width, height)]
-    for _ in range(levels - 1):
-        pw, ph = dims[-1]
-        nw, nh = (pw + 1) // 2, (ph + 1) // 2
-        src = pyr[-1]
-        down = []
-        for y in range(nh):
-            row = []
-            for x in range(nw):
-                xs = [2 * x, min(2 * x + 1, pw - 1)]
-                ys = [2 * y, min(2 * y + 1, ph - 1)]
-                row.append(
-                    (src[ys[0]][xs[0]] + src[ys[0]][xs[1]]
-                     + src[ys[1]][xs[0]] + src[ys[1]][xs[1]] + 2) // 4
-                )
-            down.append(row)
-        pyr.append(down)
-        dims.append((nw, nh))
-
-    def marker(tag, body):
-        return bytes((0xFF, tag)) + struct.pack(">H", len(body) + 2) + body
-
-    def sof(tag, w, h):
-        return marker(
-            tag, struct.pack(">BHHB", 8, h, w, 1) + bytes((1, 0x11, 0)))
-
-    out = bytearray(b"\xff\xd8")
-    out += marker(0xDB, bytes([0]) + bytes(qtab[_ZIGZAG[i]] for i in range(64)))
-    out += marker(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-    out += marker(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-    out += sof(0xDE, width, height)  # DHP: hierarchical envelope
-
-    def encode_frame(plane_rows, w, h, ref_flat):
-        """Emit one frame's entropy bits and return the decoder's
-        reconstruction of it (the next level's reference)."""
-        differential = ref_flat is not None
-        bw_, bh_ = (w + 7) // 8, (h + 7) // 8
-        lw = bw_ * 8
-        recon = bytearray(lw * bh_ * 8)
-        wtr = _BitWriter()
-        pred = 0
-        for by in range(bh_):
-            for bx in range(bw_):
-                block = [0.0] * 64
-                for y in range(8):
-                    for x in range(8):
-                        sy = min(by * 8 + y, h - 1)
-                        sx = min(bx * 8 + x, w - 1)
-                        v = plane_rows[sy][sx]
-                        if differential:
-                            v -= ref_flat[sy * w + sx]
-                        else:
-                            v -= 128
-                        block[y * 8 + x] = float(v)
-                coef = _fdct2d(block)
-                q = [int(round(coef[_ZIGZAG[i]] / qtab[_ZIGZAG[i]]))
-                     for i in range(64)]
-                # differential frames code DC directly (PRED = 0)
-                pred = _huff_emit_block(
-                    wtr, q, None if differential else pred, dc_enc, ac_enc)
-                # mirror the decoder: dequantize -> IDCT -> add -> clamp
-                dq = [0.0] * 64
-                for i in range(64):
-                    dq[_ZIGZAG[i]] = q[i] * qtab[_ZIGZAG[i]]
-                px = _idct2d(dq)
-                for y in range(8):
-                    row_off = (by * 8 + y) * lw + bx * 8
-                    for x in range(8):
-                        v = int(round(px[y * 8 + x]))
-                        if differential:
-                            sy = min(by * 8 + y, h - 1)
-                            sx = min(bx * 8 + x, w - 1)
-                            v += ref_flat[sy * w + sx]
-                        else:
-                            v += 128
-                        recon[row_off + x] = 0 if v < 0 else (
-                            255 if v > 255 else v)
-        wtr.flush()
-        flat = bytearray(w * h)
-        for y in range(h):
-            flat[y * w : (y + 1) * w] = recon[y * lw : y * lw + w]
-        return bytes(wtr.buf), flat
-
-    sos = marker(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    # coarsest level: non-differential baseline frame
-    w0, h0 = dims[-1]
-    bits, ref = encode_frame(pyr[-1], w0, h0, None)
-    out += sof(0xC0, w0, h0) + sos + bits
-    # each finer level: EXP + differential frame
-    for lvl in range(levels - 2, -1, -1):
-        pw, ph = dims[lvl + 1]
-        ref, uw, uh = _hier_upsample(ref, pw, ph, 1, 1)
-        w_l, h_l = dims[lvl]
-        if (uw, uh) != (w_l, h_l):
-            # ceil-halving can overshoot by one on odd dims: crop
-            cropped = bytearray(w_l * h_l)
-            for y in range(h_l):
-                cropped[y * w_l : (y + 1) * w_l] = ref[
-                    y * uw : y * uw + w_l]
-            ref = bytes(cropped)
-        out += marker(0xDF, bytes((0x11,)))  # EXP: double both axes
-        bits, ref = encode_frame(pyr[lvl], w_l, h_l, ref)
-        out += sof(0xC5, w_l, h_l) + sos + bits
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# ---- arithmetic-coded JPEG (T.81 Annex D QM-coder, pure stdlib) ----
-
-# Table D.3 probability-estimation state machine: (Qe, NLPS, NMPS,
-# Switch) per index — 113 adaptive states as published in ITU-T T.81
-# and reproduced across public implementations (libjpeg ships it as
-# jaricom.c's jpeg_aritab; the coder flowcharts below follow the
-# public jdarith.c/jcarith.c register conventions, which are the
-# T.81 Annex D procedures with C carrying ``ct`` spare low bits),
-# plus the fixed never-adapting ~0.5 state (index 113) that codes AC
-# coefficient signs (F.1.4.3.1: sign decisions carry no exploitable
-# skew, so adapting on them wastes state). Conformance evidence
-# without an in-container reference decoder: the encoder/decoder
-# pair round-trips exactly, every decoded raster is bit-identical to
-# the independently-tested Huffman path at the same quant, the
-# output stream is measurably smaller than Huffman (a broken
-# estimation table would round-trip but not compress), and a golden
-# stream digest freezes the byte-level behavior.
-_QM_TABLE = (
-    (0x5A1D, 1, 1, 1), (0x2586, 14, 2, 0), (0x1114, 16, 3, 0),
-    (0x080B, 18, 4, 0), (0x03D8, 20, 5, 0), (0x01DA, 23, 6, 0),
-    (0x00E5, 25, 7, 0), (0x006F, 28, 8, 0), (0x0036, 30, 9, 0),
-    (0x001A, 33, 10, 0), (0x000D, 35, 11, 0), (0x0006, 9, 12, 0),
-    (0x0003, 10, 13, 0), (0x0001, 12, 13, 0), (0x5A7F, 15, 15, 1),
-    (0x3F25, 36, 16, 0), (0x2CF2, 38, 17, 0), (0x207C, 39, 18, 0),
-    (0x17B9, 40, 19, 0), (0x1182, 42, 20, 0), (0x0CEF, 43, 21, 0),
-    (0x09A1, 45, 22, 0), (0x072F, 46, 23, 0), (0x055C, 48, 24, 0),
-    (0x0406, 49, 25, 0), (0x0303, 51, 26, 0), (0x0240, 52, 27, 0),
-    (0x01B1, 54, 28, 0), (0x0144, 56, 29, 0), (0x00F5, 57, 30, 0),
-    (0x00B7, 59, 31, 0), (0x008A, 60, 32, 0), (0x0068, 62, 33, 0),
-    (0x004E, 63, 34, 0), (0x003B, 32, 35, 0), (0x002C, 33, 9, 0),
-    (0x5AE1, 37, 37, 1), (0x484C, 64, 38, 0), (0x3A0D, 65, 39, 0),
-    (0x2EF1, 67, 40, 0), (0x261F, 68, 41, 0), (0x1F33, 69, 42, 0),
-    (0x19A8, 70, 43, 0), (0x1518, 72, 44, 0), (0x1177, 73, 45, 0),
-    (0x0E74, 74, 46, 0), (0x0BFB, 75, 47, 0), (0x09F8, 77, 48, 0),
-    (0x0861, 78, 49, 0), (0x0706, 79, 50, 0), (0x05CD, 48, 51, 0),
-    (0x04DE, 50, 52, 0), (0x040F, 50, 53, 0), (0x0363, 51, 54, 0),
-    (0x02D4, 52, 55, 0), (0x025C, 53, 56, 0), (0x01F8, 54, 57, 0),
-    (0x01A4, 55, 58, 0), (0x0160, 56, 59, 0), (0x0125, 57, 60, 0),
-    (0x00F6, 58, 61, 0), (0x00CB, 59, 62, 0), (0x00AB, 61, 63, 0),
-    (0x008F, 61, 32, 0), (0x5B12, 65, 65, 1), (0x4D04, 80, 66, 0),
-    (0x412C, 81, 67, 0), (0x37D8, 82, 68, 0), (0x2FE8, 83, 69, 0),
-    (0x293C, 84, 70, 0), (0x2379, 86, 71, 0), (0x1EDF, 87, 72, 0),
-    (0x1AA9, 87, 73, 0), (0x174E, 72, 74, 0), (0x1424, 72, 75, 0),
-    (0x119C, 74, 76, 0), (0x0F6B, 74, 77, 0), (0x0D51, 75, 78, 0),
-    (0x0BB6, 77, 79, 0), (0x0A40, 77, 48, 0), (0x5832, 80, 81, 1),
-    (0x4D1C, 88, 82, 0), (0x438E, 89, 83, 0), (0x3BDD, 90, 84, 0),
-    (0x34EE, 91, 85, 0), (0x2EAE, 92, 86, 0), (0x299A, 93, 87, 0),
-    (0x2516, 86, 71, 0), (0x5570, 88, 89, 1), (0x4CA9, 95, 90, 0),
-    (0x44D9, 96, 91, 0), (0x3E22, 97, 92, 0), (0x3824, 99, 93, 0),
-    (0x32B4, 99, 94, 0), (0x2E17, 93, 86, 0), (0x56A8, 95, 96, 1),
-    (0x4F46, 101, 97, 0), (0x47E5, 102, 98, 0), (0x41CF, 103, 99, 0),
-    (0x3C3D, 104, 100, 0), (0x375E, 99, 93, 0), (0x5231, 105, 102, 0),
-    (0x4C0F, 106, 103, 0), (0x4639, 107, 104, 0), (0x415E, 103, 99, 0),
-    (0x5627, 105, 106, 1), (0x50E7, 108, 107, 0), (0x4B85, 109, 103, 0),
-    (0x5597, 110, 109, 0), (0x504F, 111, 107, 0), (0x5A10, 110, 111, 1),
-    (0x5522, 112, 109, 0), (0x59EB, 112, 111, 1),
-    # index 113: fixed equiprobable state for AC signs (never moves)
-    (0x5A1D, 113, 113, 0),
-)
-
-_QM_FIXED = 113  # index of the non-adaptive sign state
-
-
-class _QMDecoder:
-    """T.81 Annex D binary arithmetic decoder (QM-coder), registers
-    per the public flowchart form: ``c`` keeps ``ct`` spare low bits,
-    the interval ``a`` renormalizes to [0x8000, 0x10000). Context
-    states are single bytes packing (MPS << 7) | table-index; the
-    conditional MPS/LPS exchange (D.2.2) lives in ``decode``. A byte
-    fetch that sees 0xFF 0x00 unstuffs to a 0xFF data byte; 0xFF
-    followed by a marker stops consuming and feeds zero bytes (the
-    marker stays unconsumed for the restart handler); running off the
-    payload end without a marker raises ValueError (truncation
-    contract shared with the Huffman ``_BitReader``)."""
-
-    def __init__(self, data, pos):
-        self.data = data
-        self.pos = pos
-        self.c = 0
-        self.a = 0
-        self.ct = -16  # forces two initial byte fetches
-        self.marker = None
-
-    def _byte(self):
-        if self.marker is not None:
-            return 0
-        if self.pos >= len(self.data):
-            raise ValueError("truncated arithmetic JPEG scan data")
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            while (self.pos < len(self.data)
-                   and self.data[self.pos] == 0xFF):
-                self.pos += 1  # fill bytes
-            if self.pos >= len(self.data):
-                raise ValueError("truncated arithmetic JPEG scan data")
-            nxt = self.data[self.pos]
-            self.pos += 1
-            if nxt != 0x00:  # a marker: stop here, feed zeros
-                self.marker = nxt
-                self.pos -= 2
-                return 0
-        return b
-
-    def decode(self, states, i):
-        # renormalize & feed (D.2.6); the init dance lands ct at 0
-        # exactly when the first two bytes are in C
-        while self.a < 0x8000:
-            self.ct -= 1
-            if self.ct < 0:
-                self.c = ((self.c << 8) | self._byte()) & 0xFFFFFFFF
-                self.ct += 8
-                if self.ct < 0:
-                    self.ct += 1
-                    if self.ct == 0:
-                        self.a = 0x8000  # two init bytes in: A = 0x10000 after <<
-            self.a = (self.a << 1) & 0xFFFFFFFF
-        sv = states[i]
-        qe, nlps, nmps, switch = _QM_TABLE[sv & 0x7F]
-        self.a -= qe
-        threshold = (self.a << self.ct) & 0xFFFFFFFF
-        if self.c >= threshold:
-            # code value in the upper subinterval
-            self.c -= threshold
-            if self.a < qe:  # conditional exchange: this was the MPS
-                d = sv >> 7
-                states[i] = (sv & 0x80) | nmps
-            else:
-                d = (sv >> 7) ^ 1
-                states[i] = ((sv & 0x80) ^ (switch << 7)) | nlps
-            self.a = qe
-        elif self.a < 0x8000:
-            if self.a < qe:  # conditional exchange: this was the LPS
-                d = (sv >> 7) ^ 1
-                states[i] = ((sv & 0x80) ^ (switch << 7)) | nlps
-            else:
-                d = sv >> 7
-                states[i] = (sv & 0x80) | nmps
-        else:
-            return sv >> 7  # no renorm, no estimation update
-        return d
-
-
-class _QMEncoder:
-    """T.81 Annex D binary arithmetic encoder — the exact inverse of
-    ``_QMDecoder`` (same Table D.3 walk, same conditional exchange).
-    Output-side machinery per D.1.6-D.1.8: carry propagation over
-    stacked 0xFF bytes, trailing-zero suppression, 0x00 stuffing
-    after every emitted 0xFF, and the final flush that picks the
-    in-interval code value with the most trailing zeros."""
-
-    def __init__(self):
-        self.c = 0
-        self.a = 0x10000
-        self.ct = 11
-        self.buffer = -1  # pending byte (-1: none yet)
-        self.sc = 0  # stacked 0xFF bytes awaiting carry resolution
-        self.zc = 0  # suppressed trailing 0x00 bytes
-        self.out = bytearray()
-
-    def _emit(self, b):
-        self.out.append(b)
-
-    def _emit_pending(self):
-        if self.buffer >= 0:
-            while self.zc:
-                self._emit(0x00)
-                self.zc -= 1
-            self._emit(self.buffer)
-            if self.buffer == 0xFF:
-                self._emit(0x00)
-
-    def encode(self, states, i, bit):
-        sv = states[i]
-        qe, nlps, nmps, switch = _QM_TABLE[sv & 0x7F]
-        self.a -= qe
-        if bit != (sv >> 7):
-            # LPS path (with conditional exchange)
-            if self.a >= qe:
-                self.c += self.a
-                self.a = qe
-            states[i] = ((sv & 0x80) ^ (switch << 7)) | nlps
-        else:
-            # MPS path
-            if self.a >= 0x8000:
-                return
-            if self.a < qe:  # conditional exchange
-                self.c += self.a
-                self.a = qe
-            states[i] = (sv & 0x80) | nmps
-        # renormalize & output (D.1.6)
-        while True:
-            self.a <<= 1
-            self.c <<= 1
-            self.ct -= 1
-            if self.ct == 0:
-                temp = self.c >> 19
-                if temp > 0xFF:
-                    # carry: ripple into the pending byte, stacked
-                    # 0xFF bytes become 0x00
-                    if self.buffer >= 0:
-                        while self.zc:
-                            self._emit(0x00)
-                            self.zc -= 1
-                        self._emit(self.buffer + 1)
-                        if self.buffer + 1 == 0xFF:
-                            self._emit(0x00)
-                    self.zc += self.sc
-                    self.sc = 0
-                    self.buffer = temp & 0xFF
-                elif temp == 0xFF:
-                    self.sc += 1  # stack until the carry question settles
-                else:
-                    if self.buffer == 0:
-                        self.zc += 1
-                    else:
-                        self._emit_pending()
-                    if self.sc:
-                        while self.zc:
-                            self._emit(0x00)
-                            self.zc -= 1
-                        while self.sc:
-                            self._emit(0xFF)
-                            self._emit(0x00)
-                            self.sc -= 1
-                    self.buffer = temp
-                self.c &= 0x7FFFF
-                self.ct += 8
-            if self.a >= 0x8000:
-                break
-
-    def flush(self) -> bytes:
-        """D.1.8 termination: clear final bits, push out everything."""
-        temp = (self.a - 1 + self.c) & 0xFFFF0000
-        if temp < self.c:
-            temp += 0x8000
-        self.c = temp << self.ct
-        if self.c & 0xF8000000:
-            # final carry
-            if self.buffer >= 0:
-                while self.zc:
-                    self._emit(0x00)
-                    self.zc -= 1
-                self._emit(self.buffer + 1)
-                if self.buffer + 1 == 0xFF:
-                    self._emit(0x00)
-            self.zc += self.sc
-            self.sc = 0
-        else:
-            if self.buffer == 0:
-                self.zc += 1
-            else:
-                self._emit_pending()
-            if self.sc:
-                while self.zc:
-                    self._emit(0x00)
-                    self.zc -= 1
-                while self.sc:
-                    self._emit(0xFF)
-                    self._emit(0x00)
-                    self.sc -= 1
-        # final code bytes, only if nonzero (trailing zeros drop)
-        if self.c & 0x7FFF800:
-            while self.zc:
-                self._emit(0x00)
-                self.zc -= 1
-            b = (self.c >> 19) & 0xFF
-            self._emit(b)
-            if b == 0xFF:
-                self._emit(0x00)
-            if self.c & 0x7F800:
-                b = (self.c >> 11) & 0xFF
-                self._emit(b)
-                if b == 0xFF:
-                    self._emit(0x00)
-        return bytes(self.out)
-
-
-def _find_rst(data, pos):
-    """Locate the next RSTn marker at or after ``pos``, skipping any
-    unconsumed bytes of the finished arithmetic interval (and stuffed
-    0xFF 0x00 pairs inside them); returns the offset just past the
-    marker. A non-RST marker or running off the payload raises
-    ValueError."""
-    while True:
-        if pos + 1 >= len(data):
-            raise ValueError("truncated arithmetic JPEG: missing RST")
-        if data[pos] == 0xFF and data[pos + 1] != 0x00:
-            if not 0xD0 <= data[pos + 1] <= 0xD7:
-                raise ValueError(
-                    f"expected RST, found marker 0xFF{data[pos + 1]:02X}"
-                )
-            return pos + 2
-        pos += 1
-
-
-def _arith_dc_context(m, sign, cond):
-    """F.1.4.4.1.2 DC conditioning category from the decoded diff's
-    magnitude-category MSB ``m`` against the (L, U) thresholds."""
-    low, up = cond
-    if m < (1 << low) >> 1:
-        return 0
-    if m > (1 << up) >> 1:
-        return 12 + sign * 4
-    return 4 + sign * 4
-
-
-def _arith_decode_dc(dec, stats, dc_context, cond):
-    """One DC difference (F.1.4.4.1 decision tree): zero flag at the
-    conditioning context, sign, magnitude-category chain from X1
-    (offset 20), mantissa bits 14 states above the final X state.
-    Returns (diff, new_context)."""
-    st = dc_context
-    if dec.decode(stats, st) == 0:
-        return 0, 0
-    sign = dec.decode(stats, st + 1)
-    st += 2 + sign
-    m = dec.decode(stats, st)
-    if m:
-        st = 20  # X1
-        while dec.decode(stats, st):
-            m <<= 1
-            if m == 0x8000:
-                raise ValueError("arithmetic JPEG DC magnitude overflow")
-            st += 1
-    new_ctx = _arith_dc_context(m, sign, cond)
-    v = m
-    st += 14
-    while m > 1:
-        m >>= 1
-        if dec.decode(stats, st):
-            v |= m
-    v += 1
-    return (-v if sign else v), new_ctx
-
-
-def _arith_decode_ac_band(dec, stats, fixed, kx, ss, se):
-    """AC coefficients k=ss..se (F.1.4.4.2): per-k EOB decision at
-    3·(k−1), zero-run walk, fixed-state sign, low/high magnitude
-    chains at 189/217 split by the Kx conditioning bound. Returns
-    the nonzero (k, signed value) pairs — the sequential caller
-    dequantizes into natural order, the progressive AC-first caller
-    shifts by Al into the coefficient store."""
-    out = []
-    k = ss
-    while k <= se:
-        st = 3 * (k - 1)
-        if dec.decode(stats, st):
-            break  # EOB
-        while dec.decode(stats, st + 1) == 0:
-            st += 3
-            k += 1
-            if k > se:
-                raise ValueError("arithmetic JPEG AC index overrun")
-        sign = dec.decode(fixed, 0)
-        st += 2
-        m = dec.decode(stats, st)
-        if m:
-            if dec.decode(stats, st):
-                m <<= 1
-                st = 189 if k <= kx else 217
-                while dec.decode(stats, st):
-                    m <<= 1
-                    if m == 0x8000:
-                        raise ValueError(
-                            "arithmetic JPEG AC magnitude overflow")
-                    st += 1
-        v = m
-        st += 14
-        while m > 1:
-            m >>= 1
-            if dec.decode(stats, st):
-                v |= m
-        v += 1
-        out.append((k, -v if sign else v))
-        k += 1
-    return out
-
-
-def _arith_encode_mag(enc, stats, st, t, chain):
-    """Shared magnitude-category + mantissa encode (F.1.4.4.1/2):
-    ``t`` is magnitude−1; ``chain`` is the X-chain base (None: the
-    DC X1=20 chain entered directly; else the AC 189/217 split,
-    entered after a second decision at the first-magnitude state).
-    Returns the category MSB m (the DC conditioning input)."""
-    m = 0
-    if t:
-        enc.encode(stats, st, 1)
-        m = 1
-        v2 = t
-        if chain is None:
-            st = 20
-            while v2 > 1:
-                v2 >>= 1
-                enc.encode(stats, st, 1)
-                m <<= 1
-                st += 1
-        elif v2 > 1:
-            enc.encode(stats, st, 1)
-            m <<= 1
-            st = chain
-            v2 >>= 1
-            while v2 > 1:
-                v2 >>= 1
-                enc.encode(stats, st, 1)
-                m <<= 1
-                st += 1
-    enc.encode(stats, st, 0)
-    mag_st = st + 14
-    mm = m
-    while mm > 1:
-        mm >>= 1
-        enc.encode(stats, mag_st, 1 if (mm & t) else 0)
-    return m
-
 
 class _BitReader:
     def __init__(self, data, pos):
@@ -2387,44 +665,22 @@ def _extend(v, size):
 
 
 def _decode_jpeg(payload: bytes):
-    """Baseline sequential (SOF0/1) AND progressive (SOF2) JPEG →
-    (width, height, [luma frame]), pure stdlib. Decodes every
-    component's entropy stream (the MCUs interleave) but
-    reconstructs pixels only for the luma (Y) channel — the
-    engine's media stats are luma-based, so chroma IDCTs would be
-    wasted work. Progressive scans (DC/AC, first/refinement,
-    EOB runs) accumulate coefficients until EOI, then dequantize +
-    IDCT once. Lossless (SOF3) scans route to the Annex-H
-    predictive path; arithmetic-coded scans (SOF9 sequential, SOF10
-    progressive) route to the QM-coder paths; hierarchical streams
-    (DHP/EXP + differential SOF5) assemble the pyramid in-loop; DCT
-    sample precision may be 8 or 12. Progressive/lossless-differential
-    and lossless-arithmetic JPEGs raise
-    NotImplementedError (PIL gate); truncated or corrupt streams
-    raise ValueError — including a stream cut cleanly between
-    progressive scans (missing EOI)."""
+    """Lossless (SOF3) grayscale JPEG → (width, height, [luma frame]),
+    pure stdlib (T.81 Annex H, see ``_decode_lossless_scan``). Every
+    other frame type (DCT baseline/extended/progressive, arithmetic,
+    hierarchical) raises NotImplementedError; truncated or corrupt
+    streams raise ValueError."""
     if len(payload) < 4 or payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
-    qtabs = {}
     dc_tabs = {}
-    ac_tabs = {}
-    dac_dc = {}
-    dac_ac = {}
     frame = None
     restart_interval = 0
-    coef_store = None
-    saw_eoi = False
-    hier = None  # DHP header once seen: hierarchical mode
-    hier_ref = None  # reference luma plane (bytes, current frame dims)
-    hier_dims = None  # (w, h) of hier_ref
-    exp_pending = None  # (Eh, Ev) from an EXP marker
     while pos + 2 <= len(payload):
         if payload[pos] != 0xFF:
             raise ValueError(f"bad marker alignment at {pos}")
         tag = payload[pos + 1]
         if tag == 0xD9:
-            saw_eoi = True
             break
         if pos + 4 > len(payload):
             raise ValueError("truncated JPEG segment header")
@@ -2432,85 +688,20 @@ def _decode_jpeg(payload: bytes):
         body = payload[pos + 4 : pos + 2 + seglen]
         if len(body) != seglen - 2:
             raise ValueError("truncated JPEG segment")
-        if tag == 0xDB:  # DQT
-            p = 0
-            while p < len(body):
-                prec = body[p] >> 4
-                tid = body[p] & 0x0F
-                if prec not in (0, 1):
-                    raise ValueError(f"invalid DQT precision {prec}")
-                sw = 2 if prec else 1  # Pq=1: 16-bit big-endian entries
-                zz = body[p + 1 : p + 1 + 64 * sw]
-                if len(zz) < 64 * sw:
-                    raise ValueError("truncated DQT")
-                tab = [0] * 64
-                for i in range(64):
-                    tab[_ZIGZAG[i]] = (
-                        (zz[2 * i] << 8) | zz[2 * i + 1]
-                    ) if prec else zz[i]
-                qtabs[tid] = tab
-                p += 1 + 64 * sw
-        elif tag in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC9, 0xCA, 0xDE):
-            # SOF0/1 baseline, SOF2 progressive, SOF3 lossless,
-            # SOF5 differential sequential (hierarchical),
-            # SOF9/10 arithmetic sequential/progressive, DHP header
+        if tag == 0xC3:  # SOF3
+            if len(body) < 6 or len(body) < 6 + 3 * body[5]:
+                raise ValueError("short JPEG SOF3 segment")
             prec, h, wdt, nc = struct.unpack(">BHHB", body[:6])
-            if tag == 0xC3:
-                if not 2 <= prec <= 16:
-                    raise ValueError(f"illegal lossless JPEG precision {prec}")
-            elif tag == 0xC0:
-                if prec != 8:  # baseline is 8-bit by definition (T.81 B.2.2)
-                    raise ValueError(f"illegal baseline JPEG precision {prec}")
-            elif tag in (0xC5, 0xDE):
-                # the hierarchical pipeline holds byte planes; 12-bit
-                # pyramids would need full-precision references
-                if prec != 8:
-                    raise NotImplementedError(
-                        "only 8-bit hierarchical JPEG decodes here")
-            elif prec not in (8, 12):  # SOF1/2/9/10: extended DCT
-                raise ValueError(f"illegal DCT JPEG precision {prec}")
-            comps = []
-            for i in range(nc):
-                cid, samp, qid = body[6 + 3 * i : 9 + 3 * i]
-                comps.append({"id": cid, "h": samp >> 4, "v": samp & 0x0F, "q": qid})
-            hdr = {"w": wdt, "h": h, "comps": comps, "prec": prec,
-                   "progressive": tag in (0xC2, 0xCA),
-                   "lossless": tag == 0xC3,
-                   "arith": tag in (0xC9, 0xCA),
-                   "differential": tag == 0xC5}
-            if tag == 0xDE:  # DHP: the hierarchical envelope, not a frame
-                hier = hdr
-            else:
-                if tag == 0xC5 and hier is None:
-                    raise ValueError("differential frame without DHP")
-                frame = hdr
-        elif tag == 0xDF:  # EXP: expand reference before next frame
-            if hier is None:
-                raise ValueError("EXP marker outside hierarchical mode")
-            if not body:
-                raise ValueError("empty EXP segment")
-            exp_pending = (body[0] >> 4, body[0] & 0x0F)
-        elif tag in (0xC6, 0xC7, 0xCB, 0xCD, 0xCE, 0xCF):
+            if not 2 <= prec <= 16:
+                raise ValueError(f"illegal lossless JPEG precision {prec}")
+            comps = {body[6 + 3 * i] for i in range(nc)}
+            frame = {"w": wdt, "h": h, "prec": prec, "comps": comps}
+        elif tag in (0xC0, 0xC1, 0xC2, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
+                     0xCB, 0xCD, 0xCE, 0xCF, 0xDE):
+            # the other SOFn frames and the hierarchical DHP header
             raise NotImplementedError(
-                "progressive/lossless-differential or lossless-arithmetic "
-                "JPEG needs PIL")
-        elif tag == 0xCC:  # DAC: arithmetic conditioning
-            p = 0
-            while p + 1 < len(body):
-                cls = body[p] >> 4
-                tid = body[p] & 0x0F
-                cs = body[p + 1]
-                if cls == 0:
-                    low, up = cs & 0x0F, cs >> 4
-                    if low > up or up > 15:
-                        raise ValueError(
-                            f"invalid DAC DC conditioning L={low} U={up}")
-                    dac_dc[tid] = (low, up)
-                else:
-                    if not 1 <= cs <= 63:
-                        raise ValueError(f"invalid DAC AC Kx {cs}")
-                    dac_ac[tid] = cs
-                p += 2
+                f"JPEG frame type 0xFF{tag:02X}: only lossless SOF3 "
+                "decodes here")
         elif tag == 0xC4:  # DHT
             p = 0
             while p < len(body):
@@ -2521,116 +712,31 @@ def _decode_jpeg(payload: bytes):
                 vals = list(body[p + 17 : p + 17 + n])
                 if len(vals) < n:
                     raise ValueError("truncated DHT")
-                (dc_tabs if cls == 0 else ac_tabs)[tid] = _huff_codes(bits, vals)
+                if cls == 0:  # lossless scans code with DC-class tables
+                    dc_tabs[tid] = _huff_codes(bits, vals)
                 p += 17 + n
         elif tag == 0xDD:  # DRI
+            if len(body) < 2:
+                raise ValueError("short JPEG DRI segment")
             (restart_interval,) = struct.unpack(">H", body[:2])
         elif tag == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
+            if not body or len(body) < 4 + 2 * body[0]:
+                raise ValueError("short JPEG SOS segment")
             ns = body[0]
             scan = []
             for i in range(ns):
                 cs, tt = body[1 + 2 * i], body[2 + 2 * i]
-                comp = next(c for c in frame["comps"] if c["id"] == cs)
-                scan.append((comp, tt >> 4, tt & 0x0F))
-            if hier is not None:
-                if frame.get("progressive") or frame.get("lossless") or (
-                    frame.get("arith")
-                ):
-                    raise NotImplementedError(
-                        "only sequential-Huffman hierarchical frames "
-                        "decode here")
-                if not frame.get("differential") and exp_pending:
-                    # T.81 ties EXP to the immediately following frame;
-                    # expanding before a non-differential frame is
-                    # meaningless and must not leak onto a later one
-                    raise ValueError(
-                        "EXP marker before a non-differential frame")
-                if frame.get("differential"):
-                    if hier_ref is None:
-                        raise ValueError(
-                            "differential frame before any reference")
-                    eh, ev = exp_pending or (0, 0)
-                    exp_pending = None
-                    if eh or ev:
-                        hier_ref, rw, rh = _hier_upsample(
-                            hier_ref, *hier_dims, eh, ev)
-                        # ceil-halved pyramids overshoot odd frame
-                        # dims by one after doubling: clip (spec: the
-                        # reference is clipped to the frame size)
-                        fw, fh = frame["w"], frame["h"]
-                        if (rw, rh) != (fw, fh):
-                            if rw < fw or rh < fh:
-                                raise ValueError(
-                                    f"EXP reference {rw}x{rh} smaller "
-                                    f"than frame {fw}x{fh}"
-                                )
-                            clipped = bytearray(fw * fh)
-                            for y in range(fh):
-                                clipped[y * fw : (y + 1) * fw] = hier_ref[
-                                    y * rw : y * rw + fw]
-                            hier_ref, rw, rh = bytes(clipped), fw, fh
-                        hier_dims = (rw, rh)
-                hier_ref, pos = _decode_hier_frame(
-                    payload, pos + 2 + seglen, frame, scan, qtabs,
-                    dc_tabs, ac_tabs, restart_interval,
-                    hier_ref if frame.get("differential") else None,
-                )
-                hier_dims = (frame["w"], frame["h"])
-                continue
-            if frame.get("lossless"):
-                ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
-                return _decode_lossless_scan(
-                    payload, pos + 2 + seglen, frame, scan, ss,
-                    ahal & 0x0F, dc_tabs, restart_interval,
-                )
-            if frame.get("arith") and not frame.get("progressive"):
-                return _decode_jpeg_scan_arith(
-                    payload, pos + 2 + seglen, frame, scan, qtabs,
-                    dac_dc, dac_ac, restart_interval,
-                )
-            if not frame.get("progressive"):
-                return _decode_jpeg_scan(
-                    payload, pos + 2 + seglen, frame, scan, qtabs, dc_tabs,
-                    ac_tabs, restart_interval,
-                )
-            ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
-            if coef_store is None:
-                coef_store = _init_coef_store(frame)
-            if frame.get("arith"):
-                pos = _decode_prog_scan_arith(
-                    payload, pos + 2 + seglen, frame, scan, ss, se,
-                    ahal >> 4, ahal & 0x0F, dac_dc, dac_ac,
-                    restart_interval, coef_store,
-                )
-            else:
-                pos = _decode_prog_scan(
-                    payload, pos + 2 + seglen, frame, scan, ss, se,
-                    ahal >> 4, ahal & 0x0F, dc_tabs, ac_tabs,
-                    restart_interval, coef_store,
-                )
-            continue
-        pos += 2 + seglen
-    if hier is not None and hier_ref is not None:
-        if not saw_eoi:
-            # same rule as progressive: a cut between frames would
-            # silently return the coarse pyramid level
-            raise ValueError("truncated hierarchical JPEG: missing EOI")
-        w, h = hier_dims
-        if (w, h) != (hier["w"], hier["h"]):
-            raise ValueError(
-                f"hierarchical stream ended at {w}x{h}, DHP declares "
-                f"{hier['w']}x{hier['h']}"
+                if cs not in frame["comps"]:
+                    raise ValueError(f"JPEG scan names unknown component {cs}")
+                scan.append((cs, tt >> 4, tt & 0x0F))
+            ss, _se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
+            return _decode_lossless_scan(
+                payload, pos + 2 + seglen, frame, scan, ss,
+                ahal & 0x0F, dc_tabs, restart_interval,
             )
-        return w, h, [bytes(hier_ref)]
-    if frame is not None and frame.get("progressive") and coef_store is not None:
-        if not saw_eoi:
-            # a stream ending cleanly between scans is still truncated:
-            # later refinement scans may have been cut off, and silently
-            # returning the coarse partial image would corrupt stats
-            raise ValueError("truncated progressive JPEG: missing EOI")
-        return _reconstruct_progressive(frame, coef_store, qtabs)
+        pos += 2 + seglen
     raise ValueError("JPEG has no scan data")
 
 
@@ -2643,12 +749,12 @@ def _decode_lossless_scan(payload, pos, frame, scan, predictor, pt,
     Reconstructed samples are shifted left by the point transform Pt
     and scaled to 8-bit luma by exact integer v*255//(2^P-1) (the PNM
     maxval rule). Single-component only — the engine's stats are
-    luma-based; multi-component lossless interleaving gates on PIL.
+    luma-based; multi-component lossless raises NotImplementedError.
     A restart resets prediction to the scan-initial default for the
     next sample (T.81 H.2.2) and realigns the bit reader."""
     if len(scan) != 1:
         raise NotImplementedError(
-            "multi-component lossless JPEG needs PIL")
+            "multi-component lossless JPEG does not decode here")
     if not 1 <= predictor <= 7:
         raise ValueError(f"lossless JPEG predictor {predictor} not in 1..7")
     _comp, dc_id, _ = scan[0]
@@ -2693,595 +799,6 @@ def _decode_lossless_scan(payload, pos, frame, scan, predictor, pt,
         for x in range(w):
             px8[y * w + x] = (rows[y][x] << pt) * 255 // maxval
     return w, h, [bytes(px8)]
-
-
-def _decode_jpeg_scan_arith(data, pos, frame, scan, qtabs, dac_dc, dac_ac,
-                            dri):
-    """Sequential arithmetic-coded (SOF9) scan: the same MCU walk as
-    the Huffman path, entropy-decoded by the QM-coder with the
-    F.1.4.4 DC/AC statistical models. Per-table adaptive statistics
-    areas (64 DC / 256 AC byte states) start at state 0/MPS 0 and at
-    every restart, which also re-initializes the coder registers and
-    the DC predictors/contexts (F.1.4.4.3); the RSTn marker is
-    located by scanning past any unconsumed bytes of the finished
-    interval. Y-only reconstruction, like the Huffman path."""
-    w, h = frame["w"], frame["h"]
-    half, maxval = _jpeg_sample_range(frame)
-    deep = maxval != 255
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    luma = frame["comps"][0]
-    lw, lh = mcux * 8 * luma["h"], mcuy * 8 * luma["v"]
-    plane = bytearray(lw * lh)
-
-    def fresh_stats():
-        return (
-            {tid: bytearray(64) for _, tid, _ in scan},
-            {tid: bytearray(256) for _, _, tid in scan},
-            bytearray((_QM_FIXED,)),
-            {c["id"]: 0 for c in frame["comps"]},  # dc_context
-            {c["id"]: 0 for c in frame["comps"]},  # last_dc
-        )
-
-    dec = _QMDecoder(data, pos)
-    dc_stats, ac_stats, fixed, dc_ctx, pred = fresh_stats()
-    n_mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if dri and n_mcu and n_mcu % dri == 0:
-                # locate the RSTn past any unconsumed interval bytes
-                dec = _QMDecoder(data, _find_rst(data, dec.pos))
-                dc_stats, ac_stats, fixed, dc_ctx, pred = fresh_stats()
-            n_mcu += 1
-            for comp, dct, act in scan:
-                qt = qtabs.get(comp["q"])
-                if qt is None:
-                    raise ValueError("missing quant table")
-                cond = dac_dc.get(dct, (0, 1))
-                kx = dac_ac.get(act, 5)
-                for by in range(comp["v"]):
-                    for bx in range(comp["h"]):
-                        coef = [0.0] * 64
-                        diff, dc_ctx[comp["id"]] = _arith_decode_dc(
-                            dec, dc_stats[dct], dc_ctx[comp["id"]], cond)
-                        pred[comp["id"]] += diff
-                        coef[0] = pred[comp["id"]] * qt[0]
-                        for k, v in _arith_decode_ac_band(
-                                dec, ac_stats[act], fixed, kx, 1, 63):
-                            coef[_ZIGZAG[k]] = v * qt[_ZIGZAG[k]]
-                        if comp is luma:
-                            px = _idct2d(coef)
-                            ox = (mx * luma["h"] + bx) * 8
-                            oy = (my * luma["v"] + by) * 8
-                            for y in range(8):
-                                row_off = (oy + y) * lw + ox
-                                for x in range(8):
-                                    v = int(round(px[y * 8 + x])) + half
-                                    v = 0 if v < 0 else (
-                                        maxval if v > maxval else v)
-                                    plane[row_off + x] = (
-                                        v * 255 // maxval if deep else v)
-    out = bytearray(w * h)
-    for y in range(h):
-        out[y * w : (y + 1) * w] = plane[y * lw : y * lw + w]
-    return w, h, [bytes(out)]
-
-
-def _hier_upsample(plane, w, h, eh, ev):
-    """T.81 J.1.1.2 reference upsampling (per EXP marker): doubled
-    axis keeps input samples at even positions and fills odd ones
-    with the rounded mean of the neighbors, replicating the last
-    sample at the edge. Returns (plane, new_w, new_h)."""
-    if eh:
-        out = bytearray(2 * w * h)
-        for y in range(h):
-            base = y * w
-            obase = y * 2 * w
-            for x in range(w):
-                v = plane[base + x]
-                nxt = plane[base + min(x + 1, w - 1)]
-                out[obase + 2 * x] = v
-                out[obase + 2 * x + 1] = (v + nxt + 1) >> 1
-        plane, w = out, 2 * w
-    if ev:
-        out = bytearray(w * 2 * h)
-        for y in range(h):
-            nbase = min(y + 1, h - 1) * w
-            base = y * w
-            for x in range(w):
-                v = plane[base + x]
-                nxt = plane[nbase + x]
-                out[(2 * y) * w + x] = v
-                out[(2 * y + 1) * w + x] = (v + nxt + 1) >> 1
-        h = 2 * h
-        plane = out
-    return plane, w, h
-
-
-def _decode_hier_frame(data, pos, frame, scan, qtabs, dc_tabs, ac_tabs,
-                       dri, ref):
-    """One hierarchical frame's scan (grayscale): non-differential
-    frames decode like baseline; differential (SOF5) frames code the
-    residual DCT with NO level shift and NO DC prediction (the
-    per-frame reference carries the low frequencies), and the output
-    is clamp(reference + residual). Returns (plane, next marker
-    position)."""
-    w, h = frame["w"], frame["h"]
-    if len(frame["comps"]) != 1:
-        raise NotImplementedError(
-            "multi-component hierarchical JPEG needs PIL")
-    comp, dct, act = scan[0]
-    qt = qtabs.get(comp["q"])
-    if qt is None:
-        raise ValueError("missing quant table")
-    differential = frame.get("differential", False)
-    if differential:
-        if ref is None:
-            raise ValueError("differential frame before any reference")
-        if len(ref) != w * h:
-            raise ValueError(
-                f"differential frame dims {w}x{h} do not match the "
-                f"(expanded) reference of {len(ref)} samples"
-            )
-    r = _BitReader(data, pos)
-    bw = (w + 7) // 8
-    bh = (h + 7) // 8
-    lw = bw * 8
-    plane = bytearray(lw * bh * 8)
-    pred = 0
-    n_mcu = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if dri and n_mcu and n_mcu % dri == 0:
-                r.restart()
-                pred = 0
-            n_mcu += 1
-            coef = [0.0] * 64
-            size = r.huff(dc_tabs[dct])
-            diff = _extend(r.bits(size), size) if size else 0
-            if differential:
-                coef[0] = diff * qt[0]  # PRED = 0 in differential frames
-            else:
-                pred += diff
-                coef[0] = pred * qt[0]
-            i = 1
-            while i < 64:
-                rs = r.huff(ac_tabs[act])
-                if rs == 0x00:
-                    break
-                if rs == 0xF0:
-                    i += 16
-                    continue
-                i += rs >> 4
-                if i > 63:
-                    raise ValueError("AC coefficient overrun")
-                sz = rs & 0x0F
-                coef[_ZIGZAG[i]] = _extend(r.bits(sz), sz) * qt[_ZIGZAG[i]]
-                i += 1
-            px = _idct2d(coef)
-            for y in range(8):
-                row_off = (by * 8 + y) * lw + bx * 8
-                for x in range(8):
-                    v = int(round(px[y * 8 + x]))
-                    if differential:
-                        sy = min(by * 8 + y, h - 1)
-                        sx = min(bx * 8 + x, w - 1)
-                        v += ref[sy * w + sx]
-                    else:
-                        v += 128
-                    plane[row_off + x] = 0 if v < 0 else (
-                        255 if v > 255 else v)
-    out = bytearray(w * h)
-    for y in range(h):
-        out[y * w : (y + 1) * w] = plane[y * lw : y * lw + w]
-    return out, _next_marker(data, r.pos)
-
-
-def _init_coef_store(frame):
-    """Per-component MCU-padded quantized-coefficient store (zigzag
-    order), shared by all progressive scans."""
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
-    mcux = (frame["w"] + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (frame["h"] + 8 * vmax - 1) // (8 * vmax)
-    store = {}
-    for c in frame["comps"]:
-        bw, bh = mcux * c["h"], mcuy * c["v"]
-        store[c["id"]] = {
-            "bw": bw, "bh": bh,
-            "blocks": [[0] * 64 for _ in range(bw * bh)],
-        }
-    return store
-
-
-def _decode_prog_scan_arith(data, pos, frame, scan, ss, se, ah, al,
-                            dac_dc, dac_ac, dri, store):
-    """One progressive arithmetic-coded (SOF10) SOS, statistical
-    models per the public libjpeg decode_mcu_* shapes: DC first =
-    the sequential conditioning tree with the result scaled by Al;
-    DC refine = one fixed-state bit per block ORed into 1<<Al; AC
-    first = the sequential per-k EOB / zero-run / magnitude model
-    over Ss..Se scaled by Al; AC refine = per-k correction bits at
-    offset +2 for history-nonzero coefficients, newly-nonzero flag
-    at +1 with a fixed-state sign, EOB decisions only past the
-    previous stage's end-of-block index. Statistics areas reset at
-    scan start and at every restart (F.1.4.4.3). Accumulates
-    quantized coefficients into ``store``; returns the position of
-    the next marker."""
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
-    mcux = (frame["w"] + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (frame["h"] + 8 * vmax - 1) // (8 * vmax)
-    p1 = 1 << al
-    m1 = -1 << al
-
-    def fresh():
-        return (
-            _QMDecoder(data, pos),
-            {tid: bytearray(64) for _, tid, _ in scan},
-            {tid: bytearray(256) for _, _, tid in scan},
-            bytearray((_QM_FIXED,)),
-            {c["id"]: 0 for c in frame["comps"]},  # dc_context
-            {c["id"]: 0 for c in frame["comps"]},  # last_dc (DC first)
-        )
-
-    dec, dc_stats, ac_stats, fixed, dc_ctx, pred = fresh()
-    n_unit = 0
-
-    def check_restart():
-        nonlocal dec, dc_stats, ac_stats, fixed, dc_ctx, pred, n_unit, pos
-        if dri and n_unit and n_unit % dri == 0:
-            pos = _find_rst(data, dec.pos)
-            dec, dc_stats, ac_stats, fixed, dc_ctx, pred = fresh()
-        n_unit += 1
-
-    if ss == 0:  # DC scan
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-
-        def dc_block(blk, comp, dct):
-            if ah == 0:
-                cond = dac_dc.get(dct, (0, 1))
-                diff, dc_ctx[comp["id"]] = _arith_decode_dc(
-                    dec, dc_stats[dct], dc_ctx[comp["id"]], cond)
-                pred[comp["id"]] += diff
-                blk[0] = pred[comp["id"]] << al
-            elif dec.decode(fixed, 0):
-                blk[0] |= p1
-
-        if len(scan) == 1:  # non-interleaved: true block dims
-            comp, dct, _act = scan[0]
-            st = store[comp["id"]]
-            bw_t, bh_t = _true_block_dims(frame, comp, hmax, vmax)
-            for row in range(bh_t):
-                for col in range(bw_t):
-                    check_restart()
-                    dc_block(st["blocks"][row * st["bw"] + col], comp, dct)
-        else:
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    check_restart()
-                    for comp, dct, _act in scan:
-                        st = store[comp["id"]]
-                        for by in range(comp["v"]):
-                            for bx in range(comp["h"]):
-                                row = my * comp["v"] + by
-                                col = mx * comp["h"] + bx
-                                dc_block(
-                                    st["blocks"][row * st["bw"] + col],
-                                    comp, dct,
-                                )
-        return _next_marker(data, dec.pos)
-
-    # AC scan: single component only (T.81 G.1.1.1.1)
-    if len(scan) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    comp, _dct, act = scan[0]
-    stc = store[comp["id"]]
-    kx = dac_ac.get(act, 5)
-    bw_t, bh_t = _true_block_dims(frame, comp, hmax, vmax)
-    for row in range(bh_t):
-        for col in range(bw_t):
-            check_restart()
-            blk = stc["blocks"][row * stc["bw"] + col]
-            stats = ac_stats[act]
-            if ah == 0:  # AC first: sequential model over Ss..Se, << Al
-                for k, v in _arith_decode_ac_band(
-                        dec, stats, fixed, kx, ss, se):
-                    blk[k] = v << al
-            else:  # AC refine
-                kex = se
-                while kex > 0:
-                    t = blk[kex]
-                    if (t if t >= 0 else -t) >> ah:
-                        break
-                    kex -= 1
-                k = ss
-                while k <= se:
-                    st = 3 * (k - 1)
-                    if k > kex:
-                        if dec.decode(stats, st):
-                            break  # EOB
-                    while True:
-                        if blk[k]:  # history-nonzero: correction bit
-                            if dec.decode(stats, st + 2):
-                                blk[k] += p1 if blk[k] >= 0 else m1
-                            break
-                        if dec.decode(stats, st + 1):  # newly nonzero
-                            blk[k] = m1 if dec.decode(fixed, 0) else p1
-                            break
-                        st += 3
-                        k += 1
-                        if k > se:
-                            raise ValueError(
-                                "arithmetic JPEG AC refine overrun")
-                    k += 1
-    return _next_marker(data, dec.pos)
-
-
-def _decode_prog_scan(data, pos, frame, scan, ss, se, ah, al,
-                      dc_tabs, ac_tabs, dri, store):
-    """One progressive SOS: DC first/refine (interleaved) or AC
-    first/refine (single-component, EOB-run semantics per ITU T.81
-    G.2 — ported from the public libjpeg decode_mcu_AC_* shape).
-    Accumulates quantized coefficients into ``store``; returns the
-    stream position of the next marker."""
-    r = _BitReader(data, pos)
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
-    mcux = (frame["w"] + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (frame["h"] + 8 * vmax - 1) // (8 * vmax)
-    eobrun = 0
-    pred = {comp["id"]: 0 for comp, _, _ in scan}
-
-    n_unit = 0
-
-    def check_restart():
-        nonlocal eobrun, pred, n_unit
-        if dri and n_unit and n_unit % dri == 0:
-            r.restart()
-            eobrun = 0
-            pred = {k: 0 for k in pred}
-        n_unit += 1
-
-    if ss == 0:  # DC scan
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-
-        def dc_block(blk, comp, dct):
-            if ah == 0:
-                size = r.huff(dc_tabs[dct])
-                diff = _extend(r.bits(size), size) if size else 0
-                pred[comp["id"]] += diff
-                blk[0] = pred[comp["id"]] << al
-            elif r.bit():
-                blk[0] |= 1 << al
-
-        if len(scan) == 1:  # non-interleaved: true block dims
-            comp, dct, _act = scan[0]
-            st = store[comp["id"]]
-            bw_t, bh_t = _true_block_dims(frame, comp, hmax, vmax)
-            for row in range(bh_t):
-                for col in range(bw_t):
-                    check_restart()
-                    dc_block(st["blocks"][row * st["bw"] + col], comp, dct)
-        else:
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    check_restart()
-                    for comp, dct, _act in scan:
-                        st = store[comp["id"]]
-                        for by in range(comp["v"]):
-                            for bx in range(comp["h"]):
-                                row = my * comp["v"] + by
-                                col = mx * comp["h"] + bx
-                                dc_block(
-                                    st["blocks"][row * st["bw"] + col],
-                                    comp, dct,
-                                )
-        return _next_marker(data, r.pos)
-
-    # AC scan: single component only (T.81 G.1.1.1.1)
-    if len(scan) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    comp, _dct, act = scan[0]
-    st = store[comp["id"]]
-    bw_t, bh_t = _true_block_dims(frame, comp, hmax, vmax)
-    p1, m1 = 1 << al, -(1 << al)
-    for row in range(bh_t):
-        for col in range(bw_t):
-            check_restart()
-            blk = st["blocks"][row * st["bw"] + col]
-            if ah == 0:  # first pass for this band
-                if eobrun:
-                    eobrun -= 1
-                    continue
-                k = ss
-                while k <= se:
-                    rs = r.huff(ac_tabs[act])
-                    rr, s = rs >> 4, rs & 0x0F
-                    if s == 0:
-                        if rr != 15:
-                            eobrun = (1 << rr) - 1
-                            if rr:
-                                eobrun += r.bits(rr)
-                            break
-                        k += 16  # ZRL
-                    else:
-                        k += rr
-                        if k > se:
-                            raise ValueError("AC coefficient overrun")
-                        blk[k] = _extend(r.bits(s), s) << al
-                        k += 1
-                continue
-            # refinement pass
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    rs = r.huff(ac_tabs[act])
-                    rr, s = rs >> 4, rs & 0x0F
-                    if s:
-                        if s != 1:
-                            raise ValueError(
-                                "invalid size in AC refinement scan"
-                            )
-                        s = p1 if r.bit() else m1
-                    elif rr != 15:
-                        eobrun = 1 << rr
-                        if rr:
-                            eobrun += r.bits(rr)
-                        break
-                    # walk over history-nonzero positions, consuming a
-                    # correction bit each; place the new coefficient at
-                    # the rr-th zero-history position
-                    while k <= se:
-                        if blk[k] != 0:
-                            if r.bit() and (blk[k] & p1) == 0:
-                                blk[k] += p1 if blk[k] >= 0 else m1
-                        else:
-                            if rr == 0:
-                                if s:
-                                    blk[k] = s
-                                k += 1
-                                break
-                            rr -= 1
-                        k += 1
-            if eobrun > 0:
-                while k <= se:
-                    if blk[k] != 0 and r.bit() and (blk[k] & p1) == 0:
-                        blk[k] += p1 if blk[k] >= 0 else m1
-                    k += 1
-                eobrun -= 1
-    return _next_marker(data, r.pos)
-
-
-def _true_block_dims(frame, comp, hmax, vmax):
-    cw = -(-(frame["w"] * comp["h"]) // hmax)
-    ch = -(-(frame["h"] * comp["v"]) // vmax)
-    return (cw + 7) // 8, (ch + 7) // 8
-
-
-def _next_marker(data, pos):
-    """Skip pad bytes / stuffed zeros / RSTn after a scan; return the
-    offset of the next real marker's 0xFF."""
-    while pos + 1 < len(data):
-        if data[pos] == 0xFF:
-            nxt = data[pos + 1]
-            if nxt == 0x00 or 0xD0 <= nxt <= 0xD7:
-                pos += 2
-                continue
-            return pos
-        pos += 1
-    raise ValueError("truncated JPEG: no marker after progressive scan")
-
-
-def _reconstruct_progressive(frame, store, qtabs):
-    """Dequantize + IDCT the accumulated luma coefficients after all
-    progressive scans (same Y-only policy as the baseline path)."""
-    luma = frame["comps"][0]
-    qt = qtabs.get(luma["q"])
-    if qt is None:
-        raise ValueError("missing quant table")
-    st = store[luma["id"]]
-    w, h = frame["w"], frame["h"]
-    half, maxval = _jpeg_sample_range(frame)
-    deep = maxval != 255
-    lw = st["bw"] * 8
-    plane = bytearray(lw * st["bh"] * 8)
-    for row in range(st["bh"]):
-        for col in range(st["bw"]):
-            blk = st["blocks"][row * st["bw"] + col]
-            coef = [0.0] * 64
-            for k in range(64):
-                coef[_ZIGZAG[k]] = blk[k] * qt[_ZIGZAG[k]]
-            px = _idct2d(coef)
-            ox, oy = col * 8, row * 8
-            for y in range(8):
-                row_off = (oy + y) * lw + ox
-                for x in range(8):
-                    v = int(round(px[y * 8 + x])) + half
-                    v = 0 if v < 0 else (maxval if v > maxval else v)
-                    plane[row_off + x] = v * 255 // maxval if deep else v
-    out = bytearray(w * h)
-    for y in range(h):
-        out[y * w : (y + 1) * w] = plane[y * lw : y * lw + w]
-    return w, h, [bytes(out)]
-
-
-def _jpeg_sample_range(frame):
-    """(level-shift, maxval) for the frame's sample precision — 128/255
-    at 8-bit, 2048/4095 at 12-bit (T.81 A.3.1); luma output rescales
-    by exact integer v*255//maxval like the PNM/PNG deep paths.
-    Reconstruction loops branch on ``maxval != 255`` so the dominant
-    8-bit case skips the identity multiply/divide per pixel."""
-    prec = frame.get("prec", 8)
-    return 1 << (prec - 1), (1 << prec) - 1
-
-
-def _decode_jpeg_scan(data, pos, frame, scan, qtabs, dc_tabs, ac_tabs, dri):
-    w, h = frame["w"], frame["h"]
-    half, maxval = _jpeg_sample_range(frame)
-    deep = maxval != 255
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    r = _BitReader(data, pos)
-    luma = frame["comps"][0]
-    lw, lh = mcux * 8 * luma["h"], mcuy * 8 * luma["v"]
-    plane = bytearray(lw * lh)
-    pred = {c["id"]: 0 for c in frame["comps"]}
-    n_mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if dri and n_mcu and n_mcu % dri == 0:
-                # byte-align + skip the RSTn marker, reset DC predictors
-                r.restart()
-                pred = {c["id"]: 0 for c in frame["comps"]}
-            n_mcu += 1
-            for comp, dct, act in scan:
-                qt = qtabs.get(comp["q"])
-                if qt is None:
-                    raise ValueError("missing quant table")
-                for by in range(comp["v"]):
-                    for bx in range(comp["h"]):
-                        coef = [0.0] * 64
-                        size = r.huff(dc_tabs[dct])
-                        diff = _extend(r.bits(size), size) if size else 0
-                        pred[comp["id"]] += diff
-                        coef[0] = pred[comp["id"]] * qt[0]
-                        i = 1
-                        while i < 64:
-                            rs = r.huff(ac_tabs[act])
-                            if rs == 0x00:  # EOB
-                                break
-                            if rs == 0xF0:  # ZRL
-                                i += 16
-                                continue
-                            i += rs >> 4
-                            if i > 63:
-                                raise ValueError("AC coefficient overrun")
-                            sz = rs & 0x0F
-                            coef[_ZIGZAG[i]] = _extend(r.bits(sz), sz) * qt[_ZIGZAG[i]]
-                            i += 1
-                        if comp is luma:
-                            px = _idct2d(coef)
-                            ox = (mx * luma["h"] + bx) * 8
-                            oy = (my * luma["v"] + by) * 8
-                            for y in range(8):
-                                row_off = (oy + y) * lw + ox
-                                for x in range(8):
-                                    v = int(round(px[y * 8 + x])) + half
-                                    v = 0 if v < 0 else (
-                                        maxval if v > maxval else v)
-                                    plane[row_off + x] = (
-                                        v * 255 // maxval if deep else v)
-    out = bytearray(w * h)
-    for y in range(h):
-        out[y * w : (y + 1) * w] = plane[y * lw : y * lw + w]
-    return w, h, [bytes(out)]
 
 
 # ---- GIF (pure stdlib) — the real multi-frame container ----
@@ -3474,7 +991,7 @@ def _gif_deinterlace(idx: bytes, fw: int, fh: int) -> bytes:
 
 def _decode_gif(payload: bytes):
     """Multi-frame GIF → (width, height, [luma frames]) — the real-
-    format path for ``sample_frames``. Pure-stdlib: global or local
+    format path for x64's frame sampling. Pure-stdlib: global or local
     palettes, sub-rectangle frames composited onto the logical
     screen with Graphic Control Extension disposal (0/1 leave,
     2 restore-to-background, 3 restore-to-previous) and
@@ -3602,269 +1119,3 @@ def _decode_gif(payload: bytes):
         raise ValueError("GIF has no image frames")
     return width, height, frames
 
-
-def _decode_pil(payload: bytes):
-    """Everything else (PNG/JPEG/...) needs PIL; clean gate when the
-    library is absent (it is not baked into this container)."""
-    try:
-        from PIL import Image
-    except ImportError as e:
-        raise NotImplementedError(
-            "real media decoding of this format requires PIL/ffmpeg (not in "
-            "this container); FAKE, uncompressed BMP, and binary PNM decode "
-            "dependency-free"
-        ) from e
-    import io
-
-    img = Image.open(io.BytesIO(payload)).convert("L")
-    return img.width, img.height, [img.tobytes()]
-
-
-def _decode_fake(payload: bytes):
-    """Container dispatch by magic bytes → (width, height, frames of
-    w·h luma bytes). FAKE/BMP/PNM are dependency-free; the rest gate
-    on PIL."""
-    if payload[:4] == _MAGIC:
-        if len(payload) < 11:
-            raise ValueError(f"truncated FAKE header: {len(payload)} bytes")
-        width, height, n_frames = struct.unpack(">HHH", payload[5:11])
-        if 11 + n_frames * width * height > len(payload):
-            raise ValueError(
-                f"truncated FAKE payload: need "
-                f"{11 + n_frames * width * height} bytes, have {len(payload)}"
-            )
-        frames = []
-        off = 11
-        for _ in range(n_frames):
-            frames.append(payload[off : off + width * height])
-            off += width * height
-        return width, height, frames
-    if payload[:2] == b"BM":
-        try:
-            return _decode_bmp(payload)
-        except NotImplementedError:
-            return _decode_pil(payload)  # 16-bit / bitfields / OS/2 2.x
-    if payload[:2] in (b"P5", b"P6"):
-        return _decode_pnm(payload)
-    if payload[:8] == _PNG_MAGIC:
-        # every legal depth/color-type decodes stdlib-side; no PIL gate
-        return _decode_png(payload)
-    if payload[:2] == b"\xff\xd8":
-        try:
-            return _decode_jpeg(payload)
-        except NotImplementedError:
-            return _decode_pil(payload)  # differential-progressive / SOF11
-    if payload[:6] in _GIF_MAGICS:
-        try:
-            return _decode_gif(payload)
-        except NotImplementedError:
-            return _decode_pil(payload)  # anything beyond the stdlib GIF path
-    return _decode_pil(payload)
-
-
-def synthesize_media(spark: SparkSession, n: int, kind: str = "image") -> DataFrame:
-    """Deterministic synthetic media table (seeded by media_id)."""
-    rows = []
-    for i in range(n):
-        w = 16 + (i % 4) * 8
-        h = 16 + (i % 3) * 8
-        nf = 1 if kind == "image" else 2 + (i % 3)
-        rows.append(
-            (i, kind, bytearray(encode_fake(i, kind, w, h, nf)),
-             {"format": "FAKE", "width": w, "height": h, "n_frames": nf})
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def decode_images(media: DataFrame) -> DataFrame:
-    """Decode + global stats per item (mean pixel, 8-bin histogram)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = _decode_fake(bytes(payload))
-                if not frames:
-                    continue  # zero-frame payload: nothing to decode
-                px = frames[0]
-                hist = [0.0] * 8
-                total = 0
-                for b in px:
-                    hist[b >> 5] += 1
-                    total += b
-                npix = len(px) or 1
-                out.append(
-                    (int(mid), w, h, len(frames), total / npix,
-                     [c / npix for c in hist])
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "n_frames", "mean_pixel", "histogram"],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(fn, DECODED_SCHEMA)
-
-
-def extract_patch_features(media: DataFrame, patch: int = 8) -> DataFrame:
-    """Patch-grid feature extraction (per-patch mean/min/max) — the
-    resize/crop plumbing shape: 1 input row → many feature rows."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = _decode_fake(bytes(payload))
-                if not frames:
-                    continue  # zero-frame payload
-                px = frames[0]
-                pid = 0
-                for py in range(0, h, patch):
-                    for pxx in range(0, w, patch):
-                        vals = [
-                            px[y * w + x]
-                            for y in range(py, min(py + patch, h))
-                            for x in range(pxx, min(pxx + patch, w))
-                        ]
-                        out.append(
-                            (int(mid), pid,
-                             [sum(vals) / len(vals), float(min(vals)), float(max(vals))])
-                        )
-                        pid += 1
-            yield pd.DataFrame(out, columns=["media_id", "patch_id", "feature"])
-
-    return media.select("media_id", "payload").mapInPandas(fn, FEATURES_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
-    """Frame sampling for video-kind payloads (every Nth frame)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _w, _h, frames = _decode_fake(bytes(payload))
-                for idx in range(0, len(frames), every):
-                    f = frames[idx]
-                    out.append((int(mid), idx, sum(f) / (len(f) or 1)))
-            yield pd.DataFrame(out, columns=["media_id", "frame_idx", "frame_mean"])
-
-    return media.select("media_id", "payload").mapInPandas(fn, FRAMES_SCHEMA)
-
-
-def resize_frames(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Area-average (box-filter) resize of every frame to out_w×out_h
-    — the thumbnail/normalize stage of an image pipeline. Each output
-    pixel averages its covering input box (integer box edges by
-    even-partition, the same rule as numpy block-reduce on divisible
-    shapes); output is one row per frame with the resized luma raster
-    as an array<double> of exact box means.
-
-    Scale: pure mapInPandas (1 payload row → n_frames skinny rows,
-    raster bytes never shuffle); compute is O(pixels) per frame. For
-    compute-bound codecs upstream see x64's measured repartition.
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = _decode_fake(bytes(payload))
-                if w == 0 or h == 0:
-                    continue
-                # even-partition box edges (first rem boxes get +1)
-                def edges(n_in, n_out):
-                    base, rem = divmod(n_in, n_out)
-                    e, acc = [0], 0
-                    for i in range(n_out):
-                        acc += base + (1 if i < rem else 0)
-                        e.append(acc)
-                    return e
-                ex = edges(w, min(out_w, w))
-                ey = edges(h, min(out_h, h))
-                for fi, f in enumerate(frames):
-                    px = []
-                    for yi in range(len(ey) - 1):
-                        for xi in range(len(ex) - 1):
-                            s = cnt = 0
-                            for y in range(ey[yi], ey[yi + 1]):
-                                row = y * w
-                                for x in range(ex[xi], ex[xi + 1]):
-                                    s += f[row + x]
-                                    cnt += 1
-                            px.append(s / cnt)
-                    out.append(
-                        (int(mid), fi, len(ex) - 1, len(ey) - 1, px)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "frame_idx", "out_w", "out_h", "pixels"],
-            )
-
-    schema = (
-        "media_id BIGINT, frame_idx INT, out_w INT, out_h INT, "
-        "pixels ARRAY<DOUBLE>"
-    )
-    return media.select("media_id", "payload").mapInPandas(fn, schema)
-
-
-def write_fake_files(directory: str, n: int, kind: str = "image") -> list[str]:
-    """Materialize n synthetic FAKE-container payloads as individual
-    files (``<media_id>.fake``) — the on-disk landing layout the
-    ``binaryFile`` ingestion path reads."""
-    import os
-
-    os.makedirs(directory, exist_ok=True)
-    paths = []
-    for i in range(n):
-        w = 16 + (i % 4) * 8
-        h = 16 + (i % 3) * 8
-        nf = 1 if kind == "image" else 2 + (i % 3)
-        p = os.path.join(directory, f"{i}.fake")
-        with open(p, "wb") as fh:
-            fh.write(encode_fake(i, kind, w, h, nf))
-        paths.append(p)
-    return paths
-
-
-def read_media_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Ingest a directory of media files through Spark's built-in
-    ``binaryFile`` source into the engine's media schema: payload
-    bytes + typed meta struct parsed from the container header
-    entirely with JVM-side expressions (hex/conv on binary
-    substrings — no Python in the scan path).
-
-    Scale: binaryFile scans parallelize per file (one row per file,
-    split-aware listing); meta lives in its own struct column so
-    downstream filters/joins on dimensions prune the payload column
-    out of the scan entirely. For payloads beyond a few hundred MB,
-    flip to a path-column + ranged-read layout (the documented
-    alternative in the module header).
-    """
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.fake")
-        .load(path)
-    )
-    content = F.col("content")
-
-    def u16(off: int):
-        # container header ints are big-endian u16: hex() the 2-byte
-        # slice and base-convert JVM-side (binary substring is 1-based)
-        return F.conv(F.hex(F.substring(content, off, 2)), 16, 10).cast("int")
-
-    kind = F.when(
-        F.substring(content, 5, 1).cast("string") == "I", F.lit("image")
-    ).otherwise(F.lit("video"))
-    return raw.select(
-        F.regexp_extract(F.col("path"), r"(\d+)\.fake$", 1)
-        .cast("bigint")
-        .alias("media_id"),
-        kind.alias("kind"),
-        content.alias("payload"),
-        F.struct(
-            F.lit("FAKE").alias("format"),
-            u16(6).alias("width"),
-            u16(8).alias("height"),
-            u16(10).alias("n_frames"),
-        ).alias("meta"),
-    )

@@ -16,8 +16,6 @@ from .dedup import (  # noqa: F401
     near_dup_pairs,
     release_cached_deps,
     shingle,
-    simhash_pairs64,
-    simhash_signatures64,
 )
 from .similarity import (  # noqa: F401
     assign_nearest_centroid,
@@ -30,5 +28,5 @@ from .similarity import (  # noqa: F401
     semdedup,
     semdedup_n_lists,
 )
-from .skew import salted_aggregate, salted_join  # noqa: F401
+from .skew import salted_join  # noqa: F401
 from .topk import top_k_per_group  # noqa: F401

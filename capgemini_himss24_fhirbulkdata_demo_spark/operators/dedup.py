@@ -405,130 +405,3 @@ def connected_components(
         )
     return labels.select(F.col("v"), F.col("label").alias("component"))
 
-
-def simhash_signatures64(
-    docs: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """64-bit SimHash signatures → (id, simhash BIGINT).
-
-    The corpus-scale form of the 16-bit demonstrator behind
-    x03/x05 (queries/dedup.py): per distinct token, ``xxhash64``
-    supplies all 64 hash bits at once (JVM-side, no md5/conv string
-    round-trip), each bit votes ±1, and the signature sets bits with
-    positive vote sums. Why width matters: two random 16-bit
-    signatures collide within Hamming distance 3 with probability
-    ~1.06% — at corpus cardinality the PAIR OUTPUT itself is
-    quadratic, no implementation can save it (measured: the 16-bit
-    x05 exhausts an 8 GB / 4-core session at a synthetic 4x-sf0.1
-    corpus, ~240k docs). At 64 bits that probability is ~2.3e-15, so
-    surviving pairs are true near-dups and output stays
-    output-proportional.
-
-    Scale: one narrow explode + one doc-keyed shuffle with map-side
-    partial aggregation over 64 small vote sums — same budget as the
-    16-bit form (SCALE.md "Exact dedup" family).
-    """
-    tok = docs.select(
-        F.col(id_col), F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("t")
-    )
-    th = tok.select(F.col(id_col), F.xxhash64("t").alias("h"))
-    # (h >> j) & 1 is correct for j=63 too: arithmetic shift leaves
-    # the sign bit, the & 1 masks it down
-    votes = th.groupBy(id_col).agg(
-        *[
-            F.sum((F.shiftright("h", j).bitwiseAND(F.lit(1))) * 2 - 1)
-            .cast("bigint")
-            .alias(f"v{j}")
-            for j in range(64)
-        ]
-    )
-    # bit 63's value 1<<63 overflows a signed literal; shiftleft wraps
-    # to the two's-complement bit pattern, which is exactly the bit
-    simhash = None
-    for j in range(64):
-        term = F.when(
-            F.col(f"v{j}") > 0,
-            F.shiftleft(F.lit(1).cast("bigint"), j),
-        ).otherwise(F.lit(0).cast("bigint"))
-        simhash = term if simhash is None else simhash.bitwiseOR(term)
-    return votes.select(F.col(id_col), simhash.alias("simhash"))
-
-
-def simhash_pairs64(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    hamming_max: int = 3,
-    persist_sigs: bool = True,
-) -> DataFrame:
-    """64-bit SimHash near-dup pairs → (id_a, id_b, hamming).
-
-    Exact by pigeonhole, like the 16-bit x05: ``hamming_max + 1``
-    bands over the 64-bit signature guarantee every pair within the
-    distance shares at least one full band — banding loses no recall.
-    The decisive scale difference is the band KEY SPACE: hamming_max=3
-    gives 4 bands x 16 bits = 65,536 values per band (vs 16 for the
-    16-bit form), so candidate buckets hold ~N/65536 docs, the
-    band-keyed self-join shuffles uniformly, and the exact
-    ``bit_count(xor)`` verify touches only candidates. hamming_max=7
-    trades to 8 bands x 8 bits when a looser match is wanted.
-
-    Signatures feed three plan branches (band explode + both verify
-    sides); they persist by default and are attached to the result as
-    ``_cached_deps`` — call ``release_cached_deps`` once materialized.
-    At 100 TB materialize the signature table columnar between stages
-    instead (same contract as ``near_dup_pairs``).
-    """
-    n_bands = hamming_max + 1
-    if 64 % n_bands:
-        raise ValueError(
-            f"hamming_max={hamming_max} needs {n_bands} equal bands; "
-            "64 must divide evenly (use 1, 3, 7, 15 or 31)"
-        )
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    sigs = simhash_signatures64(docs, id_col, text_col)
-    if persist_sigs:
-        sigs = sigs.persist()
-    bands = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("simhash", width * b).bitwiseAND(
-                        F.lit(mask)
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"))
-    out = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-            .cast("bigint")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= F.lit(hamming_max))
-    )
-    out._cached_deps = [sigs] if persist_sigs else []
-    return out

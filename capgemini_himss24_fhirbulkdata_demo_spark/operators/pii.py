@@ -11,7 +11,7 @@ is also what keeps the differential oracle (x44) exact.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Order matters: emails are redacted before IPs/phones so the dotted
@@ -42,12 +42,3 @@ def pii_counts(col: Column) -> list[Column]:
         cur = F.regexp_replace(cur, pat, tag)
     return cols
 
-
-def scrub_text(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Replace ``text_col`` with its redacted form and append per-kind
-    counts — the pipeline-stage form used by corpus prep."""
-    return df.select(
-        *[c for c in df.columns if c != text_col],
-        redact_pii(F.col(text_col)).alias(text_col),
-        *pii_counts(F.col(text_col)),
-    )

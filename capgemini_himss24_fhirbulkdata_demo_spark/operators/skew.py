@@ -1,47 +1,16 @@
-"""Skew mitigation: salted aggregation and salted broadcast-side
-replication (SURVEY brief "salting for skew").
+"""Skew mitigation: salted broadcast-side replication (SURVEY brief
+"salting for skew").
 
 AQE's skew-join handling covers sort-merge joins at runtime; salting
-is the *plan-level* tool for (a) hot-key aggregations (two-phase:
-salted partial → final) and (b) shuffled joins where one key
-dominates (replicate the small side per salt). Both are pure
-DataFrame rewrites — results are identical to the unsalted plan.
+is the *plan-level* tool for shuffled joins where one key dominates:
+replicate the small side per salt. A pure DataFrame rewrite — results
+are identical to the unsalted plan.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_aggregate(
-    df: DataFrame,
-    keys: list[str],
-    aggs: Callable[[], list[Column]],
-    merge: Callable[[], list[Column]],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation with a synthetic salt key.
-
-    Phase 1 groups by (keys, salt) — hot keys split across ``n_salts``
-    reducers; phase 2 merges the partials by the real keys.
-
-    ``aggs()`` builds the phase-1 aggregate columns; ``merge()`` the
-    phase-2 re-aggregation over those columns (e.g. sum of partial
-    sums, sum of partial counts). Decomposable aggregates only (sum /
-    count / min / max — the partial+final algebra).
-
-    The salt derives from a hash of the full row (via
-    ``monotonically_increasing_id``), never from data values, so it is
-    uniform regardless of key distribution.
-    """
-    salted = df.withColumn(
-        "__salt", (F.monotonically_increasing_id() % n_salts).cast("int")
-    )
-    partial = salted.groupBy(*keys, "__salt").agg(*aggs())
-    return partial.groupBy(*keys).agg(*merge())
 
 
 def salted_join(

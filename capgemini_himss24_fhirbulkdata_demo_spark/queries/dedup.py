@@ -643,12 +643,9 @@ def x05_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     within Hamming 3 of each other with probability ~1.06%, so the
     pair OUTPUT itself is quadratic in corpus size regardless of
     implementation (a synthetic 4x-sf0.1 corpus, ~240k docs,
-    exhausts an 8 GB / 4-core session). The corpus-scale operator is
-    ``operators.dedup.simhash_pairs64``: 64-bit xxhash64 signatures,
-    4 bands x 16 bits (65,536-value band keys -> uniform shuffle,
-    ~N/65536 candidate buckets), collision probability ~2.3e-15 —
-    output-proportional, pigeonhole-exact (recall property-tested
-    against brute force). SCALE.md §"SimHash width boundary (r9)".
+    exhausts an 8 GB / 4-core session). A corpus-scale form needs
+    64-bit signatures (4 bands x 16 bits, collision probability
+    ~2.3e-15): SCALE.md §"SimHash width boundary (r9)".
     """
     sims = _spark_simhash_df(spark, sf_dir).persist()
     bands = sims.select(

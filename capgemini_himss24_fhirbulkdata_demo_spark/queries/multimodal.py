@@ -1,6 +1,6 @@
 """Multimodal binary-column queries over ``documents`` (SURVEY brief:
-multimodal; the mapInPandas plumbing from ``multimodal/binary.py``
-surfaced on the driver contract).
+multimodal; the codecs of ``multimodal/binary.py`` run inside
+``mapInPandas`` on the driver contract).
 
 The fixtures carry no media files, so the opaque payload is the
 document's own bytes (``CAST(text AS BINARY)``) — the point is the
@@ -50,9 +50,9 @@ _MAX_PATCHES = 4
 def x50_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata extraction from an opaque binary payload via
     Arrow-batched mapInPandas (1 row → 1 row): byte length, md5
-    digest, head-bytes hex. The decode stage for real formats lives in
-    multimodal/binary.py behind its dependency gate; this is the
-    driver-checked form of the same plumbing."""
+    digest, head-bytes hex. The real-format codecs of
+    multimodal/binary.py run through the same plumbing in x63, x64,
+    x73 and x343."""
     docs = load_table(spark, sf_dir, "documents")
     # measured: repartitioning here LOSES (shuffling payload bytes
     # costs more than the cheap per-item work saves) — only x64's
@@ -402,10 +402,9 @@ def x93_resize_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows): the payload bytes form a {row}-wide row-major luma raster;
     each {box}×{box} block averages to one output pixel — the
     thumbnail/normalize stage of an image-ingest pipeline, surfaced
-    on the text-backed payload so the DuckDB twin is exact. The
-    real-raster form (decoded frames, uneven box edges) is
-    ``multimodal.binary.resize_frames``; this query hash-checks the
-    same mapInPandas plumbing and arithmetic on the driver contract.
+    on the text-backed payload so the DuckDB twin is exact; the
+    query hash-checks the mapInPandas plumbing and the box-mean
+    arithmetic on the driver contract.
 
     Scale: mapInPandas emits skinny (doc, by, bx, n, sum) rows —
     raster bytes cross the Arrow boundary once and never shuffle; the

@@ -352,8 +352,8 @@ _X52_SQL = """
 @register("x52_udf_zscore", oracle=_X52_SQL)
 def x52_udf_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language z-score of document length via grouped-map
-    ``applyInPandas`` (operators/pandas_udfs.py's shape) — the UDF
-    surface driver-checked, not pytest-only.
+    ``applyInPandas`` — the UDF surface driver-checked, not
+    pytest-only.
 
     The group aggregates are exact Python ints inside the UDF; the
     double expression tree matches the oracle's token-for-token, so
@@ -1193,7 +1193,7 @@ def x44_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: narrow per-row map, zero shuffle — pipelines with the
     quality gate in ``prepare_corpus`` at 100 TB. Operator:
-    ``operators/pii.py`` (``redact_pii``/``pii_counts``/``scrub_text``).
+    ``operators/pii.py`` (``redact_pii``/``pii_counts``).
     """
     from ..operators.pii import pii_counts, redact_pii
 

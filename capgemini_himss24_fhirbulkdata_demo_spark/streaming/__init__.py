@@ -6,8 +6,7 @@ plus sleep-based polling (``:282-326``). Here that becomes:
 
 - a file-source ``readStream`` over a parquet landing directory
   (new files appear → new micro-batch),
-- event-time tumbling and session windows with watermarks,
-- stateful streaming dedup (``dropDuplicates`` under watermark),
+- event-time tumbling windows with a watermark,
 - a runner that starts a stateful query with its state sized to one
   task wave (``runner.start_stateful_query``).
 
@@ -17,11 +16,5 @@ The incremental FHIR import is not a stream: it is the batch route
 """
 
 from .sources import read_parquet_stream  # noqa: F401
-from .windows import (  # noqa: F401
-    enrich_with_static,
-    interval_join,
-    session_agg,
-    streaming_dedup,
-    tumbling_agg,
-)
+from .windows import tumbling_agg  # noqa: F401
 from .runner import start_stateful_query  # noqa: F401

@@ -90,7 +90,7 @@ def start_stateful_query(
     """Start a streaming query with engine-sized state partitions.
 
     ``stream_df`` is the transformed streaming DataFrame (e.g. the
-    output of ``tumbling_agg``/``session_agg``/``streaming_dedup``).
+    output of ``tumbling_agg``).
     Exactly one sink: ``foreach_batch`` callback, or ``sink_format``.
     The query runs with ``availableNow``: it drains what is there, then
     stops.

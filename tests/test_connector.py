@@ -4,6 +4,7 @@ landed files then flow through the real Spark transform pipeline."""
 
 from __future__ import annotations
 
+import base64
 import hashlib
 import json
 import os
@@ -17,7 +18,6 @@ from capgemini_himss24_fhirbulkdata_demo_spark.connectors import (
     build_jwt_assertion,
 )
 from capgemini_himss24_fhirbulkdata_demo_spark.functions.encoding import (
-    b64url_decode_py,
     b64url_encode_py,
 )
 
@@ -125,6 +125,11 @@ def test_kickoff_since_url_encoded():
     assert parse_qs(urlsplit(urls[0]).query) == {"_since": [cursor]}
 
 
+def _b64url_decode(s: str) -> bytes:
+    """The stdlib decoder, re-padded: independent of the encoder."""
+    return base64.urlsafe_b64decode(s + "=" * (-len(s) % 4))
+
+
 def test_jwt_assertion_shape():
     import datetime as dt
 
@@ -137,27 +142,21 @@ def test_jwt_assertion_shape():
         make_jti=lambda: "fixed-jti",
     )
     h, p, s = jwt.split(".")
-    header = json.loads(b64url_decode_py(h))
-    payload = json.loads(b64url_decode_py(p))
+    header = json.loads(_b64url_decode(h))
+    payload = json.loads(_b64url_decode(p))
     assert header == {"alg": "RS384", "typ": "JWT", "kid": "kid-1"}
     assert payload["sub"] == payload["iss"] == "cid"
     assert payload["aud"] == "https://idp/token"
     assert payload["jti"] == "fixed-jti"
     assert payload["exp"] == 1704067500  # 2024-01-01T00:05:00Z
-    assert b64url_decode_py(s) == b"SIGNATURE"
+    assert _b64url_decode(s) == b"SIGNATURE"
 
 
-def test_b64url_roundtrip_and_sql(spark):
-    from pyspark.sql import functions as F
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.functions import b64url_sql
-
-    data = [b"\xfb\xef\xbe", b"a", b"ab", b"abc", b"\x00\xff"]
-    for d in data:
-        assert b64url_decode_py(b64url_encode_py(d)) == d
-    df = spark.createDataFrame([(d,) for d in data], "b: binary")
-    got = [r.enc for r in df.select(b64url_sql(F.col("b")).alias("enc")).collect()]
-    assert got == [b64url_encode_py(d) for d in data]
+def test_b64url_encode_matches_stdlib_decode():
+    for d in [b"\xfb\xef\xbe", b"a", b"ab", b"abc", b"\x00\xff"]:
+        enc = b64url_encode_py(d)
+        assert "=" not in enc and "+" not in enc and "/" not in enc
+        assert _b64url_decode(enc) == d
 
 
 def test_poll_error_raises():

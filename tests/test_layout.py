@@ -1,4 +1,4 @@
-"""Every package module has a product caller.
+"""Every package module, function and class has a product caller.
 
 Walks the import statements (by AST; nothing is imported, no Spark)
 from the program's entry points. A package ``__init__`` does not make
@@ -6,6 +6,10 @@ its submodules reachable by importing them: a re-exported name counts
 only where an entry point or another module imports it. A module no
 entry point reaches is either deleted or listed in ``ALLOWED`` with
 the reason it stays.
+
+The same walk checks each top-level function and class: some product
+module must name it outside its own body, or it is listed in
+``ALLOWED_DEFS`` with the reason it stays.
 """
 
 from __future__ import annotations
@@ -115,3 +119,94 @@ def test_allowlist_is_exact():
     reached = _reached()
     stale = {m for m in ALLOWED if m not in FILES or m in reached}
     assert not stale, f"allowlisted modules that are gone or now reached: {sorted(stale)}"
+
+
+# Function-level reach: a top-level function or class in the package
+# stays only while a product module names it outside its own body.
+
+ALLOWED_DEFS = {
+    f"{PKG}.api.serve_static": "ROADMAP item 2 wires it into the service",
+    f"{PKG}.pipeline.run_reset_and_seed": "ROADMAP item 2 wires it into the service",
+    f"{PKG}.connectors.fhir_bulk.build_jwt_assertion": (
+        "ROADMAP item 2 wires it into the service"
+    ),
+    f"{PKG}.operators.similarity.cosine_topk": (
+        "the brute-force reference the IVF tests compare against"
+    ),
+    f"{PKG}.catalog.schema_snapshot_stats": "the catalog cache's counters",
+}
+
+_DEF_NODES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _top_level_defs() -> dict[str, tuple[str, ast.AST]]:
+    """``module.name`` -> (module, node) for every top-level function
+    and class in the package, outside the allowlisted modules."""
+    defs = {}
+    for mod in FILES:
+        if mod.startswith(f"{PKG}.") and mod not in ALLOWED:
+            for node in ast.parse(FILES[mod].read_text()).body:
+                if isinstance(node, _DEF_NODES):
+                    defs[f"{mod}.{node.name}"] = (mod, node)
+    return defs
+
+
+def _references() -> dict[str, list[tuple[str | None, str, int]]]:
+    """name -> (defining module or None for any, referring module, line)
+    over every product module: the package (minus allowlisted modules),
+    perfbench (minus its tests), ``bench.py`` and ``__spark_entry__.py``.
+
+    A bare name refers to its own module's definition, and
+    ``from X import name`` to the module that defines ``X.name``
+    (through re-exports). ``obj.name`` could be any module's. A
+    package ``__init__``'s imports are re-exports and do not count. A
+    ``@register`` decorator counts: the query registry holds the
+    function."""
+    refs: dict[str, list[tuple[str | None, str, int]]] = {}
+    for mod, path in FILES.items():
+        if mod in ALLOWED or mod.rpartition(".")[2].startswith("test_"):
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            found, line = [], getattr(node, "lineno", 0)
+            if isinstance(node, ast.Name):
+                found = [(node.id, mod)]
+            elif isinstance(node, ast.Attribute):
+                found = [(node.attr, None)]
+            elif isinstance(node, ast.ImportFrom) and not _is_package(mod):
+                base = _from_base(mod, node)
+                found = [(a.name, _resolve(base, a.name)) for a in node.names]
+            elif isinstance(node, _DEF_NODES):
+                for d in node.decorator_list:
+                    if getattr(getattr(d, "func", d), "id", None) == "register":
+                        found, line = [(node.name, mod)], d.lineno
+            for name, target in found:
+                refs.setdefault(name, []).append((target, mod, line))
+    return refs
+
+
+def _unreferenced_defs() -> set[str]:
+    refs = _references()
+    out = set()
+    for qual, (mod, node) in _top_level_defs().items():
+        if not any(
+            target in (None, mod)
+            and not (src == mod and node.lineno <= line <= node.end_lineno)
+            for target, src, line in refs.get(node.name, ())
+        ):
+            out.add(qual)
+    return out
+
+
+def test_every_package_definition_has_a_product_reference():
+    unreferenced = _unreferenced_defs() - ALLOWED_DEFS.keys()
+    assert not unreferenced, (
+        f"top-level definitions only tests reach: {sorted(unreferenced)}"
+    )
+
+
+def test_definition_allowlist_is_exact():
+    defs, unreferenced = _top_level_defs(), _unreferenced_defs()
+    stale = {d for d in ALLOWED_DEFS if d not in defs or d not in unreferenced}
+    assert not stale, (
+        f"allowlisted definitions that are gone or now referenced: {sorted(stale)}"
+    )

@@ -1,7 +1,6 @@
 """Streaming tests (SURVEY §5.2.4): replay the events fixture through
 a file stream; assert streaming window aggregates equal their batch
-twins; watermark late-drop; stateful dedup; foreachBatch exactly-once
-shape."""
+twins; watermark late-drop; foreachBatch exactly-once shape."""
 
 from __future__ import annotations
 
@@ -21,9 +20,7 @@ from pyspark.sql.types import (
 from capgemini_himss24_fhirbulkdata_demo_spark.catalog import load_table
 from capgemini_himss24_fhirbulkdata_demo_spark.streaming import (
     read_parquet_stream,
-    session_agg,
     start_stateful_query,
-    streaming_dedup,
     tumbling_agg,
 )
 
@@ -98,30 +95,6 @@ def test_tumbling_stream_equals_batch(spark, landed_events, tmp_path):
     assert len(got) >= len(exp) - 40  # 2h watermark tail on a 30-day stream
 
 
-def test_session_stream_equals_batch(spark, landed_events, tmp_path):
-    stream = read_parquet_stream(spark, landed_events, EVENTS_SCHEMA).filter(
-        F.col("user_id") <= 10
-    )
-    agg = session_agg(stream)
-    _run_to_memory(agg, "session_out", str(tmp_path / "ck2"), mode="append")
-    got = {tuple(r) for r in spark.table("session_out").collect()}
-    batch = load_table(spark, SF_DIR, "events").filter(F.col("user_id") <= 10)
-    exp = {
-        tuple(r)
-        for r in batch.groupBy("user_id", F.session_window("ts", "5 minutes").alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-        )
-        .collect()
-    }
-    assert got.issubset(exp)
-    assert len(got) >= len(exp) - 25
-
-
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Two-run replay against one checkpoint: run 1 advances the
     watermark past the late rows; run 2 feeds only late rows → they
@@ -173,25 +146,6 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     # the late event's window (00:00) was already finalized in run 1 —
     # it must NOT be re-emitted or double-counted
     assert all(r[0] != "2024-06-01 00:00:00" for r in emitted)
-
-
-def test_streaming_dedup(spark, tmp_path):
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 6, 1, 0, 0, 0)
-    rows = [
-        (1, t0, 1, "click", 1.0, "{}"),
-        (1, t0 + dt.timedelta(seconds=10), 1, "click", 1.0, "{}"),  # dup id
-        (2, t0 + dt.timedelta(minutes=1), 1, "view", 2.0, "{}"),
-    ]
-    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.parquet(landing, mode="append")
-    stream = read_parquet_stream(spark, landing, EVENTS_SCHEMA)
-    dedup = streaming_dedup(stream, ["event_id"])
-    _run_to_memory(dedup, "dedup_out", str(tmp_path / "ck"))
-    got = spark.table("dedup_out").select("event_id").collect()
-    assert sorted(r.event_id for r in got) == [1, 2]
 
 
 def test_foreach_batch_import_sink(spark, tmp_path):
@@ -265,120 +219,6 @@ def test_complete_and_update_output_modes(spark, tmp_path):
     # update mode from scratch over all files: emits current counts
     got3 = run("update", "update_out", "ck_u")
     assert ("click", 2) in got3 and ("view", 1) in got3
-
-
-def test_interval_join_stream_equals_batch(spark, landed_events, tmp_path):
-    """Watermarked stream-stream interval join == x33 batch twin on a
-    replayed complete source (modulo the unfinalizable watermark
-    tail, which on availableNow is empty: all state drains when both
-    sources are exhausted)."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.queries import QUERIES
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming import interval_join
-
-    left = read_parquet_stream(spark, landed_events, EVENTS_SCHEMA).filter(
-        F.col("event_type") == "view"
-    )
-    right = read_parquet_stream(spark, landed_events, EVENTS_SCHEMA).filter(
-        F.col("event_type") == "purchase"
-    )
-    joined = interval_join(left, right)
-    _run_to_memory(joined, "ij_out", str(tmp_path / "ck_ij"), mode="append")
-    got = {
-        tuple(r)
-        for r in spark.table("ij_out")
-        .select("user_id", "view_id", "purchase_id", "lag_sec")
-        .collect()
-    }
-    exp = {tuple(r) for r in QUERIES["x33_interval_join"](spark, SF_DIR).collect()}
-    # stream-stream inner join emits matches as they resolve; on a
-    # drained availableNow source every batch pair must have appeared
-    assert got == exp
-    assert len(exp) > 0
-
-
-def test_interval_left_join_stream_equals_batch_modulo_tail(
-    spark, landed_events, tmp_path
-):
-    """Watermarked stream-stream LEFT OUTER interval join vs the x71
-    batch twin: matched rows must agree exactly; NULL (unmatched)
-    rows are emitted only when the watermark passes the view's
-    interval bound, so the live result's NULL set is the batch twin's
-    NULL set minus the unfinalizable tail (views younger than
-    max_ts - watermark - max_lag). Asserts both directions of that
-    containment, so the test fails if eviction stops emitting NULLs
-    OR if rows are emitted that the batch semantics forbid."""
-    import datetime as dt
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.queries import QUERIES
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming import interval_join
-
-    left = read_parquet_stream(spark, landed_events, EVENTS_SCHEMA).filter(
-        F.col("event_type") == "view"
-    )
-    right = read_parquet_stream(spark, landed_events, EVENTS_SCHEMA).filter(
-        F.col("event_type") == "purchase"
-    )
-    joined = interval_join(left, right, how="left")
-    _run_to_memory(joined, "ij_left_out", str(tmp_path / "ck_ijl"), mode="append")
-    got = {
-        tuple(r)
-        for r in spark.table("ij_left_out")
-        .select("user_id", "view_id", "purchase_id")
-        .collect()
-    }
-    batch = QUERIES["x71_interval_left_join"](spark, SF_DIR).collect()
-    exp_matched = {
-        (r.user_id, r.view_id, r.purchase_id) for r in batch if r.matched == 1
-    }
-    exp_null = {(r.user_id, r.view_id, None) for r in batch if r.matched == 0}
-    got_matched = {t for t in got if t[2] is not None}
-    got_null = {t for t in got if t[2] is None}
-    assert got_matched == exp_matched
-    assert len(exp_matched) > 0
-    # the live NULL set is bounded by the batch NULL set...
-    assert got_null <= exp_null
-    # ...and must contain every view old enough that its state was
-    # provably evicted (1 extra hour of safety margin on the bound)
-    ev = load_table(spark, SF_DIR, "events")
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    cutoff = max_ts - dt.timedelta(hours=4)  # watermark 2h + lag 1h + 1h margin
-    views = {
-        (r.user_id, r.event_id): r.ts
-        for r in ev.filter(F.col("event_type") == "view").collect()
-    }
-    must_emit = {
-        (u, v, None)
-        for (u, v, ts) in ((u, v, ts) for (u, v), ts in views.items())
-        if (u, v, None) in exp_null and ts < cutoff
-    }
-    assert must_emit <= got_null
-    assert len(must_emit) > 0
-
-
-def test_stream_static_enrichment_equals_batch(spark, landed_events, tmp_path):
-    """Stream-static join: every micro-batch row enriched from the
-    static dim exactly as the batch join would — stateless, no
-    watermark, dim broadcast (the streaming form of the RxNav
-    enrichment shape)."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming import (
-        enrich_with_static,
-    )
-
-    dim = spark.createDataFrame(
-        [(i, f"segment_{i % 3}") for i in range(200)], ["user_id", "segment"]
-    )
-    stream = read_parquet_stream(spark, landed_events, EVENTS_SCHEMA).select(
-        "event_id", "user_id"
-    )
-    out = enrich_with_static(stream, dim, "user_id")
-    _run_to_memory(out, "enrich_out", str(tmp_path / "ck_enrich"), mode="append")
-    got = {tuple(r) for r in spark.table("enrich_out").collect()}
-    batch = load_table(spark, SF_DIR, "events").select("event_id", "user_id")
-    exp = {tuple(r) for r in batch.join(dim, "user_id", "left")
-           .select("event_id", "user_id", "segment").collect()}
-    # the join moves the key first in the streaming output — reorder
-    assert {(e, u, s) for (u, e, s) in got} == exp
-    assert len(exp) > 0
 
 
 def test_runner_sizes_state_partitions(spark, landed_events, tmp_path):
