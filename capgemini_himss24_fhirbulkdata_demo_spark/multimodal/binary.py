@@ -61,7 +61,7 @@ def decode_wav(payload: bytes):
                 w.getnframes(),
             )
             frames = w.readframes(meta[3])
-    except wave.Error as e:
+    except (wave.Error, EOFError, RuntimeError) as e:
         raise ValueError(f"bad WAV payload: {e}") from e
     if len(frames) != meta[0] * meta[1] * meta[3]:
         raise ValueError("truncated WAV payload")
@@ -351,6 +351,8 @@ def _decode_png(payload: bytes):
         if len(body) < length:
             raise ValueError("truncated PNG chunk")
         if tag == b"IHDR":
+            if length != 13:
+                raise ValueError(f"PNG IHDR is {length} bytes, not 13")
             ihdr = struct.unpack(">IIBBBBB", body)
         elif tag == b"PLTE":
             palette = [
@@ -374,12 +376,10 @@ def _decode_png(payload: bytes):
         )
     if interlace not in (0, 1):
         raise ValueError(f"invalid PNG interlace method {interlace}")
+    if width == 0 or height == 0:
+        raise ValueError(f"PNG has no pixels ({width}x{height})")
     if not idat:
         raise ValueError("PNG missing IDAT")
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except zlib.error as e:
-        raise ValueError(f"corrupt PNG IDAT stream: {e}") from e
     ch = _PNG_CHANNELS[color_type]
     sub8 = depth < 8
     # filter byte-offset: whole bytes per pixel, min 1 (spec 4.5.2)
@@ -387,6 +387,29 @@ def _decode_png(payload: bytes):
 
     def stride_of(w):  # packed row byte count
         return (w * ch * depth + 7) // 8
+
+    # (x0, y0, dx, dy, pass width, pass height): one pass, or Adam7's
+    # seven independently-filtered passes with the empty ones omitted
+    passes = [(0, 0, 1, 1, width, height)] if interlace == 0 else [
+        (x0, y0, dx, dy, (width - x0 + dx - 1) // dx, (height - y0 + dy - 1) // dy)
+        for x0, y0, dx, dy in _ADAM7
+        if width > x0 and height > y0
+    ]
+    # the raster size IHDR implies bounds the inflate, and is checked
+    # before the pixel buffer is allocated
+    need = sum(ph * (1 + stride_of(pw)) for *_, pw, ph in passes)
+    inflater = zlib.decompressobj()
+    try:
+        raw = inflater.decompress(bytes(idat), need + 1)
+    except zlib.error as e:
+        raise ValueError(f"corrupt PNG IDAT stream: {e}") from e
+    if len(raw) != need:
+        raise ValueError(
+            f"PNG raster size mismatch: need {need} bytes, inflated "
+            f"{len(raw)}{' or more' if len(raw) > need else ''}"
+        )
+    if not inflater.eof:
+        raise ValueError("corrupt PNG IDAT stream: incomplete or truncated stream")
 
     maxv = (1 << depth) - 1
 
@@ -416,31 +439,14 @@ def _decode_png(payload: bytes):
         return _png_row_luma(row, w, color_type, palette)
 
     px = bytearray(width * height)
-    if interlace == 0:
-        rows = _png_unfilter(raw, width, height, bpp, stride_of(width))
-        for y, row in enumerate(rows):
-            px[y * width : (y + 1) * width] = row_luma(row, width)
-    else:  # Adam7: 7 independently-filtered passes, scattered
-        off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (width - x0 + dx - 1) // dx if width > x0 else 0
-            ph = (height - y0 + dy - 1) // dy if height > y0 else 0
-            if pw == 0 or ph == 0:
-                continue
-            need = ph * (1 + stride_of(pw))
-            sub = raw[off : off + need]
-            off += need
-            rows = _png_unfilter(sub, pw, ph, bpp, stride_of(pw))
-            for j, row in enumerate(rows):
-                lum = row_luma(row, pw)
-                y = y0 + j * dy
-                for i in range(pw):
-                    px[y * width + x0 + i * dx] = lum[i]
-        if off != len(raw):
-            raise ValueError(
-                f"PNG raster size mismatch: Adam7 passes need {off} "
-                f"bytes, inflated {len(raw)}"
-            )
+    off = 0
+    for x0, y0, dx, dy, pw, ph in passes:
+        size = ph * (1 + stride_of(pw))
+        rows = _png_unfilter(raw[off : off + size], pw, ph, bpp, stride_of(pw))
+        off += size
+        for j, row in enumerate(rows):
+            y = y0 + j * dy
+            px[y * width + x0 : (y + 1) * width : dx] = row_luma(row, pw)
     return width, height, [bytes(px)]
 
 

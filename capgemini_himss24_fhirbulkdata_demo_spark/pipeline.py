@@ -53,6 +53,9 @@ from .transforms.schemas import RESOURCE_SCHEMAS
 
 # Concurrent per-file jobs: bounds scheduler pressure, not correctness.
 MAX_PARALLEL_FILES = 8
+# OperationOutcome issue severities (FHIR IssueSeverity) that fail the
+# request when the export manifest's ``error`` files report them.
+FAILING_SEVERITIES = ("fatal", "error")
 
 
 @dataclass
@@ -68,6 +71,27 @@ def _output_path(path: str, out_dir: str) -> str:
     # one NDJSON FILE per export file: $import urls must point at a
     # single application/fhir+ndjson blob, not a part-file directory
     return os.path.join(out_dir, os.path.splitext(os.path.basename(path))[0] + ".ndjson")
+
+
+def check_export_errors(connector: FhirBulkConnector, manifest: dict, token: str) -> None:
+    """Fetch each file in the manifest's ``error`` array (NDJSON of
+    ``OperationOutcome``) through ``fetch_export_file`` and raise if
+    any issue is fatal or an error. Warnings and information are
+    logged."""
+    failing = []
+    for entry in manifest.get("error", []):
+        for line in connector.fetch_export_file(entry["url"], token).splitlines():
+            if not line.strip():
+                continue
+            for issue in json.loads(line).get("issue", []):
+                severity = issue.get("severity")
+                text = issue.get("diagnostics") or (issue.get("details") or {}).get("text") or issue.get("code")
+                if severity in FAILING_SEVERITIES:
+                    failing.append(f"{severity}: {text}")
+                else:
+                    logger.warning("export reported %s: %s", severity, text)
+    if failing:
+        raise RuntimeError(f"export reported {len(failing)} failing issue(s): {'; '.join(failing[:5])}")
 
 
 def transform_landed_file(
@@ -169,10 +193,13 @@ def run_bulk_import(
     serves every later request given the same DataFrame object. To
     refresh the lookup, pass a new DataFrame.
 
-    A request that fails before the ``$import`` kickoff removes the
-    files it landed and the outputs it wrote, then re-raises. Once the
-    kickoff is sent they stay, because the import server may be
-    reading them.
+    An export whose manifest ``error`` files report a fatal or error
+    issue fails the request before anything is landed
+    (``check_export_errors``). A request that fails before the
+    ``$import`` kickoff removes the files it landed and the outputs it
+    wrote, then re-raises. Once the kickoff is sent they stay, because
+    the import server may be reading them. A failed request leaves the
+    cursor where it was.
     """
     res = PipelineResult()
     since = state.get(server_url, group_id) if state else None
@@ -184,6 +211,7 @@ def run_bulk_import(
     status_url = connector.kickoff_export(server_url, group_id, token, since=since)
     manifest = json.loads(connector.poll_status(status_url, token))
     next_cursor = manifest.get("transactionTime") or run_started
+    check_export_errors(connector, manifest, token)
 
     landing = os.path.join(work_dir, "landing")
     out_dir = os.path.join(work_dir, "export")

@@ -5,16 +5,22 @@ from __future__ import annotations
 
 import pytest
 
+import struct
+import tracemalloc
+import zlib
+
 from capgemini_himss24_fhirbulkdata_demo_spark.multimodal.binary import (
     _decode_gif,
     _decode_jpeg,
     _decode_png,
     _decode_pnm,
     _luma,
+    decode_wav,
     encode_gif,
     encode_jpeg_lossless,
     encode_png,
     encode_pnm,
+    encode_wav,
 )
 
 
@@ -38,6 +44,72 @@ def test_png_payload_decodes_to_exact_luma():
     rows = [bytes((x * 7 + y * 3) % 256 for x in range(8)) for y in range(4)]
     png = encode_png(8, 4, rows, color_type=0, filter_type=2)
     assert _decode_png(png) == (8, 4, [b"".join(rows)])
+
+
+@pytest.mark.parametrize("width", [8, 5])
+def test_adam7_png_decodes_to_exact_luma(width):
+    """Adam7's seven passes scatter back to the exact raster, also when
+    the width leaves some passes empty."""
+    rows = [bytes((x * 7 + y * 3) % 256 for x in range(width)) for y in range(4)]
+    png = encode_png(width, 4, rows, color_type=0, filter_type=4, interlace=1)
+    assert _decode_png(png) == (width, 4, [b"".join(rows)])
+
+
+def _png_chunk(tag: bytes, body: bytes) -> bytes:
+    return struct.pack(">I", len(body)) + tag + body + struct.pack(">I", zlib.crc32(tag + body))
+
+
+def _png(ihdr: bytes, raster: bytes) -> bytes:
+    return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
+            + _png_chunk(b"IDAT", zlib.compress(raster)) + _png_chunk(b"IEND", b""))
+
+
+@pytest.mark.parametrize(
+    ("ihdr", "match"),
+    [
+        (struct.pack(">IIBB", 2, 2, 8, 0), "IHDR is 10 bytes"),
+        (struct.pack(">IIBBBBB", 0, 2, 8, 0, 0, 0, 0), "no pixels"),
+        (struct.pack(">IIBBBBB", 65535, 65535, 8, 0, 0, 0, 0), "size mismatch"),
+        (struct.pack(">IIBBBBB", 65535, 65535, 8, 0, 0, 0, 1), "size mismatch"),
+    ],
+    ids=["short-ihdr", "zero-width", "huge-ihdr-tiny-idat", "huge-adam7-tiny-idat"],
+)
+def test_png_header_disagreeing_with_its_data_raises_before_allocating(ihdr, match):
+    """An IHDR that is short, has no pixels, or claims a raster its IDAT
+    does not hold is corrupt input: ValueError, not a struct error or a
+    4 GB pixel buffer."""
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match=match):
+            _decode_png(_png(ihdr, b"\x00\x01\x02"))
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
+
+
+def test_png_with_truncated_idat_stream_raises():
+    png = encode_png(4, 2, [bytes(4), bytes(4)])
+    start = png.index(b"IDAT") + 4
+    length = struct.unpack(">I", png[start - 8 : start - 4])[0]
+    cut = _png_chunk(b"IDAT", png[start : start + length - 4])
+    with pytest.raises(ValueError, match="IDAT"):
+        _decode_png(png[: start - 8] + cut + _png_chunk(b"IEND", b""))
+
+
+@pytest.mark.parametrize(
+    "cut",
+    [lambda w: w[: w.index(b"fmt ") + 14],
+     lambda w: w.replace(b"fmt \x10", b"fmt \x81")],
+    ids=["truncated-fmt-chunk", "fmt-chunk-overruns-payload"],
+)
+def test_wav_corrupt_header_raises_value_error(cut):
+    """The stdlib reader's EOFError and RuntimeError on a corrupt
+    header surface as ValueError, as every decoder's do."""
+    wav = encode_wav(bytes(range(0, 256, 8)))
+    assert decode_wav(wav)[0] == (1, 1, 8000, 32)
+    with pytest.raises(ValueError, match="bad WAV payload"):
+        decode_wav(cut(wav))
 
 
 def test_gif_frames_decode_to_exact_means():

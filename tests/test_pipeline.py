@@ -176,6 +176,65 @@ def test_failed_file_fetch_fails_the_request(spark, tmp_path):
     assert state.get("https://fhir.epic.example", "g1") == "2024-01-01T00:00:00+00:00"
 
 
+class ErrorManifestServer(FakeServer):
+    """The export manifest lists one ``error`` file of OperationOutcome
+    lines; its first fetch is throttled with a 429."""
+
+    def __init__(self, severities):
+        super().__init__()
+        self.outcomes = [
+            {"resourceType": "OperationOutcome",
+             "issue": [{"severity": s, "code": "processing", "diagnostics": f"{s} on Patient/p{i}"}]}
+            for i, s in enumerate(severities)
+        ]
+        self.error_fetches = 0
+
+    def __call__(self, method, url, headers=None, data=None, params=None):
+        if url == "https://s/st":
+            manifest = json.loads(super().__call__(method, url).content)
+            manifest["error"] = [{"type": "OperationOutcome", "url": "https://s/e"}]
+            return HttpResponse(200, content=json.dumps(manifest).encode())
+        if url == "https://s/e":
+            self.error_fetches += 1
+            if self.error_fetches == 1:
+                return HttpResponse(429, headers={"Retry-After": "0"})
+            return HttpResponse(200, content="\n".join(json.dumps(o) for o in self.outcomes).encode())
+        return super().__call__(method, url, headers, data, params)
+
+
+@pytest.mark.parametrize("failing", ["error", "fatal"])
+def test_export_error_issue_fails_the_request(tmp_path, failing):
+    """An ``error`` file reporting a fatal or error issue fails the
+    request before anything is landed: no $import, cursor unchanged."""
+    server = ErrorManifestServer(["warning", failing])
+    conn = FhirBulkConnector(transport=server, sleep=lambda s: None)
+    state = HighWaterMark(str(tmp_path / "state.json"))
+    state.advance("https://fhir.epic.example", "g1", "2024-01-01T00:00:00+00:00")
+    work = tmp_path / "run"
+    with pytest.raises(RuntimeError, match=f"{failing}: {failing} on Patient/p1"):
+        run_bulk_import(
+            None, conn, "https://fhir.epic.example", "g1", "tok",
+            "https://cg", "itok", str(work), state=state,
+        )
+    assert server.error_fetches == 2
+    assert not (work / "landing").exists()
+    assert server.import_bodies == []
+    assert state.get("https://fhir.epic.example", "g1") == "2024-01-01T00:00:00+00:00"
+
+
+def test_export_warnings_are_logged_not_fatal(spark, tmp_path, caplog):
+    server = ErrorManifestServer(["warning", "information"])
+    conn = FhirBulkConnector(transport=server, sleep=lambda s: None)
+    with caplog.at_level("WARNING", logger="capgemini_himss24_fhirbulkdata_demo_spark.pipeline"):
+        res = run_bulk_import(
+            spark, conn, "https://fhir.epic.example", "g1", "tok",
+            "https://cg", "itok", str(tmp_path / "run"),
+        )
+    assert len(res.archived) == 2 and len(server.import_bodies) == 1
+    assert "warning: warning on Patient/p0" in caplog.text
+    assert "information: information on Patient/p1" in caplog.text
+
+
 def test_reset_and_seed(tmp_path):
     from capgemini_himss24_fhirbulkdata_demo_spark.pipeline import (
         restamp_seed_name,

@@ -304,3 +304,7 @@ def test_jfr_forks_tally_on_canned_recording():
     text = jfr_forks.format_tally(rows)
     assert text.splitlines()[0] == "drain: 3 starts over 2 operations, 1.5 per operation"
     assert "outside any operation" in text
+    # --forbid counts starts inside operations only: the setup chmod is allowed
+    assert jfr_forks.forbidden(rows, ["chmod", "readlink"]) == {"readlink": 2, "chmod": 1}
+    assert jfr_forks.forbidden(rows, ["ls"]) == {}
+    assert jfr_forks.forbidden({jfr_forks.SETUP: rows[jfr_forks.SETUP]}, ["chmod"]) == {}

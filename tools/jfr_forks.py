@@ -1,6 +1,6 @@
 """Count the OS processes the Spark JVM starts per benchmark operation.
 
-    python3 tools/jfr_forks.py --workload analyst_queries --steps 36 [--seed 1]
+    python3 tools/jfr_forks.py --workload analyst_queries --steps 36 [--seed 1] [--forbid chmod,readlink]
 
 Hadoop's local file system shells out (``readlink``, ``chmod``, ...)
 when its native library is missing, and each start costs milliseconds
@@ -11,9 +11,10 @@ recording ``jdk.ProcessStart`` through Java Flight Recorder, runs
 the JVM, and tallies the recorded starts per operation: by command and
 by the first ``org.apache.spark`` frame of the starting stack. Starts
 outside every operation (session start, preparation) count under
-``(setup)``. It imports ``perfbench`` and changes nothing there;
-everything it writes goes to a temporary directory, removed at exit.
-Needs the JDK's ``jfr`` on PATH.
+``(setup)``. With ``--forbid``, it exits 1 when a listed command
+starts inside any operation. It imports ``perfbench`` and changes
+nothing there; everything it writes goes to a temporary directory,
+removed at exit. Needs the JDK's ``jfr`` on PATH.
 """
 
 from __future__ import annotations
@@ -99,6 +100,17 @@ def format_tally(rows: dict[str, dict], top: int = 5) -> str:
     return "\n".join(lines)
 
 
+def forbidden(rows: dict[str, dict], commands: list[str]) -> Counter:
+    """Starts of ``commands`` inside operations (not under
+    ``(setup)``), by command."""
+    out = Counter()
+    for label, r in rows.items():
+        if label != SETUP:
+            for c in commands:
+                out[c] += r["by_command"][c]
+    return +out
+
+
 def _label(w, k: int) -> str:
     """What operation ``k`` is: the query or drain of an analyst cycle,
     or the source and file types of a FHIR delta."""
@@ -149,6 +161,8 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--steps", type=int, required=True)
+    ap.add_argument("--forbid", type=lambda v: v.split(","), default=[], metavar="CMD[,CMD...]",
+                    help="exit 1 if one of these commands starts inside an operation")
     args = ap.parse_args(argv)
     work = tempfile.mkdtemp(prefix="jfr-forks-")
     try:
@@ -157,9 +171,14 @@ def main(argv: list[str] | None = None) -> None:
             ["jfr", "print", "--json", "--stack-depth", "512", "--events", "jdk.ProcessStart", jfr],
             capture_output=True, text=True, check=True,
         )
-        print(format_tally(tally(load_events(json.loads(printed.stdout)), spans)))
+        rows = tally(load_events(json.loads(printed.stdout)), spans)
+        print(format_tally(rows))
         for e in errors[:10]:
             print("check failed:", e, file=sys.stderr)
+        bad = forbidden(rows, args.forbid)
+        if bad:
+            print("forbidden process starts inside operations:", dict(bad), file=sys.stderr)
+            sys.exit(1)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
