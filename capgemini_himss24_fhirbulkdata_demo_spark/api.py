@@ -77,7 +77,6 @@ def handle_request(
     run_latest: Callable[[dict], dict],
     run_initial: Callable[[dict], dict],
     get_token: Callable[[], str] | None = None,
-    report_html: str = REPORT_HTML,
 ) -> ApiResponse:
     """O1: the reference's route table, side effects injected.
 
@@ -101,7 +100,7 @@ def handle_request(
         if method == "POST" and datatype == "bulkimport" and period == "initial":
             return ApiResponse.json(run_initial(body or {}))
         if method == "GET" and datatype == "analytics" and period == "report":
-            return ApiResponse(200, report_html.encode(), {"Content-Type": "text/html"})
+            return ApiResponse(200, REPORT_HTML.encode(), {"Content-Type": "text/html"})
         if method == "GET" and datatype == "token":
             if get_token is None:
                 return ApiResponse.json({"error": "token provider not configured"}, 500)

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import time as _time
 import uuid
@@ -35,9 +36,33 @@ from email.utils import parsedate_to_datetime
 from urllib.parse import urlencode
 
 from ..functions.encoding import b64url_encode_py
+from ..sources.ndjson import resource_type_from_name
+
+logger = logging.getLogger(__name__)
 
 JWT_BEARER = "urn:ietf:params:oauth:client-assertion-type:jwt-bearer"
 NDJSON_CONTENT_TYPE = "application/fhir+ndjson"
+
+
+class Headers(dict):
+    """Response headers whose lookups ignore case, as header names do
+    (RFC 9110 §5.1): a server or proxy may send ``content-location``
+    or ``retry-after`` in lower case. Names are stored lower-cased."""
+
+    def __init__(self, items=()):
+        super().__init__((k.lower(), v) for k, v in dict(items).items())
+
+    def __getitem__(self, name: str) -> str:
+        return super().__getitem__(name.lower())
+
+    def __setitem__(self, name: str, value: str) -> None:
+        super().__setitem__(name.lower(), value)
+
+    def __contains__(self, name) -> bool:
+        return super().__contains__(name.lower())
+
+    def get(self, name: str, default=None):
+        return super().get(name.lower(), default)
 
 
 @dataclass
@@ -45,6 +70,9 @@ class HttpResponse:
     status_code: int
     headers: dict[str, str] = field(default_factory=dict)
     content: bytes = b""
+
+    def __post_init__(self):
+        self.headers = Headers(self.headers)
 
     @property
     def ok(self) -> bool:
@@ -59,7 +87,10 @@ Transport = Callable[..., HttpResponse]
 # Statuses after which a Bulk Data server expects the client to retry
 # the same request, waiting as its ``Retry-After`` header says.
 RETRYABLE_STATUSES = (429, 503)
-# Sends per request (retries included) before a 429/503 is returned.
+# A status poll also comes back on 202 (export or import in progress).
+POLL_RETRY_STATUSES = (202, *RETRYABLE_STATUSES)
+# Sends per request (retries included) before a retryable response is
+# returned.
 MAX_SENDS = 100
 
 
@@ -81,7 +112,7 @@ def _retry_after_s(value: str | None) -> float | None:
 
 
 def _retry_wait(r, n: int) -> float:
-    """Seconds to wait after send ``n`` drew a 429/503 ``r``: its
+    """Seconds to wait after send ``n`` drew a retryable ``r``: its
     ``Retry-After``, or 2·n without one."""
     wait = _retry_after_s(r.headers.get("Retry-After"))
     return 2 * n if wait is None else wait
@@ -90,14 +121,14 @@ def _retry_wait(r, n: int) -> float:
 def send_with_retry(
     send: Callable[[], HttpResponse],
     sleep: Callable[[float], None],
-    max_sends: int = MAX_SENDS,
+    retry_on: tuple[int, ...] = RETRYABLE_STATUSES,
 ) -> HttpResponse:
-    """Call ``send`` again while it answers 429 or 503, sleeping as
-    ``_retry_wait`` says, for at most ``max_sends`` sends. Returns the
-    first other response, or the last one when the budget is spent;
-    the caller decides what an error means."""
+    """Call ``send`` again while it answers a ``retry_on`` status,
+    sleeping as ``_retry_wait`` says, for at most ``MAX_SENDS`` sends.
+    Returns the first other response, or the last one when the budget
+    is spent; the caller decides what an error means."""
     r, n = send(), 1
-    while r.status_code in RETRYABLE_STATUSES and n < max_sends:
+    while r.status_code in retry_on and n < MAX_SENDS:
         close = getattr(r, "close", None)  # a streamed response holds its connection
         if close is not None:
             close()
@@ -110,7 +141,7 @@ def _requests_transport(method: str, url: str, headers=None, data=None, params=N
     import requests
 
     r = requests.request(method, url, headers=headers, data=data, params=params)
-    return HttpResponse(r.status_code, dict(r.headers), r.content)
+    return HttpResponse(r.status_code, r.headers, r.content)
 
 
 def build_jwt_assertion(
@@ -147,17 +178,16 @@ def build_jwt_assertion(
 def build_import_manifest(blob_entries: list[tuple[str, str]]) -> dict:
     """FHIR ``Parameters`` import body (T20, ``__init__.py:205-242``).
 
-    ``blob_entries`` = [(blob_name, url)]; resource type = text before
-    the first '-' in the blob name (``:218``).
+    ``blob_entries`` = [(blob_name, url)]; the resource type is read
+    from the blob name (``resource_type_from_name``, ``:218``).
     """
     parameter = [{"name": "inputFormat", "valueString": NDJSON_CONTENT_TYPE}]
     for blob_name, url in blob_entries:
-        resource_name = os.path.basename(blob_name).split("-")[0]
         parameter.append(
             {
                 "name": "input",
                 "part": [
-                    {"name": "type", "valueString": resource_name},
+                    {"name": "type", "valueString": resource_type_from_name(blob_name)},
                     {"name": "url", "valueUri": url},
                 ],
             }
@@ -172,16 +202,13 @@ class FhirBulkConnector:
         self,
         transport: Transport | None = None,
         sleep: Callable[[float], None] = _time.sleep,
-        max_poll_attempts: int = MAX_SENDS,
     ):
         self.transport = transport or _requests_transport
         self.sleep = sleep
-        self.max_poll_attempts = max_poll_attempts
 
     def _send(self, send: Callable[[], HttpResponse]) -> HttpResponse:
-        """``send_with_retry`` with this connector's ``sleep`` and
-        ``max_poll_attempts`` budget."""
-        return send_with_retry(send, self.sleep, self.max_poll_attempts)
+        """``send_with_retry`` with this connector's ``sleep``."""
+        return send_with_retry(send, self.sleep)
 
     # ---- auth (O7/O9) ----
 
@@ -273,48 +300,39 @@ class FhirBulkConnector:
             )
         return r.headers["Content-Location"]
 
-    def poll_status(
-        self,
-        status_url: str,
-        token: str,
-        on_progress: Callable[[str], None] | None = None,
-    ) -> bytes:
-        """Poll with linear-growth backoff (sleep 2·n, n→cap) until 200
-        (reference ``:282-326``); raises on error statuses.
+    def poll_status(self, status_url: str, token: str) -> bytes:
+        """Poll the status URL until 200 (reference ``:282-326``) and
+        return the body; raises on error statuses.
 
-        A 429 or 503 is a request to come back later, not a failure: the
-        poll sleeps for its ``Retry-After`` (delta-seconds or HTTP-date),
-        or the usual 2·n without one, and tries again. Every retry
-        counts against ``max_poll_attempts``.
+        A 202 (in progress), 429 or 503 is a request to come back later
+        (HL7 Bulk Data IG): the poll sleeps for its ``Retry-After``
+        (delta-seconds or HTTP-date), or 2·n without one, and sends
+        again, through ``send_with_retry``. ``TimeoutError`` once its
+        ``MAX_SENDS`` budget is spent.
 
-        Servers report export progress via the ``X-Progress`` header on
-        202 responses (reference surfaces it at ``__init__.py:298``);
-        each observed value is handed to ``on_progress`` and kept on
-        ``self.last_progress`` so long waits are observable.
+        Servers report progress in the ``X-Progress`` header of a 202
+        (reference logs it at ``__init__.py:298``); each value is logged
+        so long waits are observable.
         """
         headers = {
             "Authorization": f"Bearer {token}",
             "Prefer": "respond-async",
             "Accept": "application/fhir+json",
         }
-        self.last_progress: str | None = None
-        for n in range(1, self.max_poll_attempts + 1):
+
+        def send() -> HttpResponse:
             r = self.transport("GET", status_url, headers=headers)
-            if r.status_code == 200:
-                return r.content
-            if r.status_code == 202:
-                progress = r.headers.get("X-Progress")
-                if progress is not None:
-                    self.last_progress = progress
-                    if on_progress is not None:
-                        on_progress(progress)
-                self.sleep(2 * n)
-                continue
-            if r.status_code in RETRYABLE_STATUSES:
-                self.sleep(_retry_wait(r, n))
-                continue
-            raise RuntimeError(f"poll failed: {r.status_code} {r.content[:200]!r}")
-        raise TimeoutError("polling taking too long")
+            progress = r.headers.get("X-Progress") if r.status_code == 202 else None
+            if progress is not None:
+                logger.info("%s: %s", status_url, progress)
+            return r
+
+        r = send_with_retry(send, self.sleep, POLL_RETRY_STATUSES)
+        if r.status_code == 200:
+            return r.content
+        if r.status_code in POLL_RETRY_STATUSES:
+            raise TimeoutError("polling taking too long")
+        raise RuntimeError(f"poll failed: {r.status_code} {r.content[:200]!r}")
 
     def fetch_export_file(self, data_url: str, token: str) -> bytes:
         """GET one export file; a 429 or 503 is retried as ``_send``

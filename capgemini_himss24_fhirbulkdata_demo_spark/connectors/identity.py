@@ -38,6 +38,8 @@ from .fhir_bulk import HttpResponse, Transport, _requests_transport, send_with_r
 IMDS_ENDPOINT = "http://169.254.169.254/metadata/identity/oauth2/token"
 IMDS_API_VERSION = "2018-02-01"
 APP_SERVICE_API_VERSION = "2019-08-01"
+# A cached token is fetched again this long before it expires.
+REFRESH_MARGIN = timedelta(minutes=5)
 
 
 def _utcnow() -> datetime:
@@ -60,7 +62,6 @@ class ManagedIdentityCredential:
     now: Callable[[], datetime] = _utcnow
     sleep: Callable[[float], None] = _time.sleep
     env: dict[str, str] | None = None  # None = os.environ (injectable)
-    refresh_margin: timedelta = timedelta(minutes=5)
     _cache: dict[str, tuple[str, datetime]] = field(default_factory=dict)
 
     def _get(self) -> tuple[Transport, dict[str, str]]:
@@ -76,7 +77,7 @@ class ManagedIdentityCredential:
         if resource.endswith("/.default"):
             resource = resource[: -len("/.default")]
         cached = self._cache.get(resource)
-        if cached and cached[1] - self.refresh_margin > self.now():
+        if cached and cached[1] - REFRESH_MARGIN > self.now():
             return cached[0]
         transport, env = self._get()
         params = {"resource": resource}

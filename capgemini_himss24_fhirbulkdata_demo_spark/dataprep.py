@@ -3,14 +3,18 @@
 Chains the extension operators into the standard LLM-corpus prep
 flow, one narrow/bounded-shuffle stage each:
 
-  quality gate → language filter → (optional) PII scrub → exact dedup
-  → MinHash near-dup removal → (optional) embedding near-dup removal
-  → token budget cut
+  quality gate → language filter → exact dedup → MinHash near-dup
+  removal → (optional) embedding near-dup removal → (optional) token
+  budget cut
 
 Every stage is deterministic (first-wins keeps the smallest doc id)
 and reports row counts via a single ``observe``-free count per stage
 boundary (stats are part of the contract, as in any production prep
 job).
+
+The corpus columns are ``doc_id`` and ``text`` (``ID_COL``,
+``TEXT_COL``), with ``lang`` for the language filter; embeddings are
+``vec_id`` and ``embedding``.
 
 Scale notes: stages 1–3 are scans + one fingerprint shuffle; stage 4
 is the LSH banded self-join (operators/dedup.py); stage 5 is the
@@ -29,13 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .operators.dedup import (
-    connected_components,
-    dedup_first_wins,
-    near_dup_pairs,
-    release_cached_deps,
-)
-from .operators.pii import redact_pii
+from .operators.dedup import dedup_first_wins, near_dup_pairs, release_cached_deps
 from .operators.similarity import (
     cosine_dot,
     hyperplanes,
@@ -43,6 +41,17 @@ from .operators.similarity import (
     probe_dim,
     vector_norm,
 )
+
+ID_COL = "doc_id"
+TEXT_COL = "text"
+# quality gate: whitespace-token count bounds and the least mean
+# non-space characters per token
+MIN_TOKENS = 5
+MAX_TOKENS = 100_000
+MIN_AVG_TOKEN_LEN = 2.0
+# sign hyperplanes of the embedding-dedup LSH buckets (2^6 buckets)
+EMBEDDING_LSH_PLANES = 6
+SHARD_COMPRESSION = "zstd"
 
 
 @dataclass
@@ -72,61 +81,37 @@ class PrepStats:
             self._cached.pop().unpersist()
 
 
-def quality_gate(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_tokens: int = 5,
-    max_tokens: int = 100_000,
-    min_avg_token_len: float = 2.0,
-) -> DataFrame:
-    toks = F.split(F.col(text_col), " ")
+def quality_gate(docs: DataFrame) -> DataFrame:
+    """Keep docs of ``MIN_TOKENS``..``MAX_TOKENS`` whitespace tokens
+    averaging at least ``MIN_AVG_TOKEN_LEN`` non-space characters."""
+    toks = F.split(F.col(TEXT_COL), " ")
     n_tokens = F.size(toks)
-    n_nonspace = F.length(F.replace(F.col(text_col), F.lit(" "), F.lit("")))
+    n_nonspace = F.length(F.replace(F.col(TEXT_COL), F.lit(" "), F.lit("")))
     return docs.filter(
-        n_tokens.between(min_tokens, max_tokens)
-        & (n_nonspace >= min_avg_token_len * n_tokens)
+        n_tokens.between(MIN_TOKENS, MAX_TOKENS)
+        & (n_nonspace >= MIN_AVG_TOKEN_LEN * n_tokens)
     )
 
 
-def language_filter(
-    docs: DataFrame, langs: tuple[str, ...], lang_col: str = "lang"
-) -> DataFrame:
-    """Filter by language label (or the x21 heuristic's prediction
-    column when labels are absent)."""
-    return docs.filter(F.col(lang_col).isin(*langs))
+def language_filter(docs: DataFrame, langs: tuple[str, ...]) -> DataFrame:
+    """Filter by the ``lang`` label."""
+    return docs.filter(F.col("lang").isin(*langs))
 
 
-def remove_near_dups(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_jaccard: float = 0.8,
-    exact_clusters: bool = False,
-) -> DataFrame:
+def remove_near_dups(docs: DataFrame, min_jaccard: float = 0.8) -> DataFrame:
     """Drop near-duplicates, keeping one representative per group.
 
-    Default (one-pass keep-min): the larger id of every pair is
-    dropped. Never under-removes, but can over-remove on transitive
-    chains A~B~C with A!~C (C goes even though its only near-dup B is
-    also gone) — the standard one-pass production tradeoff.
-
-    ``exact_clusters=True`` runs connected components over the pair
-    graph instead (operators.dedup.connected_components) and keeps
-    exactly MIN(id) per component — no over-removal, at the cost of
-    graph-diameter propagation rounds.
+    One-pass keep-min: the larger id of every pair is dropped. Never
+    under-removes, but can over-remove on transitive chains A~B~C
+    with A!~C (C goes even though its only near-dup B is also gone) —
+    the standard one-pass production tradeoff.
 
     The loser set is data-dependent and unbounded, so the anti-join is
     left to the planner (AQE broadcasts it when it is actually small).
     """
-    pairs = near_dup_pairs(docs, id_col, text_col, min_jaccard=min_jaccard)
-    if exact_clusters:
-        comps = connected_components(pairs, "id_a", "id_b")
-        losers = comps.filter(F.col("v") != F.col("component")).select(
-            F.col("v").alias(id_col)
-        )
-    else:
-        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    out = docs.join(losers, id_col, "left_anti")
+    pairs = near_dup_pairs(docs, ID_COL, TEXT_COL, min_jaccard=min_jaccard)
+    losers = pairs.select(F.col("id_b").alias(ID_COL)).distinct()
+    out = docs.join(losers, ID_COL, "left_anti")
     # thread the operator's persisted intermediates to the stage
     # boundary (PrepStats.record releases them after materializing)
     out._cached_deps = getattr(pairs, "_cached_deps", [])
@@ -136,11 +121,7 @@ def remove_near_dups(
 def remove_embedding_dups(
     docs: DataFrame,
     embeddings: DataFrame,
-    id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
     min_cosine: float = 0.95,
-    n_planes: int = 6,
     dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup removal via LSH sign buckets: pairs in
@@ -151,14 +132,15 @@ def remove_embedding_dups(
     would delete both copies of the content).
     """
     surviving = embeddings.join(
-        docs.select(F.col(id_col).alias(vec_id_col)), vec_id_col, "left_semi"
+        docs.select(F.col(ID_COL).alias("vec_id")), "vec_id", "left_semi"
     )
-    planes = hyperplanes(n_planes, dim if dim is not None else probe_dim(embeddings, vec_col))
+    dim = dim if dim is not None else probe_dim(embeddings, "embedding")
+    planes = hyperplanes(EMBEDDING_LSH_PLANES, dim)
     b = surviving.select(
-        F.col(vec_id_col).alias("__id"),
-        F.col(vec_col).alias("__v"),
-        lsh_bucket(F.col(vec_col), planes).alias("__b"),
-        vector_norm(F.col(vec_col)).alias("__n"),
+        F.col("vec_id").alias("__id"),
+        F.col("embedding").alias("__v"),
+        lsh_bucket(F.col("embedding"), planes).alias("__b"),
+        vector_norm(F.col("embedding")).alias("__n"),
     )
     a, c = b.alias("a"), b.alias("b")
     cos = cosine_dot(F.col("a.__v"), F.col("b.__v")) / (
@@ -171,10 +153,10 @@ def remove_embedding_dups(
             & (F.col("a.__id") < F.col("b.__id")),
         )
         .filter(cos >= min_cosine)
-        .select(F.col("b.__id").alias(id_col))
+        .select(F.col("b.__id").alias(ID_COL))
         .distinct()
     )
-    return docs.join(losers, id_col, "left_anti")
+    return docs.join(losers, ID_COL, "left_anti")
 
 
 def remove_dup_paragraphs(
@@ -182,12 +164,11 @@ def remove_dup_paragraphs(
     id_col: str = "doc_id",
     text_col: str = "text",
     chunk_tokens: int = 10,
-    min_docs: int = 2,
 ) -> DataFrame:
     """Sub-document duplicate REMOVAL (the C4 three-sentence / Dolma
     paragraph rule; x18_paragraph_dedup is the audit twin of this
     operator): chunk each doc into ``chunk_tokens``-token windows,
-    drop every occurrence of a chunk that appears in ≥ ``min_docs``
+    drop every occurrence of a chunk that appears in two or more
     documents EXCEPT the one in the smallest doc id (keep-first, so
     the content survives exactly once), and reassemble each doc from
     its kept chunks in order. Docs whose every chunk is removed drop
@@ -196,22 +177,19 @@ def remove_dup_paragraphs(
     Scale: chunking is a narrow slice+concat_ws map (no per-token
     explode); reassembly is one groupBy(doc) with an in-group sort —
     all bounded by input + chunk count, never corpus². r11 (guide
-    §2.3/§2.4), mirroring remove_dup_spans: for the default
-    ``min_docs=2``, "occurs in ≥2 distinct docs" is exactly
-    ``min(id) ≠ max(id)``, so the frequency aggregate — whose mixed
-    COUNT(DISTINCT)+MIN planned a 4-stage aggregate keyed on
-    (chunk, doc) that carried every buffer per distinct pair through
-    the exchange (Spark Expands only for ≥2 distinct groups;
-    mechanism corrected r12) — and the chunk-keyed keep-join
-    collapse into ONE window over a single chunk-keyed exchange.
-    General ``min_docs`` keeps the aggregate+join form. Skew note
-    (ADVICE r11): windows get no map-side partial aggregation and no
-    AQE skew split, so a Zipf-hot chunk key lands on one partition
-    at cluster scale where the aggregate form would partial-reduce
-    it map-side — if chunk-frequency skew is expected, prefer the
-    general ``min_docs`` aggregate+join form (or salt the key); the
-    fast path's win is measured at the fixtures' near-uniform chunk
-    distribution.
+    §2.3/§2.4), mirroring remove_dup_spans: "occurs in ≥2 distinct
+    docs" is exactly ``min(id) ≠ max(id)``, so the frequency
+    aggregate — whose mixed COUNT(DISTINCT)+MIN planned a 4-stage
+    aggregate keyed on (chunk, doc) that carried every buffer per
+    distinct pair through the exchange (Spark Expands only for ≥2
+    distinct groups; mechanism corrected r12) — and the chunk-keyed
+    keep-join collapse into ONE window over a single chunk-keyed
+    exchange. Skew note (ADVICE r11): windows get no map-side partial
+    aggregation and no AQE skew split, so a Zipf-hot chunk key lands
+    on one partition at cluster scale where an aggregate would
+    partial-reduce it map-side — if chunk-frequency skew is expected,
+    salt the key; the window's win is measured at the fixtures'
+    near-uniform chunk distribution.
     """
     toks = docs.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__t"))
     n_chunks = (F.size("__t") + F.lit(chunk_tokens - 1)) / F.lit(chunk_tokens)
@@ -229,23 +207,15 @@ def remove_dup_paragraphs(
             )
         ).alias("c"),
     ).select(id_col, "c.chunk_idx", "c.chunk")
-    if min_docs == 2:
-        w = Window.partitionBy("chunk")
-        kept = (
-            chunks.withColumn("__first", F.min(id_col).over(w))
-            .withColumn("__last", F.max(id_col).over(w))
-            .filter(
-                (F.col("__first") == F.col("__last"))
-                | (F.col(id_col) == F.col("__first"))
-            )
+    w = Window.partitionBy("chunk")
+    kept = (
+        chunks.withColumn("__first", F.min(id_col).over(w))
+        .withColumn("__last", F.max(id_col).over(w))
+        .filter(
+            (F.col("__first") == F.col("__last"))
+            | (F.col(id_col) == F.col("__first"))
         )
-    else:
-        freq = chunks.groupBy("chunk").agg(
-            F.countDistinct(id_col).alias("__nd"), F.min(id_col).alias("__first")
-        )
-        kept = chunks.join(freq, "chunk").filter(
-            (F.col("__nd") < min_docs) | (F.col(id_col) == F.col("__first"))
-        )
+    )
     rebuilt = kept.groupBy(id_col).agg(
         F.array_join(
             F.transform(
@@ -267,12 +237,11 @@ def remove_dup_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     span_tokens: int = 8,
-    min_docs: int = 2,
 ) -> DataFrame:
     """ExactSubstr-style duplicate-span REMOVAL (Lee et al., ACL'22;
     x88_dup_spans is the audit twin): every ``span_tokens``-token
     SLIDING window (stride 1 — unlike remove_dup_paragraphs' disjoint
-    chunks) whose text occurs in ≥ ``min_docs`` distinct documents is
+    chunks) whose text occurs in two or more distinct documents is
     removed from every document EXCEPT the smallest-id one carrying
     it (keep-first, content survives once); a token is dropped when
     ANY removed span occurrence covers it, and each document is
@@ -297,14 +266,12 @@ def remove_dup_spans(
     verified on the executed plan). Now (a) spans shuffle ONCE, as
     128-bit md5 fingerprints rather than gram text (~3× fewer
     shuffle bytes; the same collision budget x88/x02 already spend,
-    ≈G²/2¹²⁹); (b) for the min_docs=2 default, "occurs in ≥2
-    distinct docs" is exactly min(id)≠max(id) over a gram window —
-    the self-join and its second span pass disappear (general
-    min_docs keeps the aggregate+join form; skew note, ADVICE r11:
-    the window gets no map-side partials and no AQE skew split, so a
-    Zipf-hot span fingerprint becomes one straggler partition at
-    cluster scale — when gram-frequency skew is expected, use the
-    general-min_docs aggregate+join form or salt the key); (c)
+    ≈G²/2¹²⁹); (b) "occurs in ≥2 distinct docs" is exactly
+    min(id)≠max(id) over a gram window — the self-join and its second
+    span pass disappear (skew note, ADVICE r11: the window gets no
+    map-side partials and no AQE skew split, so a Zipf-hot span
+    fingerprint becomes one straggler partition at cluster scale —
+    when gram-frequency skew is expected, salt the key); (c)
     coverage rows
     collapse straight to one removed-position set per doc
     (collect_set dedups — no separate distinct exchange); (d) tokens
@@ -335,28 +302,19 @@ def remove_dup_spans(
             )
         ).alias("s"),
     ).select(id_col, "s.start", "s.gram")
-    if min_docs == 2:
-        wg = Window.partitionBy("gram")
-        rm_rows = (
-            spans.select(
-                id_col,
-                "start",
-                F.min(id_col).over(wg).alias("__first"),
-                F.max(id_col).over(wg).alias("__last"),
-            )
-            .filter(
-                (F.col("__last") != F.col("__first"))
-                & (F.col(id_col) != F.col("__first"))
-            )
+    wg = Window.partitionBy("gram")
+    rm_rows = (
+        spans.select(
+            id_col,
+            "start",
+            F.min(id_col).over(wg).alias("__first"),
+            F.max(id_col).over(wg).alias("__last"),
         )
-    else:
-        freq = spans.groupBy("gram").agg(
-            F.countDistinct(id_col).alias("__nd"),
-            F.min(id_col).alias("__first"),
+        .filter(
+            (F.col("__last") != F.col("__first"))
+            & (F.col(id_col) != F.col("__first"))
         )
-        rm_rows = spans.join(freq, "gram").filter(
-            (F.col("__nd") >= min_docs) & (F.col(id_col) != F.col("__first"))
-        )
+    )
     rmsets = (
         rm_rows.select(
             id_col,
@@ -384,20 +342,15 @@ def remove_dup_spans(
     )
 
 
-def token_budget_cut(
-    docs: DataFrame,
-    budget_tokens: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def token_budget_cut(docs: DataFrame, budget_tokens: int) -> DataFrame:
     """Keep documents in id order until the whitespace-token budget is
     exhausted (the document crossing the budget is excluded).
 
-    API contract (r8 advice): with a NUMERIC ``id_col`` the scalable
+    API contract (r8 advice): with a NUMERIC ``doc_id`` the scalable
     two-pass form below runs an EAGER quantile-boundary probe (one
     small Spark job) at call time, not at first action — callers
     building expensive lazy pipelines should call this last or on a
-    checkpointed input. With a non-numeric ``id_col`` (e.g. string doc
+    checkpointed input. With a non-numeric ``doc_id`` (e.g. string doc
     ids, which ``percentile_approx`` cannot probe) the function falls
     back to the exact single-window form: correct at any size but
     corpus-grain single-partition at the window — at 100 TB scale map
@@ -431,12 +384,12 @@ def token_budget_cut(
     """
     from pyspark.sql.types import NumericType
 
-    n_tokens = F.size(F.split(F.col(text_col), " ")).cast("bigint")
-    if not isinstance(docs.schema[id_col].dataType, NumericType):
+    n_tokens = F.size(F.split(F.col(TEXT_COL), " ")).cast("bigint")
+    if not isinstance(docs.schema[ID_COL].dataType, NumericType):
         # Exact fallback for non-probe-able id types (r8 advice): the
         # single running-sum window. Same semantics, no eager job,
         # but single-partition at the window — see docstring.
-        w_all = Window.orderBy(id_col).rowsBetween(
+        w_all = Window.orderBy(ID_COL).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
         return (
@@ -449,7 +402,7 @@ def token_budget_cut(
     qs = [i / n_ranges for i in range(1, n_ranges)]
     bounds = (
         docs.agg(
-            F.percentile_approx(F.col(id_col), qs, 10_000).alias("b")
+            F.percentile_approx(F.col(ID_COL), qs, 10_000).alias("b")
         ).first()["b"]
         if qs
         else None
@@ -458,11 +411,11 @@ def token_budget_cut(
         bounds = []
     pid = F.size(
         F.filter(
-            F.array(*[F.lit(b) for b in bounds]), lambda b: b < F.col(id_col)
+            F.array(*[F.lit(b) for b in bounds]), lambda b: b < F.col(ID_COL)
         )
     ) if bounds else F.lit(0)
     ranged = docs.withColumn("__pid", pid).withColumn("__n", n_tokens)
-    w_in = Window.partitionBy("__pid").orderBy(id_col).rowsBetween(
+    w_in = Window.partitionBy("__pid").orderBy(ID_COL).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     cum = ranged.withColumn("__cum_in", F.sum("__n").over(w_in))
@@ -489,16 +442,10 @@ def prepare_corpus(
     docs: DataFrame,
     embeddings: DataFrame | None = None,
     langs: tuple[str, ...] = ("en",),
-    min_tokens: int = 5,
     min_jaccard: float = 0.8,
     min_cosine: float = 0.95,
     budget_tokens: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     dim: int | None = None,
-    scrub_pii: bool = False,
-    dedup_paragraphs: bool = False,
-    dedup_spans: bool = False,
 ) -> tuple[DataFrame, PrepStats]:
     """The full prep chain; returns (clean corpus, per-stage counts).
 
@@ -515,59 +462,29 @@ def prepare_corpus(
     # pinned for the session lifetime
     try:
         stats.record("input", docs)
-        cur = stats.record(
-            "quality", quality_gate(docs, text_col, min_tokens=min_tokens)
-        )
+        cur = stats.record("quality", quality_gate(docs))
         cur = stats.record("language", language_filter(cur, langs))
-        if scrub_pii:
-            # scrub BEFORE dedup: redaction canonicalizes contact
-            # strings, so two docs differing only in PII dedup as the
-            # copies they are (and removed text never reaches training)
-            cur = stats.record(
-                "pii_scrub", cur.withColumn(text_col, redact_pii(F.col(text_col)))
-            )
         cur = stats.record(
             "exact_dedup",
             dedup_first_wins(
                 cur.withColumn(
                     "__fp",
                     F.md5(
-                        F.lower(F.regexp_replace(text_col, r"\s+", " ")).cast("binary")
+                        F.lower(F.regexp_replace(TEXT_COL, r"\s+", " ")).cast("binary")
                     ),
                 ),
                 ["__fp"],
-                [id_col],
+                [ID_COL],
             ).drop("__fp"),
         )
-        if dedup_paragraphs:
-            # after exact dedup (full-copy docs are gone, so chunk
-            # frequency reflects real cross-doc boilerplate), before
-            # near-dup so MinHash runs on boilerplate-free text
-            cur = stats.record(
-                "paragraph_dedup", remove_dup_paragraphs(cur, id_col, text_col)
-            )
-        if dedup_spans:
-            # finest granularity last among the exact passes: sliding
-            # spans catch boilerplate that straddles the disjoint
-            # paragraph chunks; still before near-dup for the same
-            # reason paragraphs are (MinHash on clean text)
-            cur = stats.record(
-                "span_dedup", remove_dup_spans(cur, id_col, text_col)
-            )
-        cur = stats.record(
-            "near_dedup", remove_near_dups(cur, id_col, text_col, min_jaccard)
-        )
+        cur = stats.record("near_dedup", remove_near_dups(cur, min_jaccard))
         if embeddings is not None:
             cur = stats.record(
                 "embedding_dedup",
-                remove_embedding_dups(
-                    cur, embeddings, id_col, min_cosine=min_cosine, dim=dim
-                ),
+                remove_embedding_dups(cur, embeddings, min_cosine=min_cosine, dim=dim),
             )
         if budget_tokens is not None:
-            cur = stats.record(
-                "token_budget", token_budget_cut(cur, budget_tokens, id_col, text_col)
-            )
+            cur = stats.record("token_budget", token_budget_cut(cur, budget_tokens))
     finally:
         stats.release()
     return cur, stats
@@ -578,20 +495,11 @@ def write_training_shards(
     path: str,
     shard_key: str,
     n_shards: int,
-    compression: str = "zstd",
-    fmt: str = "parquet",
 ) -> dict:
     """Export a prepared corpus as size-balanced, deterministic
-    shards plus a JSON manifest — the hand-off format a training
-    loader consumes (shard list + row counts + total).
-
-    ``fmt='parquet'`` (default) or ``'jsonl'`` — many training
-    loaders stream gzip/zstd JSON-lines rather than parquet; the
-    JSONL path serializes each row with ``to_json(struct(*))`` (the
-    K1 NDJSON sink shape) and counts rows per shard with one
-    ``input_file_name()`` aggregate (text files have no footer
-    metadata to read, so this is the honest O(rows) count — noted,
-    not hidden).
+    ``SHARD_COMPRESSION``-compressed parquet shards plus a JSON
+    manifest — the hand-off format a training loader consumes (shard
+    list + row counts + total).
 
     Scale/determinism: ``repartitionByRange(n_shards, shard_key)``
     range-partitions on the key (one shuffle; sampled range bounds
@@ -610,42 +518,20 @@ def write_training_shards(
 
     import pyarrow.parquet as _pq
 
-    if fmt not in ("parquet", "jsonl"):
-        raise ValueError(f"unsupported shard format: {fmt!r}")
-    sharded = df.repartitionByRange(n_shards, F.col(shard_key)).sortWithinPartitions(
-        shard_key
+    (
+        df.repartitionByRange(n_shards, F.col(shard_key))
+        .sortWithinPartitions(shard_key)
+        .write.mode("overwrite")
+        .option("compression", SHARD_COMPRESSION)
+        .parquet(path)
     )
-    if fmt == "parquet":
-        (
-            sharded.write.mode("overwrite")
-            .option("compression", compression)
-            .parquet(path)
-        )
-        per_file = {
-            os.path.basename(p): _pq.ParquetFile(p).metadata.num_rows
-            for p in _glob.glob(os.path.join(path, "*.parquet"))
-        }
-    else:
-        (
-            sharded.select(
-                F.to_json(F.struct(*df.columns)).alias("value")
-            )
-            .write.mode("overwrite")
-            .option("compression", "gzip" if compression == "zstd" else compression)
-            .text(path)
-        )
-        spark = df.sparkSession
-        per_file = {
-            os.path.basename(r["f"]): r["n"]
-            for r in spark.read.text(path)
-            .select(F.input_file_name().alias("f"))
-            .groupBy("f")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
+    per_file = {
+        os.path.basename(p): _pq.ParquetFile(p).metadata.num_rows
+        for p in _glob.glob(os.path.join(path, "*.parquet"))
+    }
     manifest = {
-        "format": fmt,
-        "compression": compression,
+        "format": "parquet",
+        "compression": SHARD_COMPRESSION,
         "shard_key": shard_key,
         "n_shards": len(per_file),
         "total_rows": int(sum(per_file.values())),

@@ -26,7 +26,6 @@ from .similarity import (  # noqa: F401
     lsh_bucket,
     probe_dim,
     semdedup,
-    semdedup_n_lists,
 )
 from .skew import salted_join  # noqa: F401
 from .topk import top_k_per_group  # noqa: F401

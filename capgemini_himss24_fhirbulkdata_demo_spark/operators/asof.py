@@ -23,18 +23,15 @@ def asof_join(
     right: DataFrame,
     on: list[tuple[str, str]],
     ordinal: tuple[str, str],
-    direction: str = "backward",
     how: str = "left",
 ) -> DataFrame:
     """For each left row, attach the single right row with the largest
-    (backward) / smallest (forward) ordinal satisfying the bound.
+    ordinal at or before the left row's.
 
     ``on`` = [(left_key, right_key)], ``ordinal`` = (left_ord, right_ord).
     Right columns keep their names; the left ordinal breaks no ties —
     callers needing full determinism pass a unique right ordinal.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError("direction must be 'backward' or 'forward'")
     l_ord, r_ord = ordinal
     # A surrogate row id keeps exactly one output per *left row* even
     # when several left rows share (keys, ordinal); its value never
@@ -44,18 +41,8 @@ def asof_join(
     for lk, rk in on:
         c = left[lk] == right[rk]
         cond = c if cond is None else cond & c
-    bound = (
-        right[r_ord] <= left[l_ord]
-        if direction == "backward"
-        else right[r_ord] >= left[l_ord]
-    )
-    joined = left.join(right, cond & bound, how)
-    order = (
-        F.desc_nulls_last(right[r_ord])
-        if direction == "backward"
-        else F.asc_nulls_last(right[r_ord])
-    )
-    w = Window.partitionBy("__asof_lid").orderBy(order)
+    joined = left.join(right, cond & (right[r_ord] <= left[l_ord]), how)
+    w = Window.partitionBy("__asof_lid").orderBy(F.desc_nulls_last(right[r_ord]))
     return (
         joined.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)

@@ -174,13 +174,14 @@ def lsh_candidate_pairs(
     return cand
 
 
-def jaccard(a: Column, b: Column, scale: int = 4) -> Column:
-    """Exact Jaccard over two (distinct-element) array columns.
+def jaccard(a: Column, b: Column) -> Column:
+    """Exact Jaccard over two (distinct-element) array columns, rounded
+    to 4 decimals.
 
     Uses |A∪B| = |A|+|B|−|A∩B| — one intersect, no union allocation.
     """
     inter = F.size(F.array_intersect(a, b))
-    return F.round(inter.cast("double") / (F.size(a) + F.size(b) - inter), scale)
+    return F.round(inter.cast("double") / (F.size(a) + F.size(b) - inter), 4)
 
 
 def release_cached_deps(df: DataFrame) -> None:
@@ -198,24 +199,27 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
+# near_dup_pairs: word-bigram shingles, 8 minhashes in bands of 2,
+# and candidates must agree on 4 minhashes before the exact verify
+NEAR_DUP_SHINGLE_N = 2
+NEAR_DUP_HASHES = 8
+NEAR_DUP_BAND_SIZE = 2
+NEAR_DUP_MIN_AGREE = 4
+
+
 def near_dup_pairs(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    n_hashes: int = 8,
-    band_size: int = 2,
-    shingle_n: int = 2,
     min_jaccard: float = 0.3,
-    min_agree: int = 4,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """Full near-dup pipeline → (id_a, id_b, jaccard) above threshold.
 
-    ``min_agree`` is the estimate-then-verify gate: banded candidates
-    must agree on that many of the ``n_hashes`` minhashes (banding
-    alone guarantees ``band_size``) before the exact-Jaccard join —
-    E[agreement | banded] = band_size + (n-band_size)·jaccard. Prunes
-    the band-collision tail cheaply; set to ``band_size`` to disable.
+    ``NEAR_DUP_MIN_AGREE`` is the estimate-then-verify gate: banded
+    candidates must agree on that many of the ``NEAR_DUP_HASHES``
+    minhashes (banding alone guarantees ``NEAR_DUP_BAND_SIZE``) before
+    the exact-Jaccard join — E[agreement | banded] = band_size +
+    (n-band_size)·jaccard. Prunes the band-collision tail cheaply.
     The gate is computed by UNhinted joins of the distinct candidates
     back to the signature table (see ``lsh_candidate_pairs`` for why
     that beats carrying signatures through the band explode).
@@ -223,13 +227,10 @@ def near_dup_pairs(
     Three plan branches read the shingle arrays (signature build +
     both verify-join sides) and three read the signatures (band
     explode + both gate-join sides): recomputing them tripled wall
-    time at 50k docs, so both persist by default, attached to the
-    result as ``_cached_deps`` — callers release them via
+    time at 50k docs, so both persist, attached to the result as
+    ``_cached_deps`` — callers release them via
     ``release_cached_deps(result)`` once the result is materialized
-    (``dataprep.PrepStats`` does this at stage boundaries). At 100 TB
-    pass ``persist_shingles=False`` and materialize the shingle and
-    signature tables as columnar storage between stages instead of
-    executor memory.
+    (``dataprep.PrepStats`` does this at stage boundaries).
 
     Measured scaling on local[32]: 5k docs / 256 true pairs → ~4.6 s;
     50k docs (10× input, 250,600 true pairs = ~1000× output) → ~19 s,
@@ -238,14 +239,12 @@ def near_dup_pairs(
     100 TB contract: every stage is a narrow pass, a uniform-key
     shuffle, or output-proportional).
     """
-    sh = docs.select(F.col(id_col), shingle(F.col(text_col), shingle_n).alias("sh"))
-    if persist_shingles:
-        sh = sh.persist()
-    sigs = minhash_signatures(sh, id_col, "sh", n_hashes)
-    if persist_shingles:
-        sigs = sigs.persist()
+    sh = docs.select(
+        F.col(id_col), shingle(F.col(text_col), NEAR_DUP_SHINGLE_N).alias("sh")
+    ).persist()
+    sigs = minhash_signatures(sh, id_col, "sh", NEAR_DUP_HASHES).persist()
     cand = lsh_candidate_pairs(
-        sigs, id_col, n_hashes, band_size, min_agree=min_agree
+        sigs, id_col, NEAR_DUP_HASHES, NEAR_DUP_BAND_SIZE, min_agree=NEAR_DUP_MIN_AGREE
     )
     sa = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
@@ -255,7 +254,7 @@ def near_dup_pairs(
         .select("id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
         .filter(F.col("jaccard") >= min_jaccard)
     )
-    out._cached_deps = [sh, sigs] if persist_shingles else []
+    out._cached_deps = [sh, sigs]
     return out
 
 
@@ -272,11 +271,14 @@ _CC_EDGES_PER_PARTITION = 2_000_000
 _CC_BROADCAST_EDGES = 2_000_000
 
 
+# Label-propagation rounds before connected_components gives up.
+_CC_MAX_ITER = 20
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over an undirected pair graph →
     (vertex, component) with component = min vertex id reachable.
@@ -314,7 +316,7 @@ def connected_components(
     generation (drop all but MIN(doc) per component).
 
     Raises ``RuntimeError`` if the labels have not converged after
-    ``max_iter`` rounds (graph diameter > max_iter) — an unconverged
+    ``_CC_MAX_ITER`` rounds (graph diameter > 20) — an unconverged
     result silently splits components, which downstream dedup would
     read as "keep several representatives of one duplicate cluster".
     """
@@ -361,8 +363,8 @@ def connected_components(
     # from the symmetrized edge list in the same aggregate that used
     # to build the identity labels. One full propagation round
     # (join + union + aggregate + sum action) gone; the loop below
-    # runs the remaining max_iter - 1 rounds, so the documented
-    # "max_iter rounds" contract is unchanged.
+    # runs the remaining _CC_MAX_ITER - 1 rounds, so the documented
+    # "_CC_MAX_ITER rounds" contract is unchanged.
     labels = (
         edges.select(F.col("src").alias("v"), F.col("dst"))
         .repartition(parts, "v")
@@ -372,7 +374,7 @@ def connected_components(
     )
     prev_sum = labels.agg(F.sum("label")).first()[0]
     converged = prev_sum is None  # empty graph is trivially converged
-    for _ in range(max_iter - 1):
+    for _ in range(_CC_MAX_ITER - 1):
         # one join + one aggregate per round: neighbor labels and
         # each vertex's own label meet in a single min-aggregate
         # (the old msgs-then-left-join form ran a second join and
@@ -400,8 +402,8 @@ def connected_components(
     if not converged:
         _release_local_checkpoint(labels)
         raise RuntimeError(
-            f"connected_components did not converge in max_iter={max_iter} "
-            "rounds (graph diameter exceeds it); raise max_iter"
+            f"connected_components did not converge in {_CC_MAX_ITER} "
+            "rounds (graph diameter exceeds it)"
         )
     return labels.select(F.col("v"), F.col("label").alias("component"))
 

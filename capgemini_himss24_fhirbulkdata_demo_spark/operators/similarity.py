@@ -137,12 +137,9 @@ def probe_dim(vectors: DataFrame, vec_col: str) -> int:
 
 def ivf_assign(
     vectors: DataFrame,
-    id_col: str,
     vec_col: str,
     n_lists: int | None = None,
-    list_col: str = "ivf_list",
     dim: int | None = None,
-    train_fraction: float = 1.0,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: deterministic centroid build + assignment.
 
@@ -151,7 +148,8 @@ def ivf_assign(
     dependent) and computes each bucket's centroid with exact decimal
     sums (order-insensitive) — so the index build is reproducible
     bit-for-bit. ``n_lists`` rounds UP to the next power of two (the
-    bucket space is 2^planes). Returns (assigned, centroid table).
+    bucket space is 2^planes). Returns (assigned, centroid table),
+    each carrying the list id as ``ivf_list``.
 
     ``dim`` comes from the caller (schema metadata); omitted, it is
     probed from one row with a clear empty-table error.
@@ -161,20 +159,7 @@ def ivf_assign(
     and a plan whose width is O(1) in ``dim`` (a per-dimension
     aggregate column would blow up codegen at dim 768+). Assignment is
     a narrow projection; queries then search only their probe list(s).
-    ``train_fraction`` < 1 builds centroids on a deterministic
-    md5-gated sample (standard IVF practice: at 50 B docs × 768 dims
-    the full posexplode is ~4·10¹³ skinny rows; a 1 % training sample
-    is statistically identical for bucket means) — assignment always
-    covers the FULL table. A bucket entirely absent from the sample
-    gets no centroid; members of such orphan buckets are reassigned
-    to the nearest EXISTING centroid via ``assign_nearest_centroid``
-    so every vector stays searchable (no silent recall loss). The
-    orphan split is two joins against the broadcast k-row centroid-id
-    list (semi/anti, narrow); the nearest-centroid scoring runs only
-    over the orphans, which P(miss) ≈ exp(-f·|bucket|) keeps to a
-    vanishing fraction at scale. Degenerate edge: an EMPTY training
-    sample (tiny table × tiny fraction) yields zero centroids and an
-    empty index — size ``train_fraction`` ≥ ~100/|table|.
+    Centroids are built on the full table.
     """
     if dim is None:
         dim = probe_dim(vectors, vec_col)
@@ -184,24 +169,10 @@ def ivf_assign(
     planes = hyperplanes(n_planes, dim)
     bucketed = vectors.withColumn("__b", lsh_bucket(F.col(vec_col), planes))
 
-    train = bucketed
-    if not (0 < train_fraction <= 1):
-        raise ValueError(f"train_fraction must be in (0, 1], got {train_fraction}")
-    if train_fraction < 1:
-        # deterministic hash gate (not RNG sample(): reproducible
-        # across engines, retries, and partition layouts)
-        bound = int(train_fraction * 0xFFFF)
-        gate = (
-            F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 4), 16, 10)
-            .cast("bigint")
-            <= bound
-        )
-        train = bucketed.filter(gate)
-
     # exact-decimal per-(bucket, dimension) mean -> deterministic
     # centroids, constant plan width in dim
     cent = (
-        train.select(
+        bucketed.select(
             "__b", F.posexplode(F.col(vec_col)).alias("__pos", "__val")
         )
         .groupBy("__b", "__pos")
@@ -220,39 +191,25 @@ def ivf_assign(
             ).alias("__pm")
         )
         .select(
-            F.col("__b").alias(list_col),
+            F.col("__b").alias("ivf_list"),
             F.transform(F.col("__pm"), lambda s: s["__m"]).alias("centroid"),
         )
     )
-    assigned = bucketed.withColumnRenamed("__b", list_col)
-    if train_fraction < 1:
-        # sampled train: some seed buckets may lack a centroid; route
-        # their members to the nearest existing centroid instead of
-        # silently dropping them from every probe
-        known_lists = cent.select(list_col)
-        kept = assigned.join(F.broadcast(known_lists), [list_col], "left_semi")
-        orphans = assigned.join(F.broadcast(known_lists), [list_col], "left_anti")
-        reassigned = assign_nearest_centroid(
-            orphans.drop(list_col), cent, id_col, vec_col,
-            list_col=list_col, out_col=list_col,
-        )
-        assigned = kept.unionByName(reassigned.select(*kept.columns))
-    return assigned, cent
+    return bucketed.withColumnRenamed("__b", "ivf_list"), cent
 
 
 def assign_nearest_centroid(
     vectors: DataFrame,
     centroids: DataFrame,
-    id_col: str,
     vec_col: str,
-    list_col: str = "ivf_list",
-    out_col: str = "cluster",
 ) -> DataFrame:
     """Assign every vector to its nearest centroid by cosine — the
     k-means-style assignment SemDeDup-shaped cluster-scoped dedup
     needs (``ivf_assign`` buckets by the *seeding* sign cell; this
     re-buckets by actual centroid proximity, so clusters follow the
-    data even where sign cells are ragged).
+    data even where sign cells are ragged). The centroid table
+    carries ``ivf_list`` and ``centroid``; the output adds the
+    nearest list id as ``cluster``.
 
     Scale: the k centroids collapse to ONE broadcast row carrying a
     list-id-sorted array of (id, centroid, norm) structs; the argmax
@@ -270,7 +227,7 @@ def assign_nearest_centroid(
         F.array_sort(
             F.collect_list(
                 F.struct(
-                    F.col(list_col).cast("bigint").alias("l"),
+                    F.col("ivf_list").cast("bigint").alias("l"),
                     F.col("centroid").alias("c"),
                     vector_norm(F.col("centroid")).alias("cn"),
                 )
@@ -294,33 +251,9 @@ def assign_nearest_centroid(
     )
     return (
         v.crossJoin(F.broadcast(cents))
-        .select(*vectors.columns, best["l"].alias(out_col))
-        .filter(F.col(out_col).isNotNull())
+        .select(*vectors.columns, best["l"].alias("cluster"))
+        .filter(F.col("cluster").isNotNull())
     )
-
-
-def semdedup_n_lists(
-    corpus_rows: int,
-    target_cluster_rows: int = 1_000_000,
-    max_lists: int = 1 << 16,
-) -> int:
-    """SemDeDup cluster-count budget rule, executable form of the
-    SCALE.md prose: intra-cluster pair work is Σ per-cluster n², so
-    the cluster count k must grow with the corpus to hold clusters at
-    a target size — k ≈ corpus / target (SemDeDup paper's
-    tractability argument). Clamped at ``max_lists`` (the broadcast
-    ceiling: k centroids ship to every executor; 2^16 × 768 dims ×
-    8 B ≈ 0.4 GB). ``ivf_assign`` rounds the result up to the next
-    power of two.
-    """
-    if corpus_rows < 0:
-        raise ValueError(f"corpus_rows must be >= 0, got {corpus_rows}")
-    if target_cluster_rows <= 0:
-        raise ValueError(
-            f"target_cluster_rows must be > 0, got {target_cluster_rows}"
-        )
-    k = max(1, -(-corpus_rows // target_cluster_rows))
-    return min(max_lists, k)
 
 
 def semdedup(
@@ -328,11 +261,8 @@ def semdedup(
     id_col: str,
     vec_col: str,
     threshold: float,
-    n_lists: int | None = None,
-    corpus_rows: int | None = None,
-    target_cluster_rows: int = 1_000_000,
+    n_lists: int,
     dim: int | None = None,
-    train_fraction: float = 1.0,
     persist_assigned: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """SemDeDup (Abbas et al. 2023): cluster embeddings, compare pairs
@@ -341,26 +271,16 @@ def semdedup(
     ``cluster`` and ``norm``; ``dup_pairs`` is (cluster, id_a, id_b)
     with id_a < id_b. Keep-min collapse / audits compose on top.
 
-    Cluster count: pass ``n_lists`` explicitly, or pass ``corpus_rows``
-    (known from table stats or a setup-time count — never counted here:
-    plan construction stays action-free) and the budget rule
-    ``semdedup_n_lists`` derives it. The pair join shuffles on the
-    cluster id; ragged clusters are the expected skew shape, handled by
+    ``n_lists`` is the cluster count; ``ivf_assign`` rounds it up to a
+    power of two. The pair join shuffles on the cluster id; ragged clusters are the expected skew shape, handled by
     AQE skew-join splitting (session policy ``adaptive.skewJoin``) —
     the join must stay a shuffled hash/sort-merge join, asserted in
     tests/test_plans.py.
     """
-    if n_lists is None:
-        if corpus_rows is None:
-            raise ValueError("pass n_lists or corpus_rows (for the budget rule)")
-        n_lists = semdedup_n_lists(corpus_rows, target_cluster_rows)
-    _, cent = ivf_assign(
-        vectors, id_col, vec_col, n_lists=n_lists, dim=dim,
-        train_fraction=train_fraction,
-    )
+    _, cent = ivf_assign(vectors, vec_col, n_lists=n_lists, dim=dim)
     assigned = assign_nearest_centroid(
         vectors.withColumn("norm", vector_norm(F.col(vec_col))),
-        cent, id_col, vec_col,
+        cent, vec_col,
     )
     if persist_assigned:
         # the assignment subtree (broadcast-centroid scoring + argmax
@@ -399,12 +319,12 @@ def ivf_topk(
     cand_vec: str,
     k: int = 10,
     n_probe: int = 1,
-    list_col: str = "ivf_list",
     query_norm: str | None = None,
     cand_norm: str | None = None,
 ) -> DataFrame:
     """IVF search: route each query to its ``n_probe`` nearest
-    centroid lists, exact cosine only within those lists.
+    centroid lists (``ivf_assign``'s ``ivf_list``), exact cosine only
+    within those lists.
 
     Probe selection and scoring both use the deterministic fold dot
     product. Output: (query_id, neighbor_id, cosine, rank).
@@ -430,18 +350,18 @@ def ivf_topk(
             "__qid",
             "__qv",
             "__qn",
-            F.col(list_col),
+            F.col("ivf_list"),
             (
                 cosine_dot(F.col("__qv"), F.col("centroid"))
                 / (F.col("__qn") * vector_norm(F.col("centroid")))
             ).alias("__csim"),
         )
     )
-    w = Window.partitionBy("__qid").orderBy(F.desc("__csim"), list_col)
+    w = Window.partitionBy("__qid").orderBy(F.desc("__csim"), "ivf_list")
     probes = (
         probes.withColumn("__pr", F.row_number().over(w))
         .filter(F.col("__pr") <= n_probe)
-        .select("__qid", "__qv", "__qn", list_col)
+        .select("__qid", "__qv", "__qn", "ivf_list")
     )
     c = assigned.select(
         F.col(cand_id).alias("__cid"),
@@ -449,11 +369,11 @@ def ivf_topk(
         (
             F.col(cand_norm) if cand_norm else vector_norm(F.col(cand_vec))
         ).alias("__cn"),
-        F.col(list_col),
+        F.col("ivf_list"),
     )
     scored = (
         F.broadcast(probes)
-        .join(c, [list_col])
+        .join(c, ["ivf_list"])
         .filter(F.col("__qid") != F.col("__cid"))
         .select(
             F.col("__qid").alias("query_id"),

@@ -18,25 +18,16 @@ def salted_join(
     small: DataFrame,
     on: list[tuple[str, str]],
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Shuffled join with the skewed side salted and the small side
-    replicated ``n_salts`` times.
+    """Shuffled inner join with the skewed side salted and the small
+    side replicated ``n_salts`` times.
 
     The skewed side gets a uniform random-ish salt (row-id derived,
     deterministic within a run); the small side explodes one row per
     salt value; the join key becomes (key, salt) so a hot key spreads
     over ``n_salts`` partitions. Row multiplicity is preserved
-    exactly for inner/left/semi/anti joins (each skewed row matches
-    exactly its own salt replica). Right/full outer are rejected:
-    an unmatched small-side row exists once per replica and would be
-    emitted ``n_salts`` times.
+    exactly: each skewed row matches exactly its own salt replica.
     """
-    if how not in ("inner", "left", "left_outer", "left_semi", "left_anti"):
-        raise ValueError(
-            f"salted_join does not preserve multiplicity for how={how!r}; "
-            "use inner/left/left_semi/left_anti"
-        )
     s = skewed.withColumn(
         "__salt", (F.monotonically_increasing_id() % n_salts).cast("int")
     )
@@ -46,5 +37,5 @@ def salted_join(
     cond = F.col("__l.__salt") == F.col("__r.__salt")
     for lk, rk in on:
         cond = cond & (F.col(f"__l.{lk}") == F.col(f"__r.{rk}"))
-    out = s.alias("__l").join(r.alias("__r"), cond, how)
+    out = s.alias("__l").join(r.alias("__r"), cond)
     return out.drop("__salt")

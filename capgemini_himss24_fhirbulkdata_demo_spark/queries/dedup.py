@@ -235,9 +235,9 @@ def x02_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     file (one input split), so the md5-heavy signature expansion is
     repartitioned across cores first — compute here is large relative
     to input bytes, the same reason this repartition is cheap at any
-    scale. At 100 TB a real pipeline materializes the doc relation
-    columnar between stages instead
-    (operators.dedup.near_dup_pairs: persist_shingles=False).
+    scale. At 100 TB a real pipeline materializes the shingle and
+    signature tables columnar between stages instead of persisting
+    them in executor memory.
     """
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism * 2

@@ -331,7 +331,7 @@ def _x12_ranked(base: DataFrame) -> DataFrame:
     from ..operators.similarity import ivf_assign, ivf_topk
 
     assigned, centroids = ivf_assign(
-        base, "vec_id", "embedding", n_lists=8, dim=_DIM
+        base, "embedding", n_lists=8, dim=_DIM
     )
     q = base.filter(F.col("vec_id") < _N_QUERIES)
     out = ivf_topk(
@@ -821,11 +821,11 @@ def x16_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     one skinny argmax shuffle; the pair join shuffles on the cluster
     id so candidate work is sum of per-cluster squares — the SemDeDup
     recipe's tractability argument, verbatim. The composition lives in
-    ``operators.similarity.semdedup``, whose cluster count derives
-    from a max-cluster-size budget (``semdedup_n_lists``, the
-    executable form of SCALE.md's k ≈ corpus/10⁶ rule) when the
-    caller passes ``corpus_rows``; here it is pinned to the oracle's
-    32 cells — the fixture-scale instance of that budget.
+    ``operators.similarity.semdedup``. The cluster count is pinned to
+    the oracle's 32 cells, the fixture-scale instance of SCALE.md's
+    k ≈ corpus/10⁶ budget: at corpus scale k grows with the corpus so
+    that clusters stay near 10⁶ rows, and the caller passes that k
+    instead.
     """
     from ..operators.similarity import semdedup
 
@@ -1311,8 +1311,8 @@ def x95_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     against x15's int8 scalar path.
 
     Scale: codebook build = one skinny (sub, bkt, pos) decimal-sum
-    shuffle over the posexploded sample (sampled train_fraction would
-    bolt on exactly as in ivf_assign); assignment joins each
+    shuffle over the posexploded vectors (at corpus scale a hash-gated
+    training sample would shrink it); assignment joins each
     subvector against the ≤{m}·{k}-row broadcast codebook — per-row
     work is M·K fold evaluations, no data-sized shuffle beyond the
     per-(vec, sub) argmin window on a uniform key. At 100 TB the
@@ -1711,7 +1711,7 @@ def x105_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb_fanout(spark, sf_dir)
     assigned, centroids = ivf_assign(
-        emb, "vec_id", "embedding", n_lists=8, dim=_DIM
+        emb, "embedding", n_lists=8, dim=_DIM
     )
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"),

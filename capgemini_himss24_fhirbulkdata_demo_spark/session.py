@@ -85,6 +85,7 @@ from pyspark.sql import SparkSession
 
 logger = logging.getLogger(__name__)
 
+APP_NAME = "capgemini-himss24-fhirbulkdata-demo-spark"
 DEFAULT_SHUFFLE_PARTITIONS = 32
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 CHECKPOINT_FILE_MANAGER = (
@@ -159,7 +160,6 @@ def _local_fs_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
 
 
 def get_spark(
-    app_name: str = "capgemini-himss24-fhirbulkdata-demo-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
@@ -173,7 +173,7 @@ def get_spark(
     """
     master = master or f"local[{DEFAULT_CPUS}]"
     b = (
-        SparkSession.builder.appName(app_name)
+        SparkSession.builder.appName(APP_NAME)
         .config("spark.sql.session.timeZone", "UTC")
         # Permissive (non-ANSI) semantics: null-on-miss element_at /
         # casts, matching the reference's tolerant, schemaless handling

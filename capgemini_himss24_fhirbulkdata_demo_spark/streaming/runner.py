@@ -63,9 +63,6 @@ _SHUFFLE_CONF = "spark.sql.shuffle.partitions"
 # sizing value or have its own restore clobbered).
 _START_LOCK = threading.Lock()
 
-# ``state_partitions``'s default: one task wave, read at start.
-_ONE_WAVE = object()
-
 
 def _one_wave(spark) -> int:
     """How many tasks run at once: the task slots, capped in local mode
@@ -84,21 +81,17 @@ def start_stateful_query(
     foreach_batch: Callable[[DataFrame, int], None] | None = None,
     sink_format: str | None = None,
     output_mode: str | None = None,
-    state_partitions: int | None | object = _ONE_WAVE,
     query_name: str | None = None,
 ):
-    """Start a streaming query with engine-sized state partitions.
+    """Start a streaming query with one task wave of state partitions
+    (``_one_wave``, see the module docstring), snapshotted into the
+    query's cloned session at start.
 
     ``stream_df`` is the transformed streaming DataFrame (e.g. the
     output of ``tumbling_agg``).
     Exactly one sink: ``foreach_batch`` callback, or ``sink_format``.
     The query runs with ``availableNow``: it drains what is there, then
     stops.
-
-    ``state_partitions`` (default: one task wave, see the module
-    docstring) is snapshotted into the query's cloned session at
-    start; pass ``None`` to inherit the session's shuffle default
-    unchanged.
     Returns the started StreamingQuery.
     """
     spark = stream_df.sparkSession
@@ -115,11 +108,7 @@ def start_stateful_query(
         writer = writer.queryName(query_name)
     writer = writer.trigger(availableNow=True)
 
-    if state_partitions is None:
-        return writer.start()
-    if state_partitions is _ONE_WAVE:
-        state_partitions = _one_wave(spark)
-    sized = str(int(state_partitions))
+    sized = str(_one_wave(spark))
     with _START_LOCK:
         prev = spark.conf.get(_SHUFFLE_CONF)
         spark.conf.set(_SHUFFLE_CONF, sized)

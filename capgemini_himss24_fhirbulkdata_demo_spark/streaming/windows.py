@@ -14,16 +14,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def tumbling_agg(
-    events: DataFrame,
-    window_size: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Tumbling event-time windows with watermark; append-mode safe."""
+WINDOW_SIZE = "1 hour"
+WATERMARK = "2 hours"
+
+
+def tumbling_agg(events: DataFrame) -> DataFrame:
+    """Tumbling ``WINDOW_SIZE`` windows over ``ts`` per ``event_type``,
+    with a ``WATERMARK`` watermark; append-mode safe."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window_size).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WINDOW_SIZE).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),

@@ -7,6 +7,7 @@ from __future__ import annotations
 import base64
 import hashlib
 import json
+import logging
 import os
 
 import pytest
@@ -16,6 +17,7 @@ from capgemini_himss24_fhirbulkdata_demo_spark.connectors import (
     HttpResponse,
     build_import_manifest,
     build_jwt_assertion,
+    fhir_bulk,
 )
 from capgemini_himss24_fhirbulkdata_demo_spark.functions.encoding import (
     b64url_encode_py,
@@ -196,9 +198,9 @@ def test_poll_honours_retry_after():
     assert slept == [7, 4]
 
 
-def test_poll_retry_after_forms_and_budget():
+def test_poll_retry_after_forms_and_budget(monkeypatch):
     """An HTTP-date in the past waits 0 s; a 429 without the header
-    waits 2·n; retries count against max_poll_attempts."""
+    waits 2·n; retries count against the MAX_SENDS budget."""
     transport = _scripted([
         HttpResponse(429, headers={"Retry-After": "Wed, 21 Oct 2015 07:28:00 GMT"}),
         HttpResponse(429),
@@ -209,11 +211,52 @@ def test_poll_retry_after_forms_and_budget():
     assert conn.poll_status("https://x/status", "tok") == b"{}"
     assert slept == [0.0, 4]
 
+    monkeypatch.setattr(fhir_bulk, "MAX_SENDS", 3)
     transport = _scripted([HttpResponse(503, headers={"Retry-After": "1"})] * 3)
-    conn = FhirBulkConnector(transport=transport, sleep=lambda s: None, max_poll_attempts=3)
+    conn = FhirBulkConnector(transport=transport, sleep=lambda s: None)
     with pytest.raises(TimeoutError):
         conn.poll_status("https://x/status", "tok")
     assert len(transport.calls) == 3
+
+
+def test_poll_honours_retry_after_on_202(monkeypatch):
+    """A 202 is "still running, come back later" like a 429/503: its
+    Retry-After sets the wait, and 202s that outlast the budget raise
+    TimeoutError."""
+    manifest = b'{"output": []}'
+    transport = _scripted([
+        HttpResponse(202, headers={"Retry-After": "7"}),
+        HttpResponse(200, content=manifest),
+    ])
+    slept = []
+    conn = FhirBulkConnector(transport=transport, sleep=slept.append)
+    assert conn.poll_status("https://x/status", "tok") == manifest
+    assert slept == [7]
+
+    monkeypatch.setattr(fhir_bulk, "MAX_SENDS", 3)
+    transport = _scripted([HttpResponse(202)] * 3)
+    slept = []
+    conn = FhirBulkConnector(transport=transport, sleep=slept.append)
+    with pytest.raises(TimeoutError):
+        conn.poll_status("https://x/status", "tok")
+    assert slept == [2, 4] and len(transport.calls) == 3
+
+
+def test_lower_case_response_headers():
+    """Header names are case-insensitive (RFC 9110 §5.1): a server
+    that sends content-location and retry-after in lower case still
+    kicks off, imports and is waited for."""
+    status = HttpResponse(202, headers={"content-location": "https://x/st"})
+    transport = _scripted([
+        HttpResponse(429, headers={"retry-after": "5"}),
+        status,
+        status,
+    ])
+    slept = []
+    conn = FhirBulkConnector(transport=transport, sleep=slept.append)
+    assert conn.kickoff_export("https://x", "g1", "tok") == "https://x/st"
+    assert conn.bulk_import("https://cg", "itok", {"resourceType": "Parameters"}) == "https://x/st"
+    assert slept == [5] and len(transport.calls) == 3
 
 
 _STATUS_URL = HttpResponse(200, headers={"Content-Location": "https://x/st"}, content=b"{}")
@@ -254,9 +297,9 @@ def test_requests_honour_retry_after(call):
 
 
 @pytest.mark.parametrize("call", sorted(_RETRYING_CALLS))
-def test_requests_raise_on_other_errors_and_spent_budget(call):
+def test_requests_raise_on_other_errors_and_spent_budget(call, monkeypatch):
     """A 400 raises at once; a 503 that never clears raises after
-    max_poll_attempts sends."""
+    MAX_SENDS sends."""
     send = _RETRYING_CALLS[call][0]
     transport = _scripted([HttpResponse(400, content=b"bad")])
     slept = []
@@ -265,8 +308,9 @@ def test_requests_raise_on_other_errors_and_spent_budget(call):
         send(conn)
     assert slept == [] and len(transport.calls) == 1
 
+    monkeypatch.setattr(fhir_bulk, "MAX_SENDS", 3)
     transport = _scripted([HttpResponse(503)] * 3)
-    conn = FhirBulkConnector(transport=transport, sleep=slept.append, max_poll_attempts=3)
+    conn = FhirBulkConnector(transport=transport, sleep=slept.append)
     with pytest.raises(RuntimeError, match="503"):
         send(conn)
     assert slept == [2, 4] and len(transport.calls) == 3
@@ -434,23 +478,24 @@ def test_access_token_expiry_is_timezone_aware():
     assert expires > dt.datetime.now(dt.timezone.utc)
 
 
-def test_poll_status_surfaces_x_progress():
+def test_poll_status_surfaces_x_progress(caplog):
     """Long export waits are observable: every X-Progress header seen
-    on a 202 is handed to on_progress and kept on last_progress
-    (reference surfaces the header at __init__.py:298)."""
-    seen = []
+    on a 202 is logged (reference logs the header at __init__.py:298),
+    whatever case the server spells its name in."""
     calls = {"n": 0}
 
     def transport(method, url, headers=None, data=None, params=None):
         calls["n"] += 1
         if calls["n"] < 3:
-            return HttpResponse(
-                202, headers={"X-Progress": f"{calls['n'] * 40}% complete"}
-            )
+            name = "X-Progress" if calls["n"] == 1 else "x-progress"
+            return HttpResponse(202, headers={name: f"{calls['n'] * 40}% complete"})
         return HttpResponse(200, content=b'{"output": []}')
 
     c = FhirBulkConnector(transport=transport, sleep=lambda s: None)
-    body = c.poll_status("https://fhir/status", "tok", on_progress=seen.append)
+    with caplog.at_level(logging.INFO, logger=fhir_bulk.logger.name):
+        body = c.poll_status("https://fhir/status", "tok")
     assert body == b'{"output": []}'
-    assert seen == ["40% complete", "80% complete"]
-    assert c.last_progress == "80% complete"
+    assert [r.getMessage() for r in caplog.records] == [
+        "https://fhir/status: 40% complete",
+        "https://fhir/status: 80% complete",
+    ]

@@ -152,10 +152,9 @@ def test_prepare_corpus_end_to_end(spark):
     )
 
 
-def test_remove_near_dups_exact_clusters(spark):
-    """Chain A~B~C with A!~C: one-pass drops B and C (over-removal);
-    exact components keep only the component minimum's survivors —
-    here the same, but an isolated later pair shows the difference."""
+def test_remove_near_dups_chain_keeps_min(spark):
+    """Chain A~B~C with A!~C: one-pass keep-min drops B and C (the
+    over-removal it accepts), and a disjoint pair keeps its min."""
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [
         (1, base + " one two", "en", "s", 0),
@@ -166,44 +165,18 @@ def test_remove_near_dups_exact_clusters(spark):
     onepass = sorted(
         r.doc_id for r in remove_near_dups(docs, min_jaccard=0.5).collect()
     )
-    exact = sorted(
-        r.doc_id
-        for r in remove_near_dups(docs, min_jaccard=0.5, exact_clusters=True).collect()
-    )
-    # both keep the min of the chain; neither resurrects dropped docs
+    # keeps the min of the chain; does not resurrect dropped docs
     assert onepass == [1]
-    assert exact == [1]
-    # disjoint pair far from the chain: both policies keep its min
+    # disjoint pair far from the chain: keeps its min
     rows2 = rows + [
         (10, "totally different words unrelated content here entirely", "en", "s", 0),
         (11, "totally different words unrelated content here mostly", "en", "s", 0),
     ]
     docs2 = _docs(spark, rows2)
-    exact2 = sorted(
-        r.doc_id
-        for r in remove_near_dups(docs2, min_jaccard=0.5, exact_clusters=True).collect()
+    onepass2 = sorted(
+        r.doc_id for r in remove_near_dups(docs2, min_jaccard=0.5).collect()
     )
-    assert exact2 == [1, 10]
-
-
-def test_prepare_corpus_pii_scrub_stage(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox email me a.b@example.com please thanks", "en", "s"),
-            (2, "totally clean document with several proper tokens here", "en", "s"),
-        ],
-        "doc_id long, text string, lang string, source string",
-    )
-    out, stats = prepare_corpus(docs, langs=("en",), scrub_pii=True)
-    names = [n for n, _ in stats.stages]
-    assert "pii_scrub" in names and names.index("pii_scrub") < names.index("exact_dedup")
-    texts = {r["doc_id"]: r["text"] for r in out.collect()}
-    assert "<EMAIL>" in texts[1] and "a.b@example.com" not in texts[1]
-    assert texts[2] == "totally clean document with several proper tokens here"
-    # default stays scrub-free (x40 oracle depends on it)
-    out2, stats2 = prepare_corpus(docs, langs=("en",))
-    assert "pii_scrub" not in [n for n, _ in stats2.stages]
-    assert "a.b@example.com" in {r["doc_id"]: r["text"] for r in out2.collect()}[1]
+    assert onepass2 == [1, 10]
 
 
 def test_write_training_shards_deterministic(spark, tmp_path):
@@ -247,7 +220,6 @@ def test_remove_dup_paragraphs_keep_first(spark):
     later-occurrence dup chunks drops out; survivors reassemble in
     chunk order."""
     from capgemini_himss24_fhirbulkdata_demo_spark.dataprep import (
-        prepare_corpus,
         remove_dup_paragraphs,
     )
 
@@ -267,48 +239,6 @@ def test_remove_dup_paragraphs_keep_first(spark):
         for r in remove_dup_paragraphs(docs, "doc_id", "text", 10).collect()
     }
     assert out == {1: f"{boiler} {uniq_a}", 3: uniq_c}
-
-    # wired as an optional prepare_corpus stage with its own count
-    clean, stats = prepare_corpus(
-        docs, langs=("en",), min_tokens=1, dedup_paragraphs=True
-    )
-    names = [n for n, _ in stats.stages]
-    assert "paragraph_dedup" in names
-    counts = dict(stats.stages)
-    assert counts["paragraph_dedup"] == 2
-
-
-def test_write_training_shards_jsonl(spark, tmp_path):
-    """JSONL shard export: manifest counts match, every line parses
-    as a JSON object with the source columns, and rows round-trip to
-    the same (doc_id, text) set as the input."""
-    import glob
-    import gzip
-    import json
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.catalog import load_table
-    from capgemini_himss24_fhirbulkdata_demo_spark.dataprep import (
-        write_training_shards,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    out = str(tmp_path / "shards_jsonl")
-    m = write_training_shards(docs, out, "doc_id", n_shards=3, fmt="jsonl")
-    assert m["format"] == "jsonl"
-    assert m["total_rows"] == docs.count()
-    assert sum(s["rows"] for s in m["shards"]) == m["total_rows"]
-    rows = []
-    for p in glob.glob(out + "/*.txt.gz") + glob.glob(out + "/*.gz"):
-        with gzip.open(p, "rt") as f:
-            rows += [json.loads(line) for line in f if line.strip()]
-    got = {(r["doc_id"], r["text"]) for r in rows}
-    exp = {(r.doc_id, r.text) for r in docs.collect()}
-    assert got == exp
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        write_training_shards(docs, out, "doc_id", n_shards=3, fmt="orc2")
 
 
 def test_remove_dup_spans_keep_first_and_coverage(spark):
@@ -355,30 +285,3 @@ def test_remove_dup_spans_keep_first_and_coverage(spark):
         for r in remove_dup_spans(docs2, "doc_id", "text", 3).collect()
     }
     assert got2 == {4: "a b c d k", 5: "m"}
-
-
-def test_prepare_corpus_span_stage(spark):
-    """dedup_spans wires remove_dup_spans into the chain between the
-    exact passes and near-dup, with its own PrepStats row."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.dataprep import (
-        prepare_corpus,
-    )
-
-    toks_a = " ".join(f"w{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [
-            (0, toks_a + " tail0 x y z", "en", "s0"),
-            (1, "head1 h2 h3 h4 h5 " + toks_a, "en", "s0"),
-            (2, "u0 u1 u2 u3 u4 u5 u6 u7 u8 u9", "en", "s1"),
-        ],
-        "doc_id BIGINT, text STRING, lang STRING, source STRING",
-    )
-    out, stats = prepare_corpus(docs, min_tokens=3, dedup_spans=True)
-    names = [n for n, _ in stats.stages]
-    assert "span_dedup" in names
-    assert names.index("exact_dedup") < names.index("span_dedup")
-    texts = {r["doc_id"]: r["text"] for r in out.collect()}
-    # doc 1 lost the 20-token shared run (doc 0 is keep-first)
-    assert texts[0].startswith("w0 ")
-    assert "w0" not in texts[1] and texts[1].startswith("head1")
-    assert texts[2].startswith("u0")

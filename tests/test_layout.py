@@ -1,4 +1,4 @@
-"""Every package module, function and class has a product caller.
+"""Every package module, function, class and option has a product caller.
 
 Walks the import statements (by AST; nothing is imported, no Spark)
 from the program's entry points. A package ``__init__`` does not make
@@ -10,6 +10,14 @@ the reason it stays.
 The same walk checks each top-level function and class: some product
 module must name it outside its own body, or it is listed in
 ``ALLOWED_DEFS`` with the reason it stays.
+
+And each defaulted parameter of a package function or method: some
+product call must pass it, by keyword or by position, or it is listed
+in ``ALLOWED_PARAMS`` with the reason it stays. Calls match by callee
+name (a bare name, an attribute, or the class name for ``__init__``).
+A call with ``*args`` or ``**kwargs``, or a function product code
+passes as a value, counts as setting every parameter. Dataclass fields
+are not checked.
 """
 
 from __future__ import annotations
@@ -209,4 +217,145 @@ def test_definition_allowlist_is_exact():
     stale = {d for d in ALLOWED_DEFS if d not in defs or d not in unreferenced}
     assert not stale, (
         f"allowlisted definitions that are gone or now referenced: {sorted(stale)}"
+    )
+
+
+# Parameter-level reach: a defaulted parameter of a package function or
+# method stays only while some product caller sets it; otherwise it is
+# the constant it defaults to.
+
+ALLOWED_PARAMS = {
+    f"{PKG}.pipeline.run_bulk_import.blob_base_url": "a deployment address",
+    f"{PKG}.connectors.fhir_bulk.FhirBulkConnector.get_access_token.signed_jwt": (
+        "ROADMAP item 2 wires it into the service, like build_jwt_assertion"
+    ),
+    f"{PKG}.connectors.fhir_bulk.FhirBulkConnector.get_access_token.scope": (
+        "ROADMAP item 2 wires it into the service, like build_jwt_assertion"
+    ),
+    f"{PKG}.api.handle_request.get_token": (
+        "ROADMAP item 2 wires it into the service, like build_jwt_assertion"
+    ),
+    **{
+        f"{PKG}.multimodal.binary.{p}": (
+            "builds the decoders' test inputs; the decoder paths stay as they are"
+        )
+        for p in (
+            "encode_jpeg_lossless.precision",
+            "encode_jpeg_lossless.point_transform",
+            "encode_jpeg_lossless.restart_interval",
+            "encode_png.palette",
+            "encode_pnm.rgb",
+        )
+    },
+}
+
+
+def _caller_trees() -> list[ast.Module]:
+    """The product modules ``_references`` reads, plus ``tools/``."""
+    paths = [
+        path
+        for mod, path in FILES.items()
+        if mod not in ALLOWED and not mod.rpartition(".")[2].startswith("test_")
+    ]
+    return [ast.parse(p.read_text()) for p in [*paths, *sorted((REPO / "tools").glob("*.py"))]]
+
+
+def _defaulted_params() -> dict[str, tuple[str, list[str], list[str]]]:
+    """``module.[Class.]function`` -> (the name calls use, parameters
+    a call fills by position, defaulted parameters) for every
+    top-level function and method of a top-level class in the package,
+    outside ``ALLOWED`` modules and ``ALLOWED_DEFS``. A method's calls
+    use its own name, ``__init__``'s the class name."""
+    out = {}
+    for qual, (_, node) in _top_level_defs().items():
+        if qual in ALLOWED_DEFS:
+            continue
+        if isinstance(node, ast.ClassDef):
+            funcs = [
+                (f"{qual}.{f.name}", node.name if f.name == "__init__" else f.name, f)
+                for f in node.body
+                if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+        else:
+            funcs = [(qual, node.name, node)]
+        for fqual, call_name, f in funcs:
+            a = f.args
+            positional = [p.arg for p in (*a.posonlyargs, *a.args)]
+            decorators = {getattr(d, "id", None) for d in f.decorator_list}
+            if f is not node and "staticmethod" not in decorators:
+                positional = positional[1:]  # self / cls
+            defaulted = positional[len(positional) - len(a.defaults):] if a.defaults else []
+            defaulted += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            if defaulted:
+                out[fqual] = (call_name, positional, defaulted)
+    return out
+
+
+def _product_calls() -> tuple[dict[str, set[str]], dict[str, int], set[str]]:
+    """Over the product modules, per callee name: the keywords calls
+    pass, the most positional arguments one call passes, and the names
+    whose every parameter counts as set — called with ``*args`` or
+    ``**kwargs``, or used as a value (a dispatch table, a default
+    transport), so the calls that reach them cannot be named."""
+    keywords: dict[str, set[str]] = {}
+    positional: dict[str, int] = {}
+    everything: set[str] = set()
+
+    def callee(node) -> str | None:
+        return getattr(node, "id", None) or getattr(node, "attr", None)
+
+    for tree in _caller_trees():
+        callees, annotations = set(), set()
+        for node in ast.walk(tree):
+            ann = getattr(node, "annotation", None) or getattr(node, "returns", None)
+            if isinstance(ann, ast.AST):
+                annotations.update(id(n) for n in ast.walk(ann))
+            if not isinstance(node, ast.Call):
+                continue
+            callees.add(id(node.func))
+            name = callee(node.func)
+            if any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            ):
+                everything.add(name)
+            keywords.setdefault(name, set()).update(k.arg for k in node.keywords)
+            positional[name] = max(positional.get(name, 0), len(node.args))
+        everything.update(
+            callee(node)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Name, ast.Attribute))
+            and isinstance(node.ctx, ast.Load)
+            and id(node) not in callees
+            and id(node) not in annotations
+        )
+    return keywords, positional, everything
+
+
+def _unset_params() -> set[str]:
+    keywords, positional, everything = _product_calls()
+    out = set()
+    for qual, (name, params, defaulted) in _defaulted_params().items():
+        if name in everything:
+            continue
+        passed = keywords.get(name, set()) | set(params[: positional.get(name, 0)])
+        out.update(f"{qual}.{p}" for p in defaulted if p not in passed)
+    return out
+
+
+def test_every_defaulted_parameter_is_set_by_a_product_caller():
+    unset = _unset_params() - ALLOWED_PARAMS.keys()
+    assert not unset, (
+        "defaulted parameters no product caller sets (make each the "
+        f"constant it defaults to): {sorted(unset)}"
+    )
+
+
+def test_parameter_allowlist_is_exact():
+    defined = {
+        f"{qual}.{p}" for qual, (_, _, defaulted) in _defaulted_params().items() for p in defaulted
+    }
+    unset = _unset_params()
+    stale = {p for p in ALLOWED_PARAMS if p not in defined or p not in unset}
+    assert not stale, (
+        f"allowlisted parameters that are gone or now set: {sorted(stale)}"
     )

@@ -38,15 +38,6 @@ def test_asof_join_backward(spark):
     assert got[(2, 5)] == (None, None)  # no quote at-or-before -> left row kept
 
 
-def test_asof_join_forward(spark):
-    left = spark.createDataFrame([(1, 10)], "k INT, t INT")
-    right = spark.createDataFrame([(1, 9, "a"), (1, 12, "b"), (1, 15, "c")],
-                                  "k INT, rt INT, v STRING")
-    r = asof_join(left, right, on=[("k", "k")], ordinal=("t", "rt"),
-                  direction="forward").first()
-    assert (r.rt, r.v) == (12, "b")
-
-
 def test_top_k_matches_query(spark):
     orders = load_table(spark, SF_DIR, "orders")
     got = top_k_per_group(
@@ -168,8 +159,8 @@ def test_ivf_dim_param_and_empty_guard(spark):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     # passing dim from metadata matches the probed build bit-for-bit
-    _, cent_probed = ivf_assign(emb, "vec_id", "embedding", n_lists=8)
-    _, cent_given = ivf_assign(emb, "vec_id", "embedding", n_lists=8, dim=64)
+    _, cent_probed = ivf_assign(emb, "embedding", n_lists=8)
+    _, cent_given = ivf_assign(emb, "embedding", n_lists=8, dim=64)
     assert sorted(map(tuple, cent_probed.collect())) == sorted(
         map(tuple, cent_given.collect())
     )
@@ -191,17 +182,6 @@ def test_shingle_short_docs(spark):
     assert got[1] == []  # single token -> empty, not a crash
     assert got[2] == ["two words"]
     assert sorted(got[3]) == ["a b", "b c"]
-
-
-def test_salted_join_rejects_outer(spark):
-    import pytest as _pytest
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.operators import salted_join
-
-    a = spark.createDataFrame([(1, 1.0)], "k INT, v DOUBLE")
-    b = spark.createDataFrame([(1, 2.0)], "k2 INT, w DOUBLE")
-    with _pytest.raises(ValueError, match="multiplicity"):
-        salted_join(a, b, on=[("k", "k2")], how="full")
 
 
 def test_connected_components_chain_graph(spark):
@@ -235,7 +215,7 @@ def test_ivf_full_probe_equals_bruteforce(spark):
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    assigned, cents = ivf_assign(emb, "vec_id", "embedding", n_lists=8, dim=64)
+    assigned, cents = ivf_assign(emb, "embedding", n_lists=8, dim=64)
     n_lists = cents.count()
     q = emb.filter(F.col("vec_id") < 5)
     ivf = ivf_topk(
@@ -246,34 +226,6 @@ def test_ivf_full_probe_equals_bruteforce(spark):
     assert sorted((r.query_id, r.neighbor_id, r.rank) for r in ivf) == sorted(
         (r.query_id, r.neighbor_id, r.rank) for r in brute
     )
-
-
-def test_ivf_sampled_training(spark):
-    """train_fraction builds centroids on a hash-gated sample;
-    assignment still covers the full table, results deterministic."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.operators.similarity import (
-        ivf_assign,
-        ivf_topk,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    assigned, cents = ivf_assign(
-        emb, "vec_id", "embedding", n_lists=8, dim=64, train_fraction=0.5
-    )
-    # full-table assignment regardless of the training sample
-    assert assigned.count() == emb.count()
-    # fixtures have large buckets: half-sample still covers every cell
-    full_cells = {r.ivf_list for r in ivf_assign(emb, "vec_id", "embedding",
-                                                 n_lists=8, dim=64)[1].collect()}
-    samp_cells = {r.ivf_list for r in cents.collect()}
-    assert samp_cells == full_cells
-    q = emb.filter(F.col("vec_id") < 3)
-    out1 = ivf_topk(q, assigned, cents, "vec_id", "vec_id", "embedding",
-                    "embedding", k=3, n_probe=2).collect()
-    out2 = ivf_topk(q, assigned, cents, "vec_id", "vec_id", "embedding",
-                    "embedding", k=3, n_probe=2).collect()
-    assert sorted(map(tuple, out1)) == sorted(map(tuple, out2))
-    assert {r.query_id for r in out1} == {0, 1, 2}
 
 
 def test_connected_components_releases_round_checkpoints(spark):
@@ -295,6 +247,8 @@ def test_connected_components_releases_round_checkpoints(spark):
 
 
 def test_connected_components_unconverged_raises(spark):
+    """A path longer than the 20-round budget: vertex 31's label needs
+    30 hops, so the labels have not settled when the rounds run out."""
     import pytest
 
     from capgemini_himss24_fhirbulkdata_demo_spark.operators.dedup import (
@@ -302,10 +256,10 @@ def test_connected_components_unconverged_raises(spark):
     )
 
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 7)], "id_a BIGINT, id_b BIGINT"
+        [(i, i + 1) for i in range(1, 31)], "id_a BIGINT, id_b BIGINT"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, "id_a", "id_b", max_iter=2)
+        connected_components(chain, "id_a", "id_b")
 
 
 def test_pii_redacts_and_counts(spark):
@@ -351,117 +305,12 @@ def test_assign_nearest_centroid_small(spark):
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
         "ivf_list long, centroid array<double>",
     )
-    out = assign_nearest_centroid(vecs, cents, "id", "v")
+    out = assign_nearest_centroid(vecs, cents, "v")
     got = {r["id"]: r["cluster"] for r in out.collect()}
     assert got == {1: 0, 2: 0, 3: 1, 4: 1}
     # exactly one row per input vector, original columns preserved
     assert out.count() == 4
     assert out.columns == ["id", "v", "cluster"]
-
-
-def test_ivf_sampled_train_orphan_bucket_reassigned(spark):
-    """A bucket whose every member fails the deterministic train gate
-    gets no centroid; its members must be reassigned to the nearest
-    existing centroid — searchable, not silently dropped (round-2
-    verdict item 3)."""
-    import hashlib
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.operators.similarity import (
-        hyperplanes,
-        ivf_assign,
-        ivf_topk,
-    )
-
-    dim, frac = 4, 0.5
-    bound = int(frac * 0xFFFF)
-
-    def gate(i: int) -> bool:  # mirror of ivf_assign's md5 train gate
-        return int(hashlib.md5(str(i).encode()).hexdigest()[:4], 16) <= bound
-
-    planes = hyperplanes(2, dim)  # n_lists=4 -> 2 planes
-
-    def cell(v):  # mirror of lsh_bucket
-        b = 0
-        for p, coeffs in enumerate(planes):
-            if sum(c * x for c, x in zip(coeffs, v)) > 0:
-                b |= 1 << p
-        return b
-
-    va = [float(c) for c in planes[0]]
-    vb = [-x for x in va]
-    assert cell(va) != cell(vb)
-    passing = [i for i in range(100) if gate(i)]
-    failing = [i for i in range(100) if not gate(i)]
-    rows = [(i, va) for i in passing[:3]] + [(failing[0], vb)]
-    emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-
-    assigned, cents = ivf_assign(
-        emb, "vec_id", "embedding", n_lists=4, dim=dim, train_fraction=frac
-    )
-    # the sample really did orphan vb's cell
-    assert {r.ivf_list for r in cents.collect()} == {cell(va)}
-    got = {r.vec_id: r.ivf_list for r in assigned.collect()}
-    assert len(got) == 4  # full-table assignment, no row loss
-    assert got[failing[0]] == cell(va)  # orphan routed to nearest centroid
-    # and it is reachable by search: one-probe query finds it
-    q = emb.filter(F.col("vec_id") == passing[0])
-    res = ivf_topk(
-        q, assigned, cents, "vec_id", "vec_id", "embedding", "embedding",
-        k=3, n_probe=1,
-    ).collect()
-    assert failing[0] in {r.neighbor_id for r in res}
-
-
-def test_semdedup_n_lists_budget_rule():
-    """Executable form of SCALE.md's k ≈ corpus/target rule."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.operators.similarity import (
-        semdedup_n_lists,
-    )
-
-    assert semdedup_n_lists(0) == 1
-    assert semdedup_n_lists(999_999) == 1
-    assert semdedup_n_lists(1_000_001) == 2
-    assert semdedup_n_lists(50_000_000_000) == 50_000
-    # shrinking the budget grows the cluster count
-    assert semdedup_n_lists(10_000, target_cluster_rows=100) == 100
-    assert semdedup_n_lists(10_000, target_cluster_rows=10) == 1000
-    # broadcast ceiling clamps
-    assert semdedup_n_lists(10**12, target_cluster_rows=1) == 1 << 16
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        semdedup_n_lists(-1)
-    with _pytest.raises(ValueError):
-        semdedup_n_lists(10, target_cluster_rows=0)
-
-
-def test_semdedup_budget_path_matches_explicit(spark):
-    """semdedup(corpus_rows=...) derives n_lists via the budget rule
-    and must equal the explicitly-pinned run — x16's registered form
-    is the n_lists=32 instance of the same operator."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.operators.similarity import (
-        semdedup,
-        semdedup_n_lists,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    target = max(1, n // 20)  # force a multi-cluster derivation
-    k = semdedup_n_lists(n, target_cluster_rows=target)
-    a1, d1 = semdedup(emb, "vec_id", "embedding", threshold=0.95,
-                      corpus_rows=n, target_cluster_rows=target, dim=64)
-    a2, d2 = semdedup(emb, "vec_id", "embedding", threshold=0.95,
-                      n_lists=k, dim=64)
-    assert sorted((r.vec_id, r.cluster) for r in a1.collect()) == sorted(
-        (r.vec_id, r.cluster) for r in a2.collect()
-    )
-    assert sorted(map(tuple, d1.collect())) == sorted(map(tuple, d2.collect()))
-    # every vector stays assigned — no loss through the budget path
-    assert a1.count() == n
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="n_lists or corpus_rows"):
-        semdedup(emb, "vec_id", "embedding", threshold=0.9)
 
 
 def test_persisting_queries_attach_cached_deps(spark):

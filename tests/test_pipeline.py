@@ -341,21 +341,24 @@ def test_pass_through_is_byte_identical(spark, tmp_path):
         assert f.read() == patients
 
 
-def test_eob_bench_landing_dir_matches_single_file(tmp_path):
+def test_eob_bench_landing_dir_matches_single_file(tmp_path, monkeypatch):
     """The 64-file bench landing dir carries exactly the records the
     single-file writer produces — same count, same content, contiguous
     blocks per file — so the v5 bench input change alters file layout
     only, never the measured workload."""
     import json
 
+    from capgemini_himss24_fhirbulkdata_demo_spark.transforms import benchdata
     from capgemini_himss24_fhirbulkdata_demo_spark.transforms.benchdata import (
         write_eob_ndjson,
         write_eob_ndjson_dir,
     )
 
+    # 7 files of 143 records leave a shorter last block
+    monkeypatch.setattr(benchdata, "EOB_LANDING_FILES", 7)
     n = 1_000
     single = write_eob_ndjson(str(tmp_path / "one.ndjson"), n)
-    land = write_eob_ndjson_dir(str(tmp_path / "landing"), n, n_files=7)
+    land = write_eob_ndjson_dir(str(tmp_path / "landing"), n)
     files = sorted(
         f for f in os.listdir(land) if f.endswith(".ndjson")
     )

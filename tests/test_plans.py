@@ -381,8 +381,8 @@ def test_semdedup_skew_guard(spark):
     """The intra-cluster pair join shuffles on the cluster id; ragged
     clusters are the expected skew shape. Guard: session policy keeps
     AQE skew-join splitting ON, and the pair join is a shuffled
-    hash/sort-merge join (never a nested loop) even with a
-    budget-derived cluster count."""
+    hash/sort-merge join (never a nested loop) even with 16
+    clusters."""
     from capgemini_himss24_fhirbulkdata_demo_spark.catalog import load_table
     from capgemini_himss24_fhirbulkdata_demo_spark.operators import semdedup
 
@@ -390,7 +390,7 @@ def test_semdedup_skew_guard(spark):
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     _, dup = semdedup(
         emb, "vec_id", "embedding", threshold=0.95,
-        corpus_rows=1_000_000, target_cluster_rows=62_500, dim=64,
+        n_lists=16, dim=64,
     )
     strategies = join_strategies(dup)
     assert "CartesianProduct" not in strategies, strategies

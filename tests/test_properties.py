@@ -57,9 +57,9 @@ def test_jaccard_matches_python_sets(spark, xs, ys):
     df = spark.createDataFrame(
         [(sorted(sx), sorted(sy))], "a: array<bigint>, b: array<bigint>"
     )
-    got = df.select(jaccard(F.col("a"), F.col("b"), scale=9).alias("j")).first().j
-    exp = round(len(sx & sy) / len(sx | sy), 9)
-    assert abs(got - exp) < 1e-9
+    got = df.select(jaccard(F.col("a"), F.col("b")).alias("j")).first().j
+    exp = len(sx & sy) / len(sx | sy)
+    assert abs(got - exp) <= 0.5e-4 + 1e-12  # rounded to 4 decimals
 
 
 @settings(max_examples=10, deadline=None,

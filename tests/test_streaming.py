@@ -127,7 +127,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 
         stream = read_parquet_stream(spark, landing, EVENTS_SCHEMA)
         agg = (
-            tumbling_agg(stream, window_size="1 hour", watermark="2 hours")
+            tumbling_agg(stream)
             .writeStream.foreachBatch(commit)
             .outputMode("append")
             .option("checkpointLocation", ck)
@@ -221,90 +221,78 @@ def test_complete_and_update_output_modes(spark, tmp_path):
     assert ("click", 2) in got3 and ("view", 1) in got3
 
 
-def test_runner_sizes_state_partitions(spark, landed_events, tmp_path):
-    """Engine-owned state sizing (r7 verdict #2): start_stateful_query
-    pins the query's state-store partition count to state_partitions
-    at first checkpoint, restores the session shuffle conf right after
-    start, and produces the identical result set to a raw
-    session-default drain of the same plan."""
+def _drain_rows(spark, landing, ck, *, raw=False):
+    """Drain ``tumbling_agg`` over ``landing`` in update mode; the set
+    of emitted rows. ``raw`` starts the query without the runner, so
+    its state takes the session's shuffle partition count."""
     from capgemini_himss24_fhirbulkdata_demo_spark.streaming import (
         start_stateful_query,
     )
 
-    def drain(ck, **kw):
-        rows = []
+    rows = []
 
-        def commit(batch_df, batch_id):
-            rows.extend(tuple(r) for r in batch_df.collect())
+    def commit(batch_df, batch_id):
+        rows.extend(tuple(r) for r in batch_df.collect())
 
-        q = start_stateful_query(
-            tumbling_agg(read_parquet_stream(spark, landed_events, EVENTS_SCHEMA)),
-            ck,
-            foreach_batch=commit,
-            output_mode="update",
-            **kw,
+    stream = tumbling_agg(read_parquet_stream(spark, landing, EVENTS_SCHEMA))
+    if raw:
+        q = (
+            stream.writeStream.option("checkpointLocation", ck)
+            .outputMode("update")
+            .foreachBatch(commit)
+            .trigger(availableNow=True)
+            .start()
         )
-        q.awaitTermination(120)
-        return set(rows)
+    else:
+        q = start_stateful_query(stream, ck, foreach_batch=commit, output_mode="update")
+    q.awaitTermination(120)
+    return set(rows)
 
+
+def _state_dirs(ck):
+    return sorted(
+        int(d) for d in os.listdir(os.path.join(ck, "state", "0")) if d.isdigit()
+    )
+
+
+def test_runner_sizes_state_partitions(spark, landed_events, tmp_path, monkeypatch):
+    """Engine-owned state sizing (r7 verdict #2): start_stateful_query
+    pins the query's state-store partition count to the wave size at
+    first checkpoint, restores the session shuffle conf right after
+    start, and produces the identical result set to a raw
+    session-default drain of the same plan."""
+    from capgemini_himss24_fhirbulkdata_demo_spark.streaming import runner
+
+    monkeypatch.setattr(runner, "_one_wave", lambda spark: 3)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     ck_sized = str(tmp_path / "ck_sized")
-    got = drain(ck_sized, state_partitions=3)
+    got = _drain_rows(spark, landed_events, ck_sized)
     # session conf untouched for the caller (cloned into the query)
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     # state store pinned at exactly 3 partitions in the checkpoint
-    state_dirs = sorted(
-        d for d in os.listdir(os.path.join(ck_sized, "state", "0")) if d.isdigit()
-    )
-    assert state_dirs == ["0", "1", "2"]
-    # sizing is a physical knob only: same rows as the inherit path
-    exp = drain(str(tmp_path / "ck_default"), state_partitions=None)
+    assert _state_dirs(ck_sized) == [0, 1, 2]
+    # sizing is a physical knob only: same rows as the raw drain
+    exp = _drain_rows(spark, landed_events, str(tmp_path / "ck_default"), raw=True)
     assert got == exp and len(got) > 0
 
 
 def test_runner_default_state_is_one_task_wave(spark, landed_events, tmp_path):
-    """By default start_stateful_query pins one task wave of state
-    partitions (sc.defaultParallelism, in local mode no more than the
-    JVM's processors), whatever the session's shuffle count, and emits
-    the same rows as state_partitions=None, which inherits that
-    count."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming import (
-        start_stateful_query,
-    )
-
-    def drain(ck, **kw):
-        rows = []
-
-        def commit(batch_df, batch_id):
-            rows.extend(tuple(r) for r in batch_df.collect())
-
-        q = start_stateful_query(
-            tumbling_agg(read_parquet_stream(spark, landed_events, EVENTS_SCHEMA)),
-            ck,
-            foreach_batch=commit,
-            output_mode="update",
-            **kw,
-        )
-        q.awaitTermination(120)
-        return set(rows)
-
-    def state_dirs(ck):
-        return sorted(
-            int(d) for d in os.listdir(os.path.join(ck, "state", "0")) if d.isdigit()
-        )
-
+    """start_stateful_query pins one task wave of state partitions
+    (sc.defaultParallelism, in local mode no more than the JVM's
+    processors), whatever the session's shuffle count, and emits the
+    same rows as a raw drain, which inherits that count."""
     ck_wave, ck_inherit = str(tmp_path / "ck_wave"), str(tmp_path / "ck_inherit")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try:
-        got = drain(ck_wave)
-        exp = drain(ck_inherit, state_partitions=None)
+        got = _drain_rows(spark, landed_events, ck_wave)
+        exp = _drain_rows(spark, landed_events, ck_inherit, raw=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     sc = spark.sparkContext
     cores = sc._jvm.java.lang.Runtime.getRuntime().availableProcessors()
-    assert state_dirs(ck_wave) == list(range(min(sc.defaultParallelism, cores)))
-    assert state_dirs(ck_inherit) == list(range(7))
+    assert _state_dirs(ck_wave) == list(range(min(sc.defaultParallelism, cores)))
+    assert _state_dirs(ck_inherit) == list(range(7))
     assert got == exp and len(got) > 0
 
 
@@ -329,16 +317,15 @@ def test_runner_one_wave_caps_local_slots_at_cores():
     assert wave("spark://head:7077", 32) == 32
 
 
-def test_runner_restart_keeps_pinned_state_partitions(spark, tmp_path):
+def test_runner_restart_keeps_pinned_state_partitions(spark, tmp_path, monkeypatch):
     """Documented runner caveat: a restart from an existing checkpoint
-    keeps the ORIGINALLY pinned state partition count — a different
-    state_partitions on restart must neither error nor repartition
+    keeps the ORIGINALLY pinned state partition count — a restart on
+    a host with a wider task wave must neither error nor repartition
     the state."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
-
     from capgemini_himss24_fhirbulkdata_demo_spark.streaming import (
+        runner,
         start_stateful_query,
     )
 
@@ -359,7 +346,8 @@ def test_runner_restart_keeps_pinned_state_partitions(spark, tmp_path):
     def commit(batch_df, batch_id):
         rows.extend(batch_df.collect())
 
-    def run(state_partitions):
+    def run(wave):
+        monkeypatch.setattr(runner, "_one_wave", lambda spark: wave)
         q = start_stateful_query(
             tumbling_agg(
                 read_parquet_stream(spark, landing, EVENTS_SCHEMA)
@@ -367,7 +355,6 @@ def test_runner_restart_keeps_pinned_state_partitions(spark, tmp_path):
             ck,
             foreach_batch=commit,
             output_mode="update",
-            state_partitions=state_partitions,
         )
         q.awaitTermination(120)
 
@@ -376,13 +363,8 @@ def test_runner_restart_keeps_pinned_state_partitions(spark, tmp_path):
         [(3, t0 + dt.timedelta(minutes=5), 2, "view", 2.0, None)],
         "second",
     )
-    run(16)  # restart asks for 16; checkpoint must keep 3
-    state_dirs = sorted(
-        d
-        for d in os.listdir(os.path.join(ck, "state", "0"))
-        if d.isdigit()
-    )
-    assert state_dirs == ["0", "1", "2"]
+    run(16)  # restart sizes a 16-task wave; checkpoint must keep 3
+    assert _state_dirs(ck) == [0, 1, 2]
     assert len(rows) > 0  # the restarted query processed the new file
 
 
