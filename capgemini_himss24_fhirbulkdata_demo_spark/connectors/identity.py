@@ -62,7 +62,7 @@ class ManagedIdentityCredential:
     now: Callable[[], datetime] = _utcnow
     sleep: Callable[[float], None] = _time.sleep
     env: dict[str, str] | None = None  # None = os.environ (injectable)
-    _cache: dict[str, tuple[str, datetime]] = field(default_factory=dict)
+    _cache: dict[str, tuple[str, datetime]] = field(default_factory=dict, init=False)
 
     def _get(self) -> tuple[Transport, dict[str, str]]:
         return self.transport or _requests_transport, (

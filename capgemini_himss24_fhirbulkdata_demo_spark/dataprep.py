@@ -398,7 +398,7 @@ def token_budget_cut(docs: DataFrame, budget_tokens: int) -> DataFrame:
             .drop("__cum")
         )
     sess = docs.sparkSession
-    n_ranges = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_ranges = int(sess.conf.get("spark.sql.shuffle.partitions"))
     qs = [i / n_ranges for i in range(1, n_ranges)]
     bounds = (
         docs.agg(

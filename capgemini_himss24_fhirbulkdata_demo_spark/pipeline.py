@@ -234,8 +234,7 @@ def run_bulk_import(
 
     res.archived = connector.archive_files(res.landed, os.path.join(work_dir, "archive"))
     if state is not None:
-        state.advance(server_url, group_id, next_cursor)
-        res.since_advanced_to = next_cursor
+        res.since_advanced_to = state.advance(server_url, group_id, next_cursor)
     return res
 
 

@@ -2,12 +2,40 @@
 
 Engine-wide session policy (SURVEY §4.3.6): UTC session timezone,
 Arrow enabled for pandas interchange, AQE on (join-strategy switching,
-skew handling, shuffle coalescing at scale), and a shuffle-partition
-count sized for the local test harness but overridable for clusters.
+skew handling, shuffle coalescing at scale), and one shuffle-partition
+count for batch queries and streams alike: one task wave.
 
-At 100 TB the same code runs with ``shuffle_partitions`` set to
-O(2–4× total executor cores) (or left to AQE's coalescing with a high
-initial value); nothing else changes.
+One wave is as many tasks as run at once: ``sc.defaultParallelism``,
+the task slots, and in local mode no more than the driver JVM's
+available processors, since there the slots are threads on this
+host's cores (``local[32]`` on 4 cores runs 32 tasks as eight waves).
+``get_spark`` sets it once, right after the session starts, and no
+other package code writes session conf: the service shares one session
+between requests, so a conf change would reach every request running
+on it.
+
+A stateful stream pins its state-store partition count from this conf
+at its first checkpoint, and every micro-batch runs one task per state
+partition, each committing its store however few keys it holds.
+Measured on a warm JVM (4 vCPU, ``local[4]``, checkpoints through the
+file-system checkpoint manager below), a ``tumbling_agg`` drain of
+10,000 events landed as 8 files, two per micro-batch, took 1.30 s at 8
+state partitions, which ran as two task waves per batch, 1.13 s at 4,
+1.03 s at 2 and 0.97 s at 1 (medians of 5, interleaved). Fewer
+partitions than a wave were faster still on this small state, but
+leave cores idle when the state is large; one wave is the most that
+adds no wave. The RocksDB state store was slower than the default
+HDFS-backed store at 1, 4 and 8 partitions: 1.13, 1.19 and 1.60 s
+without changelog checkpointing, 1.04, 1.16 and 1.36 s with it; at 2
+partitions the three were within 0.1 s of each other. At ``local[32]``
+on the same host, a drain of 100,000 events took 3.1 s at 32 state
+partitions, 1.5 s at 8 and 1.2 s at one wave, 4 (medians of 3). Each
+state-partition commit costs less than under Spark's default
+FileContext checkpoint manager (2.4, 1.9, 1.5 and 1.5 s for the
+``local[4]`` drain, 7.3, 2.8 and 2.5 s at ``local[32]``), so a wave
+adds less than it did, but it still adds. A query restarted from its
+checkpoint keeps the count it started with, even on a host with more
+cores.
 
 Streaming checkpoints commit through Spark's
 ``FileSystemBasedCheckpointFileManager``: each file is written to a
@@ -86,7 +114,6 @@ from pyspark.sql import SparkSession
 logger = logging.getLogger(__name__)
 
 APP_NAME = "capgemini-himss24-fhirbulkdata-demo-spark"
-DEFAULT_SHUFFLE_PARTITIONS = 32
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
@@ -159,9 +186,18 @@ def _local_fs_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
     return {FS_IMPL: LOCAL_FS_CLASS, DRIVER_CLASSPATH: f"{cp}{os.pathsep}{classes}" if cp else classes}
 
 
+def _one_wave(spark) -> int:
+    """How many tasks run at once: the task slots, capped in local mode
+    by the processors the driver JVM, and so its task threads, has."""
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    if sc.master.startswith("local"):
+        slots = min(slots, sc._jvm.java.lang.Runtime.getRuntime().availableProcessors())
+    return slots
+
+
 def get_spark(
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
@@ -183,10 +219,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
         # Read timestamps as written; fixtures are tz-naive parquet.
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
@@ -206,4 +238,7 @@ def get_spark(
     # chmod in-process instead of one process per written file (module docstring)
     for k, v in {**extra_conf, **_local_fs_conf(master, extra_conf)}.items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    # one task wave for batch shuffles and stream state alike (module docstring)
+    spark.conf.set("spark.sql.shuffle.partitions", str(_one_wave(spark)))
+    return spark

@@ -7,8 +7,9 @@ plus sleep-based polling (``:282-326``). Here that becomes:
 - a file-source ``readStream`` over a parquet landing directory
   (new files appear → new micro-batch),
 - event-time tumbling windows with a watermark,
-- a runner that starts a stateful query with its state sized to one
-  task wave (``runner.start_stateful_query``).
+- a runner that starts a stateful query with ``availableNow``
+  (``runner.start_stateful_query``); its state takes the session's
+  shuffle count, one task wave (``session.get_spark``).
 
 The incremental FHIR import is not a stream: it is the batch route
 ``POST bulkimport/latest`` with the persisted ``_since`` cursor

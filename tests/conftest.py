@@ -17,7 +17,7 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
 def spark():
     from capgemini_himss24_fhirbulkdata_demo_spark.session import get_spark
 
-    s = get_spark(master="local[4]", shuffle_partitions=4)
+    s = get_spark(master="local[4]")
     yield s
 
 

@@ -18,6 +18,9 @@ name (a bare name, an attribute, or the class name for ``__init__``).
 A call with ``*args`` or ``**kwargs``, or a function product code
 passes as a value, counts as setting every parameter. Dataclass fields
 are not checked.
+
+Last, no package module but ``session`` calls ``.conf.set`` or
+``.conf.unset``: the session factory alone writes session conf.
 """
 
 from __future__ import annotations
@@ -359,3 +362,32 @@ def test_parameter_allowlist_is_exact():
     assert not stale, (
         f"allowlisted parameters that are gone or now set: {sorted(stale)}"
     )
+
+
+# Session conf: the service shares one session between requests, so
+# only the session factory writes its conf (session.py's docstring).
+
+
+def _conf_writes() -> list[str]:
+    """``module:line`` of every ``<x>.conf.set(...)`` or
+    ``<x>.conf.unset(...)`` call in a package module other than
+    ``session``."""
+    out = []
+    for mod, path in FILES.items():
+        if mod.split(".")[0] != PKG or mod == f"{PKG}.session":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            f = node.func if isinstance(node, ast.Call) else None
+            if (
+                isinstance(f, ast.Attribute)
+                and f.attr in ("set", "unset")
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "conf"
+            ):
+                out.append(f"{mod}:{node.lineno}")
+    return out
+
+
+def test_only_the_session_factory_writes_session_conf():
+    writes = _conf_writes()
+    assert not writes, f"session conf written outside session.get_spark: {writes}"

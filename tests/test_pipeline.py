@@ -153,6 +153,79 @@ def test_high_water_mark_concurrent_advances_keep_both_keys(tmp_path, monkeypatc
     assert hwm.get("srv2", "g") == "2024-02-02T00:00:00"
 
 
+def test_high_water_mark_never_moves_back(tmp_path):
+    """Overlapping requests for one key: the one that finishes last may
+    hold the older transactionTime. The cursor keeps the later instant,
+    compared across UTC offsets, and stores the server's string as
+    sent."""
+    hwm = HighWaterMark(str(tmp_path / "s.json"))
+    hwm.advance("srv", "g", "2024-03-01T12:00:00+00:00")
+    # 11:00Z, older: the first value stays
+    assert hwm.advance("srv", "g", "2024-03-01T08:00:00-03:00") == "2024-03-01T12:00:00+00:00"
+    assert hwm.get("srv", "g") == "2024-03-01T12:00:00+00:00"
+    # 13:00Z, later, although its string sorts first
+    assert hwm.advance("srv", "g", "2024-03-01T10:00:00-03:00") == "2024-03-01T10:00:00-03:00"
+    assert hwm.get("srv", "g") == "2024-03-01T10:00:00-03:00"
+
+
+def test_high_water_mark_rejects_a_cursor_that_names_no_instant(tmp_path):
+    path = tmp_path / "s.json"
+    hwm = HighWaterMark(str(path))
+    hwm.advance("srv", "g", "2024-03-01T12:00:00+00:00")
+    before = path.read_bytes()
+    with pytest.raises(ValueError):
+        hwm.advance("srv", "g", "yesterday")
+    assert path.read_bytes() == before
+
+
+_ADVANCE_200_KEYS = """
+import os, sys, time
+from capgemini_himss24_fhirbulkdata_demo_spark.connectors.state import HighWaterMark
+path, worker, go = sys.argv[1:]
+hwm = HighWaterMark(path)
+while not os.path.exists(go):
+    time.sleep(0.001)
+for i in range(200):
+    hwm.advance(f"srv-{worker}-{i}", "g", "2024-03-01T12:00:00+00:00")
+"""
+
+
+def test_high_water_mark_two_processes_keep_every_key(tmp_path):
+    """Two processes sharing one state file, each advancing 200
+    distinct keys at once: every key persists."""
+    import subprocess
+    import sys
+    import time
+
+    path, go = str(tmp_path / "s.json"), tmp_path / "go"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    workers = [
+        subprocess.Popen([sys.executable, "-c", _ADVANCE_200_KEYS, path, w, str(go)], cwd=repo)
+        for w in "ab"
+    ]
+    time.sleep(1)  # both import the module, then start together
+    go.touch()
+    assert [w.wait(120) for w in workers] == [0, 0]
+    with open(path) as f:
+        assert len(json.load(f)) == 400
+
+
+def test_run_reports_the_cursor_it_stored(spark, tmp_path):
+    """A request whose cursor is older than the stored one (a request
+    for the same key finished first) leaves the stored cursor and
+    reports it."""
+    state = HighWaterMark(str(tmp_path / "state.json"))
+    later = "2999-01-01T00:00:00+00:00"
+    state.advance("https://fhir.epic.example", "g1", later)
+    res = run_bulk_import(
+        spark, FhirBulkConnector(transport=FakeServer(), sleep=lambda s: None),
+        "https://fhir.epic.example", "g1", "tok", "https://cg", "itok",
+        str(tmp_path / "run"), state=state,
+    )
+    assert res.since_advanced_to == later
+    assert state.get("https://fhir.epic.example", "g1") == later
+
+
 def test_failed_file_fetch_fails_the_request(spark, tmp_path):
     """An export file that answers 404 is not export data: the request
     raises, posts no $import and leaves the cursor where it was."""

@@ -223,8 +223,8 @@ def test_complete_and_update_output_modes(spark, tmp_path):
 
 def _drain_rows(spark, landing, ck, *, raw=False):
     """Drain ``tumbling_agg`` over ``landing`` in update mode; the set
-    of emitted rows. ``raw`` starts the query without the runner, so
-    its state takes the session's shuffle partition count."""
+    of emitted rows. ``raw`` starts the query with a plain
+    ``writeStream`` instead of the runner."""
     from capgemini_himss24_fhirbulkdata_demo_spark.streaming import (
         start_stateful_query,
     )
@@ -255,45 +255,30 @@ def _state_dirs(ck):
     )
 
 
-def test_runner_sizes_state_partitions(spark, landed_events, tmp_path, monkeypatch):
-    """Engine-owned state sizing (r7 verdict #2): start_stateful_query
-    pins the query's state-store partition count to the wave size at
-    first checkpoint, restores the session shuffle conf right after
-    start, and produces the identical result set to a raw
-    session-default drain of the same plan."""
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming import runner
-
-    monkeypatch.setattr(runner, "_one_wave", lambda spark: 3)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    ck_sized = str(tmp_path / "ck_sized")
-    got = _drain_rows(spark, landed_events, ck_sized)
-    # session conf untouched for the caller (cloned into the query)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    # state store pinned at exactly 3 partitions in the checkpoint
-    assert _state_dirs(ck_sized) == [0, 1, 2]
-    # sizing is a physical knob only: same rows as the raw drain
-    exp = _drain_rows(spark, landed_events, str(tmp_path / "ck_default"), raw=True)
+def test_runner_sizes_state_partitions(spark, landed_events, tmp_path):
+    """start_stateful_query writes no session conf, and the query it
+    starts emits the same rows, over the same state partitions, as a
+    raw writeStream drain of the same plan."""
+    before = spark.conf.getAll
+    ck_runner, ck_raw = str(tmp_path / "ck_runner"), str(tmp_path / "ck_raw")
+    got = _drain_rows(spark, landed_events, ck_runner)
+    assert spark.conf.getAll == before
+    exp = _drain_rows(spark, landed_events, ck_raw, raw=True)
     assert got == exp and len(got) > 0
+    assert _state_dirs(ck_runner) == _state_dirs(ck_raw)
 
 
 def test_runner_default_state_is_one_task_wave(spark, landed_events, tmp_path):
-    """start_stateful_query pins one task wave of state partitions
+    """A get_spark session's shuffle count is one task wave
     (sc.defaultParallelism, in local mode no more than the JVM's
-    processors), whatever the session's shuffle count, and emits the
-    same rows as a raw drain, which inherits that count."""
-    ck_wave, ck_inherit = str(tmp_path / "ck_wave"), str(tmp_path / "ck_inherit")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
-    try:
-        got = _drain_rows(spark, landed_events, ck_wave)
-        exp = _drain_rows(spark, landed_events, ck_inherit, raw=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    processors), and a runner drain pins that many state partitions."""
     sc = spark.sparkContext
     cores = sc._jvm.java.lang.Runtime.getRuntime().availableProcessors()
-    assert _state_dirs(ck_wave) == list(range(min(sc.defaultParallelism, cores)))
-    assert _state_dirs(ck_inherit) == list(range(7))
-    assert got == exp and len(got) > 0
+    wave = min(sc.defaultParallelism, cores)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(wave)
+    ck = str(tmp_path / "ck")
+    assert len(_drain_rows(spark, landed_events, ck)) > 0
+    assert _state_dirs(ck) == list(range(wave))
 
 
 def test_runner_one_wave_caps_local_slots_at_cores():
@@ -301,7 +286,7 @@ def test_runner_one_wave_caps_local_slots_at_cores():
     so one wave is 4 tasks; on a cluster it is every task slot."""
     from types import SimpleNamespace
 
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.runner import _one_wave
+    from capgemini_himss24_fhirbulkdata_demo_spark.session import _one_wave
 
     runtime = SimpleNamespace(availableProcessors=lambda: 4)
     jvm = SimpleNamespace(
@@ -317,53 +302,40 @@ def test_runner_one_wave_caps_local_slots_at_cores():
     assert wave("spark://head:7077", 32) == 32
 
 
-def test_runner_restart_keeps_pinned_state_partitions(spark, tmp_path, monkeypatch):
-    """Documented runner caveat: a restart from an existing checkpoint
-    keeps the ORIGINALLY pinned state partition count — a restart on
-    a host with a wider task wave must neither error nor repartition
-    the state."""
+def test_runner_restart_keeps_pinned_state_partitions(spark, tmp_path):
+    """A restart from an existing checkpoint keeps the state partition
+    count pinned at its first run: a session whose shuffle count has
+    since grown, as on a host with a wider task wave, must neither
+    error nor repartition the state."""
     import datetime as dt
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.streaming import (
-        runner,
-        start_stateful_query,
-    )
 
     landing = str(tmp_path / "landing")
 
-    def land(rows, name):
-        df = spark.createDataFrame(rows, EVENTS_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(landing)
+    def land(rows):
+        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode("append").parquet(landing)
 
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    land(
-        [(1, t0, 1, "view", 1.0, None), (2, t0, 1, "click", 1.0, None)],
-        "first",
-    )
+    land([(1, t0, 1, "view", 1.0, None), (2, t0, 1, "click", 1.0, None)])
     ck = str(tmp_path / "ck")
     rows: list = []
 
-    def commit(batch_df, batch_id):
-        rows.extend(batch_df.collect())
-
-    def run(wave):
-        monkeypatch.setattr(runner, "_one_wave", lambda spark: wave)
+    def run(partitions):
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
         q = start_stateful_query(
-            tumbling_agg(
-                read_parquet_stream(spark, landing, EVENTS_SCHEMA)
-            ),
+            tumbling_agg(read_parquet_stream(spark, landing, EVENTS_SCHEMA)),
             ck,
-            foreach_batch=commit,
+            foreach_batch=lambda batch_df, batch_id: rows.extend(batch_df.collect()),
             output_mode="update",
         )
         q.awaitTermination(120)
 
-    run(3)
-    land(
-        [(3, t0 + dt.timedelta(minutes=5), 2, "view", 2.0, None)],
-        "second",
-    )
-    run(16)  # restart sizes a 16-task wave; checkpoint must keep 3
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        run(3)
+        land([(3, t0 + dt.timedelta(minutes=5), 2, "view", 2.0, None)])
+        run(16)  # the checkpoint must keep 3
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert _state_dirs(ck) == [0, 1, 2]
     assert len(rows) > 0  # the restarted query processed the new file
 

@@ -88,7 +88,7 @@ def main(argv: list[str] | None = None) -> None:
     src = args[2] if len(args) > 2 else SRC_DEFAULT
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark(master="local[16]", shuffle_partitions=16)
+    spark = get_spark(master="local[16]")
     spark.sparkContext.setLogLevel("ERROR")
 
     li = load_table(spark, src, "lineitem")
